@@ -7,9 +7,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Tables are driver-generated parquet under `/root/testdata/sf*`; the
   * `events` table plays the rakam event collection (reference:
   * rakam-spi/src/main/java/org/rakam/collection/Event.java), `customer`
-  * plays the `_users` profile table. Reads go straight through
-  * `spark.read.parquet` so Catalyst keeps predicate pushdown and column
-  * pruning against the scan.
+  * plays the `_users` profile table. [[apply]] is the one read path: a
+  * plain `spark.read.parquet` plus the `ts` normalization below, so
+  * Catalyst keeps predicate pushdown and column pruning against the
+  * scan, and scan parallelism is what the files' splits give, so the
+  * plan the oracle verifies is the plan a large table is served with.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -25,130 +27,9 @@ object Tables {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC")
 
-  /** Hash-spread key per table: a stable high-cardinality column, so
-    * the low-parallelism rescue shuffle ([[spread]]) partitions
-    * deterministically (retry-safe — guide §2.5's SPARK-38388 caveat
-    * rules out round-robin, which also pays a per-partition pre-sort)
-    * and evenly (unique-ish keys spread binomially over the cores).
-    * `private[graft]` so the plan-pin exemption in SparkSpec can match
-    * the spread exchange's exact shape instead of exempting every
-    * REPARTITION_BY_* exchange (r17 advice). */
-  private[graft] val spreadKeys: Map[String, String] = Map(
-    "region" -> "r_regionkey", "nation" -> "n_nationkey",
-    "customer" -> "c_custkey", "supplier" -> "s_suppkey",
-    "part" -> "p_partkey", "orders" -> "o_orderkey",
-    "lineitem" -> "l_orderkey", "events" -> "event_id",
-    "documents" -> "doc_id", "embeddings" -> "vec_id")
-
-  /** Don't bother spreading inputs below this size (broadcast-side dims
-    * like region/nation: a 32-task exchange would cost more scheduling
-    * than the scan). Overridable for experiments — the system property
-    * lets a single JVM A/B the spread (env is fork-static). */
-  private def spreadMinBytes: Long =
-    sys.props.get("graft.spread.min.bytes")
-      .orElse(sys.env.get("SPARK_GRAFT_SPREAD_MIN_BYTES"))
-      .flatMap(_.toLongOption).getOrElse(16L * 1024)
-
-  /** Scan-parallelism rescue (optimization guide §2.5 "input skew" /
-    * §1.2 step 1): the testdata tables are single-file, SINGLE-ROW-GROUP
-    * parquet, so every scan — and all scan-side compute above it
-    * (tokenize, explode, per-gram md5) — runs as ONE task regardless of
-    * core count. When the natural split count is below the session's
-    * parallelism, one cheap hash exchange of the raw rows immediately
-    * after the read spreads that work across the cores. Scale-adaptive
-    * by construction: a production table with many files/row groups
-    * already plans >= `defaultParallelism` splits and takes the
-    * zero-cost branch — this never fires at 100 TB, so it is not a
-    * local-only constant baked into the plan. Filters/projects still
-    * reach the scan: Catalyst pushes both through
-    * RepartitionByExpression (verified in plans/r17).
-    *
-    * WHERE it applies (measured, interleaved in-JVM A/B at sf0.1 —
-    * graft.tools.AbSpread, details in OPTIMIZATION_r17.md): the rescue
-    * pays only when per-row scan-side compute dominates the exchange.
-    * That is the `documents` text pipelines (gram/chunk/shingle explodes
-    * hash every window position: d15 2.33→1.72, t_novelty 2.16→1.56,
-    * corpus_report 1.68→1.40, mm4 1.04→0.85) plus a few compute-dense
-    * scans that opt in per call (q1's 7 decimal aggregates 1.27→0.99,
-    * f_casts 0.61→0.48, m4's per-row mmdb lookup 0.95→0.71). Plain
-    * scan→shuffle queries LOSE (the exchange duplicates a shuffle the
-    * algorithm takes anyway: a10 0.45→2.05, w6_theta 0.58→1.57,
-    * a13 0.68→1.38), so events/orders/lineitem/embeddings default
-    * OFF. */
-  private def spread(df: DataFrame, key: String, needed: Boolean): DataFrame =
-    if (!needed) df
-    else df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-      df.col(key))
-
-  /** Spread decision per (path, parallelism), cached for the session
-    * lifetime (testdata is immutable during a run). Replaces the r17
-    * `df.rdd.getNumPartitions` probe, which physically planned the raw
-    * scan a second time on every `Tables.apply` (r17 advice) and gated
-    * on BYTE-RANGE splits — a large single-row-group file splits into
-    * >= cores byte ranges of which only ONE contains the row group's
-    * midpoint, skipping the rescue exactly when the one-task pathology
-    * is worst. The real parallelism ceiling of a parquet scan is
-    * min(row groups, byte-range splits); both come cheaply from file
-    * metadata:
-    *  - many files (>= cores): every file is >= 1 split and >= 1 row
-    *    group — no spread, and no footer I/O (the 100 TB fast path;
-    *    the driver never opens thousands of footers);
-    *  - few files: byte-split estimate from sizes (maxPartitionBytes),
-    *    row-group count from the parquet footers of just those files.
-    */
-  private val spreadDecisions =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Long), java.lang.Boolean]()
-
-  private def needsSpread(spark: SparkSession, path: String): Boolean = {
-    val target = spark.sparkContext.defaultParallelism
-    // minBytes is part of the key: graft.tools.AbSpread toggles the
-    // spread per-repetition via the system property inside one JVM
-    spreadDecisions.computeIfAbsent((path, target, spreadMinBytes), { _ =>
-      val conf = spark.sessionState.newHadoopConf()
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(conf)
-      val files = (if (fs.getFileStatus(hp).isDirectory) fs.listStatus(hp)
-        else Array(fs.getFileStatus(hp)))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      val bytes = files.map(_.getLen).sum
-      if (bytes < spreadMinBytes || files.length >= target) false
-      else {
-        val maxSplit = math.max(1L,
-          spark.sessionState.conf.filesMaxPartitionBytes)
-        val estSplits = files.map(s =>
-          math.max(1L, (s.getLen + maxSplit - 1) / maxSplit)).sum
-        if (estSplits < target) true
-        else {
-          // enough byte ranges, but row groups bound the useful tasks
-          val rowGroups = files.map { s =>
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(s, conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getFooter.getBlocks.size.toLong finally r.close()
-          }.sum
-          rowGroups < target
-        }
-      }
-    })
-  }
-
-  /** Tables whose scans spread by default — see [[spread]]. */
-  private val spreadByDefault = Set("documents")
-
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    apply(spark, dir, name, spreadByDefault(name))
-
-  /** `spreadScan=true` opts a compute-dense consumer into the scan
-    * spread regardless of the table default (measured winners only —
-    * see [[spread]]). */
-  def apply(spark: SparkSession, dir: String, name: String,
-      spreadScan: Boolean): DataFrame = {
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val raw = spark.read.parquet(path)
-    val df = spreadKeys.get(name) match {
-      case Some(k) if spreadScan => spread(raw, k, needsSpread(spark, path))
-      case _ => raw
-    }
+    val df = spark.read.parquet(path)
     df.schema.fields.find(_.name == "ts") match {
       // NANOS read as long: integer-div (not double-div — ns magnitudes
       // exceed 2^53) to micros, then to wall-clock NTZ in the UTC session.
@@ -174,6 +55,4 @@ final case class QueryDef(
 object QueryDef {
   def of(sql: String)(build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(build, Some(sql))
-  def noOracle(build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(build, None)
 }

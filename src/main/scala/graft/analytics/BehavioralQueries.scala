@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.{QueryDef, Tables}
+import graft.api.Analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,24 +19,12 @@ import org.apache.spark.sql.functions._
   */
 object BehavioralQueries {
 
-  /** A6 funnel: ordered step conversion view → click → purchase. Each
-    * stage is min-ts-after-previous-step, i.e. the earliest time the
-    * user *completed* the step in order; counts are step-reachability. */
-  def a6Funnel(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = Tables(spark, dir, "events").select($"user_id", $"event_type", $"ts")
-    val t1 = ev.filter($"event_type" === "view")
-      .groupBy($"user_id").agg(min($"ts").as("t1"))
-    val t2 = ev.filter($"event_type" === "click")
-      .join(t1, "user_id").filter($"ts" > $"t1")
-      .groupBy($"user_id").agg(min($"ts").as("t2"))
-    val t3 = ev.filter($"event_type" === "purchase")
-      .join(t2, "user_id").filter($"ts" > $"t2")
-      .groupBy($"user_id").agg(min($"ts").as("t3"))
-    def step(df: DataFrame, n: Int) =
-      df.agg(count(lit(1)).as("n_users")).select(lit(n).as("step"), $"n_users")
-    step(t1, 1).union(step(t2, 2)).union(step(t3, 3))
-  }
+  /** A6 funnel: ordered step conversion view → click → purchase —
+    * the facade's funnel on the test corpus, so the oracle verifies the
+    * builder applications call. */
+  def a6Funnel(spark: SparkSession, dir: String): DataFrame =
+    Analytics.funnel(Tables(spark, dir, "events"), "user_id", "ts",
+      "event_type", Seq("view", "click", "purchase"))
 
   val a6Sql: String =
     """WITH t1 AS (
@@ -52,21 +41,14 @@ object BehavioralQueries {
       |UNION ALL SELECT 3 AS step, count(*) AS n_users FROM t3""".stripMargin
 
   /** A7 retention: weekly first-seen cohort × week offset → distinct
-    * returning users. Offsets via exact epoch-microsecond integer
-    * division (week boundaries are 604800s multiples in UTC). */
-  def a7Retention(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = Tables(spark, dir, "events")
-    val cohort = ev.groupBy($"user_id")
-      .agg(date_trunc("week", min($"ts")).as("cohort_week"))
-    val active = ev
-      .select($"user_id", date_trunc("week", $"ts").as("active_week")).distinct()
-    active.join(cohort, "user_id")
-      .withColumn("week_offset",
-        expr("(unix_micros(CAST(active_week AS TIMESTAMP)) - unix_micros(CAST(cohort_week AS TIMESTAMP))) DIV 604800000000"))
-      .groupBy($"cohort_week", $"week_offset")
-      .agg(countDistinct($"user_id").as("n_users"))
-  }
+    * returning users — the facade's retention on the test corpus.
+    * Offsets are calendar-day differences of the truncated weeks, so
+    * they stay whole weeks across DST changes in any session timezone;
+    * the oracle's micros division agrees in the registry's UTC session. */
+  def a7Retention(spark: SparkSession, dir: String): DataFrame =
+    Analytics.retention(Tables(spark, dir, "events"), "user_id", "ts", "week")
+      .withColumnsRenamed(Map(
+        "cohort_bucket" -> "cohort_week", "offset" -> "week_offset"))
 
   val a7Sql: String =
     """WITH cohort AS (
@@ -81,38 +63,42 @@ object BehavioralQueries {
       |FROM active a JOIN cohort c ON a.user_id = c.user_id
       |GROUP BY 1, 2""".stripMargin
 
-  /** W2 sessionization: a session break is a >30-minute gap (reference
-    * UserIdEventMapper.java:50-72 anonymous sessions). One window pass
-    * flags breaks, a groupBy counts sessions per user. */
   /** The session-gap threshold in minutes — THE constant behind the
     * boundary rule; the streaming twin
     * ([[graft.streaming.SequenceState.sessionExamples]]) derives its
     * millisecond gap from it so the two cannot be retuned apart. */
   val SessionGapMinutes = 30
 
-  /** The ONE session-boundary rule: a >[[SessionGapMinutes]]-minute gap
-    * in a user's (ts, event_id)-ordered stream opens a new session.
-    * Adds a 1-based `session_idx` on the user-partition window pass —
-    * shared by w2's per-user counts and sq3's session-scoped example
-    * windows, so the two families sessionize provably alike. */
-  def withSessionIndex(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
+  /** [[SessionGapMinutes]] as the interval text [[withSessionIndex]]
+    * takes. */
+  val SessionGap: String = s"$SessionGapMinutes minutes"
+
+  /** The ONE session-boundary rule: a gap longer than `gap` (interval
+    * text, e.g. "30 minutes") in a user's (ts, tieBreak)-ordered stream
+    * opens a new session. Adds a 1-based `session_idx` on the
+    * user-partition window pass — shared by
+    * [[graft.api.Analytics.sessionize]] (and so w2) and sq3's
+    * session-scoped example windows, so the families sessionize
+    * provably alike. */
+  def withSessionIndex(events: DataFrame, userCol: String, tsCol: String,
+      gap: String, tieBreak: Option[String]): DataFrame = {
+    val order = col(tsCol) +: tieBreak.toSeq.map(col)
+    val w = Window.partitionBy(col(userCol)).orderBy(order: _*)
     events
-      .withColumn("__prev_ts", lag($"ts", 1).over(w))
+      .withColumn("__prev_ts", lag(col(tsCol), 1).over(w))
       .withColumn("session_idx",
-        sum(when($"__prev_ts".isNull ||
-          $"ts" > $"__prev_ts" + expr(s"INTERVAL $SessionGapMinutes MINUTES"), 1L)
+        sum(when(col("__prev_ts").isNull ||
+          col(tsCol) > col("__prev_ts") + expr(s"INTERVAL $gap"), 1L)
           .otherwise(0L)).over(w))
       .drop("__prev_ts")
   }
 
-  def w2Sessionize(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    withSessionIndex(Tables(spark, dir, "events"))
-      .groupBy($"user_id")
-      .agg(max($"session_idx").as("n_sessions"), count(lit(1)).as("n_events"))
-  }
+  /** W2 sessionization: a session break is a >30-minute gap (reference
+    * UserIdEventMapper.java:50-72 anonymous sessions) — the facade's
+    * sessionize on the test corpus, event_id breaking timestamp ties. */
+  def w2Sessionize(spark: SparkSession, dir: String): DataFrame =
+    Analytics.sessionize(Tables(spark, dir, "events"), "user_id", "ts",
+      SessionGap, Some("event_id"))
 
   val w2SessSql: String =
     """SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions, count(*) AS n_events
@@ -239,10 +225,10 @@ object BehavioralQueries {
     * DECIMAL(38,6) and casts to double only at the edge — a double
     * window-sum would be order-dependent (DuckDB's windowed SUM runs a
     * segment tree, Spark a sequential frame: different addition orders,
-    * different last-bit rounding). Offsets are epoch differences of the
-    * truncated weeks (DST-safe, the a7 convention). Shape: two user
-    * shuffles (cohort assignment, weekly rollup) + a window over the
-    * tiny (cohort × offset) aggregate. */
+    * different last-bit rounding). Offsets are epoch-micros differences
+    * of the truncated weeks (whole weeks in the registry's UTC session).
+    * Shape: two user shuffles (cohort assignment, weekly rollup) + a
+    * window over the tiny (cohort × offset) aggregate. */
   def a17LtvCohort(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 6)

@@ -18,9 +18,7 @@ object CoreQueries {
     */
   def q1(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // spreadScan: seven decimal(38,6) partial aggregates are the dense
-    // scan-side work here — measured 1.27->0.99 s (AbSpread, r17)
-    Tables(spark, dir, "lineitem", spreadScan = true)
+    Tables(spark, dir, "lineitem")
       .filter($"l_shipdate" <= lit("1998-09-02 00:00:00").cast("timestamp"))
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(

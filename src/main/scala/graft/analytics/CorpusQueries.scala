@@ -759,24 +759,32 @@ object CorpusQueries {
     * cluster: the longest document, doc_id as the deterministic
     * tie-break (real pipelines rank by quality score; the argmax shape
     * is identical). The argmax is a partial-agg'd `min(struct(...))`
-    * (r18, guide §2.3 — the kms1 trick): `(-n_chars, doc_id)` orders
-    * exactly like `n_chars DESC, doc_id ASC`, doc_id is unique within
-    * a cluster (total order — same row as rank 1 of the old
-    * row_number window), and the survivor's remaining columns ride
-    * the struct. One combinable slot per cluster crosses the exchange
-    * instead of every member row through a sort, so a giant cluster
-    * is absorbed map-side instead of buffered in one window group. */
-  def d9Survivors(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables(spark, dir, "documents")
+    * (r18, guide §2.3 — the kms1 trick) whose key orders exactly like
+    * the oracle's `n_chars DESC NULLS LAST, doc_id ASC`:
+    *  - `isnull(n_chars)` first, so a NULL length never wins over a
+    *    known one (struct ordering alone puts NULLs first);
+    *  - then `~n_chars` (= -n_chars - 1), descending in `n_chars`
+    *    with no overflow at `Long.MinValue`, unlike a negation;
+    *  - then doc_id, unique within a cluster (a total order — the
+    *    same row as rank 1 of a row_number window).
+    * The survivor's remaining columns ride the struct. One combinable
+    * slot per cluster crosses the exchange instead of every member row
+    * through a sort, so a giant cluster is absorbed map-side instead of
+    * buffered in one window group. */
+  def d9From(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
     val clusters = DedupQueries.d5From(docs)
     docs.join(clusters, "doc_id")
       .groupBy($"cluster_id")
-      .agg(min(struct((-$"n_chars").as("neg_chars"), $"doc_id",
+      .agg(min(struct(isnull($"n_chars").as("no_chars"),
+        bitwise_not($"n_chars").as("desc_chars"), $"doc_id",
         $"n_chars", $"lang")).as("s"))
       .select($"cluster_id", $"s.doc_id".as("survivor_id"),
         $"s.n_chars".as("n_chars"), $"s.lang".as("lang"))
   }
+
+  def d9Survivors(spark: SparkSession, dir: String): DataFrame =
+    d9From(Tables(spark, dir, "documents"))
 
   val d9Sql: String =
     s"""WITH clusters AS (${DedupQueries.d5Sql.replace("\n", "\n  ")}),

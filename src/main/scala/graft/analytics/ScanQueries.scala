@@ -125,8 +125,7 @@ object ScanQueries {
     * AvroUtil.java:120-200 restated as try_cast semantics). */
   def fCasts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // spreadScan: per-row get_json_object parse — measured 0.61->0.48 s
-    Tables(spark, dir, "events", spreadScan = true)
+    Tables(spark, dir, "events")
       .select(
         $"event_id",
         get_json_object($"props", "$.k").cast("long").as("k_long"),

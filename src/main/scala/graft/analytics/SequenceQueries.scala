@@ -147,7 +147,8 @@ object SequenceQueries {
     // THE w2 session rule, not a copy — BehavioralQueries owns the
     // boundary definition
     val sess = BehavioralQueries.withSessionIndex(
-      events.select($"user_id", $"event_id", $"ts", $"event_type"))
+      events.select($"user_id", $"event_id", $"ts", $"event_type"),
+      "user_id", "ts", BehavioralQueries.SessionGap, Some("event_id"))
     val sw = Window.partitionBy($"user_id", $"session_idx")
       .orderBy($"ts", $"event_id").rowsBetween(-C, -1)
     sess

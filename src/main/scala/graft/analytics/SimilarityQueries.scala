@@ -756,12 +756,6 @@ object SimilarityQueries {
   private val KmK = 8
   private val KmIters = 2
 
-  /** Squared L2 distance with the same left-to-right double fold as
-    * [[dotExpr]] — bit-identical across engines. */
-  private def distExpr(a: String, b: String): String =
-    s"""aggregate(zip_with($a, $b, (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),
-       |  CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin
-
   private def sqlDist(a: String, b: String): String =
     s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
        |  list_transform(range(1, len($a) + 1),

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.{QueryDef, Tables}
+import graft.api.Analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,15 +16,13 @@ object WindowQueries {
 
   private val byUser = Window.partitionBy("user_id")
 
-  /** W1 + W5: top-k (k=3) most recent events per user via row_number. */
-  def w1TopK(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val w = byUser.orderBy($"ts".desc, $"event_id".desc)
-    Tables(spark, dir, "events")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 3)
-      .select($"user_id", $"event_id", $"ts", $"rn")
-  }
+  /** W1 + W5: top-k (k=3) most recent events per user — the facade's
+    * row_number top-k on the test corpus, event_id breaking ties. */
+  def w1TopK(spark: SparkSession, dir: String): DataFrame =
+    Analytics.topKPerGroup(
+      Tables(spark, dir, "events").select("user_id", "event_id", "ts"),
+      "user_id", 3, col("ts").desc, col("event_id").desc)
+      .withColumnRenamed("rank", "rn")
 
   val w1Sql: String =
     """SELECT user_id, event_id, ts, rn FROM (

@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 /** The parameterized analytics surface — the oracle-proven query shapes
   * of `graft.analytics` generalized over any events DataFrame (caller
   * names the user/time/type columns, steps, grains). These are what an
-  * application calls; the `analytics` registry entries are these shapes
-  * instantiated on the test corpus and hash-verified against DuckDB.
-  * Every builder keeps the scale posture of its proven twin: windows
-  * over (user, ts), no self-joins, aggregates with map-side partials.
+  * application calls. The registry's a6/a7/w1/w2 entries call them
+  * directly and the rest share the `*From` cores they delegate to, so
+  * the DuckDB oracle hash-verifies the builders applications get. Every
+  * builder keeps the registry's scale posture: windows over (user, ts),
+  * no self-joins, aggregates with map-side partials.
   */
 object Analytics {
 
@@ -68,25 +69,20 @@ object Analytics {
       .agg(countDistinct(col(userCol)).as("n_users"))
   }
 
-  /** Gap-based sessionization: per-user session and event counts.
+  /** Gap-based sessionization: per-user session and event counts, by
+    * the one session-boundary rule
+    * ([[graft.analytics.BehavioralQueries.withSessionIndex]]).
     * `tieBreak` is REQUIRED (pass None explicitly only when `tsCol` is
     * provably unique per user): without a total order, timestamp ties
     * make `lag` — and therefore session counts — nondeterministic
     * across runs. */
   def sessionize(events: DataFrame, userCol: String, tsCol: String,
-      gap: String, tieBreak: Option[String]): DataFrame = {
-    val order: Seq[Column] = col(tsCol) +: tieBreak.toSeq.map(col)
-    val w = Window.partitionBy(col(userCol)).orderBy(order: _*)
-    events
-      .withColumn("prev_ts", lag(col(tsCol), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ts").isNull ||
-          col(tsCol) > col("prev_ts") + expr(s"INTERVAL $gap"), 1L)
-          .otherwise(0L))
+      gap: String, tieBreak: Option[String]): DataFrame =
+    graft.analytics.BehavioralQueries
+      .withSessionIndex(events, userCol, tsCol, gap, tieBreak)
       .groupBy(col(userCol))
-      .agg(sum(col("new_sess")).as("n_sessions"),
+      .agg(max(col("session_idx")).as("n_sessions"),
         count(lit(1)).as("n_events"))
-  }
 
   /** Top-k rows per group by the given ordering. The row number is
     * appended as `rank`; a pre-existing `rank` column is rejected
@@ -114,11 +110,6 @@ object Analytics {
     graft.analytics.PathQueries.a14From(
       stdEvents(events, userCol, tsCol, idCol, typeCol))
 
-  /** Last-touch conversion attribution: each conversion credits the most
-    * recent preceding non-conversion event by the same user within
-    * `windowDays` (or "(none)") — the as-of shape as one window pass
-    * (the oracle-proven a15 shape). Credited values run through the
-    * exact-decimal sum. */
   /** Point-in-interval join where BOTH sides are big — Spark's native
     * plan for a bare BETWEEN join is a nested loop. Intervals explode
     * to the `binUnit` bins they cover, points carry their single bin,
@@ -132,6 +123,11 @@ object Analytics {
     graft.analytics.JoinQueries2.pointInIntervalJoin(
       points, intervals, pointTsCol, startCol, endCol, binUnit)
 
+  /** Last-touch conversion attribution: each conversion credits the most
+    * recent preceding non-conversion event by the same user within
+    * `windowDays` (or "(none)") — the as-of shape as one window pass
+    * (the oracle-proven a15 shape). Credited values run through the
+    * exact-decimal sum. */
   def lastTouchAttribution(events: DataFrame, userCol: String,
       tsCol: String, idCol: String, typeCol: String, valueCol: String,
       conversionType: String, windowDays: Int = 7): DataFrame =

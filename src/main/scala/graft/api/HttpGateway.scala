@@ -1180,15 +1180,6 @@ final class HttpGateway(
     (200, all.toJSON.collect().mkString("[", ",", "]"))
   }
 
-  /** `GET /analysis/segmentation?collection=…&dimension=…[&limit=n]
-    * [&version=v]` — users/events per dimension value. The driver-side
-    * JSON is bounded by `limit` (default 1000, the `/query/execute`
-    * door's ceiling): without it a caller segmenting on a user-id-like
-    * column would pull that column's full cardinality into one driver
-    * collect. Top groups by event count — the ordering a segmentation
-    * UI shows. `version` serves the analysis over a pinned commit-log
-    * version ([[EventStore.readAt]] time travel — reproduce last
-    * week's report numbers exactly, whatever has landed since). */
   /** A collection read at the optional `version` pin — the time-travel
     * contract EVERY analysis door serves (r15 opened it on
     * segmentation only; reproducible reads are the flagship
@@ -1210,6 +1201,15 @@ final class HttpGateway(
       EventStore.read(spark, registry, warehouse, project, collection)
   }
 
+  /** `GET /analysis/segmentation?collection=…&dimension=…[&limit=n]
+    * [&version=v]` — users/events per dimension value. The driver-side
+    * JSON is bounded by `limit` (default 1000, the `/query/execute`
+    * door's ceiling): without it a caller segmenting on a user-id-like
+    * column would pull that column's full cardinality into one driver
+    * collect. Top groups by event count — the ordering a segmentation
+    * UI shows. `version` serves the analysis over a pinned commit-log
+    * version ([[EventStore.readAt]] time travel — reproduce last
+    * week's report numbers exactly, whatever has landed since). */
   private def handleSegmentation(ex: HttpExchange): (Int, String) = {
     val params = queryParams(ex)
     val collection = params.getOrElse("collection",

@@ -75,9 +75,6 @@ final class JsEngine(code: String, globals: Map[String, Any],
     case other => s"uncaught script throw: ${jsToString(other)}"
   }
 
-  def hasFunction(name: String): Boolean =
-    root.lookup(name).exists(_.isInstanceOf[Closure])
-
   // ---------- value boundary ----------
 
   /** Host → JS: integral numbers stay Long, everything else maps

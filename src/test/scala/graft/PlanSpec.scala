@@ -541,35 +541,6 @@ class PlanSpec extends SparkSpec {
       s"decontam stage lost its broadcast-semi shape:\n$plan")
   }
 
-  test("plan-pin exemption is the spread's exact shape — stray " +
-    "repartitions still count as algorithmic shuffles") {
-    // r17 advice: the old origin-only exemption let ANY
-    // .repartition(n) — including round-robin, the SPARK-38388 retry
-    // hazard — slip past every "must not shuffle" pin. Pin the counter
-    // itself: only repartition(defaultParallelism, col(spreadKey))
-    // is exempt.
-    val docs = Tables(spark, sf(), "documents", spreadScan = false)
-    val target = spark.sparkContext.defaultParallelism
-    // AQE's AdaptiveSparkPlanExec hides the inner tree from collect —
-    // plan these probes without it (same reason as executedWithoutAqe)
-    def probe(df: org.apache.spark.sql.DataFrame) = {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val p = df.queryExecution.executedPlan
-        (algoShuffles(p), algoExchangeLines(p.toString))
-      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
-    val (sSpread, lSpread) = probe(docs.repartition(target, docs.col("doc_id")))
-    assert(sSpread.isEmpty && lSpread.isEmpty,
-      "the declared spread shape must stay exempt")
-    val (sRr, lRr) = probe(docs.repartition(3))
-    assert(sRr.nonEmpty && lRr.nonEmpty,
-      "a stray round-robin repartition must trip the pins")
-    val (sKey, lKey) = probe(docs.repartition(target, docs.col("lang")))
-    assert(sKey.nonEmpty && lKey.nonEmpty,
-      "a hash repartition on a non-spread key must trip the pins")
-  }
-
   test("sq2: negative drawing never shuffles the event side") {
     val plan = SparkEntry.queries("sq2_negatives")(spark, sf())
       .queryExecution.executedPlan.toString

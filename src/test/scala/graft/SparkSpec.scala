@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for suites (one per suite via lazy val). */
@@ -45,43 +47,14 @@ trait SparkSpec extends AnyFunSuite {
     captured.toSeq
   }
 
-  /** Lines of a plan string that are ALGORITHMIC exchanges — excludes
-    * ONLY the declared input-spread rescue ([[Tables.spread]]), which
-    * exists when a scan's natural split count cannot feed the cores
-    * (single-row-group local fixtures) and short-circuits away at
-    * scale. Plan pins that assert "operator X must not shuffle" mean
-    * X's algorithm: the rescue exchange is input plumbing, counted by
-    * none of them. The exemption is pinned to the spread's exact shape
-    * (r17 advice — the old origin-only test exempted EVERY
-    * REPARTITION_BY_* exchange, so a stray algorithmic
-    * `.repartition(n)` could hide from a "no shuffle" pin):
-    * `repartition(defaultParallelism, col(tableKey))`, i.e. origin
-    * REPARTITION_BY_NUM hash-partitioned on a single declared
-    * [[Tables.spreadKeys]] attribute. */
-  private val spreadExchangeRe = {
-    val keys = Tables.spreadKeys.values.mkString("|")
-    (s"hashpartitioning\\((?:$keys)#\\d+[L]?, \\d+\\)").r
-  }
+  /** Lines of a plan string that are exchanges. Every exchange counts:
+    * table reads add none of their own, so a pin that says "operator X
+    * must not shuffle" sees every shuffle in the plan. */
   def algoExchangeLines(plan: String): Seq[String] =
-    plan.linesIterator.filter(l =>
-      l.contains("Exchange") &&
-        !(l.contains("REPARTITION_BY_NUM") &&
-          spreadExchangeRe.findFirstIn(l).isDefined)).toSeq
+    plan.linesIterator.filter(_.contains("Exchange")).toSeq
 
   /** The collect-based twin of [[algoExchangeLines]] for non-AQE
     * executed plans. */
-  def algoShuffles(plan: org.apache.spark.sql.execution.SparkPlan):
-      Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec] = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
-    def isSpread(e: ShuffleExchangeExec): Boolean =
-      e.shuffleOrigin == REPARTITION_BY_NUM &&
-        (e.outputPartitioning match {
-          case HashPartitioning(Seq(a: AttributeReference), _) =>
-            Tables.spreadKeys.values.exists(_ == a.name)
-          case _ => false
-        })
-    plan.collect { case e: ShuffleExchangeExec if !isSpread(e) => e }
-  }
+  def algoShuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+    plan.collect { case e: ShuffleExchangeExec => e }
 }

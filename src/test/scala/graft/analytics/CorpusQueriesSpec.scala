@@ -58,6 +58,32 @@ class CorpusQueriesSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
   }
 
+  test("d9 survivor is n_chars DESC NULLS LAST, doc_id ASC — NULL and " +
+    "Long.MinValue lengths never win") {
+    import spark.implicits._
+    // identical texts share every shingle, so each text is one cluster
+    // (cluster_id = its smallest doc_id); the texts share no token
+    def text(k: Int) = (1 to 6).map(i => s"c${k}w$i").mkString(" ")
+    val n: java.lang.Long = null
+    val docs = Seq(
+      (1L, text(1), "en", n), // NULL length: must not beat 10 or 20
+      (2L, text(1), "de", java.lang.Long.valueOf(10L)),
+      (3L, text(1), "fr", java.lang.Long.valueOf(20L)),
+      (4L, text(2), "en", java.lang.Long.valueOf(Long.MinValue)),
+      (5L, text(2), "de", java.lang.Long.valueOf(5L)),
+      (6L, text(3), "en", n), // all NULL: the smallest doc_id wins
+      (7L, text(3), "de", n),
+      (8L, text(4), "en", java.lang.Long.valueOf(7L)), // tie: doc_id
+      (9L, text(4), "de", java.lang.Long.valueOf(7L)))
+      .toDF("doc_id", "text", "lang", "n_chars")
+    val got = CorpusQueries.d9From(docs).collect()
+      .map(r => (r.getAs[Long]("cluster_id"), r.getAs[Long]("survivor_id"),
+        Option(r.getAs[java.lang.Long]("n_chars")).map(_.longValue)))
+      .sortBy(_._1).toSeq
+    assert(got == Seq((1L, 3L, Some(20L)), (4L, 5L, Some(5L)),
+      (6L, 6L, None), (8L, 8L, Some(7L))))
+  }
+
   test("d8 chunk dedup flags boilerplate shared across documents") {
     import spark.implicits._
     // 2 docs share an identical 20-token boilerplate chunk; a third is

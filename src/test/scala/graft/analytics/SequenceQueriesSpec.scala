@@ -155,8 +155,7 @@ class SequenceQueriesSpec extends SparkSpec {
       .collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
     assert(again ==
       out.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
-    // scan-side only: no algorithmic exchange anywhere (the documents
-    // scan-spread rescue is exempt — SparkSpec.algoExchangeLines)
+    // scan-side only: no exchange anywhere
     val p = out.queryExecution.executedPlan.toString
     assert(algoExchangeLines(p).isEmpty, p)
   }
