@@ -22,10 +22,25 @@ object Tables {
     * parquet reader accept TIMESTAMP(NANOS) columns (events.ts) as raw
     * nanos, which [[apply]] then converts losslessly to microsecond
     * TIMESTAMP_NTZ — same floor-truncation DuckDB applies, so oracle
-    * results agree. */
+    * results agree.
+    *
+    * `spark.sql.codegen.cache.maxEntries` sizes Spark's JVM-wide cache
+    * of compiled generated classes to the working set. Spark's default,
+    * 100 split over 4 LRU segments, evicted the collect stage after one
+    * round of the gateway's analysis doors and made every warm registry
+    * execution recompile ~26 classes. Measured with an unbounded cache,
+    * three warm passes: the gateway's doors (collect, batch, bulk
+    * JSON/CSV/Avro, pixel, segmentation, funnel, retention, query)
+    * compile 156 distinct classes; with the benchmark's 8 registry
+    * queries, 359–365 classes holding 5.8–6.0 MB of source (the
+    * collect stage alone is 0.43 MB). 1000 is ~2.8× that working set,
+    * so per-segment imbalance does not evict it. It is a static
+    * conf: it only takes effect on a session builder, before the first
+    * query compiles, and `spark.conf.set` rejects it. */
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"

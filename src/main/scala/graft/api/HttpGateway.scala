@@ -716,7 +716,8 @@ final class HttpGateway(
     } catch {
       case e: IngestRejected =>
         ex.getResponseHeaders.set("server-error", e.getMessage)
-      case NonFatal(_) =>
+      case NonFatal(e) =>
+        logServerError(ex, e)
         ex.getResponseHeaders.set("server-error", "An error occurred")
     }
     ex.getResponseHeaders.set("Content-Type", "image/gif")
@@ -3423,6 +3424,7 @@ final class HttpGateway(
           case e: IngestRejected =>
             (400, s"""{"error":${mapper.writeValueAsString(e.getMessage)}}""")
           case NonFatal(e) =>
+            logServerError(ex, e)
             (500, s"""{"error":${mapper.writeValueAsString(String.valueOf(e))}}""")
         }
       val bytes = body.getBytes(UTF_8)
@@ -3438,12 +3440,24 @@ final class HttpGateway(
       com.sun.net.httpserver.HttpHandler = { ex =>
     if (!corsPreflight(ex)) {
       try f(ex)
-      catch { case NonFatal(_) => ex.close() }
+      catch {
+        case NonFatal(e) =>
+          logServerError(ex, e)
+          ex.close()
+      }
     }
   }
+
+  /** Every unhandled failure leaves a trace: method, path and the
+    * exception with its stack, at ERROR. */
+  private def logServerError(ex: HttpExchange, e: Throwable): Unit =
+    HttpGateway.log.error(
+      s"${ex.getRequestMethod} ${ex.getRequestURI.getPath} failed", e)
 }
 
 object HttpGateway {
+  private val log = org.apache.logging.log4j.LogManager.getLogger(classOf[HttpGateway])
+
   /** Request-level rejection mapped to 403 — the reference's FORBIDDEN
     * (spiders, UserAgentEventMapper.java:87-90). */
   final class ForbiddenRejected(message: String) extends RuntimeException(message)

@@ -1,6 +1,7 @@
 package graft.enrich
 
 import graft.core.FieldType
+import graft.functions.ReferenceLiteral
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -40,18 +41,23 @@ object MapperPipeline {
 /** M1: `_time` fix-up (TimestampEventMapper.java:44-58): missing _time
   * → server now; client _time with upload_time → skew-corrected
   * `client + (now − upload)`. `now` is injected for determinism
-  * (second precision ×1000, as the reference truncates). */
+  * (second precision ×1000, as the reference truncates).
+  *
+  * A per-request constant reaches generated code as a reference, never
+  * as source text: both `now` values are
+  * [[graft.functions.ReferenceLiteral]]s, not `lit`s, so the collect
+  * projection compiles once per JVM instead of once per clock second. */
 final case class TimestampMapper(nowMillis: Long) extends EventMapper {
   val name = "timestamp"
   override def constantFields = Seq("_time" -> FieldType.TIMESTAMP)
   def apply(df: DataFrame): DataFrame = {
-    val serverNow = timestamp_millis(lit(nowMillis / 1000 * 1000))
+    val serverNow = ReferenceLiteral.timestampMillis(nowMillis / 1000 * 1000)
     val hasUpload = df.columns.contains("_upload_time")
     val corrected: Column =
       if (hasUpload)
         when(col("_time").isNotNull && col("_upload_time").isNotNull,
           timestamp_millis(unix_millis(col("_time")) +
-            (lit(nowMillis) - col("_upload_time"))))
+            (ReferenceLiteral.long(nowMillis) - col("_upload_time"))))
           .otherwise(col("_time"))
       else col("_time")
     val base = if (df.columns.contains("_time")) corrected

@@ -28,7 +28,12 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .getOrCreate()
     try {
       spark.sparkContext.setLogLevel("WARN")
-      Tables.sessionConfigs.foreach { case (k, v) => spark.conf.set(k, v) }
+      // static confs (the codegen cache size) can only be set on a
+      // session builder; conf.set throws on them
+      Tables.sessionConfigs
+        .filterNot { case (k, _) =>
+          org.apache.spark.sql.internal.SQLConf.isStaticConfigKey(k) }
+        .foreach { case (k, v) => spark.conf.set(k, v) }
       f(spark)
     } finally {
       SparkSession.clearActiveSession()

@@ -27,24 +27,31 @@ trait SparkSpec extends AnyFunSuite {
     * codegen escape hatch (the silent Janino 64 KB fallback); returns
     * the captured lines. Shared by the mapper and registry codegen
     * lints so the logger wiring can't drift between them. */
-  def capturingCodegenFallback(body: => Unit): Seq[String] = {
-    import org.apache.log4j.{AppenderSkeleton, Level, Logger}
+  def capturingCodegenFallback(body: => Unit): Seq[String] =
+    capturingLogs(Seq(
+      "org.apache.spark.sql.execution.WholeStageCodegenExec",
+      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"),
+      org.apache.log4j.Level.WARN)(body).map(e => String.valueOf(e.getMessage))
+
+  /** Runs `body` with an appender on the named loggers; returns the
+    * events logged there at `level` or above. */
+  def capturingLogs(loggerNames: Seq[String], level: org.apache.log4j.Level)(
+      body: => Unit): Seq[org.apache.log4j.spi.LoggingEvent] = {
+    import org.apache.log4j.{AppenderSkeleton, Logger}
     import org.apache.log4j.spi.LoggingEvent
-    val captured = scala.collection.mutable.ArrayBuffer.empty[String]
+    val captured = scala.collection.mutable.ArrayBuffer.empty[LoggingEvent]
     val appender = new AppenderSkeleton {
       override def append(e: LoggingEvent): Unit =
-        if (e.getLevel.isGreaterOrEqual(Level.WARN))
-          captured += String.valueOf(e.getMessage)
+        if (e.getLevel.isGreaterOrEqual(level)) captured.synchronized {
+          captured += e
+        }
       override def close(): Unit = ()
       override def requiresLayout(): Boolean = false
     }
-    val loggers = Seq(
-      Logger.getLogger("org.apache.spark.sql.execution.WholeStageCodegenExec"),
-      Logger.getLogger(
-        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"))
+    val loggers = loggerNames.map(Logger.getLogger)
     loggers.foreach(_.addAppender(appender))
     try body finally loggers.foreach(_.removeAppender(appender))
-    captured.toSeq
+    captured.synchronized(captured.toSeq)
   }
 
   /** Lines of a plan string that are exchanges. Every exchange counts:

@@ -3,6 +3,8 @@ package graft.api
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.core.SchemaRegistry
 import graft.ingest.BatchSources
@@ -1806,6 +1808,75 @@ class HttpGatewaySpec extends SparkSpec {
       assert(get(port, "/no/such/route").statusCode() == 404)
       assert(post(port, "/project/exception", "{}").statusCode() == 500)
     }
+  }
+
+  test("a 5xx is logged at ERROR with its method, path and exception") {
+    withGateway { (_, port) =>
+      val logged = capturingLogs(Seq(classOf[HttpGateway].getName),
+          org.apache.log4j.Level.ERROR) {
+        assert(post(port, "/project/exception", "{}").statusCode() == 500)
+      }
+      assert(logged.size == 1, logged.map(_.getMessage))
+      assert(String.valueOf(logged.head.getMessage) ==
+        "POST /project/exception failed")
+      val thrown = Option(logged.head.getThrowableInformation).map(_.getThrowable)
+      assert(thrown.exists(_.isInstanceOf[NullPointerException]), thrown)
+    }
+  }
+
+  test("steady-state collects compile no generated code, also after the " +
+    "analysis doors ran: the clock reaches codegen by reference and the " +
+    "codegen cache holds the working set") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // a clock that moves 2.5 s per call, off whole seconds, so a clock
+    // spelled into generated code would change the class every request
+    val clock = new java.util.concurrent.atomic.AtomicLong(1_767_225_600_123L)
+    val issued = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val gw = new HttpGateway(spark, SchemaRegistry.inMemory(),
+      graft.TempDirs.scratch("graft-codegen-reuse").toString, "demo",
+      now = () => { val t = clock.addAndGet(2_500L); issued.add(t); t })
+    val port = gw.start()
+    try {
+      val ua = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+        "Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 " +
+          "(KHTML, like Gecko) Chrome/120.0.6099.71 Safari/537.36")
+      def event(n: Int): String =
+        s"""{"collection": "visit", "properties": {"_user": "u${n % 3}",
+           | "_user_agent": $ua, "_referrer": "https://www.google.com/search?q=x",
+           | "event_type": "${if (n % 2 == 0) "view" else "cart"}", "n": $n}}""".stripMargin
+      /** One collect without `_time`; the compiles it added and the
+        * clock values it read. */
+      def collect(n: Int): (Long, Seq[Long]) = {
+        issued.clear()
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val r = post(port, "/event/collect", event(n))
+        assert(r.statusCode() == 200, r.body())
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before,
+          issued.asScala.map(_.longValue).toSeq)
+      }
+      // an existing collection, then one warm-up collect: the one
+      // compile of the collect plan
+      assert(post(port, "/event/bulk",
+        s"""{"events": [${event(-2)}, ${event(-1)}]}""").statusCode() == 200)
+      collect(0)
+      val steady = (1 to 3).map(collect)
+      Seq("/analysis/segmentation?collection=visit&dimension=event_type",
+        "/analysis/funnel?collection=visit&steps=view,cart",
+        "/analysis/retention?collection=visit&grain=week").foreach { path =>
+        val r = get(port, path)
+        assert(r.statusCode() == 200, s"$path: ${r.body()}")
+      }
+      val after = (4 to 5).map(collect)
+      val compiles = (steady ++ after).map(_._1)
+      assert(compiles.forall(_ == 0), s"compiles per collect: $compiles")
+      // the stored server time is the injected clock, truncated to
+      // seconds; the mapper chain is the request's first clock read
+      val clockOfLast = after.last._2.head
+      val q = post(port, "/query/execute",
+        """{"query": "SELECT unix_millis(_time) AS ms FROM visit WHERE n = 5"}""")
+      assert(q.body().contains(s""""ms":${clockOfLast / 1000 * 1000}"""),
+        s"clock $clockOfLast: ${q.body()}")
+    } finally gw.stop()
   }
 
   test("materialized view lifecycle: create materializes history, " +

@@ -8,6 +8,49 @@ class MappersSpec extends SparkSpec {
   import spark.implicits._
 
   test("M1: missing _time → server now; client skew corrected") {
+    assertM1()
+  }
+
+  test("M1: interpreted path (no codegen) gives the same times") {
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try assertM1()
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("M1: a new clock value reuses the compiled projection") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // a range, not a local relation: the projection must run as
+    // generated code rather than be folded into the relation
+    val df = spark.range(4).select(
+      when($"id" % 2 === 0, timestamp_millis($"id" * 1000 + 1_700_000_000_000L))
+        .as("_time"),
+      ($"id" * 500 + 1_699_999_990_000L).as("_upload_time"))
+    def run(now: Long): (Seq[Long], Long) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val times = TimestampMapper(now).apply(df).select(unix_millis($"_time"))
+        .collect().map(_.getLong(0)).toSeq
+      (times, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+    }
+    // even rows: client + (now − upload); odd rows: server now
+    def expected(now: Long): Seq[Long] = (0L until 4L).map { i =>
+      if (i % 2 == 0) 1_700_000_000_000L + i * 1000 + (now - (1_699_999_990_000L + i * 500))
+      else now / 1000 * 1000
+    }
+    val t1 = 1_700_000_123_456L
+    val t2 = t1 + 61_789L
+    val (first, _) = run(t1)
+    val (second, compiles) = run(t2)
+    assert(compiles == 0, s"the second clock value compiled $compiles classes")
+    assert(first == expected(t1) && second == expected(t2), (first, second))
+  }
+
+  private def assertM1(): Unit = {
     val now = 1_700_000_123_456L
     val df = Seq(
       (Some(1_700_000_000_000L), Some(1_699_999_990_000L)), // client ts + upload
