@@ -8,7 +8,7 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.SchemaRegistry
@@ -632,7 +632,7 @@ final class HttpGateway(
       // the rule-table mappers run their dictionary shape (chain per
       // DISTINCT UA/host, broadcast join back — property-pinned
       // bit-equal to per-row) for BULK-sized batches only: an uncapped
-      // /event/bulk body then pays the regex chains per distinct value,
+      // /event/bulk body then pays the rule tables per distinct value,
       // while the hot single-event collect door keeps its one narrow
       // codegen'd projection instead of two extra exchanges per mapper
       val out0 = m match {
@@ -3205,10 +3205,11 @@ final class HttpGateway(
     * The spider gate runs on every collection BEFORE anything is
     * written, so a rejected request never stores a partial batch — the
     * reference throws FORBIDDEN from the mapper stage, before storage
-    * (UserAgentEventMapper.java:87-90). Each enriched frame is
-    * PERSISTED: the gate, the count, the write and every MV delta
-    * would otherwise re-execute the whole mapper chain per action —
-    * and re-fire the log accumulator, duplicating logger entries. */
+    * (UserAgentEventMapper.java:87-90). The gate and the stored-row
+    * count are one job per collection. Each enriched frame is
+    * PERSISTED: the gate, the write and every MV delta would otherwise
+    * re-execute the whole mapper chain per action — and re-fire the
+    * log accumulator, duplicating logger entries. */
   private def enrichAndStore(byCollection: Seq[(String, DataFrame)],
       runMappers: Boolean, cfCountry: Option[String],
       useDictionary: Boolean): Long = {
@@ -3217,7 +3218,7 @@ final class HttpGateway(
       (String, org.apache.spark.util.CollectionAccumulator[(String, String)])]
     // Persisted frames are tracked as they are CREATED, not after the
     // whole `prepared` list is assembled: the spider gate throws from
-    // inside the map below (and the gate's isEmpty action can fail),
+    // inside the map below (and the gate's job can fail),
     // so a finally that only covered the post-assembly phase would
     // leak every frame cached before the throw — and bot traffic hits
     // that path on every request, accumulating cached blocks without
@@ -3233,15 +3234,25 @@ final class HttpGateway(
             cached += enriched
             enriched
           } else df0
-        if (runMappers && df.columns.contains("_device_family") &&
-            !df.filter(org.apache.spark.sql.functions
-              .col("_device_family") === "Spider").isEmpty)
+        // the row count and the spider gate are ONE job: a fold per
+        // partition. A global `agg` would plan an exchange, which AQE
+        // runs as jobs of its own next to the one that fills the cache.
+        val spider =
+          if (runMappers && df.columns.contains("_device_family"))
+            coalesce(col("_device_family") === "Spider", lit(false))
+          else lit(false)
+        val perPartition = df.select(spider).as(Encoders.scalaBoolean)
+          .mapPartitions(it => Iterator(it.foldLeft((0L, false)) {
+            case ((rows, spiders), s) => (rows + 1, spiders || s)
+          }))(Encoders.tuple(Encoders.scalaLong, Encoders.scalaBoolean))
+          .collect()
+        if (perPartition.exists(_._2))
           throw new HttpGateway.ForbiddenRejected(
             "Spiders are not allowed in Rakam Analytics.")
-        coll -> df
+        (coll, df, perPartition.map(_._1).sum)
       }
-      prepared.foreach { case (coll, df) =>
-        n += df.count()
+      prepared.foreach { case (coll, df, rows) =>
+        n += rows
         EventStore.write(df, warehouse, project, coll)
         // continuous maintenance: the stored batch is also the delta
         // for every materialized view on this collection

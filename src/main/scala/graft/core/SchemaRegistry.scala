@@ -66,9 +66,19 @@ final class SchemaRegistry(persistDir: Option[Path] = None) {
     }
 
   /** Set-once project config (USER_TYPE, FIXED_SCHEMA). First writer
-    * wins; returns the winning value. */
+    * wins; returns the winning value. A value this call sets is
+    * persisted by it, like every other change. */
   def setOnce(project: String, key: String, value: String): String =
-    projectConfig.putIfAbsent((project, key), value).getOrElse(value)
+    lock.synchronized {
+      projectConfig.putIfAbsent((project, key), value) match {
+        case Some(winner) => winner
+        case None =>
+          persist(project)
+          // persist's merge may have resolved a concurrent race in
+          // another gateway's favor
+          projectConfig.getOrElse((project, key), value)
+      }
+    }
 
   def config(project: String, key: String): Option[String] =
     projectConfig.get((project, key))
@@ -121,6 +131,7 @@ final class SchemaRegistry(persistDir: Option[Path] = None) {
     */
   def getOrCreate(project: String, collection: String, fields: Seq[Field],
       masterKey: Boolean = true): (Seq[Field], Seq[Rejected]) = lock.synchronized {
+    refresh(project)
     val key = (project, collection)
     val existing = schemas.getOrElse(key,
       // first event creates the collection with the constant magic fields
@@ -148,8 +159,13 @@ final class SchemaRegistry(persistDir: Option[Path] = None) {
       }
     }
     val result = byName.values.toVector
-    schemas.put(key, result)
-    persist(project)
+    // a call that adds nothing (the steady state: every collect after
+    // a collection's first event) writes nothing: every change to the
+    // in-memory state was persisted by the call that made it
+    if (!schemas.get(key).contains(result)) {
+      schemas.put(key, result)
+      persist(project)
+    }
     // answer from POST-commit state: persist's merge may have resolved
     // a concurrent same-name race in another gateway's favor
     (schemas.getOrElse(key, result).toSeq, rejected.result())
@@ -182,9 +198,37 @@ final class SchemaRegistry(persistDir: Option[Path] = None) {
       }
       val tmp = Files.createTempFile(dir, s".$project-", ".tmp")
       Files.writeString(tmp, mapper.writeValueAsString(root))
-      Files.move(tmp, dir.resolve(s"$project.json"),
+      val f = dir.resolve(s"$project.json")
+      Files.move(tmp, f,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      seen.put(project, stamp(f))
+    }
+  }
+
+  /** Each project file's attributes as this instance last wrote or
+    * read it. Union-only evolution makes every real change grow the
+    * file and every publish is a rename of a new file, so a file whose
+    * (mtime, size, file key) still match holds nothing we lack. */
+  private val seen = TrieMap.empty[String, Option[(AnyRef, Long, AnyRef)]]
+
+  private def stamp(f: Path): Option[(AnyRef, Long, AnyRef)] =
+    try {
+      val a = Files.readAttributes(f,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      Some((a.lastModifiedTime, a.size, a.fileKey))
+    } catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** Merge the committed file if another instance published it since
+    * we last wrote or read it: a call that writes nothing still serves
+    * the union every gateway committed. One stat when nothing changed;
+    * the stat precedes the read, so a publish racing the read is seen
+    * again next time, never missed. */
+  private def refresh(project: String): Unit = persistDir.foreach { dir =>
+    val st = stamp(dir.resolve(s"$project.json"))
+    if (!seen.get(project).contains(st)) {
+      mergeCommitted(project)
+      seen.put(project, st)
     }
   }
 
@@ -201,8 +245,10 @@ final class SchemaRegistry(persistDir: Option[Path] = None) {
     val root = mapper.readTree(Files.readString(f))
     val colls = root.get("collections")
     if (colls != null) colls.properties().asScala.foreach { e =>
-      val committed = e.getValue.properties().asScala.map(fe =>
-        Field(fe.getKey, FieldType.fromName(fe.getValue.asText()))).toVector
+      // toVector BEFORE map: mapping the entry Set builds a hash set
+      // and would lose the committed column order
+      val committed = e.getValue.properties().asScala.toVector.map(fe =>
+        Field(fe.getKey, FieldType.fromName(fe.getValue.asText())))
       val ours = schemas.getOrElse((project, e.getKey), Vector.empty)
       val known = committed.map(_.name).toSet
       schemas.put((project, e.getKey),
@@ -239,15 +285,16 @@ final class SchemaRegistry(persistDir: Option[Path] = None) {
     * persist; used on restart). */
   def load(project: String): Unit = persistDir.foreach { dir =>
     val f = dir.resolve(s"$project.json")
+    seen.put(project, stamp(f))
     if (Files.exists(f)) {
       created.put(project, ())
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val root = mapper.readTree(Files.readString(f))
       val colls = root.get("collections")
       if (colls != null) colls.properties().asScala.foreach { e =>
-        val fields = e.getValue.properties().asScala.map { fe =>
+        val fields = e.getValue.properties().asScala.toVector.map { fe =>
           Field(fe.getKey, FieldType.fromName(fe.getValue.asText()))
-        }.toVector
+        }
         schemas.put((project, e.getKey), fields)
       }
       val cfg = root.get("config")

@@ -1,7 +1,7 @@
 package graft.enrich
 
 import graft.core.FieldType
-import graft.functions.ReferenceLiteral
+import graft.functions.{FirstMatch, ReferenceLiteral}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * mirroring FieldDependencyBuilder.java:12-53, so the registry can
   * admit module fields.
   *
-  * All transforms are pure column expressions (codegen'd, no UDF
-  * boundary) except UA/referrer classification which use built-in
-  * regexp functions — still whole-stage-codegen eligible.
+  * All transforms are column expressions (codegen'd, no UDF
+  * boundary); the UA/referrer rule tables are
+  * [[graft.functions.FirstMatch]] kernels, also whole-stage-codegen
+  * eligible.
   */
 trait EventMapper {
   def name: String
@@ -30,6 +31,28 @@ object Mappers {
     * (MaxmindGeoIPEventMapper.java:52). */
   val PrivateIpRegex: String =
     "(^127\\.0\\.0\\.1)|(^10\\.)|(^172\\.1[6-9]\\.)|(^172\\.2[0-9]\\.)|(^172\\.3[0-1]\\.)|(^192\\.168\\.)"
+
+  /** `df` with each of `outputs` replacing the column of that name in
+    * place, or appended in order, and the `dropped` columns removed: the
+    * columns chained `withColumn` calls and a `drop` would give, as ONE
+    * projection that is analyzed once. */
+  def project(df: DataFrame, outputs: Seq[(String, Column)],
+      dropped: Seq[String] = Nil): DataFrame = {
+    val byName = outputs.toMap
+    val kept = df.columns.toSeq.filterNot(dropped.contains).map { c =>
+      byName.get(c).fold(col(quoted(c)))(_.as(c))
+    }
+    val added = outputs.collect { case (n, e) if !df.columns.contains(n) => e.as(n) }
+    df.select(kept ++ added: _*)
+  }
+
+  /** A column reference to the field `name` as written, dots included. */
+  def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
+
+  /** `values(i)` for a rule index `i` from [[FirstMatch]], `miss` for
+    * its no-match value -1: one constant array lookup. */
+  def decode(index: Column, values: Seq[String], miss: String): Column =
+    element_at(ReferenceLiteral.strings(miss +: values), index + 2)
 }
 
 object MapperPipeline {
@@ -67,12 +90,22 @@ final case class TimestampMapper(nowMillis: Long) extends EventMapper {
 }
 
 /** M2: user-agent parse (UserAgentEventMapper.java:63-131) — family /
-  * version / OS / device folded from the [[UaRules]] tables (the
-  * uap-core database shape the reference's bundled ua-parser reads);
-  * Spider device rows are flagged (the reference rejects them with
-  * 403; here the caller filters `_device_family = 'Spider'` to a side
-  * output). Reference version semantics: MAJOR versions only, desktop
-  * devices are "Other" (TestUserAgentEventMapper.java:60-63). */
+  * version / OS / device from the [[UaRules]] tables (the uap-core
+  * database shape the reference's bundled ua-parser reads). Spider
+  * device rows are flagged (the reference rejects them with 403; here
+  * the caller filters `_device_family = 'Spider'` to a side output).
+  * Reference version semantics: MAJOR versions only, desktop devices
+  * are "Other" (TestUserAgentEventMapper.java:60-63).
+  *
+  * Each table is one [[graft.functions.FirstMatch]] kernel returning
+  * the first matching rule's index (-1: none), with its patterns
+  * compiled once per JVM, as the reference's ua-parser object compiles
+  * its database once at start-up. Everything a rule carries — family,
+  * version pattern or literal, device prefix — decodes from constant
+  * arrays indexed by that int, so the plan holds three small
+  * expressions, not hundreds of `rlike` branches that every analysis,
+  * optimization and code generation pass would walk per request.
+  * Codegen'd, no join, no UDF. */
 case object UserAgentMapper extends EventMapper {
   val name = "user-agent"
   override def dependentFields = Map("_user_agent" -> Seq(
@@ -82,124 +115,75 @@ case object UserAgentMapper extends EventMapper {
     "_os_version" -> FieldType.STRING,
     "_device_family" -> FieldType.STRING))
 
+  private val scratch = Seq("__ua_b", "__ua_o", "__ua_d")
+
   def apply(df: DataFrame): DataFrame = {
     if (!df.columns.contains("_user_agent")) return df
-    val ua = col("_user_agent")
-
-    Seq("__ua_bi", "__ua_o", "__ua_d").foreach { c =>
+    scratch.foreach { c =>
       require(!df.columns.contains(c), s"scratch column $c already present")
     }
-    // fold each table into ONE FLAT CaseWhen chain (`.when()` chaining
-    // appends a branch; nesting coalesce(when(..)) instead builds a
-    // 28-deep conditional tree the optimizer expands combinatorially —
-    // measured minutes of planning). First matching rule wins family
-    // AND version, emitted as ONE "family<sep>version" hit per table:
-    // separate family/version chains would run every detect regex
-    // TWICE and double the generated code — at full uap-core width
-    // that crosses Janino's 64 KB method limit and silently drops the
-    // projection out of whole-stage codegen (MapperCodegenSpec pins
-    // the compile). Codegen'd, no join, no UDF.
-    def chain(rules: Seq[(String, Column)]): Column =
-      rules.tail.foldLeft(when(ua.rlike(rules.head._1), rules.head._2)) {
-        (acc, r) => acc.when(ua.rlike(r._1), r._2)
-      }
-    val sep = "\u0001" // never appears in family names or versions
+    val ua = col("_user_agent")
+    // the three rule indices are staged in their own projection, so
+    // each kernel runs once per row: CollapseProject keeps a non-cheap
+    // expression that is read more than once where it is
+    val staged = Mappers.project(df, Seq(
+      "__ua_b" -> FirstMatch(ua, UaRules.browserTable),
+      "__ua_o" -> FirstMatch(ua, UaRules.osTable),
+      "__ua_d" -> FirstMatch(ua, UaRules.deviceTable)))
+    val (b, o, d) = (col("__ua_b"), col("__ua_o"), col("__ua_d"))
+    // a looked-up pattern is compiled again only when it differs from
+    // the previous row's; the dictionary shape runs this once per
+    // distinct UA
+    def extract(pattern: Column) = call_function("regexp_extract", ua, pattern, lit(1))
 
-    // The browser table (165+ rules) is too wide to inline a
-    // regexp_extract per branch: past ~150 rules the generated method
-    // overflows Janino's 64 KB limit whenever the chain's inputs are
-    // whole-stage codegen variables (e.g. fed by an aggregate, where
-    // Spark cannot split one expression's code into sub-methods the
-    // way row-based projection can — the m2 dictionary shape hit
-    // exactly this). So the chain emits only the winning rule's INDEX
-    // — each branch is one regex test plus an int literal, a few
-    // hundred bytes — and family/version decode OUTSIDE the chain:
-    // the family from a constant array literal (one object reference,
-    // zero per-branch code) and the version from ONE regexp_extract
-    // whose pattern is looked up from a constant array. A non-foldable
-    // pattern recompiles only when its value changes between rows —
-    // and real event streams cluster by UA family, while the scale
-    // shape (the m2 dictionary) runs the chain once per DISTINCT UA
-    // anyway.
-    val browserIdx = chain(UaRules.browsers.zipWithIndex.map {
-      case (r, i) => r.detect -> lit(i)
-    }).otherwise(-1)
-    val bFamilies = typedLit(UaRules.browsers.map(_.family))
-    val bVersions = typedLit(UaRules.browsers.map(_.version))
+    val family = Mappers.decode(b, UaRules.browsers.map(_.family), "Other")
+    // versionless rules (and a miss) carry "" for the pattern;
+    // regexp_extract returns "" on a no-match, and both decode to NULL
+    val bPattern = Mappers.decode(b, UaRules.browsers.map(_.version), "")
+    val version = when(bPattern =!= "", nullif(extract(bPattern), lit("")))
 
-    // `__ua_bi` is referenced here ONLY to pin project boundaries: the
-    // guard is never false (the browser chain always emits), but the
-    // second reference (with the downstream pass-through) stops
-    // CollapseProject from merging the os chain into the browser
-    // chain's projection — each table keeps its own generated method
-    val osHit = when(col("__ua_bi").isNotNull,
-      chain(UaRules.oses.map { r =>
-        val v =
-          if (r.literal.nonEmpty) lit(r.literal)
-          else if (r.versionRe.nonEmpty) regexp_extract(ua, r.versionRe, 1)
-          else lit("")
-        r.detect -> concat(lit(r.family + sep), v)
-      }).otherwise("Other" + sep))
+    val os = Mappers.decode(o, UaRules.oses.map(_.family), "Other")
+    val osLiteral = Mappers.decode(o, UaRules.oses.map(_.literal), "")
+    val osPattern = Mappers.decode(o, UaRules.oses.map(_.versionRe), "")
+    val osVersion = when(osLiteral =!= "", osLiteral)
+      .when(osPattern =!= "", nullif(extract(osPattern), lit("")))
 
-    // device table hit ("" = miss): [[UaRules.devices]] — branded
+    // device table hit (NULL = miss): [[UaRules.devices]] — branded
     // hardware with the model captured by the SAME regex that detects
-    // it (a rule can never match-then-fail-to-capture); the generic
-    // uap-core tails run after the table, below
-    val deviceHit = when(col("__ua_o").isNotNull, // boundary pin, as above
-      UaRules.devices.map { r =>
-        r.detect -> (if (r.family.nonEmpty) lit(r.family)
-          else concat(lit(r.prefix), regexp_extract(ua, r.detect, 1)))
-      } match {
-        case rules => rules.tail.foldLeft(
-          when(ua.rlike(rules.head._1), rules.head._2)) {
-          (acc, r) => acc.when(ua.rlike(r._1), r._2)
-        }.otherwise("")
-      })
-
-    val staged = df
-      .withColumn("__ua_bi", browserIdx)
-      .withColumn("__ua_o", osHit)
-      .withColumn("__ua_d", deviceHit)
-    val bi = col("__ua_bi")
-    val familyCol =
-      when(bi >= 0, element_at(bFamilies, bi + 1)).otherwise("Other")
-    // versionless rules carry "" in the pattern array; regexp_extract
-    // returns "" on a no-match, and both decode to NULL via nullif
-    val vPattern = element_at(bVersions, bi + 1)
-    val version = when(bi >= 0 && vPattern =!= "",
-      nullif(call_function("regexp_extract", ua, vPattern, lit(1)), lit("")))
-    val os = substring_index(col("__ua_o"), sep, 1)
-    val osVersion = nullif(substring_index(col("__ua_o"), sep, -1), lit(""))
-
+    // it (a rule can never match-then-fail-to-capture)
+    val dFamily = Mappers.decode(d, UaRules.devices.map(_.family), "")
+    val tableDevice = when(dFamily =!= "", dFamily)
+      .when(d >= 0, concat(
+        Mappers.decode(d, UaRules.devices.map(_.prefix), ""),
+        extract(Mappers.decode(d, UaRules.devices.map(_.detect), ""))))
     // devices: Spider first (needs the browser family), then the
-    // staged [[UaRules.devices]] table hit, then the uap-core
-    // generic-Android tails; desktops deliberately report "Other"
+    // device table hit, then the uap-core generic-Android tails;
+    // desktops deliberately report "Other"
     val androidModel =
       nullif(regexp_extract(ua, UaRules.AndroidModelRe, 1), lit(""))
     val device =
-      when(familyCol === "Spider", "Spider")
-        .when(col("__ua_d") =!= "", col("__ua_d"))
+      when(family === "Spider", "Spider")
+        .when(tableDevice =!= "", tableDevice)
         .when(ua.contains("Android") && androidModel.isNotNull, androidModel)
         .when(ua.contains("Android") && ua.contains("Mobile"), "Generic Smartphone")
         .when(ua.contains("Android"), "Generic Tablet")
         .otherwise("Other")
 
-    staged
-      .withColumn("_user_agent_family", familyCol)
-      .withColumn("_user_agent_version", version)
-      .withColumn("_os", os)
-      .withColumn("_os_version", osVersion)
-      .withColumn("_device_family", device)
-      .drop("__ua_bi", "__ua_o", "__ua_d")
+    Mappers.project(staged, Seq(
+      "_user_agent_family" -> family,
+      "_user_agent_version" -> version,
+      "_os" -> os,
+      "_os_version" -> osVersion,
+      "_device_family" -> device), dropped = scratch)
   }
 
-  /** The 100 TB shape of this mapper: run the ~220-rule chain once per
+  /** The 100 TB shape of this mapper: run the rule tables once per
     * DISTINCT user-agent and broadcast-join the dictionary back, so the
     * regex work is O(|distinct UA|) — ~10^5 at web scale — instead of
     * O(|events|) ~10^12 (the m2 oracle query measures exactly this
     * shape). Null-safe equality keeps the null-UA row matching its
     * dictionary entry, so results are bit-identical to [[apply]] (a
-    * property spec pins it); the chain itself evaluates only under the
+    * property spec pins it); the rule kernels evaluate only under the
     * dictionary aggregate, never on the fact side. */
   def dictionary(df: DataFrame): DataFrame = {
     if (!df.columns.contains("_user_agent")) return df
@@ -217,7 +201,11 @@ case object UserAgentMapper extends EventMapper {
 
 /** M3: referrer parse (ReferrerEventMapper.java:46-149): URL →
   * medium/source/term/domain/path; internal medium (referrer host ==
-  * page host) suppresses domain/path. */
+  * page host) suppresses domain/path. The referers table (snowplow
+  * referers.yml shape) is one [[graft.functions.FirstMatch]] kernel
+  * over the host: the first matching rule wins both source and medium
+  * (email rows precede search, so mail.google.com is email), decoded
+  * from constant arrays indexed by the rule. */
 final case class ReferrerMapper(internalHosts: Seq[String] = Seq.empty) extends EventMapper {
   val name = "referrer"
   override def dependentFields = Map("_referrer" -> Seq(
@@ -227,40 +215,27 @@ final case class ReferrerMapper(internalHosts: Seq[String] = Seq.empty) extends 
     "_referrer_domain" -> FieldType.STRING,
     "_referrer_path" -> FieldType.STRING))
 
-  private val sep = "\u0001" // never appears in source/medium slugs
+  private val scratch = Seq("__ref_host", "__ref_path", "__ref_hit", "__dict_host")
 
-  /** STAGE host/path once: inlining the parse_url into every rule
-    * branch would execute it ~|rules| times per row AND (with the full
-    * referers.yml-scale table) push the generated method past Janino's
-    * 64 KB limit, silently disabling whole-stage codegen. A separate
-    * projection keeps each branch a small RLIKE on a bound attribute —
-    * CollapseProject leaves it staged because the value is consumed
-    * many times. */
-  private def stage(df: DataFrame): DataFrame = df
-    .withColumn("__ref_host",
-      lower(nullif(try_parse_url(col("_referrer"), lit("HOST")), lit(""))))
-    .withColumn("__ref_path",
-      nullif(try_parse_url(col("_referrer"), lit("PATH")), lit("")))
+  /** Stage host/path in their own projection so each URL is parsed
+    * once per row: the host feeds the rule kernel, the medium and the
+    * domain, and CollapseProject leaves a non-cheap expression that is
+    * read more than once staged. */
+  private def stage(df: DataFrame): DataFrame = Mappers.project(df, Seq(
+    "__ref_host" ->
+      lower(nullif(try_parse_url(col("_referrer"), lit("HOST")), lit(""))),
+    "__ref_path" -> nullif(try_parse_url(col("_referrer"), lit("PATH")), lit(""))))
 
-  /** ONE flat CaseWhen over the referers table (snowplow referers.yml
-    * shape) emitting one U+0001-separated "source<SOH>medium" pair —
-    * first matching host rule wins BOTH (email rows precede search so
-    * mail.google.com is email); a single chain halves the per-row regex
-    * work and the generated code vs separate source/medium chains. */
-  private def hitChain(host: Column): Column =
-    UaRules.referers.tail.foldLeft(
-      when(host.rlike(UaRules.referers.head.hostRe),
-        lit(UaRules.referers.head.source + sep + UaRules.referers.head.medium))) {
-      (acc, r) => acc.when(host.rlike(r.hostRe), lit(r.source + sep + r.medium))
-    }
+  private def hit(host: Column): Column = FirstMatch(host, UaRules.refererTable)
 
   /** The per-row tail over a frame carrying `__ref_host`/`__ref_path`/
     * `__ref_hit`: medium precedence, term-param extraction, and the
-    * internal-traffic suppression. */
+    * internal-traffic suppression, as one projection that also drops
+    * the scratch columns. */
   private def finish(withHit: DataFrame): DataFrame = {
     val host = col("__ref_host")
-    val source = substring_index(col("__ref_hit"), sep, 1)
-    val tableMedium = substring_index(col("__ref_hit"), sep, -1)
+    val source = Mappers.decode(col("__ref_hit"), UaRules.referers.map(_.source), null)
+    val tableMedium = Mappers.decode(col("__ref_hit"), UaRules.referers.map(_.medium), null)
     val isInternal = if (internalHosts.nonEmpty) host.isin(internalHosts: _*) else lit(false)
     val medium =
       when(host.isNull, lit(null).cast("string"))
@@ -269,32 +244,33 @@ final case class ReferrerMapper(internalHosts: Seq[String] = Seq.empty) extends 
     val term = when(medium === "search", coalesce(
       UaRules.termParams.map(p =>
         nullif(try_parse_url(col("_referrer"), lit("QUERY"), lit(p)), lit(""))): _*))
-    withHit
-      .withColumn("_referrer_medium", medium)
-      .withColumn("_referrer_source", when(medium =!= "internal", source))
-      .withColumn("_referrer_term", term)
-      .withColumn("_referrer_domain", when(medium =!= "internal", host))
-      .withColumn("_referrer_path", when(medium =!= "internal", col("__ref_path")))
-      .drop("__ref_host", "__ref_path", "__ref_hit")
+    Mappers.project(withHit, Seq(
+      "_referrer_medium" -> medium,
+      "_referrer_source" -> when(medium =!= "internal", source),
+      "_referrer_term" -> term,
+      "_referrer_domain" -> when(medium =!= "internal", host),
+      "_referrer_path" -> when(medium =!= "internal", col("__ref_path"))),
+      dropped = scratch)
   }
 
   private def guard(df: DataFrame): Unit =
-    Seq("__ref_host", "__ref_path", "__ref_hit", "__dict_host").foreach { c =>
+    scratch.foreach { c =>
       require(!df.columns.contains(c), s"scratch column $c already present")
     }
 
   def apply(df: DataFrame): DataFrame = {
     if (!df.columns.contains("_referrer")) return df
     guard(df)
-    finish(stage(df).withColumn("__ref_hit", hitChain(col("__ref_host"))))
+    val st = stage(df)
+    finish(Mappers.project(st, Seq("__ref_hit" -> hit(col("__ref_host")))))
   }
 
   /** The 100 TB shape: referrer URLs are high-cardinality (query
-    * strings), but the classification chain only reads the HOST — so
-    * the ~110-regex chain runs once per DISTINCT host (~10^5 at web
-    * scale) and broadcast-joins back, while term/path extraction (a
-    * couple of try_parse_url calls) stays per-row. A null-safe join
-    * keeps the null-host (malformed URL) row identical to [[apply]];
+    * strings), but the rule table only reads the HOST — so the kernel
+    * runs once per DISTINCT host (~10^5 at web scale) and the rule
+    * index broadcast-joins back, while term/path extraction (a couple
+    * of try_parse_url calls) stays per-row. A null-safe join keeps the
+    * null-host (malformed URL) row identical to [[apply]];
     * property-pinned bit-equal. */
   def dictionary(df: DataFrame): DataFrame = {
     if (!df.columns.contains("_referrer")) return df
@@ -303,10 +279,8 @@ final case class ReferrerMapper(internalHosts: Seq[String] = Seq.empty) extends 
     val produced = dependentFields("_referrer").map(_._1)
     val st = stage(df.drop(produced.filter(df.columns.contains): _*))
     val dict = st.select(col("__ref_host").as("__dict_host")).distinct()
-      .withColumn("__ref_hit", hitChain(col("__dict_host")))
-    finish(st.join(broadcast(dict),
-        col("__ref_host") <=> col("__dict_host"), "left")
-      .drop("__dict_host"))
+      .select(col("__dict_host"), hit(col("__dict_host")).as("__ref_hit"))
+    finish(st.join(broadcast(dict), col("__ref_host") <=> col("__dict_host"), "left"))
   }
 }
 
@@ -473,7 +447,8 @@ case object UserIdMapper extends EventMapper {
     val existing = if (df.columns.contains("_user"))
       col("_user").cast("string") else lit(null).cast("string")
     val surrogate = concat(lit("anon_"),
-      sha2(to_json(struct(df.columns.map(col).toIndexedSeq: _*)), 256).substr(1, 16))
+      sha2(to_json(struct(df.columns.map(c => col(Mappers.quoted(c))).toIndexedSeq: _*)),
+        256).substr(1, 16))
     df.withColumn("_user", coalesce(existing, anon, surrogate))
   }
 }

@@ -1,19 +1,23 @@
 package graft.enrich
 
+import graft.functions.RuleTable
+
 /** Rule TABLES for the M2 user-agent and M3 referrer mappers — data,
   * not code, in the shape of the public uap-core `regexes.yaml` and
   * snowplow referer-parser `referers.yml` databases
   * (ref mapper/rakam-mapper-website/.../UserAgentEventMapper.java:63-131
   * bundles ua-parser over uap-core; ReferrerEventMapper.java:46-149
-  * bundles referer-parser). Each table folds into ONE vectorized
-  * `when`-chain / `coalesce` expression at plan time — first matching
-  * rule wins, exactly the uap-core priority convention (spiders first,
-  * Chromium shells before Chrome, CriOS/FxiOS before Safari) — so the
-  * scan-side plan shape is identical to a hand-rolled chain, while the
-  * knowledge lives in rows a maintainer extends without touching the
-  * mapper. A broadcast-dim formulation of the same table would probe
-  * via a nested-loop regex join; the folded chain does the identical
-  * work inside the scan's codegen with no join node at all.
+  * bundles referer-parser). First matching rule wins, exactly the
+  * uap-core priority convention (spiders first, Chromium shells before
+  * Chrome, CriOS/FxiOS before Safari), so the knowledge lives in rows a
+  * maintainer extends without touching the mapper.
+  *
+  * Each table's detect patterns are one [[graft.functions.RuleTable]]
+  * (the `*Table` vals below), compiled once per JVM — as the
+  * reference's parser objects compile their databases once at start-up
+  * — and evaluated by one [[graft.functions.FirstMatch]] kernel
+  * expression that yields the winning rule's index. The mappers decode
+  * everything else a rule carries from constant arrays indexed by it.
   *
   * Version semantics follow the reference mapper: MAJOR version only
   * (`parsed.userAgent.major` / `parsed.os.major`), and desktop devices
@@ -858,6 +862,12 @@ object UaRules {
     RefererRule("mandrill", "(^|\\.)mandrillapp\\.com$", "email"),
     // tail round 10: newsletter platform (the substack precedent)
     RefererRule("beehiiv", "(^|\\.)beehiiv\\.com$", "email"))
+
+  /** The detect (host) patterns of each table, in rule order. */
+  val browserTable: RuleTable = RuleTable("browsers", browsers.map(_.detect))
+  val osTable: RuleTable = RuleTable("oses", oses.map(_.detect))
+  val deviceTable: RuleTable = RuleTable("devices", devices.map(_.detect))
+  val refererTable: RuleTable = RuleTable("referers", referers.map(_.hostRe))
 
   /** Search-term query parameters, tried in order (q: most engines,
     * p: yahoo, text: yandex, wd/word: baidu, query: naver/daum/seznam,

@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.LeafExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** A constant that generated code reads through a reference object
   * instead of spelling it in the Java source.
@@ -40,6 +42,33 @@ final case class ReferenceLiteral(value: Long, dataType: DataType)
   }
 }
 
+/** A constant string array passed to generated code by reference, as
+  * [[ReferenceLiteral]] passes a number, that prints as its size: a
+  * rule table's decode array holds hundreds of strings, and a `Literal`
+  * would spell every one of them into each explain string, which Spark
+  * builds on every SQL execution. */
+final case class ReferenceStrings(values: Vector[String]) extends LeafExpression {
+
+  @transient private lazy val array: ArrayData =
+    new GenericArrayData(values.map(UTF8String.fromString).toArray[Any])
+
+  // a val: Catalyst asks for the type on every tree walk
+  override val dataType: DataType =
+    ArrayType(StringType, containsNull = values.contains(null))
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+
+  override def eval(input: InternalRow): Any = array
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[ArrayData].getName
+    val ref = ctx.addReferenceObj("strings", array, cls)
+    ev.copy(code = code"final $cls ${ev.value} = $ref;", isNull = FalseLiteral)
+  }
+
+  override def toString: String = s"strings[${values.length}]"
+}
+
 object ReferenceLiteral {
   /** A bigint constant, passed to generated code by reference. */
   def long(value: Long): Column = column(ReferenceLiteral(value, LongType))
@@ -48,4 +77,7 @@ object ReferenceLiteral {
     * by reference. */
   def timestampMillis(millis: Long): Column =
     column(ReferenceLiteral(Math.multiplyExact(millis, 1000L), TimestampType))
+
+  /** A constant string array, passed to generated code by reference. */
+  def strings(values: Seq[String]): Column = column(ReferenceStrings(values.toVector))
 }

@@ -269,6 +269,25 @@ object JsonIngest {
       propsRepr: String,
       lineSnippet: String)
 
+  private val NoSkeletons = Map.empty[String, Map[String, String]]
+
+  /** Per-collection union of field→type skeletons: union on names; on a
+    * type conflict inside one batch the lexicographically smaller type
+    * name wins, so the result does not depend on merge order (registry
+    * order decides across batches). */
+  private def unionSkeletons(a: Map[String, Map[String, String]],
+      b: Map[String, Map[String, String]]): Map[String, Map[String, String]] =
+    b.foldLeft(a) { case (acc, (c, fb)) =>
+      acc.updated(c, acc.get(c).fold(fb) { fa =>
+        (fa.keySet ++ fb.keySet).map { k =>
+          k -> ((fa.get(k), fb.get(k)) match {
+            case (Some(x), Some(y)) => if (x <= y) x else y
+            case (x, y) => x.orElse(y).get
+          })
+        }.toMap
+      })
+    }
+
   def ingest(spark: SparkSession, registry: SchemaRegistry, project: String,
       rawJson0: RDD[String]): IngestResult = {
 
@@ -323,20 +342,16 @@ object JsonIngest {
     // per collection. Properties-less events contribute NO skeleton (a
     // collection whose every line lacks a valid properties object is
     // never registered — it dead-letters whole, reference behavior).
+    // One single-stage job, no shuffle: each partition folds its own
+    // skeletons and the driver folds the per-partition results in
+    // partition order (not task completion order, as RDD.aggregate
+    // would), so even the field order of a small map is a function of
+    // the input alone.
     val skeletons: Map[String, Map[String, String]] = digests
-      .filter(_.props.isDefined)
-      .map(d => d.c -> d.skeleton)
-      .reduceByKey { (a, b) =>
-        // union on names; on a type conflict inside one batch pick the
-        // lexicographically smaller type name — deterministic regardless
-        // of partition reduce order (registry order decides across batches)
-        (a.keySet ++ b.keySet).map { k =>
-          k -> ((a.get(k), b.get(k)) match {
-            case (Some(x), Some(y)) => if (x <= y) x else y
-            case (x, y) => x.orElse(y).get
-          })
-        }.toMap
-      }.collect().toMap
+      .mapPartitions { it =>
+        Iterator.single(it.filter(_.props.isDefined)
+          .map(d => Map(d.c -> d.skeleton)).foldLeft(NoSkeletons)(unionSkeletons))
+      }.collect().foldLeft(NoSkeletons)(unionSkeletons)
 
     // USER_TYPE set-once across collections (InternalConfig.java:5-7).
     // When two collections in one FIRST batch disagree on _user's type,

@@ -608,6 +608,52 @@ class HttpGatewaySpec extends SparkSpec {
     }
   }
 
+  test("a spider in any collection of a batch rejects the whole request " +
+    "before any collection is written") {
+    withGateway { (_, port) =>
+      val bot = "Mozilla/5.0 (compatible; Googlebot/2.1; +http://www.google.com/bot.html)"
+      val human = "Mozilla/5.0 (X11; Linux x86_64; rv:121.0) Gecko/20100101 Firefox/121.0"
+      def event(coll: String, ua: String, page: String) =
+        s"""{"collection": "$coll", "properties": {"_user": "u", "_time": "2026-01-15 10:00:00.000", "_user_agent": "$ua", "page": "$page"}}"""
+      def count(coll: String): String =
+        post(port, "/query/execute", s"""{"query": "SELECT count(*) AS n FROM $coll"}""").body()
+      assert(post(port, "/event/batch", s"""{"events": [${event("ca", human, "/0")},
+        |${event("cb", human, "/0")}]}""".stripMargin).statusCode() == 200)
+      // the spider sits in each collection once, so whichever collection
+      // the gateway handles first, a clean one is handled before a bot
+      for ((spiderIn, cleanIn) <- Seq("ca" -> "cb", "cb" -> "ca")) {
+        val r = post(port, "/event/batch", s"""{"events": [${event(cleanIn, human, "/1")},
+          |${event(spiderIn, bot, "/1")}, ${event(spiderIn, human, "/1")}]}""".stripMargin)
+        assert(r.statusCode() == 403 && r.body().contains("Spiders are not allowed"), r.body())
+      }
+      assert(count("ca").contains("\"n\":1") && count("cb").contains("\"n\":1"),
+        (count("ca"), count("cb")))
+    }
+  }
+
+  test("a steady-state collect runs at most 4 Spark jobs: the spider " +
+    "gate and the stored count are one") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    withGateway { (_, port) =>
+      val event = """{"collection": "pv", "properties": {"_user": "u1", "_time": "2026-01-15 10:00:00.000", "_user_agent": "Mozilla/5.0 (X11; Linux x86_64; rv:121.0) Gecko/20100101 Firefox/121.0", "_referrer": "https://www.google.com/search?q=x"}}"""
+      (1 to 2).foreach(_ => assert(post(port, "/event/collect", event).statusCode() == 200))
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      }
+      val sc = spark.sparkContext
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        assert(post(port, "/event/collect", event).statusCode() == 200)
+        org.apache.spark.ListenerBusDrain(sc)
+      } finally sc.removeSparkListener(listener)
+      // ingest's schema fold, the gate and count, the store write, the
+      // dead-letter check
+      assert(jobs.get() <= 4, s"${jobs.get()} jobs for one collect")
+    }
+  }
+
   test("IP2Location CSV dim drives gateway geo enrichment end-to-end: " +
     "the reference-verbatim country NAME lands in _country_code") {
     import graft.enrich.geo.Ip2LocationCsv

@@ -100,8 +100,7 @@ class RegistryConvergenceSpec extends AnyFunSuite {
     val dir = graft.TempDirs.scratch("graft-reg-conv4").toString
     val r1 = SchemaRegistry.persistent(dir)
     val r2 = SchemaRegistry.persistent(dir)
-    // setOnce alone doesn't persist — ride a schema commit, as the
-    // gateway's project-config door does
+    // each racer also rides a schema commit, as ingest does
     raceBoth(r1, r2)(
       _ => { r1.setOnce("p", "USER_TYPE", "STRING")
         r1.getOrCreate("p", "c", Seq(r1.Field("x", S))) },

@@ -101,11 +101,62 @@ class SchemaRegistrySpec extends AnyFunSuite {
     r1.getOrCreate("p", "events", Seq(
       r1.Field("a", FieldType.ARRAY(FieldType.DOUBLE)),
       r1.Field("m", FieldType.MAP(FieldType.STRING))))
-    // setOnce alone doesn't persist; evolution does
     val r2 = SchemaRegistry.persistent(dir)
     r2.load("p")
     assert(r2.schema("p", "events").get.map(f => f.name -> f.tpe.name) ==
       Seq("a" -> "ARRAY_DOUBLE", "m" -> "MAP_STRING"))
     assert(r2.config("p", "USER_TYPE").contains("LONG"))
+  }
+
+  test("a no-op getOrCreate leaves the project file untouched") {
+    val dir = java.nio.file.Paths.get(graft.TempDirs.scratch("graft-registry-noop").toString)
+    val r = SchemaRegistry.persistent(dir.toString)
+    r.getOrCreate("p", "events", Seq(r.Field("a", FieldType.STRING)))
+    val f = dir.resolve("p.json")
+    val before = (java.nio.file.Files.getLastModifiedTime(f), java.nio.file.Files.readString(f))
+    // let a rewrite show up in the mtime even on a coarse file clock
+    Thread.sleep(20)
+    val (schema, rejected) = r.getOrCreate("p", "events", Seq(r.Field("a", FieldType.STRING)))
+    r.getOrCreate("p", "events", Seq.empty)
+    assert(schema.map(_.name) == Seq("a") && rejected.isEmpty)
+    assert((java.nio.file.Files.getLastModifiedTime(f), java.nio.file.Files.readString(f)) == before)
+    // a real change still persists
+    r.getOrCreate("p", "events", Seq(r.Field("b", FieldType.STRING)))
+    assert(java.nio.file.Files.readString(f).contains("\"b\""))
+  }
+
+  test("a no-op getOrCreate still serves what another instance committed") {
+    val dir = graft.TempDirs.scratch("graft-registry-refresh").toString
+    val r1 = SchemaRegistry.persistent(dir)
+    val r2 = SchemaRegistry.persistent(dir)
+    r1.getOrCreate("p", "events", Seq(r1.Field("a", FieldType.STRING)))
+    r2.getOrCreate("p", "events", Seq(r2.Field("b", FieldType.STRING)))
+    val (schema, _) = r1.getOrCreate("p", "events", Seq(r1.Field("a", FieldType.STRING)))
+    assert(schema.map(_.name) == Seq("a", "b"))
+    assert(r1.schema("p", "events").get.map(_.name) == Seq("a", "b"))
+  }
+
+  test("a set-once value persists without a schema change") {
+    val dir = graft.TempDirs.scratch("graft-registry-setonce").toString
+    val r1 = SchemaRegistry.persistent(dir)
+    r1.getOrCreate("p", "events", Seq(r1.Field("a", FieldType.STRING)))
+    r1.setOnce("p", "USER_TYPE", "LONG")
+    r1.getOrCreate("p", "events", Seq(r1.Field("a", FieldType.STRING)))
+    val r2 = SchemaRegistry.persistent(dir)
+    r2.load("p")
+    assert(r2.config("p", "USER_TYPE").contains("LONG"))
+  }
+
+  test("a reloaded or merged registry keeps the committed column order") {
+    val dir = graft.TempDirs.scratch("graft-registry-order").toString
+    val names = Seq("zeta", "alpha", "mid", "b", "yy", "c0", "omega", "a1")
+    val r1 = SchemaRegistry.persistent(dir)
+    names.foreach(n => r1.getOrCreate("p", "events", Seq(r1.Field(n, FieldType.STRING))))
+    val r2 = SchemaRegistry.persistent(dir)
+    r2.load("p")
+    assert(r2.schema("p", "events").get.map(_.name) == names)
+    val r3 = SchemaRegistry.persistent(dir)
+    r3.getOrCreate("p", "events", Seq(r3.Field("new", FieldType.STRING)))
+    assert(r3.schema("p", "events").get.map(_.name) == names :+ "new")
   }
 }

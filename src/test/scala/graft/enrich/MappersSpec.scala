@@ -278,7 +278,7 @@ class MappersSpec extends SparkSpec {
     import spark.implicits._
     // duplicates, a null UA, and rule-table hits across every family
     // class — dictionary() must be bit-identical to apply() including
-    // the null row (null-safe join key), while the regex chain runs
+    // the null row (null-safe join key), while the rule kernels run
     // only under the |distinct-UA| dictionary aggregate
     val uas = graft.analytics.MapperQueries.uaSamples
     val rows = (0 until 300).map { i =>
@@ -299,8 +299,18 @@ class MappersSpec extends SparkSpec {
       org.apache.spark.sql.functions.lit(null).cast("string"))
     assert(UserAgentMapper.dictionary(withPlaceholder)
       .columns.count(_ == "_user_agent_family") == 1)
-    val plan = UserAgentMapper.dictionary(df).queryExecution.executedPlan.toString
-    assert(!streamedSide(plan).contains("RLIKE"), streamedSide(plan))
+    assertRuleWorkOffFactSide(UserAgentMapper.dictionary(df))
+  }
+
+  /** The rule kernels run in the plan, but neither they nor an `rlike`
+    * chain run on its fact side. */
+  private def assertRuleWorkOffFactSide(out: org.apache.spark.sql.DataFrame): Unit = {
+    assert(out.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[graft.functions.FirstMatch]))), "no rule kernel in the plan")
+    val plan = out.queryExecution.executedPlan.toString
+    Seq("first_match", "RLIKE").foreach { k =>
+      assert(!streamedSide(plan).contains(k), streamedSide(plan))
+    }
   }
 
   /** The streamed (fact) side of the dictionary join: in the tree
@@ -329,8 +339,7 @@ class MappersSpec extends SparkSpec {
       .select(m(df).columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
       .orderBy($"event_id").collect().map(_.toSeq).toSeq
     assert(viaDict === perRow)
-    val plan = m.dictionary(df).queryExecution.executedPlan.toString
-    assert(!streamedSide(plan).contains("RLIKE"), streamedSide(plan))
+    assertRuleWorkOffFactSide(m.dictionary(df))
   }
 
   test("M3: referrer parse — widened source families and term params") {
@@ -474,6 +483,32 @@ class MappersSpec extends SparkSpec {
     // deterministic: same row → same surrogate
     val again = UserIdMapper(df).collect()(2).getAs[String]("_user")
     assert(again == surrogate)
+  }
+
+  test("M5: the surrogate reads fields whose names carry dots") {
+    // ingest keeps a property named `a.b` as one column; the surrogate
+    // must read it as that column, not as field `b` of a struct `a`
+    val df = Seq(("x", "y")).toDF("a.b", "c")
+    val out = UserIdMapper(df).collect().head.getAs[String]("_user")
+    assert(out.startsWith("anon_") &&
+      out != UserIdMapper(Seq(("z", "y")).toDF("a.b", "c")).collect().head.getAs[String]("_user"))
+  }
+
+  test("mappers replace pre-created output columns in place and keep " +
+    "the column order") {
+    val df = Seq(("Mozilla/5.0 (Windows NT 10.0) Chrome/120.0", "https://www.google.com/search?q=x"))
+      .toDF("_user_agent", "_referrer")
+      .withColumn("_os", lit(null).cast("string"))
+      .withColumn("_referrer_source", lit(null).cast("string"))
+      .withColumn("v", lit(1))
+    val out = ReferrerMapper()(UserAgentMapper(df))
+    assert(out.columns.toSeq == Seq("_user_agent", "_referrer", "_os",
+      "_referrer_source", "v", "_user_agent_family", "_user_agent_version",
+      "_os_version", "_device_family", "_referrer_medium", "_referrer_term",
+      "_referrer_domain", "_referrer_path"))
+    val row = out.collect().head
+    assert(row.getAs[String]("_os") == "Windows" &&
+      row.getAs[String]("_referrer_source") == "google")
   }
 
   test("pipeline runs mappers in order and registers field deps") {

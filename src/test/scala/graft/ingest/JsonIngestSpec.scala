@@ -130,4 +130,32 @@ class JsonIngestSpec extends SparkSpec {
     val res = ingest(s"""{"collection": "c", "properties": {"s": "$long"}}""")
     assert(res.byCollection("c").collect().head.getAs[String]("s").length == 100)
   }
+
+  test("one ingest batch runs as a single stage with no shuffle") {
+    implicit val r: SchemaRegistry = SchemaRegistry.inMemory()
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+    val stages = scala.collection.mutable.ArrayBuffer.empty[StageInfo]
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.synchronized { stages += e.stageInfo }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      ingest(
+        """{"collection": "a", "properties": {"x": 1, "y": "s"}}""",
+        """{"collection": "b", "properties": {"z": true}}""",
+        """{"collection": "a", "properties": {"x": "t", "w": 2}}""")
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    val seen = stages.synchronized(stages.toSeq)
+    assert(seen.size == 1, s"stages: ${seen.map(_.name)}")
+    val m = seen.head.taskMetrics
+    assert(m.shuffleWriteMetrics.bytesWritten == 0 && m.shuffleReadMetrics.totalBytesRead == 0)
+    // the reduce across partitions: union on names, smaller type name
+    assert(r.schema("demo", "a").get.map(f => f.name -> f.tpe.name).toMap ==
+      Map("x" -> "DOUBLE", "y" -> "STRING", "w" -> "DOUBLE"))
+    assert(r.schema("demo", "b").get.map(_.name) == Seq("z"))
+  }
 }
