@@ -1,451 +1,199 @@
 package graft
+
+import java.io.OutputStream
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.StandardOpenOption.{CREATE_NEW, WRITE}
+import java.time.{Instant, ZoneOffset}
+import java.time.format.DateTimeFormatter
+import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+
+/** Registry timer. Each query runs `reps` times (its `build` plus a
+  * `toRdd.count()` of its own plan — a `.count()` on top would let
+  * Catalyst prune the final projections out of the measurement), and
+  * its row is the median rep: wall seconds plus that rep's Spark
+  * counters — task CPU, jobs, stages, shuffle bytes read + written.
+  * The counters do not move with host load, so a regression is judged
+  * on them (`tools/check_regression.py`) and wall time is printed
+  * beside them.
+  *
+  * A run appends one JSON line per query, as the query finishes, to a
+  * record it creates new under `bench-records/`: a killed or
+  * deadline-cut run keeps every finished row, and no run overwrites
+  * another's. Stdout's last line is a compact digest naming the record.
+  *
+  * Env: `SPARK_GRAFT_SF_DIR` (tables), `SPARK_GRAFT_CPUS` (see
+  * [[Tables.localSession]]), `SPARK_GRAFT_BENCH_REPS` (default 3),
+  * `SPARK_GRAFT_BENCH_ONLY` (comma-separated subset),
+  * `SPARK_GRAFT_BENCH_DEADLINE_S` (default 1500).
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions())
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).toSet)
+    val deadlineS = sys.env.get("SPARK_GRAFT_BENCH_DEADLINE_S")
+      .map(s => s.toDoubleOption.getOrElse(sys.error(
+        s"SPARK_GRAFT_BENCH_DEADLINE_S must be a number, got '$s'")))
+      .getOrElse(1500.0)
+    val spark = Tables.localSession()
     // Warm the JVM (codegen, parquet reader, shuffle paths) so the first
     // timed query doesn't absorb ~5s of one-time initialization.
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables(spark, sfDir, "lineitem").limit(10).collect()
-    // Boot-speed calibration: a fixed registry-independent workload
-    // (hash-sum over a 2e8 range + one small shuffle) timed as
-    // median-of-3. Boot-to-boot host drift measured at 1.2-1.4x on
-    // byte-identical code (r6/r7 records); dividing a query's time by
-    // (calib / its budget-row boot's calib) reads a regression through
-    // that noise. Recorded as "calib" in the output line.
-    def measureCalib(): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      // ANSI-safe: the modulo keeps the 2e8-element sum far under
-      // long overflow while still exercising codegen + a shuffle
-      spark.range(200000000L)
-        .selectExpr("sum(id % 1000003)", "count(DISTINCT id % 97)")
-        .collect()
-      (System.nanoTime() - t0) / 1e9
-    }.sorted.apply(1)
-    val calib = measureCalib()
-    // Contended-boot guard (r8/r9 verdicts): quiet boots on this host
-    // measure calib 0.43-0.56 across rounds (median ~0.47); the r8
-    // budget table was accidentally recorded at 0.9256 and every
-    // cross-boot comparison needed hand adjudication. A run whose
-    // calib exceeds 1.3x the quiet median is marked contended in the
-    // output line, and tools/record_budgets.py REFUSES to turn such a
-    // run into BASELINE.md budget rows.
-    // HOST-SPECIFIC constant (this sandbox); another machine overrides
-    // via SPARK_GRAFT_QUIET_CALIB. This is the single source of truth —
-    // tools/record_budgets.py consumes the emitted "contended"/
-    // "max_calib" fields instead of carrying its own copy.
-    val quietCalibMedian = sys.env.get("SPARK_GRAFT_QUIET_CALIB")
-      .map(s => s.toDoubleOption.getOrElse(sys.error(
-        s"SPARK_GRAFT_QUIET_CALIB must be a number, got '$s'")))
-      .getOrElse(0.47)
-    val maxCalib = 1.3 * quietCalibMedian
-    val contended = calib > maxCalib
-    // Median of `reps` runs per query: single-pass build+count timing is
-    // JIT/GC-noisy (r4 saw a 2x swing on byte-identical code), and the
-    // median of 3 keeps one bad rep from setting the record.
-    // A query that throws must not silently count as a fast success: it is
-    // surfaced in "failed" and excluded from the headline total.
-    // Optional comma-separated subset for local iteration; the driver
-    // leaves it unset and benches the whole registry.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.registry.filter(q => names(q._1))
-      case None => SparkEntry.registry
-    }
-    def fmt(v: Double): String = BigDecimal(v)
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    // ---- burst-proof record keeping (r15 verdict #1) -----------------
-    // The r15 driver bench was killed by an external timeout ~70%
-    // through the registry and produced ZERO parseable data: the record
-    // only wrote after the full pass + adjudication completed. Three
-    // defenses, so a killed run still yields a usable, honest record:
-    //  (a) every completed row streams to BENCH_PARTIAL.jsonl the
-    //      moment it lands (crash forensics, row-exact);
-    //  (b) a JVM shutdown hook emits the full + digest stdout lines for
-    //      whatever finished, marked with "truncated_at" — the driver's
-    //      stdout-tail parser gets a record even on SIGTERM;
-    //  (c) SPARK_GRAFT_BENCH_DEADLINE_S stops the main pass (and skips
-    //      adjudication) once the wall clock passes it, so a run that
-    //      WOULD overrun its sandbox timeout degrades to a clean
-    //      truncated record instead of a kill.
-    // A truncated/hook record never overwrites BENCH_LOCAL.json (that
-    // file is the full-registry gate record and the adjudication
-    // baseline); partials go to BENCH_PARTIAL.json.
-    val benchStart = System.nanoTime()
-    // Defaulted (r16 verdict #1c): the driver never sets this, and its
-    // sandbox kills an overrunning bench with SIGTERM (rc=124) — a
-    // kill-path record depends on the shutdown hook racing the reaper.
-    // 1500s is ~10x a quiet full-registry pass, so a healthy run never
-    // sees it, while a burst-pathology run self-cuts to a clean
-    // truncated record with the digest printed last.
-    val deadlineS = sys.env.get("SPARK_GRAFT_BENCH_DEADLINE_S")
-      .map(s => s.toDoubleOption.getOrElse(sys.error(
-        s"SPARK_GRAFT_BENCH_DEADLINE_S must be a number, got '$s'")))
-      .orElse(Some(1500.0))
-    def pastDeadline(): Boolean =
-      deadlineS.exists(d => (System.nanoTime() - benchStart) / 1e9 > d)
-    val partialJsonl = java.nio.file.Paths.get("BENCH_PARTIAL.jsonl")
-    // Resume a deadline-cut run (r17 verdict #1): SPARK_GRAFT_BENCH_RESUME=1
-    // seeds the result set from BENCH_PARTIAL.jsonl's completed rows and
-    // benches only the remainder, so a truncated pass can be finished in
-    // a second invocation instead of re-paying the prefix. Default OFF —
-    // the driver's single-invocation contract is unchanged, and a fresh
-    // run still truncates the jsonl.
-    val resume = sys.env.get("SPARK_GRAFT_BENCH_RESUME").contains("1")
-    val resumedRows: List[(String, Double, Boolean)] =
-      if (!resume || only.nonEmpty ||
-          !java.nio.file.Files.exists(partialJsonl)) Nil
-      else try {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(partialJsonl).asScala.toList
-          .filter(_.nonEmpty).map { l =>
-            val n = om.readTree(l)
-            (n.get("q").asText(), n.get("sec").asDouble(),
-              n.get("ok").asBoolean())
-          }
-      } catch { case e: Exception =>
-        System.err.println(s"[bench] resume requested but jsonl unreadable " +
-          s"($e) — starting fresh")
-        Nil
-      }
-    if (resumedRows.nonEmpty)
-      System.err.println(s"[bench] resuming: ${resumedRows.size} rows " +
-        s"carried from BENCH_PARTIAL.jsonl")
-    if (only.isEmpty && resumedRows.isEmpty)
-      java.nio.file.Files.write(partialJsonl, Array.empty[Byte])
-
-    // shared with the shutdown hook — synchronize snapshots
-    val resultsBuf = new scala.collection.mutable.ArrayBuffer[(String, Double, Boolean)]()
-    resultsBuf ++= resumedRows
-    val resumedNames = resumedRows.map(_._1).toSet
-    @volatile var cutAt: Option[String] = None
-    @volatile var inFlight: Option[String] = None
-    val recordEmitted = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // Kill-path abort (r16 verdict #1a): once the shutdown hook has
-    // emitted its record, or Spark's own shutdown hook has stopped the
-    // context, every further query is a guaranteed ~700-char
-    // stopped-SparkContext failure — 9 of them flooded the r16 digest
-    // out of the driver's ~2000-char stdout tail. Nothing may run, and
-    // nothing may print, past this point.
-    def halted(): Boolean =
-      recordEmitted.get() || spark.sparkContext.isStopped
-
-    def timeQuery(name: String, qd: QueryDef, n: Int,
-        budgetS: Double = Double.MaxValue): (Double, Boolean) = {
-      var excepted = false
-      val qStart = System.nanoTime()
-      def qElapsed: Double = (System.nanoTime() - qStart) / 1e9
-      val times = (1 to n).flatMap { i =>
-        // a deadline mid-reps settles for the reps already taken (≥1)
-        // rather than abandoning the row; likewise a query that has
-        // already burned its fair share of the remaining deadline
-        // (budgetS — r17 verdict #1: per-row deadline budgeting) keeps
-        // its completed reps and yields the rest of the window to the
-        // tail of the registry instead of starving it
-        if (excepted || halted() ||
-            (i > 1 && (pastDeadline() || qElapsed > budgetS))) None
-        else {
-          val t0 = System.nanoTime()
-          // execute the query's OWN plan (toRdd): a .count() on top
-          // would let Catalyst column-prune final projections out of
-          // the measurement, under-timing exactly the expression-heavy
-          // queries (same flaw the QueriesSmokeSpec codegen lint had)
-          try {
-            qd.build(spark, sfDir).queryExecution.toRdd.count()
-            Some((System.nanoTime() - t0) / 1e9)
-          }
-          catch { case e: Throwable =>
-            // first line only (r16 verdict #1b): a stopped-SparkContext
-            // message carries its creation-site stack trace; multi-line
-            // spam is what pushed the digest out of the tail window.
-            // A failure during shutdown prints nothing at all.
-            if (!halted()) {
-              val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-                .linesIterator.nextOption().getOrElse("").take(300)
-              System.err.println(s"[bench] $name FAILED: $msg")
-            }
-            excepted = true
-            None
-          }
-        }
-      }
-      val median =
-        if (times.isEmpty) 0.0 else times.sorted.apply((times.size - 1) / 2)
-      (median, !excepted && times.nonEmpty)
-    }
-
-    /** The full record line + the driver-facing compact digest (the
-      * stdout-tail capture keeps only ~2000 chars; the digest always
-      * fits). `truncatedAt` marks a partial record — the query the run
-      * never finished (deadline cut or kill-in-flight). */
-    def recordLines(results: Seq[(String, Double, Boolean)], adjPart: String,
-        truncatedAt: Option[String]): (String, String) = {
-      val qs = results.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
-        .mkString("[", ",", "]")
-      val total = results.collect { case (_, v, true) => v }.sum
-      val truncPart = truncatedAt
-        .map(n => s""","truncated_at":"$n"""").getOrElse("")
-      val line =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib":${fmt(calib)},"contended":$contended,"max_calib":${fmt(maxCalib)},"queries":$qs,"failed":$failed$adjPart$truncPart,"sf":"$sfDir"}"""
-      val slowest = results.collect { case (k, v, true) => (k, v) }
-        .sortBy(-_._2).take(12)
-        .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val digest =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib":${
-          fmt(calib)},"contended":$contended,"max_calib":${fmt(maxCalib)},"n_queries":${
-          results.size},"queries":$slowest,"queries_truncated":true,"failed":$failed$truncPart,"full_record":"${
-          if (truncatedAt.isEmpty) "BENCH_LOCAL.json" else "BENCH_PARTIAL.json"
-          }","sf":"$sfDir"}"""
-      (line, digest)
-    }
-
-    val hook = new Thread(() => {
-      if (recordEmitted.compareAndSet(false, true)) {
-        val snap = resultsBuf.synchronized { resultsBuf.toList }
-        val cut = cutAt.orElse(inFlight).orElse(Some("(start)"))
-        val (line, digest) = recordLines(snap, "", cut)
-        println(line)
-        if (only.isEmpty) println(digest)
-        scala.Console.out.flush()
-        if (only.isEmpty)
-          try java.nio.file.Files.write(
-            java.nio.file.Paths.get("BENCH_PARTIAL.json"),
-            (line + "\n").getBytes("UTF-8"))
-          catch { case _: Exception => () }
-      }
-    }, "bench-shutdown-record")
-    Runtime.getRuntime.addShutdownHook(hook)
-
-    for ((name, qd) <- selected if cutAt.isEmpty && !resumedNames(name)) {
-      if (halted()) {
-        cutAt = Some(name)
-        // stderr is part of the driver's tail capture too — one line,
-        // printed only if the hook hasn't already emitted the record
-        if (!recordEmitted.get())
-          System.err.println(s"[bench] SparkContext stopped — aborting " +
-            s"registry loop before $name")
-      } else if (pastDeadline()) {
-        cutAt = Some(name)
-        System.err.println(s"[bench] wall-clock deadline (${deadlineS.get}s)" +
-          s" reached — stopping before $name, recording the cut")
-      } else {
-        inFlight = Some(name)
-        // Fair-share budget for THIS query's optional reps (r17 verdict
-        // #1: the r17 driver boot was burst-contended — 3 reps × 10-40×
-        // inflated rows spent the whole 1500 s deadline on 114/168
-        // queries; corpus_report alone burned ~390 s on reps of a row
-        // whose quiet time is ~1.2 s). Budget = remaining deadline
-        // (with a 10% reserve for record writing) split evenly over the
-        // remaining queries. Rep 1 ALWAYS runs — only reps 2..n are
-        // shed — so a quiet run (sub-second medians vs a ~8 s/query
-        // budget) keeps the full median-of-3 methodology and a
-        // contended run degrades to ~1 rep/query but completes 168/168
-        // inside the deadline instead of truncating.
-        val repBudget = deadlineS.map { d =>
-          val elapsed = (System.nanoTime() - benchStart) / 1e9
-          val remainQ = math.max(selected.size - resultsBuf.size, 1)
-          math.max(0.0, d * 0.9 - elapsed) / remainQ
-        }.getOrElse(Double.MaxValue)
-        val (median, ok) = timeQuery(name, qd, reps, repBudget)
-        resultsBuf.synchronized { resultsBuf += ((name, median, ok)) }
-        inFlight = None
-        if (only.isEmpty)
-          java.nio.file.Files.write(partialJsonl,
-            (s"""{"q":"$name","sec":${fmt(median)},"ok":$ok}""" + "\n")
-              .getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.APPEND)
-      }
-    }
-    val results = resultsBuf.synchronized { resultsBuf.toList }
-    // ---- Self-adjudication (r13 verdict #2) -------------------------
-    // The r13 official record shipped from a burst-noise window with 15
-    // calib-scaled flags that only a judge-side solo re-bench cleared:
-    // calib measures AVERAGE boot contention, but bursts hit individual
-    // sub-second rows mid-run. So before writing a full-registry record,
-    // compare each row against the PREVIOUS record on disk (calib-scaled,
-    // same >15%+0.1s rule as tools/check_regression.py — keep the
-    // constants in lockstep) and re-run every flagged row solo, with a
-    // freshly measured calib for the solo window. The record then
-    // carries its own adjudication: check_regression.py prefers the solo
-    // number for a flagged row, so a burst-noisy official artifact
-    // clears itself instead of needing a judge re-bench.
-    val flagPct = 0.15
-    val flagFloor = 0.1
-    // Bound the adjudication pass; overflow is recorded (the r14
-    // cross-era run flagged 77 rows against a burst-era record and hit
-    // the default — same-era comparisons flag far fewer). Overridable
-    // for a deliberate full adjudication on a quiet window.
-    val soloCap = sys.env.get("SPARK_GRAFT_SOLO_CAP")
-      .flatMap(_.toIntOption).getOrElse(40)
-    val prevRecord: Option[(Double, Map[String, Double])] =
-      if (only.nonEmpty) None
-      else {
-        val p = java.nio.file.Paths.get("BENCH_LOCAL.json")
-        if (!java.nio.file.Files.exists(p)) None
-        else try {
-          val node = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(java.nio.file.Files.readAllBytes(p))
-          if (!node.has("calib") || !node.has("queries")) None
-          else {
-            import scala.jdk.CollectionConverters._
-            val qn = node.get("queries")
-            val qs = qn.fieldNames().asScala
-              .map(k => k -> qn.get(k).asDouble()).toMap
-            Some(node.get("calib").asDouble() -> qs)
-          }
-        } catch { case e: Exception =>
-          System.err.println(
-            s"[bench] previous record unreadable, skipping adjudication: $e")
-          None
-        }
-      }
-    // BASELINE.md §3 budget rows (name -> (seconds, recording calib)):
-    // the r14 verdict's solo-cap fix needs them — a row can clear the
-    // prev-record flag comfortably yet sit over its BUDGET threshold,
-    // and the 40-row cap once spent every slot on big prev-ratios while
-    // the only two over-budget rows (d5, d11) shipped unadjudicated.
-    val budgets: Map[String, (Double, Double)] = {
-      val p = java.nio.file.Paths.get("BASELINE.md")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        // same row shape tools/check_regression.py parses (BUDGET_ROW)
-        val Row = """(?m)^\| ([a-z0-9_]+) \| 0\.1 \| ([0-9.]+) \| ([0-9.]+) \| [^|]+ \| [^|]+ \|$""".r
-        Row.findAllMatchIn(new String(
-          java.nio.file.Files.readAllBytes(p), "UTF-8"))
-          .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble))
-          .toMap
-      }
-    }
-    // The budget gate's regression threshold (the judge's 2x-budget
-    // line, calib-normalized to THIS boot). Only meaningful for a
-    // full-registry sf0.1 run — budgets are recorded at that scale.
-    def overBudget(name: String, t: Double): Boolean =
-      sfDir.endsWith("0.1") && budgets.get(name).exists {
-        case (b, bCalib) =>
-          t > math.max(2 * b, b + 0.5) * (calib / bCalib)
-      }
-    // a deadline-cut run skips adjudication outright: its rows are a
-    // prefix of the registry and the solo re-runs would overrun the
-    // very deadline that cut the pass
-    val adjudication: Option[String] =
-      if (cutAt.nonEmpty || pastDeadline() || halted()) None
-      else prevRecord.flatMap {
-      case (prevCalib, prevQs) =>
-        val ratio = calib / prevCalib
-        val flaggedAll = results.collect {
-          case (name, t, true)
-            if (prevQs.contains(name) &&
-              t > prevQs(name) * ratio * (1 + flagPct) + flagFloor) ||
-              overBudget(name, t) =>
-            (name, if (prevQs.contains(name)) t / (prevQs(name) * ratio)
-                   else t / (budgets(name)._1 * (calib / budgets(name)._2)))
-        }.sortBy(-_._2)
-        if (flaggedAll.isEmpty) None
-        else {
-          // Over-budget rows claim solo slots FIRST (they are the rows
-          // the budget gate will actually judge); ratio-ordered fill
-          // takes whatever the cap leaves.
-          val byName = results.collect { case (n, t, true) => n -> t }.toMap
-          val (priority, rest) =
-            flaggedAll.partition { case (n, _) => overBudget(n, byName(n)) }
-          val flagged = (priority ++ rest).take(soloCap)
-          var truncated = flaggedAll.size > soloCap
-          System.err.println(
-            s"[bench] ${flaggedAll.size} rows flagged vs previous record " +
-              s"(calib ratio ${fmt(ratio)}); re-running " +
-              s"${flagged.size} solo at ${math.max(reps, 5)} reps" +
-              (if (truncated) s" (CAPPED at $soloCap — overflow recorded)"
-               else ""))
-          val soloCalib = measureCalib()
-          // the deadline also bounds the solo pass: completed solos are
-          // kept, the rest stay on their main-pass numbers
-          var soloDone = 0
-          val solo = flagged.iterator
-            .takeWhile(_ => !pastDeadline() && !halted())
-            .flatMap { case (name, _) =>
-              val qd = SparkEntry.registry.find(_._1 == name).get._2
-              // same fair-share budgeting as the main pass: the solo
-              // window splits the remaining deadline over the remaining
-              // flagged rows so one burst-hit row can't starve the rest
-              val soloBudget = deadlineS.map { d =>
-                val elapsed = (System.nanoTime() - benchStart) / 1e9
-                val remainQ = math.max(flagged.size - soloDone, 1)
-                math.max(0.0, d * 0.9 - elapsed) / remainQ
-              }.getOrElse(Double.MaxValue)
-              soloDone += 1
-              val (median, ok) =
-                timeQuery(name, qd, math.max(reps, 5), soloBudget)
-              // a FAILED/halted solo must not enter the record: its 0.0
-              // would be preferred by check_regression and clear a
-              // genuinely regressed row — omit it so the gate judges
-              // the row on its main-pass number instead
-              if (ok) Some(name -> median) else None
-            }.toList
-          if (solo.size < flagged.size) truncated = true
-          val soloJson = solo
-            .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-            .mkString("{", ",", "}")
-          val flaggedJson = flaggedAll
-            .map { case (k, r) => "\"" + k + "\":" + fmt(r) }
-            .mkString("{", ",", "}")
-          val overJson = priority.map("\"" + _._1 + "\"")
-            .mkString("[", ",", "]")
-          Some(
-            s""""adjudication":{"prev_calib":${fmt(prevCalib)},"solo_calib":${fmt(soloCalib)},"flagged":$flaggedJson,"over_budget":$overJson,"solo":$soloJson,"solo_truncated":$truncated}""")
-        }
-    }
-    val adjPart = adjudication.map("," + _).getOrElse("")
-    // Driver-facing digest (r14): the harness that turns this stdout
-    // into BENCH_r{N}.json keeps only the LAST ~2000 characters, and
-    // the full line outgrew that window around 80 queries — every
-    // BENCH_r10..r13.json carries "parsed": null with a mid-line
-    // fragment. The digest line prints AFTER the full one (so it sits
-    // inside the tail window): headline total + calib + the slowest
-    // rows only, explicitly marked truncated, with a pointer to the
-    // lossless record. "value" is the authoritative total; the digest's
-    // "queries" is a top-slice, never a sum target.
-    val (line, digest) = recordLines(results, adjPart, cutAt)
-    // Stop Spark BEFORE printing the final record: spark.stop() logs
-    // ("stopped SparkContext" etc.) land on the same stderr the driver's
-    // ~2000-char tail capture reads, and anything printed after the
-    // digest erodes its window. The digest must be the last output.
+    val queries = SparkEntry.registry.filter(q => only.forall(_(q._1)))
+    val res = run(spark, sfDir, queries, reps, deadlineS,
+      Paths.get("bench-records"))
+    // spark.stop() logs to stderr; stop first so the digest prints last
     try spark.stop() catch { case _: Exception => () }
-    if (recordEmitted.compareAndSet(false, true)) {
-      println(line)
-      if (only.isEmpty) println(digest)
-      scala.Console.out.flush()
-      // Stdout of a forked run can be tail-truncated by whatever
-      // captures it (r4 lost the first 17 entries of this line); the
-      // file copy is the lossless record. Subset runs
-      // (SPARK_GRAFT_BENCH_ONLY) must NOT clobber it — the file is the
-      // full-registry gate record and the adjudication baseline — and
-      // neither must a deadline-cut partial (it goes to
-      // BENCH_PARTIAL.json instead).
-      if (only.isEmpty)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(
-            if (cutAt.isEmpty) "BENCH_LOCAL.json" else "BENCH_PARTIAL.json"),
-          (line + "\n").getBytes("UTF-8"))
+    println(digest(res))
+  }
+
+  /** One query's row. A failed query keeps its first error line and no
+    * numbers; `reps` is how many reps ran (the deadline may shed some). */
+  final case class Row(query: String, wallS: Double, reps: Int,
+      taskCpuMs: Long, jobs: Long, stages: Long, shuffleBytes: Long,
+      error: Option[String] = None) {
+    def ok: Boolean = error.isEmpty
+  }
+
+  final case class Result(rows: Seq[Row], record: Path,
+      truncatedAt: Option[String])
+
+  /** Sums what Spark ran since the last [[take]]. */
+  private final class Counters extends SparkListener {
+    private val jobs, stages, cpuNs, shuffleBytes = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(e.taskMetrics).foreach { m =>
+        cpuNs.addAndGet(m.executorCpuTime)
+        shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead +
+          m.shuffleWriteMetrics.bytesWritten)
+      }
+    /** (task CPU ms, jobs, stages, shuffle bytes), then zero. */
+    def take(): (Long, Long, Long, Long) = (cpuNs.getAndSet(0) / 1000000,
+      jobs.getAndSet(0), stages.getAndSet(0), shuffleBytes.getAndSet(0))
+  }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def jsonLine(fields: (String, Any)*): String = {
+    val m = new java.util.LinkedHashMap[String, Any]()
+    fields.foreach { case (k, v) => m.put(k, v) }
+    json.writeValueAsString(m)
+  }
+
+  private def round4(v: Double): Double =
+    BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  private def rowLine(r: Row, sf: String): String = r.error match {
+    case None => jsonLine("q" -> r.query, "ok" -> true, "sf" -> sf,
+      "wall_s" -> round4(r.wallS), "reps" -> r.reps,
+      "task_cpu_ms" -> r.taskCpuMs, "jobs" -> r.jobs, "stages" -> r.stages,
+      "shuffle_bytes" -> r.shuffleBytes)
+    case Some(e) => jsonLine("q" -> r.query, "ok" -> false, "sf" -> sf,
+      "reps" -> r.reps, "error" -> e)
+  }
+
+  /** Creates the run's record, `<utc-time>_c<cpus>.jsonl`. CREATE_NEW:
+    * an existing record is never reopened, it fails the run instead. */
+  private def createRecord(dir: Path, cpus: Int): (Path, OutputStream) = {
+    Files.createDirectories(dir)
+    val stamp = DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss.SSS'Z'")
+      .withZone(ZoneOffset.UTC).format(Instant.now())
+    val p = dir.resolve(s"${stamp}_c$cpus.jsonl")
+    p -> Files.newOutputStream(p, CREATE_NEW, WRITE)
+  }
+
+  /** Median-of-`reps` row for one query. Rep 1 always runs; later reps
+    * only while the query stays inside `shareS` seconds and the run
+    * inside its deadline. A query that throws is a failed row, never a
+    * fast success. */
+  private def measure(spark: SparkSession, sfDir: String,
+      counters: Counters, name: String, qd: QueryDef, reps: Int,
+      shareS: Double, pastDeadline: () => Boolean): Row = {
+    val sc = spark.sparkContext
+    val start = System.nanoTime()
+    val done = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var error: Option[String] = None
+    while (error.isEmpty && done.size < reps && (done.isEmpty ||
+        (!pastDeadline() && (System.nanoTime() - start) / 1e9 <= shareS))) {
+      ListenerBusDrain(sc)
+      counters.take()
+      val t0 = System.nanoTime()
+      try {
+        qd.build(spark, sfDir).queryExecution.toRdd.count()
+        val wallS = (System.nanoTime() - t0) / 1e9
+        ListenerBusDrain(sc)
+        val (cpu, jobs, stages, shuffle) = counters.take()
+        done += Row(name, wallS, 1, cpu, jobs, stages, shuffle)
+      } catch { case e: Throwable =>
+        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+          .linesIterator.nextOption().getOrElse("").take(300)
+        System.err.println(s"[bench] $name FAILED: $msg")
+        error = Some(msg)
+      }
     }
-    // throws IllegalStateException if a shutdown is already in progress
-    // (the very case the hook handled) — benign either way
-    try Runtime.getRuntime.removeShutdownHook(hook)
-    catch { case _: IllegalStateException => () }
+    if (error.nonEmpty) Row(name, 0, done.size, 0, 0, 0, 0, error)
+    else done.sortBy(_.wallS).apply((done.size - 1) / 2).copy(reps = done.size)
+  }
+
+  /** Benches `queries` in order into a new record under `recordDir`.
+    * Past `deadlineS` the run stops before the next query
+    * (`truncatedAt`); until then each query's optional reps get a fair
+    * share of what is left (10% held back), so a slow host sheds reps
+    * instead of rows. */
+  def run(spark: SparkSession, sfDir: String, queries: Seq[(String, QueryDef)],
+      reps: Int, deadlineS: Double, recordDir: Path): Result = {
+    val sc = spark.sparkContext
+    val start = System.nanoTime()
+    def elapsedS: Double = (System.nanoTime() - start) / 1e9
+    val sf = Paths.get(sfDir).getFileName.toString
+    val (record, out) = createRecord(recordDir, sc.defaultParallelism)
+    val counters = new Counters
+    sc.addSparkListener(counters)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var cut: Option[String] = None
+    try for ((name, qd) <- queries if cut.isEmpty) {
+      if (elapsedS > deadlineS || sc.isStopped) {
+        cut = Some(name)
+        System.err.println(s"[bench] stopping before $name: " +
+          (if (sc.isStopped) "SparkContext stopped" else s"deadline ${deadlineS}s"))
+      } else {
+        val shareS = math.max(0.0, deadlineS * 0.9 - elapsedS) /
+          (queries.size - rows.size)
+        val row = measure(spark, sfDir, counters, name, qd, reps, shareS,
+          () => elapsedS > deadlineS)
+        rows += row
+        out.write((rowLine(row, sf) + "\n").getBytes(UTF_8))
+        out.flush()
+      }
+    } finally {
+      sc.removeSparkListener(counters)
+      out.close()
+    }
+    Result(rows.toSeq, record, cut)
+  }
+
+  /** The compact stdout line: headline total of the successful rows. */
+  def digest(res: Result): String = {
+    val fields = Seq[(String, Any)](
+      "metric" -> "total",
+      "value" -> round4(res.rows.filter(_.ok).map(_.wallS).sum),
+      "unit" -> "sec",
+      "n_queries" -> res.rows.size,
+      "failed" -> res.rows.filterNot(_.ok).map(_.query).asJava,
+      "record" -> res.record.toString) ++
+      res.truncatedAt.map("truncated_at" -> _)
+    jsonLine(fields: _*)
   }
 }

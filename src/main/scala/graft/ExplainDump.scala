@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for registry queries to files — the
   * plan-evidence tool for the optimization rounds (the judge checks
   * plan claims against the committed plans/r17 files, guide §7.2).
@@ -17,15 +15,7 @@ object ExplainDump {
     val outDir = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(outDir)
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions())
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.localSession("ERROR")
     val selected = only match {
       case Some(names) => SparkEntry.registry.filter(q => names(q._1))
       case None => SparkEntry.registry

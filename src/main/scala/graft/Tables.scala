@@ -42,6 +42,25 @@ object Tables {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.codegen.cache.maxEntries" -> "1000")
 
+  /** The local session of the command-line mains (Bench, Verify,
+    * ExplainDump, the `graft.tools` probes): `local[n]` with n shuffle
+    * partitions, the graft extensions and [[sessionConfigs]] (so the
+    * session timezone is UTC whatever the JVM's flags say). n is
+    * `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
+  def localSession(logLevel: String = "WARN"): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions())
+    sessionConfigs.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val df = spark.read.parquet(path)

@@ -225,14 +225,15 @@ object BehavioralQueries {
     * DECIMAL(38,6) and casts to double only at the edge — a double
     * window-sum would be order-dependent (DuckDB's windowed SUM runs a
     * segment tree, Spark a sequential frame: different addition orders,
-    * different last-bit rounding). Offsets are epoch-micros differences
-    * of the truncated weeks (whole weeks in the registry's UTC session).
+    * different last-bit rounding). Offsets are calendar-day differences
+    * of the truncated weeks divided by 7, as in a7, so they stay whole
+    * weeks across DST changes in any session timezone; the oracle's
+    * micros division agrees in the registry's UTC session.
     * Shape: two user shuffles (cohort assignment, weekly rollup) + a
     * window over the tiny (cohort × offset) aggregate. */
-  def a17LtvCohort(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def a17From(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 6)
-    val ev = Tables(spark, dir, "events")
     val cohort = ev.groupBy($"user_id")
       .agg(date_trunc("week", min($"ts")).as("cohort_week"))
     val sizes = cohort.groupBy($"cohort_week")
@@ -240,7 +241,8 @@ object BehavioralQueries {
     val weekly = ev.filter($"event_type" === "purchase")
       .join(cohort, "user_id")
       .withColumn("week_offset",
-        expr("(unix_micros(CAST(date_trunc('week', ts) AS TIMESTAMP)) - unix_micros(CAST(cohort_week AS TIMESTAMP))) DIV 604800000000"))
+        (datediff(date_trunc("week", $"ts").cast("date"),
+          $"cohort_week".cast("date")) / 7).cast("long"))
       .groupBy($"cohort_week", $"week_offset")
       .agg(countDistinct($"user_id").as("n_buyers"),
         sum($"value".cast(dec)).as("rev_dec"))
@@ -256,6 +258,9 @@ object BehavioralQueries {
         $"cum_dec".cast("double").as("cum_revenue"),
         ($"cum_dec".cast("double") / $"cohort_size").as("ltv_per_user"))
   }
+
+  def a17LtvCohort(spark: SparkSession, dir: String): DataFrame =
+    a17From(Tables(spark, dir, "events"))
 
   val a17Sql: String =
     """WITH cohort AS (

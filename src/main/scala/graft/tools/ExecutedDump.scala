@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{GraftExtensions, SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, Tables}
 
 /** Executed-plan (AQE final plan) dump for registry queries — the
   * runtime companion to [[graft.ExplainDump]]: AQE's exchange/stage
@@ -18,15 +17,7 @@ object ExecutedDump {
     val outDir = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(outDir)
     val names = args(2).split(",").map(_.trim)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions())
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.localSession("ERROR")
     for (n <- names) {
       val df = SparkEntry.registry.find(_._1 == n).get._2.build(spark, sfDir)
       df.queryExecution.toRdd.count()

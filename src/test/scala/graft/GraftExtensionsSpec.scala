@@ -17,7 +17,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master("local[2]")
       .appName("graft-ext-test")
       .config("spark.sql.shuffle.partitions", "2")
@@ -25,15 +25,14 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // programmatic form — `spark.sql.extensions` is a static conf and
       // would be ignored once another suite created the first session
       .withExtensions(new GraftExtensions())
-      .getOrCreate()
+    // on the builder, static confs included: when this suite is the
+    // first in its JVM to compile, the codegen cache is sized here, and
+    // a default-sized cache evicts what later suites in the JVM
+    // (HttpGatewaySpec's steady-state collects) expect to stay compiled
+    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     try {
       spark.sparkContext.setLogLevel("WARN")
-      // static confs (the codegen cache size) can only be set on a
-      // session builder; conf.set throws on them
-      Tables.sessionConfigs
-        .filterNot { case (k, _) =>
-          org.apache.spark.sql.internal.SQLConf.isStaticConfigKey(k) }
-        .foreach { case (k, v) => spark.conf.set(k, v) }
       f(spark)
     } finally {
       SparkSession.clearActiveSession()

@@ -56,6 +56,31 @@ class AnalyticsSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.session.timeZone", tz)
   }
 
+  test("a17 LTV week offsets stay whole weeks across a DST change " +
+    "(America/New_York)") {
+    import spark.implicits._
+    // same calendar as the retention test above: a micros division by a
+    // fixed week would put the 03-09 purchases at offset 0, 03-16 at 1
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      val ev = Seq(
+        (1L, "2026-03-02 10:00:00", "view", 0.0),
+        (1L, "2026-03-09 10:00:00", "purchase", 5.0),
+        (1L, "2026-03-16 10:00:00", "purchase", 2.0),
+        (2L, "2026-03-05 23:30:00", "view", 0.0),
+        (2L, "2026-03-12 23:30:00", "purchase", 3.0))
+        .toDF("user_id", "t", "event_type", "value")
+        .select($"user_id", $"t".cast("timestamp").as("ts"), $"event_type",
+          $"value")
+      val got = graft.analytics.BehavioralQueries.a17From(ev)
+        .select(date_format($"cohort_week", "yyyy-MM-dd"), $"week_offset",
+          $"n_buyers", $"revenue", $"cum_revenue", $"ltv_per_user")
+      assert(rows(got) == Seq(
+        "2026-03-02|1|2|8.0|8.0|4.0", "2026-03-02|2|1|2.0|10.0|5.0"))
+    } finally spark.conf.set("spark.sql.session.timeZone", tz)
+  }
+
   test("sessionize(30 minutes) == oracle-proven w2") {
     val api = Analytics.sessionize(events, "user_id", "ts",
       gap = "30 minutes", tieBreak = Some("event_id"))

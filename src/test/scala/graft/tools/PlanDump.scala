@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan inspector for local iteration: Test/runMain
   * graft.tools.PlanDump <queryName> [sfDir]. Prints subtree counts and
   * the formatted plan — the .explain feedback loop the scale rules
@@ -10,13 +8,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val builder = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions())
-    graft.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.localSession("ERROR")
     val df = graft.SparkEntry.queries(name)(spark, dir)
     df.count()
     val p = df.queryExecution.executedPlan.toString

@@ -1,114 +1,78 @@
 #!/usr/bin/env python3
-"""Round-over-round per-query regression check that works at ANY boot.
+"""Per-query regression check between two graft.Bench records.
 
-Usage: tools/check_regression.py CURRENT.json PREVIOUS.json [pct] [floor_s]
+Usage: tools/check_regression.py CURRENT.jsonl BASELINE.jsonl
 
-The BASELINE.md budget gate needs quiet-boot budgets to stay honest,
-and quiet windows can be absent for a whole round (r12, r13). This
-check is the calib-scaled complement: it compares each query's RAW
-time against the previous record's raw time scaled by the calib ratio
-of the two boots, flagging rows more than `pct` (default 15%) plus
-`floor_s` (default 0.1 s) slower. Contention affects both the calib
-workload and the queries, so the ratio cancels the boot — the same
-normalization the judge applies across rounds.
+A record is the JSON Lines file graft.Bench writes under bench-records/,
+one object per query (BENCH_BASELINE_c4.jsonl is the committed one).
+A query regresses when one of its Spark counters in CURRENT exceeds
+BASELINE by more than that column's tolerance below. The counters do
+not move with host load; wall time does, so it is printed beside them
+and never decides.
 
-Exit 1 if any row regresses; prints the offending rows. Both inputs
-are graft.Bench JSON lines (BENCH_LOCAL.json or a committed
-BENCH_r{N}.json tail with full "queries"/"calib" fields).
-
-Adjudicating a flag: calib measures AVERAGE boot contention, but
-bursts hit individual sub-second rows (r13: w9 flagged at 2.04x in a
-full run, then measured 0.82x of its r12 record in a solo re-bench
-minutes later). Since r14, graft.Bench full runs SELF-adjudicate:
-every row flagged against the previous on-disk record is re-run solo
-(>=5 reps) with a freshly measured calib, and the record carries an
-"adjudication" object ({prev_calib, solo_calib, flagged, solo}). This
-check prefers the solo number (scaled by solo_calib) for such a row,
-so a burst-noisy official artifact clears itself. A row that fails
-even on its solo number is a real regression; an intentional-rework
-row is instead judged against its BASELINE.md budget threshold and
-documented in the changelog. Manual fallback:
-`SPARK_GRAFT_BENCH_ONLY=<row> SPARK_GRAFT_BENCH_REPS=5`.
-
-Budget-coverage lint (r13 verdict #8): every query in CURRENT must
-have a BASELINE.md §3 budget row — j2b slipped into r13's registry
-with no budget row and nothing complained until the judge counted.
-Missing rows are reported and fail the check; pass
---allow-missing-budget only while a quiet-boot re-record is pending
-and the gap is documented in the changelog.
+Exit 0: no regression. Exit 1: a counter regressed, a query failed in
+CURRENT, or CURRENT lacks a query BASELINE has. Exit 2: bad usage, or
+records of different scale factors.
 """
 import json
-import os
-import re
+import statistics
 import sys
 
-BASELINE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "..", "BASELINE.md")
-BUDGET_ROW = re.compile(
-    r"^\| (?P<q>[a-z0-9_]+) \| 0\.1 \| [0-9.]+ \| [0-9.]+ \| [^|]+ \| [^|]+ \|$",
-    re.M)
+# column -> (relative, absolute): CURRENT may exceed BASELINE by up to
+# max(relative * BASELINE, absolute). Set from one commit benched twice
+# at sf0.1 on 4 cores, quiet and beside 4 busy-loop processes
+# (BASELINE.md section 3): over 168 queries jobs and stages never moved
+# and shuffle bytes moved by at most 2.0% (190 KB), inside these bounds.
+# Task CPU moved from -66% to +99% per query, far past the 25% (floor
+# 100 ms) a useful gate would need, so it is printed, not gated.
+TOLERANCE = {
+    "jobs": (0.0, 0),
+    "stages": (0.0, 0),
+    "shuffle_bytes": (0.05, 64 * 1024),
+}
+PRINTED = ("task_cpu_ms", "wall_s")
+
+
+def load(path):
+    with open(path) as f:
+        return {r["q"]: r for r in (json.loads(l) for l in f if l.strip())}
 
 
 def main():
-    argv = [a for a in sys.argv if a != "--allow-missing-budget"]
-    allow_missing = "--allow-missing-budget" in sys.argv
-    if len(argv) < 3:
-        sys.exit(__doc__)
-    cur = json.load(open(argv[1]))
-    prev = json.load(open(argv[2]))
-    pct = float(argv[3]) / 100 if len(argv) > 3 else 0.15
-    floor = float(argv[4]) if len(argv) > 4 else 0.1
-    if cur.get("failed") or prev.get("failed"):
-        sys.exit(f"REFUSED: failed queries present "
-                 f"(cur={cur.get('failed')}, prev={prev.get('failed')})")
-    ratio = cur["calib"] / prev["calib"]
-    adj = cur.get("adjudication") or {}
-    solo = adj.get("solo") or {}
-    solo_ratio = (adj["solo_calib"] / prev["calib"]
-                  if "solo_calib" in adj else ratio)
-    qp = prev["queries"]
-    bad, cleared = [], []
-    for q, t in sorted(cur["queries"].items()):
-        if q not in qp:
-            continue  # new query: no prior record to regress against
-        allowed = qp[q] * ratio * (1 + pct) + floor
-        if t <= allowed:
-            continue
-        if q in solo:
-            # the record carries its own solo re-run: judge that instead
-            s = solo[q]
-            s_allowed = qp[q] * solo_ratio * (1 + pct) + floor
-            if s <= s_allowed:
-                cleared.append((q, t, s))
-                continue
-            bad.append((q, qp[q], s, s / (qp[q] * solo_ratio)))
-        else:
-            bad.append((q, qp[q], t, t / (qp[q] * ratio)))
-    gone = sorted(set(qp) - set(cur["queries"]))
-    print(f"calib cur={cur['calib']} prev={prev['calib']} ratio={ratio:.3f}; "
-          f"{len(cur['queries'])} rows checked, {len(bad)} regressed, "
-          f"{len(cleared)} burst-flagged rows cleared by in-record solo"
-          + (f"; {len(gone)} rows missing vs prev: {gone[:5]}" if gone else ""))
-    if adj.get("solo_truncated"):
-        print("  NOTE: record's solo adjudication was CAPPED — unadjudicated "
-              "flags above are judged on their burst number")
-    for q, t, s in cleared:
-        print(f"  cleared {q}: burst {t:.3f}s -> solo {s:.3f}s")
-    for q, p, c, r in sorted(bad, key=lambda x: -x[3]):
-        print(f"  REGRESSED {q}: {p:.3f}s -> {c:.3f}s raw "
-              f"({r:.2f}x calib-scaled)")
-    # budget-coverage lint: every benched query needs a BASELINE.md row
-    no_budget = []
-    if os.path.exists(BASELINE):
-        rows = {m.group("q")
-                for m in BUDGET_ROW.finditer(open(BASELINE).read())}
-        no_budget = sorted(set(cur["queries"]) - rows)
-        if no_budget:
-            print(f"  {len(no_budget)} queries have NO BASELINE.md budget "
-                  f"row: {no_budget}"
-                  + (" (allowed by flag)" if allow_missing else
-                     " — re-record budgets or pass --allow-missing-budget"))
-    sys.exit(1 if bad or (no_budget and not allow_missing) else 0)
+    if len(sys.argv) != 3:
+        print(__doc__, file=sys.stderr)
+        sys.exit(2)
+    cur, base = load(sys.argv[1]), load(sys.argv[2])
+    scales = {r["sf"] for r in cur.values()} | {r["sf"] for r in base.values()}
+    if len(scales) > 1:
+        print(f"cannot compare records of scale factors {sorted(scales)}",
+              file=sys.stderr)
+        sys.exit(2)
+    failed = sorted(q for q, r in cur.items() if not r["ok"])
+    missing = sorted(set(base) - set(cur))
+    both = [q for q in base if q in cur and base[q]["ok"] and cur[q]["ok"]]
+    bad = []
+    for q in both:
+        b, c = base[q], cur[q]
+        over = [f"{k} {b[k]} -> {c[k]}" for k, (rel, ab) in TOLERANCE.items()
+                if c[k] > b[k] + max(rel * b[k], ab)]
+        if over:
+            bad.append(f"  REGRESSED {q}: " + ", ".join(over) + "  (" + ", ".join(
+                f"{k} {b[k]} -> {c[k]}" for k in PRINTED) + ")")
+    ratios = [cur[q]["wall_s"] / base[q]["wall_s"] for q in both
+              if base[q]["wall_s"] > 0]
+    print(f"{len(both)} queries compared on {', '.join(TOLERANCE)}; "
+          f"{len(bad)} regressed, {len(failed)} failed, {len(missing)} missing; "
+          f"median wall ratio {statistics.median(ratios) if ratios else 0:.3f} "
+          f"(printed, not gated)")
+    for line in bad:
+        print(line)
+    if failed:
+        print(f"  FAILED in current: {failed}")
+    if missing:
+        print(f"  MISSING from current: {missing[:10]}"
+              + (f" and {len(missing) - 10} more" if len(missing) > 10 else ""))
+    sys.exit(1 if bad or failed or missing else 0)
 
 
 if __name__ == "__main__":
