@@ -8,7 +8,7 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.SchemaRegistry
@@ -494,7 +494,7 @@ final class HttpGateway(
           }
         val n = writeLock.synchronized {
           enrichAndStore(Seq(normalized -> df), runMappers = true,
-            cfCountry = cfCountry(ex), useDictionary = true)
+            cfCountry = cfCountry(ex), small = false)
         }
         (200, s"""{"stored":$n}""")
       } finally graft.TempDirs.release(dir)
@@ -591,6 +591,13 @@ final class HttpGateway(
     out
   }
 
+  /** A request of at most this many raw event lines is small: it
+    * ingests and enriches as a local relation on the driver
+    * ([[ingestLines]]), and the rule-table mappers keep their per-row
+    * shape. Above it, ingest runs as Spark jobs and the rule tables
+    * switch to their dictionary shape. */
+  private val SmallRequestLines = 64
+
   /** The built-in enrichment stage every mapped ingest runs — the
     * reference registers these module mappers on the collect path
     * (EventCollectionHttpService.java:123-151): M1 timestamp skew, M5
@@ -599,13 +606,8 @@ final class HttpGateway(
     * registry first (registry-rejected fields are dropped from the
     * output, the custom-mapper discipline); the source-only trigger
     * fields themselves are dropped later by EventStore.write. */
-  /** Rule-table mappers switch to their dictionary shape above this
-    * many raw event lines in the request. */
-  private val DictionaryShapeThreshold = 64
-
   private def applyBuiltins(coll: String, df: DataFrame,
-      cfCountry: Option[String] = None,
-      useDictionary: Boolean = false): DataFrame = {
+      cfCountry: Option[String], small: Boolean): DataFrame = {
     val geo = geoRanges.map(r4 =>
       graft.enrich.GeoIpMapper(r4, geoRangesV6)).toSeq
     val mappers: Seq[graft.enrich.EventMapper] =
@@ -636,9 +638,9 @@ final class HttpGateway(
       // while the hot single-event collect door keeps its one narrow
       // codegen'd projection instead of two extra exchanges per mapper
       val out0 = m match {
-        case graft.enrich.UserAgentMapper if useDictionary =>
+        case graft.enrich.UserAgentMapper if !small =>
           graft.enrich.UserAgentMapper.dictionary(input)
-        case r: graft.enrich.ReferrerMapper if useDictionary =>
+        case r: graft.enrich.ReferrerMapper if !small =>
           r.dictionary(input)
         case _ => m.apply(input)
       }
@@ -1848,21 +1850,24 @@ final class HttpGateway(
     * actions run (the entries only exist once the job executes). */
   private def applyMappers(coll: String, df: DataFrame,
       sinks: scala.collection.mutable.Buffer[
-        (String, org.apache.spark.util.CollectionAccumulator[(String, String)])])
-      : DataFrame =
-    storedMappers()
-      .filter(m => m.active && m.collection.forall(_ == coll))
-      .foldLeft(df) { (d, m) =>
-        val (_, rejected) = registry.getOrCreate(project, coll,
-          m.produced.map { case (n, t) => registry.Field(n, t) })
-        val bad = rejected.map(_.field).toSet
-        val keep = m.produced.filterNot { case (n, _) => bad.contains(n) }
-        val acc = spark.sparkContext
-          .collectionAccumulator[(String, String)](s"js-logs-${m.name}")
-        sinks += m.name -> acc
-        graft.enrich.js.JsCustomMapper(m.name, coll, keep, m.params, m.script,
-          logAcc = Some(acc))(d)
-      }
+        (String, org.apache.spark.util.CollectionAccumulator[(String, String)])],
+      small: Boolean): DataFrame = {
+    val active = storedMappers().filter(m => m.active && m.collection.forall(_ == coll))
+    // a script sees each partition as one batch: a small request's
+    // local relation is one partition, as the distributed leaf's is
+    val input = if (small && active.nonEmpty) df.coalesce(1) else df
+    active.foldLeft(input) { (d, m) =>
+      val (_, rejected) = registry.getOrCreate(project, coll,
+        m.produced.map { case (n, t) => registry.Field(n, t) })
+      val bad = rejected.map(_.field).toSet
+      val keep = m.produced.filterNot { case (n, _) => bad.contains(n) }
+      val acc = spark.sparkContext
+        .collectionAccumulator[(String, String)](s"js-logs-${m.name}")
+      sinks += m.name -> acc
+      graft.enrich.js.JsCustomMapper(m.name, coll, keep, m.params, m.script,
+        logAcc = Some(acc))(d)
+    }
+  }
 
   /** `POST /custom-event-mapper/create` (and `/update`) — body
     * `{"name":…, "script":…, "collection"?:…, "parameters"?:{…},
@@ -1967,13 +1972,12 @@ final class HttpGateway(
     val events = Option(root.get("events")).filter(_.isArray)
       .map(_.elements().asScala.map(_.toString).toSeq)
       .getOrElse(throw new IngestRejected("events array is required"))
-    val scratch = SchemaRegistry.inMemory()
-    val res = JsonIngest.ingest(spark, scratch, project,
-      spark.sparkContext.parallelize(events, 1))
+    val res = ingestLines(SchemaRegistry.inMemory(), events)
     try {
       val out = res.byCollection.toSeq.sortBy(_._1).flatMap { case (coll, df) =>
         val applied =
-          try graft.enrich.js.JsCustomMapper("test", coll, produced, ps, script)(df)
+          // the script sees the request as one batch, whichever leaf
+          try graft.enrich.js.JsCustomMapper("test", coll, produced, ps, script)(df.coalesce(1))
           catch {
             case e: graft.enrich.js.MiniJs.JsException =>
               throw new IngestRejected(s"invalid script: ${e.getMessage}")
@@ -3171,10 +3175,6 @@ final class HttpGateway(
     * analysis routes) stay fully concurrent on the pool. */
   private val writeLock = new Object
 
-  /** Ingest raw event lines through the standard two-pass path and
-    * append each collection to the store; dead letters go to the
-    * `$invalid_schema` table exactly as in the batch pipeline. Returns
-    * rows stored. */
   /** Cloudflare's country header — read only when the gateway carries a
     * geo dim, exactly the reference's gate
     * (MaxmindGeoIPEventMapper.java:190-196, header name verbatim). */
@@ -3182,16 +3182,30 @@ final class HttpGateway(
     if (geoRanges.isEmpty) None
     else Option(ex.getRequestHeaders.getFirst("HTTP_CF_IPCOUNTRY")).filter(_.nonEmpty)
 
+  /** JSON ingest of a request's lines, leaf picked by size: a small
+    * request runs ingest's functions on the driver and yields local
+    * relations; a larger one runs them as Spark jobs over one
+    * partition. */
+  private def ingestLines(reg: SchemaRegistry,
+      lines: Seq[String]): JsonIngest.IngestResult =
+    if (lines.length <= SmallRequestLines) JsonIngest.ingest(spark, reg, project, lines)
+    else JsonIngest.ingest(spark, reg, project, spark.sparkContext.parallelize(lines, 1))
+
+  /** Ingest raw event lines through the standard two-pass path and
+    * append each collection to the store; dead letters go to the
+    * `$invalid_schema` table exactly as in the batch pipeline. Returns
+    * rows stored. */
   private def ingestAndStore(lines: Seq[String],
       runMappers: Boolean = true,
       cfCountry: Option[String] = None): Long = writeLock.synchronized {
-    val res = JsonIngest.ingest(spark, registry, project,
-      spark.sparkContext.parallelize(lines, 1))
+    val res = ingestLines(registry, lines)
     try {
       val n = enrichAndStore(res.byCollection.toSeq, runMappers, cfCountry,
-        useDictionary = lines.length > DictionaryShapeThreshold)
+        small = lines.length <= SmallRequestLines)
+      // a local relation answers isEmpty with no job; one partition (as
+      // the distributed leaf has) keeps the write to one file
       if (!res.deadLetter.isEmpty)
-        EventStore.writeDeadLetter(res.deadLetter, warehouse, project)
+        EventStore.writeDeadLetter(res.deadLetter.coalesce(1), warehouse, project)
       n
     } finally res.unpersist()
   }
@@ -3206,13 +3220,22 @@ final class HttpGateway(
     * written, so a rejected request never stores a partial batch — the
     * reference throws FORBIDDEN from the mapper stage, before storage
     * (UserAgentEventMapper.java:87-90). The gate and the stored-row
-    * count are one job per collection. Each enriched frame is
-    * PERSISTED: the gate, the write and every MV delta would otherwise
-    * re-execute the whole mapper chain per action — and re-fire the
-    * log accumulator, duplicating logger entries. */
+    * count are one fold over the spider column.
+    *
+    * Each enriched frame is materialized once: the gate, the write and
+    * every MV delta would otherwise re-execute the whole mapper chain
+    * per action — and re-fire the log accumulator, duplicating logger
+    * entries. A frame that optimizes to a `LocalRelation` (a small
+    * request whose mapper chain Catalyst evaluated on the driver) is
+    * already computed: its rows become the frame, with no job, and the
+    * gate folds its spider column on the driver. Any
+    * other frame (a JS mapper, a geo join, a bulk body, a large
+    * request) is PERSISTED and gated by one job. `small` marks a small
+    * request's frames: the rule tables keep their per-row shape, and
+    * whatever runs as a job over them runs in one partition. */
   private def enrichAndStore(byCollection: Seq[(String, DataFrame)],
       runMappers: Boolean, cfCountry: Option[String],
-      useDictionary: Boolean): Long = {
+      small: Boolean): Long = {
     var n = 0L
     val logSinks = scala.collection.mutable.Buffer.empty[
       (String, org.apache.spark.util.CollectionAccumulator[(String, String)])]
@@ -3226,26 +3249,36 @@ final class HttpGateway(
     val cached = scala.collection.mutable.Buffer.empty[DataFrame]
     try {
       val prepared = byCollection.map { case (coll, df0) =>
-        val df =
-          if (runMappers) {
-            val enriched = applyMappers(coll,
-              applyBuiltins(coll, df0, cfCountry, useDictionary), logSinks)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            cached += enriched
-            enriched
-          } else df0
-        // the row count and the spider gate are ONE job: a fold per
-        // partition. A global `agg` would plan an exchange, which AQE
-        // runs as jobs of its own next to the one that fills the cache.
+        val enriched =
+          if (runMappers)
+            applyMappers(coll, applyBuiltins(coll, df0, cfCountry, small), logSinks, small)
+          else df0
+        val folded = GraftColumnBridge.localRelation(enriched)
+        val df = folded match {
+          case Some(rows) => GraftColumnBridge.frame(spark, rows)
+          case None if runMappers =>
+            val p = enriched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            cached += p
+            p
+          case None => enriched
+        }
         val spider =
           if (runMappers && df.columns.contains("_device_family"))
             coalesce(col("_device_family") === "Spider", lit(false))
           else lit(false)
-        val perPartition = df.select(spider).as(Encoders.scalaBoolean)
-          .mapPartitions(it => Iterator(it.foldLeft((0L, false)) {
-            case ((rows, spiders), s) => (rows + 1, spiders || s)
-          }))(Encoders.tuple(Encoders.scalaLong, Encoders.scalaBoolean))
-          .collect()
+        val spiders = df.select(spider)
+        // one fold per partition; a global `agg` would plan an exchange,
+        // which AQE runs as jobs of its own next to the one that fills
+        // the cache. Over a local relation the spider column folds too,
+        // and its rows are the driver's one partition.
+        val perPartition = folded.flatMap(_ => GraftColumnBridge.localRelation(spiders)) match {
+          case Some(rows) =>
+            Array(HttpGateway.countAndGate(rows.data.iterator.map(_.getBoolean(0))))
+          case None =>
+            spiders.as(Encoders.scalaBoolean)
+              .mapPartitions(it => Iterator(HttpGateway.countAndGate(it)))(
+                Encoders.tuple(Encoders.scalaLong, Encoders.scalaBoolean)).collect()
+        }
         if (perPartition.exists(_._2))
           throw new HttpGateway.ForbiddenRejected(
             "Spiders are not allowed in Rakam Analytics.")
@@ -3253,7 +3286,10 @@ final class HttpGateway(
       }
       prepared.foreach { case (coll, df, rows) =>
         n += rows
-        EventStore.write(df, warehouse, project, coll)
+        // a local relation of k rows scans in up to
+        // leafNodeDefaultParallelism tasks; one task keeps a small
+        // request to one file per partition directory
+        EventStore.write(if (small) df.coalesce(1) else df, warehouse, project, coll)
         // continuous maintenance: the stored batch is also the delta
         // for every materialized view on this collection
         maintainMvs(coll, df)
@@ -3472,4 +3508,9 @@ object HttpGateway {
   /** Request-level rejection mapped to 403 — the reference's FORBIDDEN
     * (spiders, UserAgentEventMapper.java:87-90). */
   final class ForbiddenRejected(message: String) extends RuntimeException(message)
+
+  /** The spider gate's fold over one partition of the spider column:
+    * (rows, any spider). */
+  private def countAndGate(spiders: Iterator[Boolean]): (Long, Boolean) =
+    spiders.foldLeft((0L, false)) { case ((rows, any), s) => (rows + 1, any || s) }
 }

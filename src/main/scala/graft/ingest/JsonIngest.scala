@@ -31,6 +31,17 @@ import scala.util.Try
   * The registry (driver-side metadata) is the only non-distributed
   * state; its size is bounded by 200 columns × collections, so this
   * design carries to 100 TB batches unchanged.
+  *
+  * One implementation, two leaves. The Jackson digest, the schema fold
+  * and the typed parse are plain iterator functions. The distributed
+  * leaf, `ingest(…, RDD[String])`, runs them inside `mapPartitions`.
+  * The local leaf, `ingest(…, Seq[String])`, runs them once on the
+  * driver and hands every collection (and the dead letters) out as a
+  * `LocalRelation`; the HTTP gateway takes it for small requests, whose
+  * row work is far below the fixed cost of a Spark job. Catalyst then
+  * evaluates a projection over such a frame on the driver, at
+  * optimization time (`ConvertToLocalRelation`), so the mapper chain
+  * over a small request runs no job at all.
   */
 object JsonIngest {
 
@@ -288,71 +299,92 @@ object JsonIngest {
       })
     }
 
-  def ingest(spark: SparkSession, registry: SchemaRegistry, project: String,
-      rawJson0: RDD[String]): IngestResult = {
-
-    // THE Jackson pass — the only traversal of the raw lines, so any
-    // upstream pipeline that produced them (pixel decode, webhook JS, a
-    // remote fetch) also runs once. The digest RDD is the cache point
-    // both downstream passes (schema reduce, typed parse) read; bounded
-    // by batch size, spills to disk, released by IngestResult.unpersist().
-    val digests: RDD[Digest] = rawJson0.mapPartitions { it =>
-      val m = new ObjectMapper()
-      it.flatMap { line =>
-        Try(m.readTree(line)).toOption.flatMap { root =>
-          textualCollection(root)
-            .flatMap(c => Names.normalizeCollection(c).toOption)
-            .map { c =>
-              val eventId = Option(root.get("api"))
-                .flatMap(a => Option(a.get("uuid"))).map(_.asText()).orNull
-              objectProperties(root) match {
-                case None =>
-                  Digest(c, None, Map.empty, eventId,
-                    String.valueOf(root.get("properties")).take(200),
-                    line.take(200))
-                case Some(props) =>
-                  val byNorm = props.properties().asScala.flatMap { e =>
-                    Names.normalizeField(e.getKey).toOption.map(_ -> e.getValue)
+  /** THE Jackson pass over one partition's raw lines — the only
+    * traversal of them, so any upstream pipeline that produced the lines
+    * (pixel decode, webhook JS, a remote fetch) also runs once. */
+  private def digestLines(lines: Iterator[String]): Iterator[Digest] = {
+    val m = new ObjectMapper()
+    lines.flatMap { line =>
+      Try(m.readTree(line)).toOption.flatMap { root =>
+        textualCollection(root)
+          .flatMap(c => Names.normalizeCollection(c).toOption)
+          .map { c =>
+            val eventId = Option(root.get("api"))
+              .flatMap(a => Option(a.get("uuid"))).map(_.asText()).orNull
+            objectProperties(root) match {
+              case None =>
+                Digest(c, None, Map.empty, eventId,
+                  String.valueOf(root.get("properties")).take(200),
+                  line.take(200))
+              case Some(props) =>
+                val byNorm = props.properties().asScala.flatMap { e =>
+                  Names.normalizeField(e.getKey).toOption.map(_ -> e.getValue)
+                }.toMap
+                // built from props directly — NOT from byNorm — so the
+                // resulting (name, typeName) map hashes identically to
+                // the pre-fusion inference pass: registry field order
+                // is a function of content alone, never of JsonNode
+                // identity hashes (PipelineSpec pins the order)
+                val skeleton: Map[String, String] =
+                  props.properties().asScala.flatMap { e =>
+                    Names.normalizeField(e.getKey).toOption.flatMap { name =>
+                      val t =
+                        if (name == "_time") Some(FieldType.TIMESTAMP)
+                        else if (name == "_user") Some(userType(e.getValue))
+                        else inferType(e.getValue)
+                      t.map(tt => name -> tt.name)
+                    }
                   }.toMap
-                  // built from props directly — NOT from byNorm — so the
-                  // resulting (name, typeName) map hashes identically to
-                  // the pre-fusion inference pass: registry field order
-                  // is a function of content alone, never of JsonNode
-                  // identity hashes (PipelineSpec pins the order)
-                  val skeleton: Map[String, String] =
-                    props.properties().asScala.flatMap { e =>
-                      Names.normalizeField(e.getKey).toOption.flatMap { name =>
-                        val t =
-                          if (name == "_time") Some(FieldType.TIMESTAMP)
-                          else if (name == "_user") Some(userType(e.getValue))
-                          else inferType(e.getValue)
-                        t.map(tt => name -> tt.name)
-                      }
-                    }.toMap
-                  Digest(c, Some(byNorm), skeleton, eventId, null,
-                    line.take(200))
-              }
+                Digest(c, Some(byNorm), skeleton, eventId, null,
+                  line.take(200))
             }
-        }
+          }
       }
     }
-    digests.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
 
-    // Schema reduce: the per-event skeletons fold to one union schema
-    // per collection. Properties-less events contribute NO skeleton (a
-    // collection whose every line lacks a valid properties object is
-    // never registered — it dead-letters whole, reference behavior).
-    // One single-stage job, no shuffle: each partition folds its own
-    // skeletons and the driver folds the per-partition results in
-    // partition order (not task completion order, as RDD.aggregate
-    // would), so even the field order of a small map is a function of
-    // the input alone.
-    val skeletons: Map[String, Map[String, String]] = digests
-      .mapPartitions { it =>
-        Iterator.single(it.filter(_.props.isDefined)
-          .map(d => Map(d.c -> d.skeleton)).foldLeft(NoSkeletons)(unionSkeletons))
-      }.collect().foldLeft(NoSkeletons)(unionSkeletons)
+  /** One partition's schema fold: its skeletons reduce to one union
+    * schema per collection. Properties-less events contribute NO
+    * skeleton (a collection whose every line lacks a valid properties
+    * object is never registered — it dead-letters whole, reference
+    * behavior). */
+  private def foldSkeletons(digests: Iterator[Digest]): Map[String, Map[String, String]] =
+    digests.filter(_.props.isDefined)
+      .map(d => Map(d.c -> d.skeleton)).foldLeft(NoSkeletons)(unionSkeletons)
 
+  /** One partition's typed parse with dead-letter side output — over the
+    * digests, never the raw lines: no second Jackson parse, no second
+    * name-normalization sweep. */
+  private def parseDigests(schemas: Map[String, Seq[(String, String)]],
+      digests: Iterator[Digest]): Iterator[(String, Row, Vector[DeadLetter])] =
+    digests.map { d =>
+      d.props match {
+        case None =>
+          // the reference's "properties is null" rejection —
+          // RECORDED, not silently dropped: a multi-event batch
+          // must account for every lost event
+          (d.c, null, Vector(DeadLetter(d.c, "(properties)", "OBJECT",
+            "properties is missing or not an object",
+            d.propsRepr, d.eventId, null, null)))
+        case Some(_) if !schemas.contains(d.c) =>
+          (d.c, null, Vector(DeadLetter(d.c, "(event)", "ROW",
+            "collection has no storable fields",
+            d.lineSnippet, d.eventId, null, null)))
+        case Some(byNorm) =>
+          typedRow(schemas(d.c), d.c, byNorm, d.eventId)
+      }
+    }
+
+  private def deadLetterRow(d: DeadLetter): Row =
+    Row(d.collection, d.property, d.targetType, d.error, d.encodedValue,
+      d.eventId, d.user, d.time)
+
+  /** Registry evolution for a batch's folded schemas: USER_TYPE, then
+    * union-only evolution per collection. Returns the storable
+    * collections' (name, type name) columns and the rejected fields. */
+  private def evolve(registry: SchemaRegistry, project: String,
+      skeletons: Map[String, Map[String, String]])
+      : (Map[String, Seq[(String, String)]], Seq[(String, String, String)]) = {
     // USER_TYPE set-once across collections (InternalConfig.java:5-7).
     // When two collections in one FIRST batch disagree on _user's type,
     // the winner must not depend on Map iteration order: pick the
@@ -379,51 +411,76 @@ object JsonIngest {
     // crash the partitioned write or count phantom "stored" rows, so
     // such collections don't materialize and their lines dead-letter
     val registered = regResults.collect {
-      case (c, (schema, _)) if schema.nonEmpty => c -> schema
+      case (c, (schema, _)) if schema.nonEmpty =>
+        c -> schema.map(f => (f.name, f.tpe.name))
     }
     val rejected = regResults.toSeq.flatMap { case (c, (_, rej)) =>
       rej.map(r => (c, r.field, r.reason))
     }
+    (registered, rejected)
+  }
 
-    // Typed parse with dead-letter side output — over the cached
-    // digests, never the raw lines: no second Jackson parse, no second
-    // name-normalization sweep.
-    val schemaB = spark.sparkContext.broadcast(
-      registered.map { case (c, fs) => c -> fs.map(f => (f.name, f.tpe.name)) })
+  private def sparkSchema(fs: Seq[(String, String)]): StructType =
+    StructType(fs.map { case (n, t) =>
+      StructField(n, FieldType.fromName(t).spark, nullable = true)
+    })
 
-    val parsed = digests.mapPartitions { it =>
-      val schemas = schemaB.value
-      it.map { d =>
-        d.props match {
-          case None =>
-            // the reference's "properties is null" rejection —
-            // RECORDED, not silently dropped: a multi-event batch
-            // must account for every lost event
-            (d.c, null, Vector(DeadLetter(d.c, "(properties)", "OBJECT",
-              "properties is missing or not an object",
-              d.propsRepr, d.eventId, null, null)))
-          case Some(_) if !schemas.contains(d.c) =>
-            (d.c, null, Vector(DeadLetter(d.c, "(event)", "ROW",
-              "collection has no storable fields",
-              d.lineSnippet, d.eventId, null, null)))
-          case Some(byNorm) =>
-            typedRow(schemas(d.c), d.c, byNorm, d.eventId)
-        }
-      }
-    }
+  /** The distributed leaf: the per-partition functions above run inside
+    * `mapPartitions`. */
+  def ingest(spark: SparkSession, registry: SchemaRegistry, project: String,
+      rawJson0: RDD[String]): IngestResult = {
+
+    // The digest RDD is the cache point both downstream passes (schema
+    // reduce, typed parse) read; bounded by batch size, spills to disk,
+    // released by IngestResult.unpersist().
+    val digests: RDD[Digest] = rawJson0.mapPartitions(digestLines)
+    digests.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+    // Schema reduce: one single-stage job, no shuffle: each partition
+    // folds its own skeletons and the driver folds the per-partition
+    // results in partition order (not task completion order, as
+    // RDD.aggregate would), so even the field order of a small map is a
+    // function of the input alone.
+    val skeletons = digests
+      .mapPartitions(it => Iterator.single(foldSkeletons(it)))
+      .collect().foldLeft(NoSkeletons)(unionSkeletons)
+    val (registered, rejected) = evolve(registry, project, skeletons)
+
+    val schemaB = spark.sparkContext.broadcast(registered)
+    val parsed = digests.mapPartitions(it => parseDigests(schemaB.value, it))
     parsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val byCollection = registered.map { case (c, fs) =>
-      val st = StructType(fs.map(f => StructField(f.name, f.tpe.spark, nullable = true)))
       c -> spark.createDataFrame(
-        parsed.filter(t => t._1 == c && t._2 != null).map(_._2), st)
+        parsed.filter(t => t._1 == c && t._2 != null).map(_._2), sparkSchema(fs))
     }
-    val dead = spark.createDataFrame(
-      parsed.flatMap(_._3).map(d =>
-        Row(d.collection, d.property, d.targetType, d.error, d.encodedValue,
-          d.eventId, d.user, d.time)),
+    val dead = spark.createDataFrame(parsed.flatMap(_._3).map(deadLetterRow),
       deadLetterSchema)
     IngestResult(byCollection, dead, rejected, Some(parsed), Some(digests))
+  }
+
+  /** The local leaf: the same per-partition functions run once on the
+    * driver, over the lines as one partition, and every frame is a
+    * `LocalRelation`. Catalyst folds a projection over it on the driver
+    * (`ConvertToLocalRelation`), so a small request's mapper chain runs
+    * no Spark job. With one partition the schema fold sees the lines in
+    * the order the distributed leaf does over `parallelize(lines, 1)`,
+    * so the registry's column order is the same. */
+  def ingest(spark: SparkSession, registry: SchemaRegistry, project: String,
+      lines: Seq[String]): IngestResult = {
+    val digests = digestLines(lines.iterator).toVector
+    val skeletons = Iterator.single(foldSkeletons(digests.iterator))
+      .foldLeft(NoSkeletons)(unionSkeletons)
+    val (registered, rejected) = evolve(registry, project, skeletons)
+    val parsed = parseDigests(registered, digests.iterator).toVector
+    val byCollection = registered.map { case (c, fs) =>
+      c -> spark.createDataFrame(
+        parsed.collect { case (`c`, row, _) if row != null => row }.asJava,
+        sparkSchema(fs))
+    }
+    val dead = spark.createDataFrame(
+      parsed.flatMap(_._3).map(deadLetterRow).asJava, deadLetterSchema)
+    IngestResult(byCollection, dead, rejected)
   }
 
   // ---- single-pass unified fan-out ----

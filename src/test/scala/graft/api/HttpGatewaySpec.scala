@@ -631,27 +631,104 @@ class HttpGatewaySpec extends SparkSpec {
     }
   }
 
-  test("a steady-state collect runs at most 4 Spark jobs: the spider " +
-    "gate and the stored count are one") {
+  /** The call site of every Spark job `body` starts ("parquet at
+    * EventStore.scala:79"), in start order. */
+  private def jobsDuring(body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    withGateway { (_, port) =>
-      val event = """{"collection": "pv", "properties": {"_user": "u1", "_time": "2026-01-15 10:00:00.000", "_user_agent": "Mozilla/5.0 (X11; Linux x86_64; rv:121.0) Gecko/20100101 Firefox/121.0", "_referrer": "https://www.google.com/search?q=x"}}"""
-      (1 to 2).foreach(_ => assert(post(port, "/event/collect", event).statusCode() == 200))
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(e.stageInfos.map(_.name).lastOption.getOrElse("?")); ()
       }
-      val sc = spark.sparkContext
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.addSparkListener(listener)
-      try {
-        assert(post(port, "/event/collect", event).statusCode() == 200)
-        org.apache.spark.ListenerBusDrain(sc)
-      } finally sc.removeSparkListener(listener)
-      // ingest's schema fold, the gate and count, the store write, the
-      // dead-letter check
-      assert(jobs.get() <= 4, s"${jobs.get()} jobs for one collect")
     }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq
+  }
+
+  private val humanUa =
+    "Mozilla/5.0 (X11; Linux x86_64; rv:121.0) Gecko/20100101 Firefox/121.0"
+
+  private def uaEvent(coll: String, user: String) =
+    s"""{"collection": "$coll", "properties": {"_user": "$user", "_time": "2026-01-15 10:00:00.000", "_user_agent": "$humanUa", "_referrer": "https://www.google.com/search?q=x"}}"""
+
+  test("a steady-state collect runs 1 Spark job: a small request ingests " +
+    "and enriches as a local relation, and only the store write runs") {
+    withGateway { (_, port) =>
+      val event = uaEvent("pv", "u1")
+      (1 to 2).foreach(_ => assert(post(port, "/event/collect", event).statusCode() == 200))
+      val jobs = jobsDuring(assert(post(port, "/event/collect", event).statusCode() == 200))
+      assert(jobs.size == 1 && jobs.head.contains("EventStore"), jobs)
+    }
+  }
+
+  test("a request of 64 lines takes the local leaf; 65 lines take the " +
+    "distributed one") {
+    withGateway { (_, port) =>
+      def batch(n: Int) = (1 to n).map(i => uaEvent("pv", s"u$i"))
+        .mkString("""{"events": [""", ",", "]}")
+      assert(post(port, "/event/batch", batch(2)).statusCode() == 200)
+      val small = jobsDuring(assert(post(port, "/event/batch", batch(64)).body() ==
+        """{"stored":64}"""))
+      assert(small.size == 1 && small.head.contains("EventStore"), small)
+      val large = jobsDuring(assert(post(port, "/event/batch", batch(65)).body() ==
+        """{"stored":65}"""))
+      assert(large.exists(_.contains("JsonIngest")), large)
+      val q = post(port, "/query/execute",
+        """{"query": "SELECT count(*) AS n, count(_user_agent_family) AS ua FROM pv"}""")
+      assert(q.body().contains("\"n\":131") && q.body().contains("\"ua\":131"), q.body())
+    }
+  }
+
+  test("a collection with a JS mapper keeps the persisted path, stores the " +
+    "rows the local path stores, and logs once") {
+    withGateway { (_, port) =>
+      val script = "function mapper(events, params, sourceIp, headers, sql, config) { " +
+        "var ev = events.events(); var n = 0; " +
+        "while (ev.hasNext()) { ev.next(); n = n + 1; } logger.info('saw ' + n); }"
+      assert(post(port, "/custom-event-mapper/create",
+        s"""{"name": "counter", "script": "$script", "collection": "mapped"}""")
+        .statusCode() == 200)
+      assert(post(port, "/event/collect", uaEvent("plain", "u1")).statusCode() == 200)
+      val jobs = jobsDuring(
+        assert(post(port, "/event/collect", uaEvent("mapped", "u1")).statusCode() == 200))
+      // the spider gate is its own job over the persisted frame
+      assert(jobs.exists(_.contains("HttpGateway")), jobs)
+      def rows(coll: String) = post(port, "/query/execute",
+        s"""{"query": "SELECT * FROM $coll"}""").body()
+      assert(rows("mapped") == rows("plain") && rows("plain").contains("Firefox"),
+        (rows("mapped"), rows("plain")))
+      val logs = post(port, "/javascript-logger/get_logs", """{"prefix": "counter"}""").body()
+      assert("saw 1".r.findAllIn(logs).size == 1 && "\"level\"".r.findAllIn(logs).size == 1,
+        logs)
+      // the test door's script sees a small request as one batch too
+      val firstOnly = "function mapper(events, params, sourceIp, headers, sql, config) { " +
+        "var ev = events.events(); var first = true; " +
+        "while (ev.hasNext()) { var e = ev.next(); if (!first) { e.drop(); } first = false; } }"
+      val t = post(port, "/custom-event-mapper/test",
+        s"""{"script": "$firstOnly", "events": [${(1 to 3).map(i => uaEvent("t", s"u$i")).mkString(",")}]}""")
+      assert(t.statusCode() == 200 && "\"_user\"".r.findAllIn(t.body()).size == 1, t.body())
+    }
+  }
+
+  test("a 10-event batch in one month writes one part file") {
+    val warehouse = graft.TempDirs.scratch("graft-small-files").toString
+    val gw = new HttpGateway(spark, SchemaRegistry.inMemory(), warehouse, "demo")
+    val port = gw.start()
+    try {
+      val events = (1 to 10).map(i => uaEvent("pv", s"u$i"))
+      assert(post(port, "/event/batch", events.mkString("""{"events": [""", ",", "]}"))
+        .body() == """{"stored":10}""")
+      val month = new java.io.File(
+        graft.store.EventStore.tablePath(warehouse, "demo", "pv"), "_month=2026-01")
+      val parts = month.listFiles().map(_.getName).filter(_.startsWith("part-"))
+      assert(parts.length == 1, parts.toSeq)
+    } finally gw.stop()
   }
 
   test("IP2Location CSV dim drives gateway geo enrichment end-to-end: " +
