@@ -2068,6 +2068,19 @@ final class HttpGateway(
     if (!graft.store.VersionedState.exists(dir))
       throw new IngestRejected("index does not exist")
 
+  /** The create doors: `exists` is checked INSIDE the write lock, so of
+    * racing creates of one name exactly one runs `create` and the others
+    * answer 400 "already exists" — checked outside, two could both pass
+    * and the later one silently overwrite the first's state. */
+  private def createOnce(exists: => Boolean, what: String)(
+      create: => Unit): (Int, String) = {
+    writeLock.synchronized {
+      if (exists) throw new IngestRejected(s"$what already exists")
+      create
+    }
+    (200, """{"success":true}""")
+  }
+
   /** `POST /index/dedup/create` — bootstrap a [[graft.store.DedupIndex]]
     * (min band-key state, |keys|-sized) under this project from inline
     * docs or a parquet source. `append` folds deltas in O(delta)+O(|keys|);
@@ -2079,12 +2092,10 @@ final class HttpGateway(
     val root = requestJson(ex)
     val name = requireIdentifier(textField(root, "name")
       .getOrElse(throw new IngestRejected("name is required")))
-    if (graft.store.VersionedState.exists(dedupIdxDir(name)))
-      throw new IngestRejected(s"index '$name' already exists")
-    writeLock.synchronized {
+    createOnce(graft.store.VersionedState.exists(dedupIdxDir(name)),
+        s"index '$name'") {
       graft.store.DedupIndex.initialize(docsFrameOf(root), dedupIdxDir(name))
     }
-    (200, """{"success":true}""")
   }
 
   private def handleDedupAppend(ex: HttpExchange): (Int, String) = {
@@ -2113,15 +2124,11 @@ final class HttpGateway(
     val root = requestJson(ex)
     val name = requireIdentifier(textField(root, "name")
       .getOrElse(throw new IngestRejected("name is required")))
-    writeLock.synchronized {
-      // exists-check INSIDE the lock (the vocab-door lesson): two
-      // racing creates must not both pass and clobber version 1
-      if (graft.store.VersionedState.exists(substringIdxDir(name)))
-        throw new IngestRejected(s"index '$name' already exists")
+    createOnce(graft.store.VersionedState.exists(substringIdxDir(name)),
+        s"index '$name'") {
       graft.store.SubstringIndex.initialize(docsFrameOf(root),
         substringIdxDir(name))
     }
-    (200, """{"success":true}""")
   }
 
   /** Append goes through the batch fence with a REQUIRED client
@@ -2171,14 +2178,10 @@ final class HttpGateway(
     val root = requestJson(ex)
     val name = requireIdentifier(textField(root, "name")
       .getOrElse(throw new IngestRejected("name is required")))
-    writeLock.synchronized {
-      // exists-check INSIDE the lock: two racing creates must not both
-      // pass and silently clobber each other's version 1
-      if (graft.store.VersionedState.exists(vocabIdxDir(name)))
-        throw new IngestRejected(s"index '$name' already exists")
+    createOnce(graft.store.VersionedState.exists(vocabIdxDir(name)),
+        s"index '$name'") {
       graft.store.VocabStore.initialize(docsFrameOf(root), vocabIdxDir(name))
     }
-    (200, """{"success":true}""")
   }
 
   /** Append folds through the BATCH FENCE, never a bare refresh:
@@ -2302,15 +2305,13 @@ final class HttpGateway(
     val root = requestJson(ex)
     val name = requireIdentifier(textField(root, "name")
       .getOrElse(throw new IngestRejected("name is required")))
-    if (graft.store.VersionedState.exists(annIdxDir(name)))
-      throw new IngestRejected(s"index '$name' already exists")
-    writeLock.synchronized {
+    createOnce(graft.store.VersionedState.exists(annIdxDir(name)),
+        s"index '$name'") {
       try graft.store.AnnIndex.initialize(vectorsFrameOf(root), annIdxDir(name))
       catch { case e: IllegalArgumentException =>
         throw new IngestRejected(e.getMessage)
       }
     }
-    (200, """{"success":true}""")
   }
 
   private def handleAnnAppend(ex: HttpExchange): (Int, String) = {
@@ -2419,14 +2420,10 @@ final class HttpGateway(
     val docs = docsFrameOf(root)
     if (docs.isEmpty)
       throw new IngestRejected("bootstrap batch must contain documents")
-    // duplicate check inside the lock: two racing creates must not
-    // both pass it and silently overwrite each other
-    writeLock.synchronized {
-      if (graft.store.VersionedState.exists(textIdxDir(name)))
-        throw new IngestRejected(s"index '$name' already exists")
+    createOnce(graft.store.VersionedState.exists(textIdxDir(name)),
+        s"index '$name'") {
       graft.store.InvertedIndex.initialize(docs, textIdxDir(name))
     }
-    (200, """{"success":true}""")
   }
 
   private def handleTextAppend(ex: HttpExchange): (Int, String) = {
@@ -2660,14 +2657,10 @@ final class HttpGateway(
     * maintenance, so a view read is always current without a refresh
     * call (the upstream continuous-query semantics). Synchronous under
     * the store's write lock: single-writer, no replay, so the direct
-    * initialize/refresh pair is exactly-once by construction. */
+    * initialize-or-refresh is exactly-once by construction. */
   private def maintainMvs(coll: String, df: DataFrame): Unit =
     storedMvDefs().filter(_.collection == coll).foreach { d =>
-      val path = mvStateDir(d.name)
-      val aligned = alignForMv(d, df)
-      if (!graft.store.VersionedState.exists(path))
-        d.view.initialize(aligned, path)
-      else d.view.refresh(spark, aligned, path)
+      d.view.initializeOrRefresh(spark, alignForMv(d, df), mvStateDir(d.name))
     }
 
   /** Everything stored for `collection` — or, for a collection declared
@@ -2713,8 +2706,6 @@ final class HttpGateway(
     val root = requestJson(ex)
     val name = requireIdentifier(textField(root, "name")
       .getOrElse(throw new IngestRejected("name is required")))
-    if (readMvDef(name).isDefined)
-      throw new IngestRejected(s"materialized view '$name' already exists")
     val collection = textField(root, "collection").getOrElse(
       throw new IngestRejected("collection is required"))
     def arr(f: String): Seq[String] =
@@ -2738,12 +2729,11 @@ final class HttpGateway(
     }
     put("group", d.group); put("values", d.values)
     put("distinct", d.distincts); put("quantiles", d.quantiles)
-    writeLock.synchronized {
+    createOnce(readMvDef(name).isDefined, s"materialized view '$name'") {
       graft.store.VersionedState.writeMarker(mvDefsDir, name,
         mapper.writeValueAsString(node))
       rebuildMv(d)
     }
-    (200, """{"success":true}""")
   }
 
   /** `GET /materialized-view/get?name=…` — serve the finalized view

@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.core.{FieldType, Names, SchemaRegistry}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 
 import java.time.format.DateTimeFormatter
@@ -161,14 +162,15 @@ object JsonIngest {
         case t if t.isTextual => parseDate(t.asText())
           .map(d => java.sql.Date.valueOf(d)).toRight("cannot parse DATE")
         case n if n.isNumber => // epoch days (DateTimeUtils.java:59-61)
-          Right(java.sql.Date.valueOf(LocalDate.ofEpochDay(n.asLong())))
+          epochDate(n).toRight("epoch days out of range for DATE")
         case _ => Left("cannot cast to DATE")
       }
       case FieldType.TIMESTAMP => node match {
         case n if n.isNumber => // epoch millis (594-607)
-          Right(java.sql.Timestamp.from(Instant.ofEpochMilli(n.asLong())))
+          epochTimestamp(n).toRight("epoch millis out of range for TIMESTAMP")
         case t if t.isTextual => parseTimestamp(t.asText())
-          .map(java.sql.Timestamp.from).toRight("cannot parse TIMESTAMP")
+          .map(i => timestampOf(i).toRight("out of range for TIMESTAMP"))
+          .getOrElse(Left("cannot parse TIMESTAMP"))
         case _ => Left("cannot cast to TIMESTAMP")
       }
       case FieldType.TIME => node match { // millis-of-day (587-593)
@@ -207,6 +209,26 @@ object JsonIngest {
     }
   }
 
+  /** `i` as a timestamp Spark can hold (its value is a long of
+    * microseconds, so about ±292,000 years), else None: the conversion
+    * a row makes on its way into a DataFrame, run here so an
+    * out-of-range value dead-letters instead of failing the write. */
+  private def timestampOf(i: Instant): Option[java.sql.Timestamp] =
+    Try(java.sql.Timestamp.from(i)).toOption
+      .filter(ts => Try(DateTimeUtils.fromJavaTimestamp(ts)).isSuccess)
+
+  /** A JSON number of epoch millis as a timestamp Spark can hold. */
+  private def epochTimestamp(n: JsonNode): Option[java.sql.Timestamp] =
+    Some(n).filter(_.canConvertToLong)
+      .flatMap(n => timestampOf(Instant.ofEpochMilli(n.asLong())))
+
+  /** A JSON number of epoch days as a date Spark can hold (an int of
+    * days). */
+  private def epochDate(n: JsonNode): Option[java.sql.Date] =
+    Some(n).filter(_.canConvertToInt)
+      .map(n => java.sql.Date.valueOf(LocalDate.ofEpochDay(n.asLong())))
+      .filter(d => Try(DateTimeUtils.fromJavaDate(d)).isSuccess)
+
   private def numeric[T](node: JsonNode, fromNum: JsonNode => T,
       fromStr: String => T): Either[String, Any] = node match {
     case n if n.isNumber => Right(fromNum(n))
@@ -241,8 +263,8 @@ object JsonIngest {
       eventId: String): (String, Row, Vector[DeadLetter]) = {
     val dlUser = byNorm.get("_user").map(_.asText()).orNull
     val dlTime = byNorm.get("_time").flatMap { n =>
-      if (n.isNumber) Some(java.sql.Timestamp.from(Instant.ofEpochMilli(n.asLong())))
-      else parseTimestamp(n.asText()).map(java.sql.Timestamp.from)
+      if (n.isNumber) epochTimestamp(n)
+      else parseTimestamp(n.asText()).flatMap(timestampOf)
     }.orNull
     val dead = Vector.newBuilder[DeadLetter]
     val values = fields.map { case (name, tName) =>

@@ -29,10 +29,16 @@ import graft.analytics.DedupQueries
   * pattern. The same LSH family/constants as d2 — the index and the
   * batch query cannot drift.
   *
-  * Persistence is the shared [[VersionedState]] layout: versioned
-  * parquet + atomic `_CURRENT` flip, `compact` for superseded versions.
+  * Persistence is a [[MergedState]]. Min-merge already makes a replayed
+  * micro-batch HARMLESS (re-merging the same rows into a min is
+  * idempotent); the batch fence additionally makes it FREE — a replay
+  * skips the |keys|-sized state read/merge/write, and the version count
+  * stays one per data batch instead of one per delivery. [[maintain]]
+  * is the persisted complement of [[graft.streaming.StreamingNearDup]]
+  * (whose state lives inside one query's checkpoint): this state
+  * survives restarts and is shared with batch probes.
   */
-object DedupIndex {
+object DedupIndex extends MergedState {
 
   /** Uncapped banded keys (doc_id, band, key) of a batch — d2's family. */
   private def keysOf(docs: DataFrame): DataFrame =
@@ -99,58 +105,10 @@ object DedupIndex {
           col("batch_first") < col("doc_id")).as("is_dup"))
   }
 
-  // ---------------- persist-backed lifecycle ----------------
-
-  /** Write the first state version for the bootstrap corpus. */
-  def initialize(docs: DataFrame, path: String, batchId: Long = -1L): Unit =
-    VersionedState.writeVersion(partial(docs), path, 1, batchId)
-
-  /** Fold a delta batch into the persisted index. */
-  def refresh(spark: SparkSession, delta: DataFrame, path: String,
-      batchId: Long = -1L): Unit = {
-    val state = VersionedState.readCurrent(spark, path)
-    VersionedState.writeVersion(
-      merge(state, partial(delta)), path,
-      VersionedState.currentVersion(path) + 1, batchId)
-  }
-
   /** Probe a delta against the persisted index (read-only). */
   def probeStore(spark: SparkSession, delta: DataFrame,
       path: String): DataFrame =
     probe(delta, Some(VersionedState.readCurrent(spark, path)))
-
-  /** Drop superseded state versions. */
-  def compact(path: String, grace: Int = 1): Unit =
-    VersionedState.compact(path, grace)
-
-  /** One micro-batch of [[maintain]]. Min-merge already makes replays
-    * HARMLESS (re-merging the same rows into a min is idempotent); the
-    * persisted batch fence shared with [[AnnIndex]]/[[MaterializedView]]
-    * additionally makes them FREE — a replayed batch skips the
-    * |keys|-sized state read/merge/write entirely, and the version
-    * count stays one per data batch instead of one per delivery. Empty
-    * micro-batches only advance the fence (pointer-only flip). */
-  def maintainBatch(delta: DataFrame, path: String, batchId: Long): Unit = {
-    if (!VersionedState.exists(path)) {
-      if (!delta.isEmpty) initialize(delta, path, batchId)
-    } else if (batchId > VersionedState.lastBatchId(path)) {
-      if (delta.isEmpty) {
-        VersionedState.writePointer(path,
-          VersionedState.currentVersion(path), batchId)
-      } else refresh(delta.sparkSession, delta, path, batchId)
-    }
-  }
-
-  /** Maintain the index CONTINUOUSLY from a document stream: each
-    * micro-batch folds in as a delta — the persisted complement of
-    * [[graft.streaming.StreamingNearDup]] (whose state lives inside
-    * one query's checkpoint): this state survives restarts and is
-    * shared with batch probes. */
-  def maintain(stream: DataFrame, path: String):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (delta: DataFrame, batchId: Long) => maintainBatch(delta, path, batchId)
-    }
 
   // ---------------- the oracle contract ----------------
 

@@ -35,8 +35,12 @@ import graft.analytics.DedupQueries
   * bounded to exactly those cap-crossing grams; `SubstringIndexSpec`
   * pins both the parity (no crossing) and the divergence (crossing)
   * cases.
+  *
+  * Persistence is a [[MergedState]]. The batch fence is load-bearing
+  * here: the counts sum-merge, so a redelivered batch folded again
+  * would double them.
   */
-object SubstringIndex {
+object SubstringIndex extends MergedState {
 
   private def grams(docs: DataFrame): DataFrame =
     DedupQueries.substringGrams(DedupQueries.substringDocs(docs))
@@ -138,52 +142,10 @@ object SubstringIndex {
     DedupQueries.rebuildTrimmed(docs, trimPos)
   }
 
-  // ---------------- persist-backed lifecycle ----------------
-
-  /** Write the first state version for the bootstrap corpus. */
-  def initialize(docs: DataFrame, path: String, batchId: Long = -1L): Unit =
-    VersionedState.writeVersion(partial(docs), path, 1, batchId)
-
-  /** Fold a delta batch into the persisted index. */
-  def refresh(spark: SparkSession, delta: DataFrame, path: String,
-      batchId: Long = -1L): Unit = {
-    val state = VersionedState.readCurrent(spark, path)
-    VersionedState.writeVersion(
-      merge(state, partial(delta)), path,
-      VersionedState.currentVersion(path) + 1, batchId)
-  }
-
   /** Trim a delta against the persisted index (read-only). */
   def probeStore(spark: SparkSession, delta: DataFrame,
       path: String): DataFrame =
     probe(delta, Some(VersionedState.readCurrent(spark, path)))
-
-  /** Drop superseded state versions. */
-  def compact(path: String, grace: Int = 1): Unit =
-    VersionedState.compact(path, grace)
-
-  /** One micro-batch of [[maintain]] — same replay discipline as
-    * [[DedupIndex.maintainBatch]]: the batch fence makes a redelivered
-    * batch a no-op (min/sum re-merge would double the counts, so the
-    * fence is load-bearing here, not just an optimization), and an
-    * empty micro-batch only advances the fence. */
-  def maintainBatch(delta: DataFrame, path: String, batchId: Long): Unit = {
-    if (!VersionedState.exists(path)) {
-      if (!delta.isEmpty) initialize(delta, path, batchId)
-    } else if (batchId > VersionedState.lastBatchId(path)) {
-      if (delta.isEmpty) {
-        VersionedState.writePointer(path,
-          VersionedState.currentVersion(path), batchId)
-      } else refresh(delta.sparkSession, delta, path, batchId)
-    }
-  }
-
-  /** Maintain the index CONTINUOUSLY from a document stream. */
-  def maintain(stream: DataFrame, path: String):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (delta: DataFrame, batchId: Long) => maintainBatch(delta, path, batchId)
-    }
 
   /** The full streaming trim: every micro-batch is emitted REWRITTEN
     * against all history (earlier batches AND earlier in this batch —
@@ -218,10 +180,7 @@ object SubstringIndex {
   def trimBatch(delta: DataFrame, path: String, outPath: String,
       batchId: Long,
       failpoint: () => Unit = () => ()): Unit = {
-    val admit =
-      if (!VersionedState.exists(path)) !delta.isEmpty
-      else batchId > VersionedState.lastBatchId(path)
-    if (admit && !delta.isEmpty) {
+    if (admits(path, batchId) && !delta.isEmpty) {
       val out = new java.io.File(outPath)
       out.mkdirs()
       val target = new java.io.File(out, s"batch=$batchId")

@@ -12,21 +12,17 @@ import graft.analytics.TokenizerQueries
   * the corpus-sized word-count shuffle happens once per delta batch
   * (O(delta)), and every later tokenizer question costs |vocab|.
   *
-  * Word counts are an ALGEBRAIC state in the [[MaterializedView]]
-  * sense: sum is commutative + associative, so per-batch partials
-  * merge in any batch layout and the incremental fold is
+  * Word counts are a [[MergedState]], as in [[MaterializedView]]: sum
+  * is commutative + associative, so per-batch partials merge in any
+  * batch layout and the incremental fold is
   * oracle-checkable against the batchless computation (vs1 — the mv1/
   * di1 pattern). Replay safety differs from [[DedupIndex]]'s min-state
   * (where re-merging is idempotent): a re-SUMMED batch would
   * double-count, so the persisted batch fence is load-bearing here,
   * not merely an optimization — the spec pins a replayed batch to a
   * no-op.
-  *
-  * Persistence is the shared [[VersionedState]] layout: versioned
-  * parquet + atomic `_CURRENT` flip, `compact` for superseded
-  * versions.
   */
-object VocabStore {
+object VocabStore extends MergedState {
 
   /** Partial state of one batch: its word counts. */
   def partial(docs: DataFrame): DataFrame =
@@ -38,20 +34,6 @@ object VocabStore {
     states.reduce(_.unionByName(_))
       .groupBy(col("word"))
       .agg(sum(col("cnt")).as("cnt"))
-  }
-
-  // ---------------- persist-backed lifecycle ----------------
-
-  def initialize(docs: DataFrame, path: String, batchId: Long = -1L): Unit =
-    VersionedState.writeVersion(partial(docs), path, 1, batchId)
-
-  /** Fold a delta batch into the persisted vocabulary. */
-  def refresh(spark: SparkSession, delta: DataFrame, path: String,
-      batchId: Long = -1L): Unit = {
-    val state = VersionedState.readCurrent(spark, path)
-    VersionedState.writeVersion(
-      merge(state, partial(delta)), path,
-      VersionedState.currentVersion(path) + 1, batchId)
   }
 
   /** The maintained `(word, cnt)` frame (read-only). */
@@ -134,32 +116,6 @@ object VocabStore {
       case _ => false
     }
   }
-
-  /** Drop superseded state versions. */
-  def compact(path: String, grace: Int = 1): Unit =
-    VersionedState.compact(path, grace)
-
-  /** One micro-batch of [[maintain]]. The batch fence is CORRECTNESS
-    * here (sum-merge double-counts on replay, unlike min-merge): a
-    * batch id at or below the persisted fence is skipped outright;
-    * empty batches advance the fence with a pointer-only flip. */
-  def maintainBatch(delta: DataFrame, path: String, batchId: Long): Unit = {
-    if (!VersionedState.exists(path)) {
-      if (!delta.isEmpty) initialize(delta, path, batchId)
-    } else if (batchId > VersionedState.lastBatchId(path)) {
-      if (delta.isEmpty) {
-        VersionedState.writePointer(path,
-          VersionedState.currentVersion(path), batchId)
-      } else refresh(delta.sparkSession, delta, path, batchId)
-    }
-  }
-
-  /** Maintain the vocabulary CONTINUOUSLY from a document stream. */
-  def maintain(stream: DataFrame, path: String):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (delta: DataFrame, batchId: Long) => maintainBatch(delta, path, batchId)
-    }
 
   // ---------------- the oracle contract ----------------
 

@@ -54,6 +54,26 @@ trait SparkSpec extends AnyFunSuite {
     captured.synchronized(captured.toSeq)
   }
 
+  /** The call site of every Spark job `body` starts ("parquet at
+    * EventStore.scala:79"), in start order. */
+  def jobsDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(e.stageInfos.map(_.name).lastOption.getOrElse("?")); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(jobs).asScala.toSeq
+  }
+
   /** Lines of a plan string that are exchanges. Every exchange counts:
     * table reads add none of their own, so a pin that says "operator X
     * must not shuffle" sees every shuffle in the plan. */

@@ -72,7 +72,13 @@ class GatewayFuzzSpec extends SparkSpec {
     "binary junk \u0000 \ufffd \bx", // NUL + replacement + backspace
     """{"collection":"c","properties":[1,2,3]}""",
     """{"name":123,"script":{"nested":true}}""",
-    """{"query":"DROP TABLE events; --"}""")
+    """{"query":"DROP TABLE events; --"}""",
+    // epoch values Spark's timestamp and date cannot hold: d is DATE
+    // after the first of these, so the last two coerce numbers to it
+    """{"collection":"c","properties":{"_time":99999999999999999999,"d":"2026-01-10"}}""",
+    """{"collection":"c","properties":{"_time":-1e30,"d":-1e30}}""",
+    """{"events":[{"collection":"c","properties":{"d":"2026-01-10"}},""" +
+      """{"collection":"c","properties":{"_time":-1e30,"d":99999999999}}]}""")
 
   test("every door answers hostile bodies with a client status, never a 5xx") {
     val registry = SchemaRegistry.inMemory()

@@ -631,26 +631,6 @@ class HttpGatewaySpec extends SparkSpec {
     }
   }
 
-  /** The call site of every Spark job `body` starts ("parquet at
-    * EventStore.scala:79"), in start order. */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.add(e.stageInfos.map(_.name).lastOption.getOrElse("?")); ()
-      }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    jobs.asScala.toSeq
-  }
-
   private val humanUa =
     "Mozilla/5.0 (X11; Linux x86_64; rv:121.0) Gecko/20100101 Firefox/121.0"
 
@@ -2470,6 +2450,158 @@ class HttpGatewaySpec extends SparkSpec {
       assert(get(port, "/admin/lock_key?lock_key=s3cret").body() == "true")
       assert(get(port, "/admin/lock_key?lock_key=wrong").body() == "false")
       assert(get(port, "/admin/lock_key").body() == "false")
+    } finally gw.stop()
+  }
+
+  // -------- create doors under concurrency --------
+
+  /** Races `bodies.size` creates of one name at `door` behind a latch and
+    * checks the outcome: exactly one 200 and the others 400 "already
+    * exists". Runs `check(warehouse, winner)` with the winner's index
+    * into `bodies`, before the gateway stops. */
+  private def raceCreates(door: String, bodies: Seq[String],
+      setup: Int => Unit = _ => ())(check: (String, Int) => Unit): Unit = {
+    val warehouse = graft.TempDirs.scratch("graft-http-race").toString
+    val gw = new HttpGateway(spark, SchemaRegistry.inMemory(), warehouse, "demo")
+    val port = gw.start()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(bodies.size)
+    try {
+      setup(port)
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val futures = bodies.map { b =>
+        pool.submit(new java.util.concurrent.Callable[HttpResponse[String]] {
+          def call(): HttpResponse[String] = { go.await(); post(port, door, b) }
+        })
+      }
+      go.countDown()
+      val rs = futures.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      val winners = rs.indices.filter(rs(_).statusCode() == 200)
+      assert(winners.size == 1,
+        rs.map(r => s"${r.statusCode()} ${r.body().take(200)}"))
+      rs.filter(_.statusCode() != 200).foreach { r =>
+        assert(r.statusCode() == 400 && r.body().contains("already exists"),
+          s"${r.statusCode()} ${r.body().take(300)}")
+      }
+      check(warehouse, winners.head)
+    } finally { pool.shutdownNow(); gw.stop() }
+  }
+
+  private val Racers = 3
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** Racer `i`'s one document: distinct words, long enough to shingle. */
+  private def racerText(i: Int): String =
+    (0 until 40).map(w => s"r${i}w$w").mkString(" ")
+
+  private def racerDocs(i: Int): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    Seq((1L, racerText(i))).toDF("doc_id", "text")
+  }
+
+  private def docsBody(i: Int) =
+    s"""{"name": "race", "docs": [{"doc_id": 1, "text": "${racerText(i)}"}]}"""
+
+  test("racing dedup creates: one wins, the rest get 400, the state is " +
+    "the winner's") {
+    raceCreates("/index/dedup/create", (0 until Racers).map(docsBody)) { (wh, w) =>
+      val dir = s"$wh/demo/__indexes/dedup/race"
+      assert(rowsOf(graft.store.VersionedState.readCurrent(spark, dir)) ==
+        rowsOf(graft.store.DedupIndex.partial(racerDocs(w))))
+    }
+  }
+
+  test("racing substring creates: one wins, the rest get 400, the state " +
+    "is the winner's") {
+    raceCreates("/index/substring/create", (0 until Racers).map(docsBody)) { (wh, w) =>
+      val dir = s"$wh/demo/__indexes/substring/race"
+      assert(rowsOf(graft.store.VersionedState.readCurrent(spark, dir)) ==
+        rowsOf(graft.store.SubstringIndex.partial(racerDocs(w))))
+    }
+  }
+
+  test("racing vocab creates: one wins, the rest get 400, the state is " +
+    "the winner's") {
+    raceCreates("/index/vocab/create", (0 until Racers).map(docsBody)) { (wh, w) =>
+      val dir = s"$wh/demo/__indexes/vocab/race"
+      assert(rowsOf(graft.store.VocabStore.wordFreq(spark, dir)) ==
+        rowsOf(graft.store.VocabStore.partial(racerDocs(w))))
+    }
+  }
+
+  test("racing text-index creates: one wins, the rest get 400, the state " +
+    "is the winner's") {
+    val bodies = (0 until Racers).map(i =>
+      s"""{"name": "race", "docs": [{"doc_id": ${10 + i}, "text": "${racerText(i)}"}]}""")
+    raceCreates("/index/text/create", bodies) { (wh, w) =>
+      val dir = s"$wh/demo/__indexes/text/race"
+      assert(rowsOf(graft.store.InvertedIndex.postings(spark, dir)
+        .select("doc_id").distinct()) == Seq(s"${10 + w}"))
+    }
+  }
+
+  test("racing ANN creates: one wins, the rest get 400, the state is " +
+    "the winner's") {
+    def vec(id: Long) =
+      s"""{"vec_id": $id, "embedding": [${(id % 10) / 10.0}, 0.5, 0.25], "label": "v$id"}"""
+    // every racer carries the 16 seeds plus one vector of its own
+    val bodies = (0 until Racers).map(i =>
+      ((0L until 16L) :+ (100L + i)).map(vec).mkString(
+        """{"name": "race", "vectors": [""", ",", "]}"))
+    raceCreates("/index/ann/create", bodies) { (wh, w) =>
+      val dir = s"$wh/demo/__indexes/ann/race"
+      assert(rowsOf(graft.store.AnnIndex.postings(spark, dir).select("vec_id")) ==
+        ((0L until 16L) :+ (100L + w)).map(_.toString).sorted)
+    }
+  }
+
+  test("racing materialized-view creates: one wins, the rest get 400, the " +
+    "view is the winner's") {
+    val groups = Seq("page", "_user", "kind")
+    val bodies = groups.map(g =>
+      s"""{"name": "race", "collection": "views", "group": ["$g"], "values": ["amount"]}""")
+    raceCreates("/materialized-view/create", bodies, setup = port =>
+      Seq(("u1", "/a", "x"), ("u2", "/b", "y")).foreach { case (u, p, k) =>
+        assert(post(port, "/event/collect",
+          s"""{"collection": "views", "properties": {"_user": "$u", "_time": "2026-01-15 10:00:00.000", "page": "$p", "kind": "$k", "amount": 3}}""")
+          .statusCode() == 200)
+      }) { (wh, w) =>
+      val state = graft.store.VersionedState.readCurrent(spark, s"$wh/demo/__mvstate/race")
+      assert(state.columns.contains(groups(w)) &&
+        groups.filterNot(_ == groups(w)).forall(g => !state.columns.contains(g)),
+        state.columns.toSeq)
+      assert(state.count() == 2L)
+    }
+  }
+
+  test("an epoch _time Spark cannot hold is a dead letter, not a 500") {
+    val registry = SchemaRegistry.inMemory()
+    val warehouse = graft.TempDirs.scratch("graft-http").toString
+    val gw = new HttpGateway(spark, registry, warehouse, "demo")
+    val port = gw.start()
+    try {
+      Seq("99999999999999999999", "-1e30", "9223372036854775807").foreach { t =>
+        val r = post(port, "/event/collect",
+          s"""{"collection": "pageview", "properties": {"_user": "u$t", "_time": $t}}""")
+        assert(r.statusCode() == 200, s"_time $t: ${r.statusCode()} ${r.body().take(300)}")
+      }
+      // a DATE column fed epoch days out of range
+      assert(post(port, "/event/collect",
+        """{"collection": "pageview", "properties": {"_user": "d0", "d": "2026-01-10"}}""")
+        .statusCode() == 200)
+      assert(post(port, "/event/collect",
+        """{"collection": "pageview", "properties": {"_user": "d1", "d": -1e30}}""")
+        .statusCode() == 200)
+      val dead = spark.read.parquet(s"$warehouse/demo/invalid_schema").collect()
+      assert(dead.map(_.getAs[String]("property")).sorted.toSeq ==
+        Seq("_time", "_time", "_time", "d"), dead.toSeq)
+      assert(dead.forall(_.getAs[String]("error").contains("out of range")), dead.toSeq)
+      // every event stored, its unholdable _time nulled (then given the
+      // server clock by the timestamp mapper)
+      val n = post(port, "/query/execute",
+        """{"query": "SELECT count(*) AS n FROM pageview"}""").body()
+      assert(n.contains("\"n\":5"), n)
     } finally gw.stop()
   }
 }

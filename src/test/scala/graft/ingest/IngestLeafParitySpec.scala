@@ -32,9 +32,15 @@ class IngestLeafParitySpec extends SparkSpec {
     """{"collection": "a", "api": {"uuid": "e1"}, "properties": {"_user": 7, "_time": "2026-01-15 10:00:00.000", "v": 1.5, "s": "short", "d": "2026-01-10", "b": true, "m": {"k": "v", "n": {"deep": 1}}, "xs": [1, 2], "ys": [{"a": 1}, [2]], "Mixed Case": "y"}}""",
     s"""{"collection": "a", "api": {"uuid": "e2"}, "properties": {"_user": 8, "_time": "not a time", "v": "text", "s": "$long", "xs": 3, "m": {"k": 5}}}""",
     """{"collection": "A", "properties": {"_user": "9", "v": 2, "extra": null, "arr": []}}""",
+    // epoch days a DATE cannot hold (d is DATE: it wins the in-batch
+    // DATE/DOUBLE conflict)
+    """{"collection": "a", "properties": {"_user": 12, "d": -1e30}}""",
     // collection b: a string _user, so one collection's _user type loses
     """{"collection": "b", "api": {"uuid": "e3"}, "properties": {"_user": "u-1", "_time": 1768471200000, "w": "2026-01-15T10:00:00Z"}}""",
-    """{"collection": "b", "properties": {"_user": "u-2", "w": 12, "z": false}}""")
+    """{"collection": "b", "properties": {"_user": "u-2", "w": 12, "z": false}}""",
+    // epoch millis a TIMESTAMP cannot hold
+    """{"collection": "b", "properties": {"_user": "u-3", "_time": 99999999999999999999}}""",
+    """{"collection": "b", "properties": {"_user": "u-4", "_time": -1e30}}""")
 
   /** A second batch over the first one's registry: evolution by new
     * fields, a value that no longer fits its column. */
@@ -68,9 +74,11 @@ class IngestLeafParitySpec extends SparkSpec {
     // the corpus reaches the branches it is meant to
     val first = distributed.head
     assert(first.byCollection.keySet == Set("a", "b"), first.byCollection.keySet)
-    assert(first.byCollection("a")._2.size == 3 && first.byCollection("b")._2.size == 2)
+    assert(first.byCollection("a")._2.size == 4 && first.byCollection("b")._2.size == 4)
     Seq("properties is missing", "collection has no storable fields",
-      "cannot parse TIMESTAMP", "cannot parse number").foreach { err =>
+      "cannot parse TIMESTAMP", "cannot parse number",
+      "epoch days out of range for DATE",
+      "epoch millis out of range for TIMESTAMP").foreach { err =>
       assert(first.deadLetters.exists(_.contains(err)), (err, first.deadLetters))
     }
     assert(first.registryFile.contains("\"USER_TYPE\":\"LONG\""), first.registryFile)

@@ -70,35 +70,6 @@ class AnnIndexSpec extends SparkSpec {
     }
   }
 
-  test("maintain survives empty micro-batches and replays: the persisted " +
-    "batch fence keeps versions contiguous and appends exactly-once") {
-    val dir = freshDir()
-    val mx = emb.agg(max(col("vec_id"))).collect()(0).getLong(0)
-    AnnIndex.initialize(emb.filter(col("vec_id") <= mx / 2), dir)
-    val d1 = emb.filter(col("vec_id") > mx / 2 && col("vec_id") <= 3 * mx / 4)
-    val d2 = emb.filter(col("vec_id") > 3 * mx / 4)
-    val empty = emb.filter(lit(false))
-    AnnIndex.maintainBatch(d1, dir, 0L)
-    // an idle trigger (routine in Structured Streaming) must not burn a
-    // version or poison the next append's version fence
-    AnnIndex.maintainBatch(empty, dir, 1L)
-    AnnIndex.maintainBatch(d2, dir, 2L)
-    assert(VersionedState.currentVersion(dir) == 3L,
-      "empty batch left a version gap")
-    assert(VersionedState.lastBatchId(dir) == 2L)
-    assert(AnnIndex.postings(spark, dir).count() == emb.count())
-    val served = topk(dir)
-    // at-least-once crash replay of the last batch → no-op
-    AnnIndex.maintainBatch(d2, dir, 2L)
-    assert(AnnIndex.postings(spark, dir).count() == emb.count(),
-      "replayed batch duplicated postings")
-    assert(topk(dir) == served)
-    // the stream-maintained index serves exactly the one-shot index
-    val one = freshDir()
-    AnnIndex.initialize(emb, one)
-    assert(served == topk(one))
-  }
-
   test("compactPostings folds the version history into one dir; serving, " +
     "the batch fence, and later appends all survive") {
     val dir = freshDir()

@@ -98,24 +98,6 @@ class DedupIndexSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("maintainBatch fence: replays and empty batches burn no state " +
-    "version, the state stays the one-shot min") {
-    val dir = graft.TempDirs.scratch("di-fence").toString
-    val Seq(b1, b2) = batchesAt(Seq(200L))
-    val empty = docs.filter(org.apache.spark.sql.functions.lit(false))
-    DedupIndex.maintainBatch(b1, dir, 0L)
-    DedupIndex.maintainBatch(b1, dir, 0L) // replay of the bootstrap
-    DedupIndex.maintainBatch(empty, dir, 1L) // idle trigger
-    DedupIndex.maintainBatch(b2, dir, 2L)
-    DedupIndex.maintainBatch(b2, dir, 2L) // crash replay
-    assert(VersionedState.currentVersion(dir) == 2L,
-      "replay or idle trigger burned a state version")
-    assert(VersionedState.lastBatchId(dir) == 2L)
-    val state = VersionedState.readCurrent(spark, dir)
-      .collect().map(_.toSeq).toSet
-    assert(state == DedupIndex.partial(docs).collect().map(_.toSeq).toSet)
-  }
-
   test("state size is |distinct band keys|, bounded by 4 rows per doc") {
     val state = DedupIndex.partial(docs)
     val n = state.count()

@@ -97,22 +97,6 @@ class InvertedIndexSpec extends SparkSpec {
     InvertedIndex.probe(spark, dir, Seq("spark")).collect()
   }
 
-  test("streaming maintain: replay fence skips duplicate micro-batches") {
-    val dir = graft.TempDirs.scratch("ivx-stream").toString
-    val b1 = docs.filter(col("doc_id") <= 200)
-    val b2 = docs.filter(col("doc_id") > 200)
-    InvertedIndex.maintainBatch(b1, dir, 0L)
-    InvertedIndex.maintainBatch(b2, dir, 1L)
-    val before = scoresOf(
-      InvertedIndex.probe(spark, dir, RetrievalQueries.QueryTerms))
-    // at-least-once redelivery of batch 1 must be a no-op
-    InvertedIndex.maintainBatch(b2, dir, 1L)
-    assert(VersionedState.currentVersion(dir) == 2L)
-    assert(scoresOf(InvertedIndex.probe(spark, dir,
-      RetrievalQueries.QueryTerms)) == before)
-    assert(before == oneShot)
-  }
-
   test("ix2: persisted shard occupancy sums to the corpus posting count") {
     val rows = InvertedIndex.ix2ShardStats(spark, sf()).collect()
     val totalPostings = rows.map(_.getLong(1)).sum

@@ -108,25 +108,4 @@ class MaterializedViewSpec extends SparkSpec {
     assert(versions == 1)
     assert(rows(mv2.read(spark, dir)) == full(ev))
   }
-
-  test("stream maintenance is exactly-once: crash replays are skipped by " +
-    "the batch fence, empty batches only advance it") {
-    val ev = events
-    val dir = graft.TempDirs.scratch("graft-mv-eo").toString
-    val first = ev.filter(dayofmonth(col("ts")) <= 10)
-    val second = ev.filter(dayofmonth(col("ts")) > 10 && dayofmonth(col("ts")) <= 20)
-    val third = ev.filter(dayofmonth(col("ts")) > 20)
-    val empty = ev.filter(lit(false))
-    mv.maintainBatch(first, dir, 0L)
-    // replay of the bootstrap batch — before the fence this re-merged
-    // the same rows and permanently doubled every sum/count
-    mv.maintainBatch(first, dir, 0L)
-    mv.maintainBatch(empty, dir, 1L) // idle trigger
-    mv.maintainBatch(second, dir, 2L)
-    mv.maintainBatch(second, dir, 2L) // crash replay
-    mv.maintainBatch(third, dir, 3L)
-    assert(graft.store.VersionedState.lastBatchId(dir) == 3L)
-    assert(rows(mv.read(spark, dir)) == full(ev),
-      "stream-maintained view diverged from the one-shot aggregate")
-  }
 }
