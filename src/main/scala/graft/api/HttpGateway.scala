@@ -16,6 +16,7 @@ import graft.ingest.{BatchSources, JsonIngest}
 import graft.ingest.BatchSources.IngestRejected
 import graft.profiles.{ProfileMerge, ProfileOp, ProfileOps}
 import graft.store.EventStore
+import graft.api.HttpGateway.{Door, KeyRole, MasterRole, WriteRole}
 
 /** The thin HTTP facade — the reference is reached over HTTP
   * (rakam/src/main/java/org/rakam/collection/EventCollectionHttpService.java:278-348
@@ -24,7 +25,12 @@ import graft.store.EventStore
   * `/user/batch_operations` mutates profiles; the analysis services
   * serve reads). The reference's Netty/DI stack is platform plumbing
   * the survey scoped out; this gateway is the JDK built-in HttpServer
-  * mapping four routes 1:1 onto the engine facades. ALL semantics —
+  * over one door table ([[doors]]): each path is one [[HttpGateway.Door]]
+  * naming its method rule (POST only, or any method), the key role it
+  * requires, and its handler. Every request runs the same checks in
+  * the same order — CORS preflight, key role, method, handler — and
+  * the handler reads its inputs through one typed reader ([[Req]],
+  * [[Fields]]), so request validation lives in one place. ALL semantics —
   * name normalization, schema inference+evolution, envelope/checksum
   * validation, dead letters, the profile fold — live in the engine
   * ([[JsonIngest]], [[BatchSources]], [[EventStore]], [[ProfileMerge]]);
@@ -284,104 +290,113 @@ final class HttpGateway(
     server = HttpServer.create(new InetSocketAddress(port), 0)
     pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     server.setExecutor(pool)
-    server.createContext("/event/collect", route(authed(WriteRole)(handleCollect)))
-    server.createContext("/event/batch", route(authed(WriteRole)(handleBatch)))
-    server.createContext("/event/pixel", rawRoute(handlePixel))
-    server.createContext("/event/bulk/remote", route(authed(MasterRole)(handleBulkRemote)))
-    server.createContext("/event/bulk", route(authed(MasterRole)(handleBulk)))
-    server.createContext("/event/copy", route(authed(MasterRole)(handleCopy)))
-    server.createContext("/user/batch_operations", route(authed(MasterRole)(handleUserBatch)))
-    server.createContext("/user/batch", route(authed(WriteRole)(handleUserCreateBatch)))
-    server.createContext("/user/metadata", route(authed(MasterRole)(handleUserMetadata)))
-    server.createContext("/user/set_properties",
-      route(authed(WriteRole)(handleUserOp(ProfileOps.Set))))
-    server.createContext("/user/set_properties_once",
-      route(authed(WriteRole)(handleUserOp(ProfileOps.SetOnce))))
-    server.createContext("/user/increment_property",
-      route(authed(WriteRole)(handleIncrement)))
-    server.createContext("/user/unset_properties", route(authed(WriteRole)(handleUnset)))
-    server.createContext("/user/get", route(authed(MasterRole)(handleUserGet)))
-    server.createContext("/user/delete", route(authed(MasterRole)(handleUserDelete)))
-    server.createContext("/admin/compact", route(authed(MasterRole)(handleCompact)))
-    server.createContext("/admin/vacuum", route(authed(MasterRole)(handleVacuum)))
-    server.createContext("/admin/versions", route(authed(MasterRole)(handleVersions)))
-    server.createContext("/admin/pin", route(authed(MasterRole)(handlePin)))
-    server.createContext("/admin/diff", route(authed(MasterRole)(handleDiff)))
-    server.createContext("/admin/configurations", route(authed(MasterRole)(handleAdminConfig)))
-    server.createContext("/admin/types", route(authed(MasterRole)(handleAdminTypes)))
-    server.createContext("/admin/event_mappers", route(authed(MasterRole)(handleAdminMappers)))
-    server.createContext("/admin/lock_key", route(handleLockKey))
-    server.createContext("/analysis/statistics", route(authed(MasterRole)(handleStatistics)))
-    server.createContext("/analysis/segmentation", route(authed(MasterRole)(handleSegmentation)))
-    server.createContext("/analysis/funnel", route(authed(MasterRole)(handleFunnel)))
-    server.createContext("/analysis/retention", route(authed(MasterRole)(handleRetention)))
-    server.createContext("/analysis/paths", route(authed(MasterRole)(handlePaths)))
-    server.createContext("/analysis/attribution", route(authed(MasterRole)(handleAttribution)))
-    server.createContext("/project/schema/add/custom", route(authed(MasterRole)(handleSchemaAddCustom)))
-    server.createContext("/project/schema/add", route(authed(MasterRole)(handleSchemaAdd)))
-    server.createContext("/project/schema", route(authed(MasterRole)(handleSchema)))
-    server.createContext("/project/collection", route(authed(MasterRole)(handleCollections)))
-    server.createContext("/project/create-api-keys", route(authed(MasterRole)(handleCreateKeys)))
-    server.createContext("/project/create", route(handleProjectCreate))
-    server.createContext("/project/delete", route(authed(MasterRole)(handleProjectDelete)))
-    server.createContext("/project/list", route(handleProjectList))
-    server.createContext("/project/check-api-keys", route(handleCheckKeys))
-    server.createContext("/project/revoke-api-keys", route(handleRevokeKeys))
-    server.createContext("/project/exception", route(handleException))
-    server.createContext("/query/execute", route(authed(MasterRole)(handleQuery)))
-    server.createContext("/subscription/create", route(authed(MasterRole)(handleSubCreate)))
-    server.createContext("/subscription/poll", route(authed(MasterRole)(handleSubPoll)))
-    server.createContext("/subscription/delete", route(authed(MasterRole)(handleSubDelete)))
-    server.createContext("/event/hook/activate", route(authed(MasterRole)(handleHookActivate)))
-    server.createContext("/event/hook/collect", route(handleHookCollect))
-    server.createContext("/event/hook/test", route(authed(MasterRole)(handleHookTest)))
-    server.createContext("/event/hook/get", route(authed(MasterRole)(handleHookGet)))
-    server.createContext("/event/hook/list", route(authed(MasterRole)(handleHookList)))
-    server.createContext("/event/hook/delete", route(authed(MasterRole)(handleHookDelete)))
-    server.createContext("/index/dedup/create", route(authed(MasterRole)(handleDedupCreate)))
-    server.createContext("/index/dedup/append", route(authed(MasterRole)(handleDedupAppend)))
-    server.createContext("/index/dedup/probe", route(authed(MasterRole)(handleDedupProbe)))
-    server.createContext("/index/substring/create", route(authed(MasterRole)(handleSubstringCreate)))
-    server.createContext("/index/substring/append", route(authed(MasterRole)(handleSubstringAppend)))
-    server.createContext("/index/substring/trim", route(authed(MasterRole)(handleSubstringTrim)))
-    server.createContext("/index/vocab/create", route(authed(MasterRole)(handleVocabCreate)))
-    server.createContext("/index/vocab/append", route(authed(MasterRole)(handleVocabAppend)))
-    server.createContext("/index/vocab/pairs", route(authed(MasterRole)(handleVocabPairs)))
-    server.createContext("/index/vocab/train", route(authed(MasterRole)(handleVocabTrain)))
-    server.createContext("/index/vocab/drift", route(authed(MasterRole)(handleVocabDrift)))
-    server.createContext("/index/vocab/compact", route(authed(MasterRole)(handleVocabCompact)))
-    server.createContext("/index/ann/create", route(authed(MasterRole)(handleAnnCreate)))
-    server.createContext("/index/ann/append", route(authed(MasterRole)(handleAnnAppend)))
-    server.createContext("/index/ann/query", route(authed(MasterRole)(handleAnnQuery)))
-    server.createContext("/index/ann/stats", route(authed(MasterRole)(handleAnnStats)))
-    server.createContext("/index/ann/compact", route(authed(MasterRole)(handleAnnCompact)))
-    server.createContext("/index/ann/reseed", route(authed(MasterRole)(handleAnnReseed)))
-    server.createContext("/index/text/create", route(authed(MasterRole)(handleTextCreate)))
-    server.createContext("/index/text/append", route(authed(MasterRole)(handleTextAppend)))
-    server.createContext("/index/text/search", route(authed(MasterRole)(handleTextSearch)))
-    server.createContext("/index/text/phrase", route(authed(MasterRole)(handleTextPhrase)))
-    server.createContext("/index/text/stats", route(authed(MasterRole)(handleTextStats)))
-    server.createContext("/index/text/compact", route(authed(MasterRole)(handleTextCompact)))
-    server.createContext("/tokenizer/train", route(authed(MasterRole)(handleTokenizerTrain)))
-    server.createContext("/tokenizer/chunks", route(authed(MasterRole)(handleTokenizerChunks)))
-    server.createContext("/corpus/funnel", route(authed(MasterRole)(handleCorpusFunnel)))
-    server.createContext("/corpus/probe/train", route(authed(MasterRole)(handleProbeTrain)))
-    server.createContext("/tokenizer/drift", route(authed(MasterRole)(handleTokenizerDrift)))
-    server.createContext("/materialized-view/create", route(authed(MasterRole)(handleMvCreate)))
-    server.createContext("/materialized-view/get", route(authed(MasterRole)(handleMvGet)))
-    server.createContext("/materialized-view/list", route(authed(MasterRole)(handleMvList)))
-    server.createContext("/materialized-view/delete", route(authed(MasterRole)(handleMvDelete)))
-    server.createContext("/materialized-view/refresh", route(authed(MasterRole)(handleMvRefresh)))
-    server.createContext("/custom-event-mapper/create", route(authed(MasterRole)(handleMapperCreate(update = false))))
-    server.createContext("/custom-event-mapper/update", route(authed(MasterRole)(handleMapperCreate(update = true))))
-    server.createContext("/custom-event-mapper/delete", route(authed(MasterRole)(handleMapperDelete)))
-    server.createContext("/custom-event-mapper/list", route(authed(MasterRole)(handleMapperList)))
-    server.createContext("/custom-event-mapper/test", route(authed(MasterRole)(handleMapperTest)))
-    server.createContext("/javascript-logger/get_logs", route(authed(MasterRole)(handleJsGetLogs)))
-    server.createContext("/custom-event-mapper/get_logs", route(authed(MasterRole)(handleMapperGetLogs)))
-    server.createContext("/", route(handleHealth))
+    doors.foreach(d => server.createContext(d.path, dispatch(d)))
     server.start()
     server.getAddress.getPort
+  }
+
+  /** Every door the gateway serves, one entry each: path, POST-only or
+    * any method, the key role it requires (`None`: open, or — the
+    * pixel — checked by the handler), and the handler. The JDK server
+    * routes a request to the longest matching path prefix, so `/`
+    * also answers every unknown path (its 404). */
+  private[api] lazy val doors: Seq[Door] = {
+    val (post, any) = (true, false)
+    val (master, write, open) = (Some(MasterRole), Some(WriteRole), None)
+    Seq(
+      Door("/event/collect", post, write, handleCollect),
+      Door("/event/batch", post, write, handleBatch),
+      Door("/event/pixel", any, open, handlePixel),
+      Door("/event/bulk/remote", post, master, handleBulkRemote),
+      Door("/event/bulk", post, master, handleBulk),
+      Door("/event/copy", post, master, handleCopy),
+      Door("/user/batch_operations", post, master, handleUserBatch),
+      Door("/user/batch", post, write, handleUserCreateBatch),
+      Door("/user/metadata", any, master, handleUserMetadata),
+      Door("/user/set_properties", post, write, handleUserOp(ProfileOps.Set)),
+      Door("/user/set_properties_once", post, write, handleUserOp(ProfileOps.SetOnce)),
+      Door("/user/increment_property", post, write, handleIncrement),
+      Door("/user/unset_properties", post, write, handleUnset),
+      Door("/user/get", any, master, handleUserGet),
+      Door("/user/delete", post, master, handleUserDelete),
+      Door("/admin/compact", post, master, handleCompact),
+      Door("/admin/vacuum", post, master, handleVacuum),
+      Door("/admin/versions", any, master, handleVersions),
+      Door("/admin/pin", any, master, handlePin),
+      Door("/admin/diff", any, master, handleDiff),
+      Door("/admin/configurations", any, master, handleAdminConfig),
+      Door("/admin/types", any, master, handleAdminTypes),
+      Door("/admin/event_mappers", any, master, handleAdminMappers),
+      Door("/admin/lock_key", any, open, handleLockKey),
+      Door("/analysis/statistics", any, master, handleStatistics),
+      Door("/analysis/segmentation", any, master, handleSegmentation),
+      Door("/analysis/funnel", any, master, handleFunnel),
+      Door("/analysis/retention", any, master, handleRetention),
+      Door("/analysis/paths", any, master, handlePaths),
+      Door("/analysis/attribution", any, master, handleAttribution),
+      Door("/project/schema/add/custom", post, master, handleSchemaAddCustom),
+      Door("/project/schema/add", post, master, handleSchemaAdd),
+      Door("/project/schema", any, master, handleSchema),
+      Door("/project/collection", any, master, handleCollections),
+      Door("/project/create-api-keys", post, master, handleCreateKeys),
+      Door("/project/create", post, open, handleProjectCreate),
+      Door("/project/delete", post, master, handleProjectDelete),
+      Door("/project/list", any, open, handleProjectList),
+      Door("/project/check-api-keys", post, open, handleCheckKeys),
+      Door("/project/revoke-api-keys", post, open, handleRevokeKeys),
+      Door("/project/exception", any, open, handleException),
+      Door("/query/execute", post, master, handleQuery),
+      Door("/subscription/create", post, master, handleSubCreate),
+      Door("/subscription/poll", any, master, handleSubPoll),
+      Door("/subscription/delete", any, master, handleSubDelete),
+      Door("/event/hook/activate", post, master, handleHookActivate),
+      Door("/event/hook/collect", any, open, handleHookCollect),
+      Door("/event/hook/test", post, master, handleHookTest),
+      Door("/event/hook/get", any, master, handleHookGet),
+      Door("/event/hook/list", any, master, handleHookList),
+      Door("/event/hook/delete", post, master, handleHookDelete),
+      Door("/index/dedup/create", post, master, handleDedupCreate),
+      Door("/index/dedup/append", post, master, handleDedupAppend),
+      Door("/index/dedup/probe", post, master, handleDedupProbe),
+      Door("/index/substring/create", post, master, handleSubstringCreate),
+      Door("/index/substring/append", post, master, handleSubstringAppend),
+      Door("/index/substring/trim", post, master, handleSubstringTrim),
+      Door("/index/vocab/create", post, master, handleVocabCreate),
+      Door("/index/vocab/append", post, master, handleVocabAppend),
+      Door("/index/vocab/pairs", any, master, handleVocabPairs),
+      Door("/index/vocab/train", any, master, handleVocabTrain),
+      Door("/index/vocab/drift", any, master, handleVocabDrift),
+      Door("/index/vocab/compact", post, master, handleVocabCompact),
+      Door("/index/ann/create", post, master, handleAnnCreate),
+      Door("/index/ann/append", post, master, handleAnnAppend),
+      Door("/index/ann/query", post, master, handleAnnQuery),
+      Door("/index/ann/stats", any, master, handleAnnStats),
+      Door("/index/ann/compact", post, master, handleAnnCompact),
+      Door("/index/ann/reseed", post, master, handleAnnReseed),
+      Door("/index/text/create", post, master, handleTextCreate),
+      Door("/index/text/append", post, master, handleTextAppend),
+      Door("/index/text/search", post, master, handleTextSearch),
+      Door("/index/text/phrase", post, master, handleTextPhrase),
+      Door("/index/text/stats", any, master, handleTextStats),
+      Door("/index/text/compact", post, master, handleTextCompact),
+      Door("/tokenizer/train", post, master, handleTokenizerTrain),
+      Door("/tokenizer/chunks", post, master, handleTokenizerChunks),
+      Door("/corpus/funnel", post, master, handleCorpusFunnel),
+      Door("/corpus/probe/train", post, master, handleProbeTrain),
+      Door("/tokenizer/drift", post, master, handleTokenizerDrift),
+      Door("/materialized-view/create", post, master, handleMvCreate),
+      Door("/materialized-view/get", any, master, handleMvGet),
+      Door("/materialized-view/list", any, master, handleMvList),
+      Door("/materialized-view/delete", post, master, handleMvDelete),
+      Door("/materialized-view/refresh", post, master, handleMvRefresh),
+      Door("/custom-event-mapper/create", post, master, handleMapperCreate(update = false)),
+      Door("/custom-event-mapper/update", post, master, handleMapperCreate(update = true)),
+      Door("/custom-event-mapper/delete", post, master, handleMapperDelete),
+      Door("/custom-event-mapper/list", any, master, handleMapperList),
+      Door("/custom-event-mapper/test", post, master, handleMapperTest),
+      Door("/javascript-logger/get_logs", post, master, serveJsLogs("prefix")),
+      Door("/custom-event-mapper/get_logs", post, master, serveJsLogs("name")),
+      Door("/", any, open, handleHealth))
   }
 
   def stop(): Unit = {
@@ -393,10 +408,9 @@ final class HttpGateway(
 
   // ---------------- routes ----------------
 
-  private def handleCollect(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-    val n = ingestAndStore(resolveSentinels(Seq(body), ex), cfCountry = cfCountry(ex))
+  private def handleCollect(req: Req): (Int, String) = {
+    val n = ingestAndStore(resolveSentinels(Seq(req.text), req.ex),
+      cfCountry = cfCountry(req.ex))
     if (n == 0) (400, """{"error":"event was not stored (see dead letter)"}""")
     else (200, "1")
   }
@@ -412,10 +426,8 @@ final class HttpGateway(
     * vehicle is reused for the shape failures instead: storable
     * events are stored, shape-failed ones come back as a 409 with
     * their indexes; excluded collections are ignored, not failed. */
-  private def handleBatch(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-    val env = BatchSources.parseEnvelope(body)
+  private def handleBatch(req: Req): (Int, String) = {
+    val env = BatchSources.parseEnvelope(req.text)
     val checked = env.events.zipWithIndex.map { case (e, i) =>
       val node = mapper.readTree(e)
       val ok = node.isObject &&
@@ -430,7 +442,7 @@ final class HttpGateway(
     }
     val n =
       if (good.isEmpty) 0L
-      else ingestAndStore(resolveSentinels(good, ex), cfCountry = cfCountry(ex))
+      else ingestAndStore(resolveSentinels(good, req.ex), cfCountry = cfCountry(req.ex))
     if (failed.nonEmpty) (409, failed.mkString("[", ",", "]"))
     else (200, s"""{"stored":$n}""")
   }
@@ -444,13 +456,12 @@ final class HttpGateway(
     * already enforces), `avro` resolves the container against the
     * collection's registered schema (S4). Both typed frames run the
     * same enrich → gate → store pipeline as JSON events. */
-  private def handleBulk(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val ct = Option(ex.getRequestHeaders.getFirst("Content-Type"))
+  private def handleBulk(req: Req): (Int, String) = {
+    val ct = Option(req.ex.getRequestHeaders.getFirst("Content-Type"))
       .getOrElse("").toLowerCase(java.util.Locale.ROOT)
     if (ct.contains("csv") || ct.contains("avro")) {
-      val coll = queryParams(ex).get("collection").getOrElse(
-        throw new IngestRejected("collection query parameter is required"))
+      val coll = req.query.text("collection").getOrElse(
+        Fields.missing("collection query parameter"))
       val normalized = graft.core.Names.normalizeCollection(coll)
         .fold(e => throw new IngestRejected(e), identity)
       val kind = if (ct.contains("csv")) "csv" else "avro"
@@ -464,7 +475,7 @@ final class HttpGateway(
       val dir = graft.TempDirs.scratch(s"gateway-bulk-$kind")
       try {
         val f = dir.resolve(s"body.$kind")
-        val bytes = ex.getRequestBody.readAllBytes()
+        val bytes = req.bytes
         if (kind == "avro") {
           // validate the container EAGERLY: a malformed body must be the
           // client's 400 here, not a lazy SparkException-wrapped 500 when
@@ -494,14 +505,14 @@ final class HttpGateway(
           }
         val n = writeLock.synchronized {
           enrichAndStore(Seq(normalized -> df), runMappers = true,
-            cfCountry = cfCountry(ex), small = false)
+            cfCountry = cfCountry(req.ex), small = false)
         }
         (200, s"""{"stored":$n}""")
       } finally graft.TempDirs.release(dir)
     } else {
-      val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      val env = BatchSources.parseEnvelope(body, enforceBodyCap = false)
-      val n = ingestAndStore(resolveSentinels(env.events, ex), cfCountry = cfCountry(ex))
+      val env = BatchSources.parseEnvelope(req.text, enforceBodyCap = false)
+      val n = ingestAndStore(resolveSentinels(env.events, req.ex),
+        cfCountry = cfCountry(req.ex))
       (200, s"""{"stored":$n}""")
     }
   }
@@ -683,10 +694,8 @@ final class HttpGateway(
     * body cap, and NO mapper stage — stored custom event mappers are
     * skipped, the rows land exactly as sent (a replication/backfill
     * path must not re-run enrichment). */
-  private def handleCopy(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-    val env = BatchSources.parseEnvelope(body, enforceBodyCap = false)
+  private def handleCopy(req: Req): (Int, String) = {
+    val env = BatchSources.parseEnvelope(req.text, enforceBodyCap = false)
     val n = ingestAndStore(env.events, runMappers = false)
     (200, s"""{"stored":$n}""")
   }
@@ -703,10 +712,11 @@ final class HttpGateway(
     * `server-error` header exactly as the reference does. When api-key
     * pairs exist the pixel is a write door keyed by the `api.api_key`
     * query param. */
-  private def handlePixel(ex: HttpExchange): Unit = {
+  private def handlePixel(req: Req): (Int, String) = {
+    val ex = req.ex
     val query = Option(ex.getRequestURI.getRawQuery).getOrElse("")
     try {
-      if (!authorized(WriteRole, ex))
+      if (!authorized(WriteRole, req))
         ex.getResponseHeaders.set("server-error", "api key is invalid")
       else BatchSources.pixelToEventJson(query) match {
         case None =>
@@ -726,6 +736,7 @@ final class HttpGateway(
     ex.sendResponseHeaders(200, Gif1x1.length.toLong)
     val out = ex.getResponseBody
     try out.write(Gif1x1) finally out.close()
+    Answered
   }
 
   /** URL-addressed bulk import (S6): body
@@ -733,20 +744,15 @@ final class HttpGateway(
     * through [[BatchSources.remoteBulk]] to the matching reader, then
     * stored. The reference's guards (one url, no compression) come
     * from the engine. */
-  private def handleBulkRemote(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val collection = textField(root, "collection").getOrElse(
-      throw new IngestRejected("collection is required"))
-    val urls = Option(root.get("urls")).filter(_.isArray)
-      .map(_.elements().asScala.map(_.asText()).toSeq)
-      .getOrElse(throw new IngestRejected("urls array is required"))
-    val tpe = BatchSources.CopyType.of(
-      Option(root.get("type")).map(_.asText()).getOrElse(""))
-    val req = BatchSources.BulkEventRemote(collection, urls, tpe,
-      Option(root.get("compression")).map(_.asText()))
+  private def handleBulkRemote(req: Req): (Int, String) = {
+    val b = req.body
+    val collection = b.need("collection")
+    val urls = b.strings("urls").getOrElse(Fields.missing("urls array"))
+    val tpe = BatchSources.CopyType.of(b.scalar("type").getOrElse(""))
+    val remote = BatchSources.BulkEventRemote(collection, urls, tpe,
+      b.scalar("compression"))
     val n = writeLock.synchronized {
-      val df = BatchSources.remoteBulk(spark, registry, project, req)
+      val df = BatchSources.remoteBulk(spark, registry, project, remote)
       val rows = df.count()
       EventStore.write(df, warehouse, project, collection)
       rows
@@ -754,9 +760,8 @@ final class HttpGateway(
     (200, s"""{"stored":$n}""")
   }
 
-  private def handleSchema(ex: HttpExchange): (Int, String) = {
-    val collection = queryParams(ex).getOrElse("collection",
-      throw new IngestRejected("collection is required"))
+  private def handleSchema(req: Req): (Int, String) = {
+    val collection = req.query.need("collection")
     registry.schema(project, collection) match {
       case None => (404, """{"error":"collection not found"}""")
       case Some(fields) =>
@@ -772,21 +777,15 @@ final class HttpGateway(
     * "fields":[{"name":…, "type":…}…]}`. Field names are normalized by
     * the ingest rules; returns the resulting full schema plus any
     * registry rejections (type conflicts, reserved names, column cap). */
-  private def handleSchemaAdd(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val collection = textField(root, "collection").getOrElse(
-      throw new IngestRejected("collection is required"))
-    val fields = Option(root.get("fields")).filter(_.isArray)
-      .map(_.elements().asScala.toSeq)
-      .getOrElse(throw new IngestRejected("fields array is required"))
+  private def handleSchemaAdd(req: Req): (Int, String) = {
+    val b = req.body
+    val collection = b.need("collection")
+    val fields = b.array("fields").getOrElse(Fields.missing("fields array"))
       .map { f =>
-        val raw = Option(f.get("name")).map(_.asText()).getOrElse(
-          throw new IngestRejected("field name is required"))
+        val raw = f.scalar("name").getOrElse(Fields.missing("field name"))
         val n = graft.core.Names.normalizeField(raw).fold(
           err => throw new IngestRejected(s"field '$raw': $err"), identity)
-        val t = Option(f.get("type")).map(_.asText()).getOrElse(
-          throw new IngestRejected(s"field '$raw': type is required"))
+        val t = f.scalar("type").getOrElse(Fields.missing(s"field '$raw': type"))
         registry.Field(n,
           try graft.core.FieldType.fromName(t)
           catch { case _: Exception =>
@@ -820,17 +819,13 @@ final class HttpGateway(
     * semantics); any other union is the reference's 400. Names
     * normalize and types map through the same registry door as
     * `/schema/add`. */
-  private def handleSchemaAddCustom(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val collection = textField(root, "collection").getOrElse(
-      throw new IngestRejected("collection is required"))
-    val schemaType = Option(root.get("schema_type")).map(_.asText()).getOrElse(
-      throw new IngestRejected("schema_type is required"))
+  private def handleSchemaAddCustom(req: Req): (Int, String) = {
+    val b = req.body
+    val collection = b.need("collection")
+    val schemaType = b.needScalar("schema_type")
     if (!schemaType.equalsIgnoreCase("AVRO"))
       throw new IngestRejected(s"unsupported schema_type '$schemaType'")
-    val schemaStr = Option(root.get("schema")).map(_.asText()).filter(_.nonEmpty)
-      .getOrElse(throw new IngestRejected("schema is required"))
+    val schemaStr = b.needScalar("schema", nonEmpty = true)
     import org.apache.avro.Schema
     val parsed =
       try new Schema.Parser().parse(schemaStr)
@@ -871,7 +866,7 @@ final class HttpGateway(
     schemaAddResponse(collection, fields)
   }
 
-  private def handleCollections(ex: HttpExchange): (Int, String) =
+  private def handleCollections(req: Req): (Int, String) =
     (200, registry.collections(project)
       .map(mapper.writeValueAsString).mkString("[", ",", "]"))
 
@@ -895,19 +890,14 @@ final class HttpGateway(
     * map — the reference's users table), pinnable at an ops-log commit
     * version via the `__user_ops` pins key `/admin/pin` records: both
     * sides of an event↔profile join replay from one pin manifest. */
-  private def handleQuery(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val sql = Option(root).flatMap(r => Option(r.get("query")))
-      .map(_.asText()).filter(_.nonEmpty)
-      .getOrElse(throw new IngestRejected("query is required"))
-    val limit = Option(root.get("limit")).map(_.asInt()).getOrElse(1000)
-    val pins: Map[String, Long] = Option(root.get("pins")).filter(_.isObject)
-      .map(_.properties().asScala.map { e =>
-        if (!e.getValue.canConvertToLong)
-          throw new IngestRejected(
-            s"pin for '${e.getKey}' must be an integer version")
-        e.getKey -> e.getValue.asLong()
+  private def handleQuery(req: Req): (Int, String) = {
+    val b = req.body
+    val sql = b.needScalar("query", nonEmpty = true)
+    val limit = b.count("limit", 1000, 1, 1000, clamp = true)
+    val pins: Map[String, Long] = b.obj("pins")
+      .map(_.node.properties().asScala.map { e =>
+        e.getKey -> Fields.integral(e.getValue).getOrElse(Fields.reject(
+          s"pin for '${e.getKey}' must be an integer version"))
       }.toMap).getOrElse(Map.empty)
     pins.keys.foreach { c =>
       if (c != OpsLogName && !registry.collections(project).contains(c))
@@ -957,34 +947,24 @@ final class HttpGateway(
 
   private val queryViewLock = new Object
 
-  private def handleUserBatch(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    if (root == null || !root.isArray)
-      throw new IngestRejected("Body must be an array")
+  private def handleUserBatch(req: Req): (Int, String) = {
+    val users = req.body.elements.getOrElse(Fields.reject("Body must be an array"))
     val now = System.currentTimeMillis()
-    val ops = root.elements().asScala.zipWithIndex.flatMap { case (op, i) =>
-      val id = Option(op.get("id")).map(_.asText()).getOrElse(
-        throw new IngestRejected("id is required"))
-      val ts = Option(op.get("time")).map(_.asLong()).getOrElse(now)
-      def props(field: String): Map[String, String] =
-        Option(op.get(field)).map(_.properties().asScala.map { e =>
-          e.getKey -> e.getValue.asText()
-        }.toMap).getOrElse(Map.empty)
+    val ops = users.flatMap { op =>
+      val id = op.needScalar("id")
+      val ts = op.long("time").getOrElse(now)
+      def props(field: String) = op.stringMap(field).getOrElse(Map.empty)
       def one(kind: String, ps: Map[String, String]): Option[ProfileOp] =
         if (ps.isEmpty) None
         else Some(ProfileOp(project, id, ts, opSeq.getAndIncrement(), kind,
           ProfileOps.normalizeProps(ps)))
-      val unsets = Option(op.get("unset_properties"))
-        .map(_.elements().asScala.map(n => n.asText() -> "").toMap)
-        .getOrElse(Map.empty)
-      val _ = i
+      val unsets = op.strings("unset_properties").getOrElse(Nil).map(_ -> "").toMap
       Seq(
         one(ProfileOps.Set, props("set_properties")),
         one(ProfileOps.SetOnce, props("set_once_properties")),
         one(ProfileOps.Increment, props("increment_properties")),
         one(ProfileOps.Unset, unsets)).flatten
-    }.toSeq
+    }
     appendOps(ops)
     (200, "1")
   }
@@ -993,22 +973,16 @@ final class HttpGateway(
     * an array of `{id, properties:{…}}` User objects). Each becomes one
     * Set op in the shared log: creating a user IS setting its first
     * properties under the fold. */
-  private def handleUserCreateBatch(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val users = Option(root).filter(_.isArray).getOrElse(
-      throw new IngestRejected("Body must be an array"))
+  private def handleUserCreateBatch(req: Req): (Int, String) = {
+    val users = req.body.elements.getOrElse(Fields.reject("Body must be an array"))
     val now = System.currentTimeMillis()
-    val ops = users.elements().asScala.map { u =>
-      val id = Option(u.get("id")).map(_.asText()).getOrElse(
-        throw new IngestRejected("id is required"))
-      val ts = Option(u.get("time")).map(_.asLong()).getOrElse(now)
-      val props = Option(u.get("properties")).filter(_.isObject)
-        .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-        .getOrElse(throw new IngestRejected("properties object is required"))
+    val ops = users.map { u =>
+      val id = u.needScalar("id")
+      val ts = u.long("time").getOrElse(now)
+      val props = u.stringMap("properties").getOrElse(Fields.missing("properties object"))
       ProfileOp(project, id, ts, opSeq.getAndIncrement(), ProfileOps.Set,
         ProfileOps.normalizeProps(props))
-    }.toSeq
+    }
     appendOps(ops)
     (200, "1")
   }
@@ -1017,48 +991,33 @@ final class HttpGateway(
     * `/user/set_properties`, `/user/set_properties_once`,
     * `/user/increment_property`, `/user/unset_properties`) — each is
     * one op appended to the same log the batch door feeds. */
-  private def handleUserOp(kind: String)(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val id = textField(root, "id").getOrElse(
-      throw new IngestRejected("id is required"))
-    val ts = Option(root.get("time")).map(_.asLong())
-      .getOrElse(System.currentTimeMillis())
-    val props = Option(root.get("properties"))
-      .filter(_.isObject)
-      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-      .getOrElse(throw new IngestRejected("properties object is required"))
+  private def handleUserOp(kind: String)(req: Req): (Int, String) = {
+    val b = req.body
+    val id = b.need("id")
+    val ts = b.long("time").getOrElse(System.currentTimeMillis())
+    val props = b.stringMap("properties").getOrElse(Fields.missing("properties object"))
     appendOps(Seq(ProfileOp(project, id, ts, opSeq.getAndIncrement(), kind,
       ProfileOps.normalizeProps(props))))
     (200, "1")
   }
 
-  private def handleIncrement(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val id = textField(root, "id").getOrElse(
-      throw new IngestRejected("id is required"))
-    val property = Option(root.get("property")).map(_.asText()).getOrElse(
-      throw new IngestRejected("property is required"))
-    val value = Option(root.get("value")).map(_.asText()).getOrElse("1")
-    val ts = Option(root.get("time")).map(_.asLong())
-      .getOrElse(System.currentTimeMillis())
+  private def handleIncrement(req: Req): (Int, String) = {
+    val b = req.body
+    val id = b.need("id")
+    val property = b.needScalar("property")
+    val value = b.scalar("value").getOrElse("1")
+    val ts = b.long("time").getOrElse(System.currentTimeMillis())
     appendOps(Seq(ProfileOp(project, id, ts, opSeq.getAndIncrement(),
       ProfileOps.Increment,
       ProfileOps.normalizeProps(Map(property -> value)))))
     (200, "1")
   }
 
-  private def handleUnset(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val id = textField(root, "id").getOrElse(
-      throw new IngestRejected("id is required"))
-    val names = Option(root.get("properties")).filter(_.isArray)
-      .map(_.elements().asScala.map(_.asText()).toSeq)
-      .getOrElse(throw new IngestRejected("properties array is required"))
-    val ts = Option(root.get("time")).map(_.asLong())
-      .getOrElse(System.currentTimeMillis())
+  private def handleUnset(req: Req): (Int, String) = {
+    val b = req.body
+    val id = b.need("id")
+    val names = b.strings("properties").getOrElse(Fields.missing("properties array"))
+    val ts = b.long("time").getOrElse(System.currentTimeMillis())
     appendOps(Seq(ProfileOp(project, id, ts, opSeq.getAndIncrement(),
       ProfileOps.Unset,
       ProfileOps.normalizeProps(names.map(_ -> "").toMap))))
@@ -1086,15 +1045,11 @@ final class HttpGateway(
     * the op-log's point-in-time payoff: "what did the segmentation see
     * last Tuesday", GDPR evidence, backtests). They compose — pin the
     * physical log, cut at a time inside it. */
-  private def handleUserGet(ex: HttpExchange): (Int, String) = {
-    val params = queryParams(ex)
-    val id = params.getOrElse("id",
-      throw new IngestRejected("id is required"))
-    def longParam(k: String): Option[Long] =
-      params.get(k).map(v => v.toLongOption.getOrElse(
-        throw new IngestRejected(s"$k must be an integer, got '$v'")))
-    val version = longParam("version")
-    val asOf = longParam("as_of")
+  private def handleUserGet(req: Req): (Int, String) = {
+    val q = req.query
+    val id = q.need("id")
+    val version = q.version
+    val asOf = q.long("as_of")
     val ops =
       try readOps(version)
       catch { case e: IllegalArgumentException =>
@@ -1129,12 +1084,10 @@ final class HttpGateway(
     * (reserved, `id`-in-props renamed `_id` — U8), so the columns are
     * the distinct property names across the op log; the scan reads only
     * the map keys column. */
-  private def handleUserMetadata(ex: HttpExchange): (Int, String) = {
+  private def handleUserMetadata(req: Req): (Int, String) = {
     // `version` pins the column listing at an ops-log commit version,
     // completing the door's parity with /user/get (r17)
-    val version = queryParams(ex).get("version").map(v =>
-      v.toLongOption.getOrElse(throw new IngestRejected(
-        s"version must be an integer, got '$v'")))
+    val version = req.query.version
     val ops =
       try readOps(version)
       catch { case e: IllegalArgumentException =>
@@ -1158,12 +1111,12 @@ final class HttpGateway(
     * event counts per (collection, month). The month IS the store's
     * partition column, so each per-collection aggregate reads partition
     * metadata plus one column, never event payloads. */
-  private def handleStatistics(ex: HttpExchange): (Int, String) = {
-    val params = queryParams(ex)
-    val only = params.get("collection")
+  private def handleStatistics(req: Req): (Int, String) = {
+    val q = req.query
+    val only = q.text("collection")
     // a commit-log version is a per-collection pin — meaningless across
     // the whole project listing
-    if (params.contains("version") && only.isEmpty)
+    if (q.get("version").isDefined && only.isEmpty)
       throw new IngestRejected("version requires collection")
     val colls = only.map(Seq(_)).getOrElse(registry.collections(project).sorted)
     only.foreach { c =>
@@ -1171,7 +1124,7 @@ final class HttpGateway(
         throw new IngestRejected(s"unknown collection '$c'")
     }
     val frames = colls.map { c =>
-      (if (params.contains("version")) storedMaybeAt(params, c)
+      (if (q.get("version").isDefined) storedMaybeAt(q.version, c)
        else storedOrEmpty(c))
         .groupBy(col("_month").as("month"))
         .agg(count(lit(1)).as("events"))
@@ -1191,11 +1144,9 @@ final class HttpGateway(
     * exact file set; absent → the current head. Bad, beyond-head and
     * vacuumed-away versions are caller errors (400), matching the
     * segmentation door's established contract. */
-  private def storedMaybeAt(params: Map[String, String],
-      collection: String): DataFrame = params.get("version") match {
-    case Some(v) =>
-      val ver = v.toLongOption.getOrElse(
-        throw new IngestRejected(s"version must be an integer, got '$v'"))
+  private def storedMaybeAt(version: Option[Long],
+      collection: String): DataFrame = version match {
+    case Some(ver) =>
       try EventStore.readAt(spark, registry, warehouse, project, collection, ver)
       catch { case e: IllegalArgumentException =>
         throw new IngestRejected(String.valueOf(e.getMessage))
@@ -1213,22 +1164,15 @@ final class HttpGateway(
     * UI shows. `version` serves the analysis over a pinned commit-log
     * version ([[EventStore.readAt]] time travel — reproduce last
     * week's report numbers exactly, whatever has landed since). */
-  private def handleSegmentation(ex: HttpExchange): (Int, String) = {
-    val params = queryParams(ex)
-    val collection = params.getOrElse("collection",
-      throw new IngestRejected("collection is required"))
-    val dimension = params.getOrElse("dimension",
-      throw new IngestRejected("dimension is required"))
-    val limit = params.get("limit").map { s =>
-      val n = s.toIntOption.getOrElse(
-        throw new IngestRejected(s"limit must be an integer, got '$s'"))
-      // bound BOTH ends: limit<1 reaches DataFrame.limit as an
-      // AnalysisException (a 500 where siblings 400), and an unbounded
-      // high value defeats the documented 1000-row flood ceiling
-      if (n < 1) throw new IngestRejected(s"limit must be >= 1, got $n")
-      math.min(n, 1000)
-    }.getOrElse(1000)
-    val stored = storedMaybeAt(params, collection)
+  private def handleSegmentation(req: Req): (Int, String) = {
+    val q = req.query
+    val collection = q.need("collection")
+    val dimension = q.need("dimension")
+    // bound BOTH ends: limit<1 reaches DataFrame.limit as an
+    // AnalysisException (a 500 where siblings 400), and an unbounded
+    // high value defeats the documented 1000-row flood ceiling
+    val limit = q.count("limit", 1000, 1, 1000, clamp = true)
+    val stored = storedMaybeAt(q.version, collection)
     if (!stored.columns.contains(dimension))
       throw new IngestRejected(s"unknown dimension '$dimension'")
     val seg = stored.groupBy(col(dimension))
@@ -1243,14 +1187,12 @@ final class HttpGateway(
     * users reaching each ordered step (the reference's
     * FunnelQueryExecutor read, served by [[Analytics.funnel]]);
     * `version` pins the read ([[storedMaybeAt]]). */
-  private def handleFunnel(ex: HttpExchange): (Int, String) = {
-    val params = queryParams(ex)
-    val collection = params.getOrElse("collection",
-      throw new IngestRejected("collection is required"))
-    val steps = params.getOrElse("steps",
-      throw new IngestRejected("steps is required")).split(',').toSeq
-    val typeCol = params.getOrElse("type_column", "event_type")
-    val stored = storedMaybeAt(params, collection)
+  private def handleFunnel(req: Req): (Int, String) = {
+    val q = req.query
+    val collection = q.need("collection")
+    val steps = q.need("steps").split(',').toSeq
+    val typeCol = q.text("type_column").getOrElse("event_type")
+    val stored = storedMaybeAt(q.version, collection)
     if (!stored.columns.contains(typeCol))
       throw new IngestRejected(s"unknown type column '$typeCol'")
     val out = Analytics.funnel(stored, "_user", "_time", typeCol, steps)
@@ -1260,14 +1202,13 @@ final class HttpGateway(
   /** `GET /analysis/retention?collection=…&grain=day|week` — first-seen
     * cohort matrix ([[Analytics.retention]], the reference's
     * RetentionQueryExecutor read). */
-  private def handleRetention(ex: HttpExchange): (Int, String) = {
-    val params = queryParams(ex)
-    val collection = params.getOrElse("collection",
-      throw new IngestRejected("collection is required"))
-    val grain = params.getOrElse("grain", "week")
+  private def handleRetention(req: Req): (Int, String) = {
+    val q = req.query
+    val collection = q.need("collection")
+    val grain = q.text("grain").getOrElse("week")
     if (grain != "week" && grain != "day")
       throw new IngestRejected(s"grain must be day or week: '$grain'")
-    val stored = storedMaybeAt(params, collection)
+    val stored = storedMaybeAt(q.version, collection)
     val out = Analytics.retention(stored, "_user", "_time", grain)
     (200, out.orderBy(col("cohort_bucket"), col("offset"))
       .toJSON.collect().mkString("[", ",", "]"))
@@ -1276,12 +1217,11 @@ final class HttpGateway(
   /** `GET /analysis/paths?collection=…[&type_column=…]` — the
     * next-event transition matrix over stored events (the a14 shape
     * via [[Analytics.eventPaths]]). */
-  private def handlePaths(ex: HttpExchange): (Int, String) = {
-    val params = queryParams(ex)
-    val collection = params.getOrElse("collection",
-      throw new IngestRejected("collection is required"))
-    val typeCol = params.getOrElse("type_column", "event_type")
-    val stored = withSeq(storedMaybeAt(params, collection))
+  private def handlePaths(req: Req): (Int, String) = {
+    val q = req.query
+    val collection = q.need("collection")
+    val typeCol = q.text("type_column").getOrElse("event_type")
+    val stored = withSeq(storedMaybeAt(q.version, collection))
     if (!stored.columns.contains(typeCol))
       throw new IngestRejected(s"unknown type column '$typeCol'")
     val out = Analytics.eventPaths(stored, "_user", "_time", "__seq", typeCol)
@@ -1307,17 +1247,15 @@ final class HttpGateway(
     * last_touch|markov[&value_column=…]` — conversion attribution over
     * stored events: positional last-touch (a15) or data-driven Markov
     * removal effects (a22). */
-  private def handleAttribution(ex: HttpExchange): (Int, String) = {
-    val params = queryParams(ex)
-    val collection = params.getOrElse("collection",
-      throw new IngestRejected("collection is required"))
-    val conversion = params.getOrElse("conversion",
-      throw new IngestRejected("conversion is required"))
-    val typeCol = params.getOrElse("type_column", "event_type")
-    val stored = withSeq(storedMaybeAt(params, collection))
+  private def handleAttribution(req: Req): (Int, String) = {
+    val q = req.query
+    val collection = q.need("collection")
+    val conversion = q.need("conversion")
+    val typeCol = q.text("type_column").getOrElse("event_type")
+    val stored = withSeq(storedMaybeAt(q.version, collection))
     if (!stored.columns.contains(typeCol))
       throw new IngestRejected(s"unknown type column '$typeCol'")
-    params.getOrElse("model", "last_touch") match {
+    q.text("model").getOrElse("last_touch") match {
       case "markov" =>
         // a22 rejects reserved virtual-state names loudly — surface
         // that as the client's 400, not a 500
@@ -1329,7 +1267,7 @@ final class HttpGateway(
         (200, out.orderBy(col("channel"))
           .toJSON.collect().mkString("[", ",", "]"))
       case "last_touch" =>
-        val valueCol = params.getOrElse("value_column", "value")
+        val valueCol = q.text("value_column").getOrElse("value")
         if (!stored.columns.contains(valueCol))
           throw new IngestRejected(s"unknown value column '$valueCol'")
         val out = Analytics.lastTouchAttribution(stored, "_user", "_time",
@@ -1347,11 +1285,8 @@ final class HttpGateway(
     * profile log ([[graft.store.EventStore.eraseRows]] — a manifest
     * rewrite commit over a log that is |ops|, not |events|). Returns
     * partitions rewritten and event rows deleted. */
-  private def handleUserDelete(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val id = textField(root, "id").getOrElse(
-      throw new IngestRejected("id is required"))
+  private def handleUserDelete(req: Req): (Int, String) = {
+    val id = req.body.need("id")
     writeLock.synchronized {
       var parts = 0
       var rows = 0L
@@ -1376,15 +1311,11 @@ final class HttpGateway(
   /** Store maintenance: rewrite one month partition's accumulated
     * small files (every collect appends at least one) into
     * `ceil(rows/rows_per_file)` files. */
-  private def handleCompact(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val collection = textField(root, "collection").getOrElse(
-      throw new IngestRejected("collection is required"))
-    val month = Option(root.get("month")).map(_.asText()).getOrElse(
-      throw new IngestRejected("month is required"))
-    val rowsPerFile = Option(root.get("rows_per_file")).map(_.asLong())
-      .getOrElse(1_000_000L)
+  private def handleCompact(req: Req): (Int, String) = {
+    val b = req.body
+    val collection = b.need("collection")
+    val month = b.needScalar("month")
+    val rowsPerFile = b.long("rows_per_file").getOrElse(1_000_000L)
     // same registry gate as vacuum: compaction rewrites (and its lock
     // marker touches) the path derived from the collection name
     if (!registry.collections(project).contains(collection))
@@ -1403,9 +1334,8 @@ final class HttpGateway(
     * and file count: the number a training run pins for
     * [[graft.store.EventStore.readAt]] time travel, and the ops view
     * of how much history vacuum retention is carrying. */
-  private def handleVersions(ex: HttpExchange): (Int, String) = {
-    val collection = queryParams(ex).getOrElse("collection",
-      throw new IngestRejected("collection is required"))
+  private def handleVersions(req: Req): (Int, String) = {
+    val collection = req.query.need("collection")
     // registry gate BEFORE touching the filesystem: an unregistered name
     // must 404, never probe an attacker-chosen path's manifest state
     // (`collection=../../x`), and the response is Jackson-built so a
@@ -1437,7 +1367,7 @@ final class HttpGateway(
     * readers, and `/query/execute`'s `pins` — whatever lands or
     * compacts afterwards. Collections with no committed versions
     * (declared, never stored) are omitted. */
-  private def handlePin(ex: HttpExchange): (Int, String) = {
+  private def handlePin(req: Req): (Int, String) = {
     val node = mapper.createObjectNode()
     // the profile ops log first (sorts outside the collection
     // namespace): pinning it alongside the event tables makes an
@@ -1458,10 +1388,9 @@ final class HttpGateway(
     * removal-carrying rewrite (erasure) landed in the window, the
     * governance signal that rows also LEFT the corpus since the
     * recorded run. */
-  private def handleDiff(ex: HttpExchange): (Int, String) = {
-    val params = queryParams(ex)
-    val collection = params.getOrElse("collection",
-      throw new IngestRejected("collection is required"))
+  private def handleDiff(req: Req): (Int, String) = {
+    val q = req.query
+    val collection = q.need("collection")
     // `collection=__user_ops` diffs the profile ops log: the ops
     // APPENDED between two pins, `purely_additive=false` when an
     // erasure landed in the window — profile governance matching the
@@ -1469,12 +1398,9 @@ final class HttpGateway(
     if (collection != OpsLogName &&
         !registry.collections(project).contains(collection))
       throw new IngestRejected(s"unknown collection '$collection'")
-    def ver(k: String): Long = params.get(k)
-      .flatMap(_.toLongOption).getOrElse(
-        throw new IngestRejected(s"$k must be an integer version"))
-    val limit = params.get("limit").flatMap(_.toIntOption)
-      .map(n => if (n < 1) throw new IngestRejected("limit must be >= 1")
-                else math.min(n, 1000)).getOrElse(1000)
+    def ver(k: String): Long = q.get(k).flatMap(Fields.integral)
+      .getOrElse(Fields.reject(s"$k must be an integer version"))
+    val limit = q.count("limit", 1000, 1, 1000, clamp = true)
     val (added, removals) =
       try EventStore.readAddedBetween(spark, registry, warehouse, project,
         collection, ver("from"), ver("to"))
@@ -1496,15 +1422,13 @@ final class HttpGateway(
     * pinned to older versions keep resolving the superseded files), and
     * this door reaps files no retained manifest references. Body
     * `{"collection": …, "retain_versions"?: n, "grace_ms"?: ms}`. */
-  private def handleVacuum(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val collection = textField(root, "collection").getOrElse(
-      throw new IngestRejected("collection is required"))
-    val retain = Option(root.get("retain_versions")).map(_.asInt()).getOrElse(1)
-    val grace = Option(root.get("grace_ms")).map(_.asLong())
-      .getOrElse(10 * 60 * 1000L)
-    if (retain < 1) throw new IngestRejected("retain_versions must be >= 1")
+  private def handleVacuum(req: Req): (Int, String) = {
+    val b = req.body
+    val collection = b.need("collection")
+    val retain = b.int("retain_versions", min = 1).getOrElse(1)
+    // a mistyped grace must not read as 0: that reaps, at once, files
+    // pinned readers still resolve and a concurrent appender's staging
+    val grace = b.long("grace_ms", min = 0).getOrElse(10 * 60 * 1000L)
     // vacuum DELETES files under tablePath(collection) — an unregistered
     // name (e.g. `../../x`) must never reach the filesystem
     if (!registry.collections(project).contains(collection))
@@ -1550,20 +1474,16 @@ final class HttpGateway(
     * collection per subscription on this surface; the sink holds the
     * subscription's lifetime of matched rows (a dashboard session),
     * so `delete` it when done. */
-  private def handleSubCreate(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val id = textField(root, "id").getOrElse(
-      throw new IngestRejected("id is required"))
+  private def handleSubCreate(req: Req): (Int, String) = {
+    val b = req.body
+    val id = b.need("id")
     if (!id.matches("[A-Za-z0-9_]+"))
       throw new IngestRejected("id must be alphanumeric")
     if (subscriptions.containsKey(id))
       throw new IngestRejected(s"subscription '$id' already exists")
-    val collection = textField(root, "collection").getOrElse(
-      throw new IngestRejected("collection is required"))
-    val filter = Option(root.get("filter")).map(_.asText())
-    val columns = Option(root.get("columns")).filter(_.isArray)
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
+    val collection = b.need("collection")
+    val filter = b.scalar("filter")
+    val columns = b.strings("columns").getOrElse(Nil)
     val fields = registry.sparkSchema(project, collection).getOrElse(
       throw new IngestRejected(s"unknown collection '$collection'"))
     val schema = org.apache.spark.sql.types.StructType(
@@ -1610,16 +1530,9 @@ final class HttpGateway(
     * this very drain has processed are dropped
     * ([[graft.store.ManifestTail.prune]] — insertion-time aged and
     * version-fenced, so it can never delete an unprocessed row). */
-  private def handleSubPoll(ex: HttpExchange): (Int, String) = {
-    val params = queryParams(ex)
-    val id = params.getOrElse("id",
-      throw new IngestRejected("id is required"))
-    val pruneMs = params.get("prune_ms").map { s =>
-      val w = s.toLongOption.getOrElse(
-        throw new IngestRejected(s"prune_ms must be an integer, got '$s'"))
-      if (w < 0) throw new IngestRejected("prune_ms must be >= 0")
-      w
-    }
+  private def handleSubPoll(req: Req): (Int, String) = {
+    val id = req.query.need("id")
+    val pruneMs = req.query.long("prune_ms", min = 0)
     val q = Option(subscriptions.get(id)).getOrElse(
       return (404, """{"error":"subscription not found"}"""))
     // reflect new commits into the spool, then drain: the sync() pull.
@@ -1640,9 +1553,8 @@ final class HttpGateway(
       .mkString("[", ",", "]"))
   }
 
-  private def handleSubDelete(ex: HttpExchange): (Int, String) = {
-    val id = queryParams(ex).getOrElse("id",
-      throw new IngestRejected("id is required"))
+  private def handleSubDelete(req: Req): (Int, String) = {
+    val id = req.query.need("id")
     val q = Option(subscriptions.remove(id)).getOrElse(
       return (404, """{"error":"subscription not found"}"""))
     q.stop()
@@ -1665,37 +1577,22 @@ final class HttpGateway(
     * invalidate here either. */
   private def readHook(id: String): Option[(String, Map[String, String], Boolean)] =
     graft.store.VersionedState.readMarker(hooksDir, id).map { s =>
-      val root = mapper.readTree(s)
-      val code = root.get("code").asText()
-      val ps = Option(root.get("parameters")).filter(_.isObject)
-        .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-        .getOrElse(Map.empty[String, String])
-      val active = Option(root.get("active")).forall(_.asBoolean(true))
-      (code, ps, active)
+      val hook = new Fields(mapper.readTree(s))
+      (hook.node.get("code").asText(), hook.stringMap("parameters").getOrElse(Map.empty),
+        hook.bool("active", default = true))
     }
-
-  private def requireIdentifier(id: String): String = {
-    if (!id.matches("[A-Za-z0-9_-]+"))
-      throw new IngestRejected("identifier must be alphanumeric")
-    id
-  }
 
   /** `POST /event/hook/activate` — store (or replace) a webhook
     * transform: body `{"identifier":…, "code":…, "parameters"?:{…},
     * "active"?:bool}`. The code must parse; the module contract is
     * `module(params, body, headers)` → event object | array | null
     * ([[graft.enrich.js.JsWebhookTransform]]). */
-  private def handleHookActivate(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val id = requireIdentifier(Option(root.get("identifier")).map(_.asText())
-      .getOrElse(throw new IngestRejected("identifier is required")))
-    val code = Option(root.get("code")).map(_.asText()).filter(_.nonEmpty)
-      .getOrElse(throw new IngestRejected("code is required"))
-    val ps = Option(root.get("parameters")).filter(_.isObject)
-      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-      .getOrElse(Map.empty[String, String])
-    val active = Option(root.get("active")).forall(_.asBoolean(true))
+  private def handleHookActivate(req: Req): (Int, String) = {
+    val b = req.body
+    val id = Fields.identifier(b.needScalar("identifier"))
+    val code = b.needScalar("code", nonEmpty = true)
+    val ps = b.stringMap("parameters").getOrElse(Map.empty)
+    val active = b.bool("active", default = true)
     try graft.enrich.js.JsWebhookTransform(code, ps)
     catch {
       case e: graft.enrich.js.MiniJs.JsException =>
@@ -1717,24 +1614,22 @@ final class HttpGateway(
     * `1` if anything stored, `0` if the module dropped the request
     * (both 200, the reference's saved/not-saved contract); module
     * execution errors are 500s (WebHookHttpService.java:200-211). */
-  private def handleHookCollect(ex: HttpExchange): (Int, String) = {
-    val id = requireIdentifier(
+  private def handleHookCollect(req: Req): (Int, String) = {
+    val ex = req.ex
+    val id = Fields.identifier(
       ex.getRequestURI.getPath.stripPrefix("/event/hook/collect")
         .stripPrefix("/"))
     val (code, ps, active) = readHook(id).getOrElse(
       return (404, """{"error":"webhook not found"}"""))
     if (!active) return (404, """{"error":"webhook is not active"}""")
-    val body =
-      if (ex.getRequestMethod == "POST")
-        new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      else ""
+    val body = if (req.isPost) req.text else ""
     // the JDK server case-normalizes header names; lowercase them so
     // module code addresses `headers.channel` predictably
     val headers = ex.getRequestHeaders.asScala.map { case (k, vs) =>
       k.toLowerCase -> vs.asScala.headOption.getOrElse("")
     }.toMap
     val lines = graft.enrich.js.JsWebhookTransform(code, ps)
-      .transformOne(body, queryParams(ex), headers)
+      .transformOne(body, req.params, headers)
     // the reference's webhook path stores DIRECTLY — no mapper stage
     // (WebHookHttpService.java:232 calls eventStore.store without
     // mapEvent); the hook's own JS transform is its enrichment
@@ -1746,16 +1641,12 @@ final class HttpGateway(
     * `{"code":…, "parameters"?:{…}, "body"?:…}`. Returns the produced
     * event objects as a JSON array; code errors are the client's 400
     * (the reference's test door). */
-  private def handleHookTest(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val code = Option(root.get("code")).map(_.asText()).filter(_.nonEmpty)
-      .getOrElse(throw new IngestRejected("code is required"))
-    val ps = Option(root.get("parameters")).filter(_.isObject)
-      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-      .getOrElse(Map.empty[String, String])
-    val body = Option(root.get("body"))
-      .map(b => if (b.isTextual) b.asText() else b.toString).getOrElse("")
+  private def handleHookTest(req: Req): (Int, String) = {
+    val b = req.body
+    val code = b.needScalar("code", nonEmpty = true)
+    val ps = b.stringMap("parameters").getOrElse(Map.empty)
+    val body = b.get("body")
+      .map(n => if (n.isTextual) n.asText() else n.toString).getOrElse("")
     val lines =
       try graft.enrich.js.JsWebhookTransform(code, ps).transformOne(body)
       catch {
@@ -1765,38 +1656,22 @@ final class HttpGateway(
     (200, lines.mkString("[", ",", "]"))
   }
 
-  private def handleHookGet(ex: HttpExchange): (Int, String) = {
-    val id = requireIdentifier(queryParams(ex).getOrElse("identifier",
-      throw new IngestRejected("identifier is required")))
+  private def handleHookGet(req: Req): (Int, String) = {
+    val id = req.query.ident("identifier")
     graft.store.VersionedState.readMarker(hooksDir, id) match {
       case None => (404, """{"error":"webhook not found"}""")
-      case Some(json) =>
-        (200, s"""{"identifier":${mapper.writeValueAsString(id)},${json.trim.stripPrefix("{")}""")
+      case Some(json) => (200, named("identifier", id, json))
     }
   }
 
-  private def handleHookList(ex: HttpExchange): (Int, String) = {
-    val dir = new org.apache.hadoop.fs.Path(hooksDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return (200, "[]")
-    val ids = fs.listStatus(dir).toIndexedSeq.map(_.getPath.getName)
-      .filterNot(_.endsWith(".tmp")).sorted
-    val rows = ids.flatMap { id =>
-      graft.store.VersionedState.readMarker(hooksDir, id).map(json =>
-        s"""{"identifier":${mapper.writeValueAsString(id)},${json.trim.stripPrefix("{")}""")
-    }
-    (200, rows.mkString("[", ",", "]"))
-  }
+  private def handleHookList(req: Req): (Int, String) =
+    (200, markers(hooksDir).map { case (id, json) => named("identifier", id, json) }
+      .mkString("[", ",", "]"))
 
-  private def handleHookDelete(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val id = requireIdentifier(Option(root.get("identifier")).map(_.asText())
-      .getOrElse(throw new IngestRejected("identifier is required")))
-    val p = new org.apache.hadoop.fs.Path(hooksDir, id)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) (404, """{"error":"webhook not found"}""")
-    else { fs.delete(p, false); (200, """{"success":true}""") }
+  private def handleHookDelete(req: Req): (Int, String) = {
+    val id = Fields.identifier(req.body.needScalar("identifier"))
+    if (!dropMarker(hooksDir, id)) (404, """{"error":"webhook not found"}""")
+    else (200, """{"success":true}""")
   }
 
   // ------------- custom event mappers (M7 over HTTP) -------------
@@ -1815,29 +1690,16 @@ final class HttpGateway(
       produced: Seq[(String, graft.core.FieldType)], active: Boolean)
 
   private def parseStoredMapper(name: String, json: String): StoredMapper = {
-    val root = mapper.readTree(json)
-    StoredMapper(name,
-      root.get("script").asText(),
-      Option(root.get("collection")).filter(!_.isNull).map(_.asText()),
-      Option(root.get("parameters")).filter(_.isObject)
-        .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-        .getOrElse(Map.empty),
-      Option(root.get("produced")).filter(_.isObject)
-        .map(_.properties().asScala.map(e =>
-          e.getKey -> graft.core.FieldType.fromName(e.getValue.asText())).toSeq)
-        .getOrElse(Nil),
-      Option(root.get("active")).forall(_.asBoolean(true)))
+    val m = new Fields(mapper.readTree(json))
+    StoredMapper(name, m.node.get("script").asText(), m.scalar("collection"),
+      m.stringMap("parameters").getOrElse(Map.empty),
+      m.stringMap("produced").getOrElse(Map.empty).toSeq
+        .map { case (f, t) => f -> graft.core.FieldType.fromName(t) },
+      m.bool("active", default = true))
   }
 
-  private def storedMappers(): Seq[StoredMapper] = {
-    val dir = new org.apache.hadoop.fs.Path(mappersDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toIndexedSeq.map(_.getPath.getName)
-      .filterNot(_.endsWith(".tmp")).sorted
-      .flatMap(n => graft.store.VersionedState.readMarker(mappersDir, n)
-        .map(parseStoredMapper(n, _)))
-  }
+  private def storedMappers(): Seq[StoredMapper] =
+    markers(mappersDir).map { case (n, json) => parseStoredMapper(n, json) }
 
   /** Run every stored active mapper over a freshly-ingested collection
     * batch, in name order (the reference applies all registered mappers
@@ -1875,21 +1737,15 @@ final class HttpGateway(
     * and declare `mapper`; produced field names are normalized by the
     * ingest rules; create refuses an existing name, update a missing
     * one (the reference's create/update split). */
-  private def handleMapperCreate(update: Boolean)(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    val script = Option(root.get("script")).map(_.asText()).filter(_.nonEmpty)
-      .getOrElse(throw new IngestRejected("script is required"))
+  private def handleMapperCreate(update: Boolean)(req: Req): (Int, String) = {
+    val b = req.body
+    val name = b.ident("name")
+    val script = b.needScalar("script", nonEmpty = true)
     val exists = graft.store.VersionedState.readMarker(mappersDir, name).isDefined
     if (!update && exists)
       throw new IngestRejected(s"mapper '$name' already exists")
     if (update && !exists) return (404, """{"error":"mapper not found"}""")
-    val producedIn = Option(root.get("produced")).filter(_.isObject)
-      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toSeq)
-      .getOrElse(Nil)
-    val produced = producedIn.map { case (raw, tn) =>
+    val produced = b.stringMap("produced").getOrElse(Map.empty).toSeq.map { case (raw, tn) =>
       val n = graft.core.Names.normalizeField(raw).fold(
         err => throw new IngestRejected(s"produced field '$raw': $err"), identity)
       val t = try graft.core.FieldType.fromName(tn)
@@ -1898,11 +1754,9 @@ final class HttpGateway(
         }
       n -> t
     }
-    val ps = Option(root.get("parameters")).filter(_.isObject)
-      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-      .getOrElse(Map.empty[String, String])
-    val collection = Option(root.get("collection")).filter(!_.isNull).map(_.asText())
-    val active = Option(root.get("active")).forall(_.asBoolean(true))
+    val ps = b.stringMap("parameters").getOrElse(Map.empty)
+    val collection = b.scalar("collection")
+    val active = b.bool("active", default = true)
     val probe = try graft.enrich.js.JsCustomMapper(name,
         collection.getOrElse("_probe"), produced, ps, script)
       catch {
@@ -1923,18 +1777,13 @@ final class HttpGateway(
     (200, """{"success":true}""")
   }
 
-  private def handleMapperDelete(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    val p = new org.apache.hadoop.fs.Path(mappersDir, name)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) (404, """{"error":"mapper not found"}""")
-    else { fs.delete(p, false); (200, """{"success":true}""") }
+  private def handleMapperDelete(req: Req): (Int, String) = {
+    val name = req.body.ident("name")
+    if (!dropMarker(mappersDir, name)) (404, """{"error":"mapper not found"}""")
+    else (200, """{"success":true}""")
   }
 
-  private def handleMapperList(ex: HttpExchange): (Int, String) = {
+  private def handleMapperList(req: Req): (Int, String) = {
     val rows = storedMappers().map { m =>
       val node = mapper.createObjectNode()
       node.put("name", m.name)
@@ -1957,21 +1806,14 @@ final class HttpGateway(
     * registry, then the mapper; the mutated rows come back as a JSON
     * array (the reference's test door runs the mapper on a sample
     * request). Script errors are the client's 400. */
-  private def handleMapperTest(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val script = Option(root.get("script")).map(_.asText()).filter(_.nonEmpty)
-      .getOrElse(throw new IngestRejected("script is required"))
-    val ps = Option(root.get("parameters")).filter(_.isObject)
-      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-      .getOrElse(Map.empty[String, String])
-    val produced = Option(root.get("produced")).filter(_.isObject)
-      .map(_.properties().asScala.map(e =>
-        e.getKey -> graft.core.FieldType.fromName(e.getValue.asText())).toSeq)
-      .getOrElse(Nil)
-    val events = Option(root.get("events")).filter(_.isArray)
-      .map(_.elements().asScala.map(_.toString).toSeq)
-      .getOrElse(throw new IngestRejected("events array is required"))
+  private def handleMapperTest(req: Req): (Int, String) = {
+    val b = req.body
+    val script = b.needScalar("script", nonEmpty = true)
+    val ps = b.stringMap("parameters").getOrElse(Map.empty)
+    val produced = b.stringMap("produced").getOrElse(Map.empty).toSeq
+      .map { case (f, t) => f -> graft.core.FieldType.fromName(t) }
+    val events = b.array("events").getOrElse(Fields.missing("events array"))
+      .map(_.node.toString)
     val res = ingestLines(SchemaRegistry.inMemory(), events)
     try {
       val out = res.byCollection.toSeq.sortBy(_._1).flatMap { case (coll, df) =>
@@ -1990,12 +1832,6 @@ final class HttpGateway(
 
   // -------- index services (the incremental stores over HTTP) --------
 
-  private def dedupIdxDir(name: String) =
-    s"$warehouse/$project/__indexes/dedup/$name"
-  private def annIdxDir(name: String) =
-    s"$warehouse/$project/__indexes/ann/$name"
-  private def vocabIdxDir(name: String) =
-    s"$warehouse/$project/__indexes/vocab/$name"
 
   /** Documents for the dedup-index doors: inline `"docs": [{"doc_id":…,
     * "text":…}…]` for service-sized deltas, or `"source": <parquet dir>`
@@ -2008,65 +1844,62 @@ final class HttpGateway(
     * [[storedMaybeAt]], so a run that records `(collection, version)`
     * re-reads the byte-identical corpus whatever has been appended or
     * compacted since. */
-  private def docsFrameOf(root: com.fasterxml.jackson.databind.JsonNode): DataFrame =
-    Option(root.get("collection")).filterNot(_.isNull).map(_.asText()) match {
+  private def docsFrameOf(b: Fields): DataFrame =
+    b.scalar("collection") match {
       case Some(c) =>
         if (registry.schema(project, c).isEmpty)
           throw new IngestRejected(s"unknown collection '$c'")
-        val textCol = Option(root.get("text_column")).map(_.asText())
-          .getOrElse("text")
-        val idCol = Option(root.get("id_column")).map(_.asText())
-          .getOrElse("doc_id")
-        val params = Option(root.get("version")).filterNot(_.isNull)
-          .map(v => Map("version" -> v.asText())).getOrElse(Map.empty)
-        val stored = storedMaybeAt(params, c)
+        val textCol = b.scalar("text_column").getOrElse("text")
+        val idCol = b.scalar("id_column").getOrElse("doc_id")
+        val stored = storedMaybeAt(b.version, c)
         for (needed <- Seq(idCol, textCol))
           if (!stored.columns.contains(needed))
             throw new IngestRejected(s"collection '$c' has no column '$needed'")
         stored.select(col(idCol).cast("long").as("doc_id"),
           col(textCol).cast("string").as("text"))
       case None =>
-    Option(root.get("source")).filterNot(_.isNull).map(_.asText()) match {
+    b.scalar("source") match {
       case Some(p) =>
         spark.read.parquet(p).select(col("doc_id").cast("long"), col("text"))
       case None =>
-        val docs = Option(root.get("docs")).filter(_.isArray).getOrElse(
-          throw new IngestRejected("docs array or source path is required"))
+        val docs = b.array("docs").getOrElse(
+          Fields.missing("docs array or source path"))
         import spark.implicits._
-        docs.elements().asScala.map { d =>
-          (Option(d.get("doc_id")).map(_.asLong()).getOrElse(
-            throw new IngestRejected("doc_id is required")),
-            Option(d.get("text")).map(_.asText()).getOrElse(
-              throw new IngestRejected("text is required")))
-        }.toSeq.toDF("doc_id", "text")
+        docs.map { d =>
+          (d.long("doc_id").getOrElse(Fields.missing("doc_id")), d.needScalar("text"))
+        }.toDF("doc_id", "text")
     }
     }
 
   /** Vectors for the ANN doors: inline `"vectors": [{"vec_id":…,
     * "embedding":[…], "label"?:…}…]` or `"source": <parquet dir>` with
     * the same columns. */
-  private def vectorsFrameOf(root: com.fasterxml.jackson.databind.JsonNode): DataFrame =
-    Option(root.get("source")).filterNot(_.isNull).map(_.asText()) match {
+  private def vectorsFrameOf(b: Fields): DataFrame =
+    b.scalar("source") match {
       case Some(p) =>
         spark.read.parquet(p).select(col("vec_id").cast("long"),
           col("embedding").cast("array<float>"), col("label").cast("string"))
       case None =>
-        val vecs = Option(root.get("vectors")).filter(_.isArray).getOrElse(
-          throw new IngestRejected("vectors array or source path is required"))
+        val vecs = b.array("vectors").getOrElse(
+          Fields.missing("vectors array or source path"))
         import spark.implicits._
-        vecs.elements().asScala.map { v =>
-          val emb = Option(v.get("embedding")).filter(_.isArray).getOrElse(
-            throw new IngestRejected("embedding array is required"))
-            .elements().asScala.map(_.floatValue()).toSeq
-          (Option(v.get("vec_id")).map(_.asLong()).getOrElse(
-            throw new IngestRejected("vec_id is required")),
-            emb, Option(v.get("label")).map(_.asText()).getOrElse(""))
-        }.toSeq.toDF("vec_id", "embedding", "label")
+        vecs.map { v =>
+          val emb = v.floats("embedding").getOrElse(Fields.missing("embedding array"))
+          (v.long("vec_id").getOrElse(Fields.missing("vec_id")), emb,
+            v.scalar("label").getOrElse(""))
+        }.toDF("vec_id", "embedding", "label")
     }
 
-  private def requireIndex(dir: String): Unit =
+  private def indexDir(kind: String, name: String) =
+    s"$warehouse/$project/__indexes/$kind/$name"
+
+  /** The directory of an existing index of `kind`. */
+  private def namedIndex(kind: String, name: String): String = {
+    val dir = indexDir(kind, name)
     if (!graft.store.VersionedState.exists(dir))
       throw new IngestRejected("index does not exist")
+    dir
+  }
 
   /** The create doors: `exists` is checked INSIDE the write lock, so of
     * racing creates of one name exactly one runs `create` and the others
@@ -2081,37 +1914,35 @@ final class HttpGateway(
     (200, """{"success":true}""")
   }
 
+  /** A create door of an index of `kind`, named by the body's `name`. */
+  private def createIndex(kind: String, b: Fields)(create: String => Unit): (Int, String) = {
+    val name = b.ident("name")
+    val dir = indexDir(kind, name)
+    createOnce(graft.store.VersionedState.exists(dir), s"index '$name'")(create(dir))
+  }
+
   /** `POST /index/dedup/create` — bootstrap a [[graft.store.DedupIndex]]
     * (min band-key state, |keys|-sized) under this project from inline
     * docs or a parquet source. `append` folds deltas in O(delta)+O(|keys|);
     * `probe` serves first-seen-wins verdicts WITHOUT re-shingling
     * history — near-dup detection as a service over the store the
     * di1 oracle row proves equal to the one-shot batch computation. */
-  private def handleDedupCreate(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    createOnce(graft.store.VersionedState.exists(dedupIdxDir(name)),
-        s"index '$name'") {
-      graft.store.DedupIndex.initialize(docsFrameOf(root), dedupIdxDir(name))
+  private def handleDedupCreate(req: Req): (Int, String) = {
+    val b = req.body
+    createIndex("dedup", b) { dir =>
+      graft.store.DedupIndex.initialize(docsFrameOf(b), dir)
     }
   }
 
-  private def handleDedupAppend(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(dedupIdxDir(name))
+  private def handleDedupAppend(req: Req): (Int, String) = {
+    val b = req.body
+    val dir = namedIndex("dedup", b.ident("name"))
     writeLock.synchronized {
-      graft.store.DedupIndex.refresh(spark, docsFrameOf(root), dedupIdxDir(name))
+      graft.store.DedupIndex.refresh(spark, docsFrameOf(b), dir)
     }
     (200, """{"success":true}""")
   }
 
-  private def substringIdxDir(name: String) =
-    s"$warehouse/$project/__indexes/substring/$name"
 
   /** `POST /index/substring/create` — bootstrap a
     * [[graft.store.SubstringIndex]] (per-gram (count, first) state)
@@ -2119,50 +1950,45 @@ final class HttpGateway(
     * batch fence; `trim` returns the posted docs REWRITTEN keep-first
     * against every passage the index has seen (the di2 semantics) —
     * substring dedup as a service, no history re-tokenization. */
-  private def handleSubstringCreate(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    createOnce(graft.store.VersionedState.exists(substringIdxDir(name)),
-        s"index '$name'") {
-      graft.store.SubstringIndex.initialize(docsFrameOf(root),
-        substringIdxDir(name))
+  private def handleSubstringCreate(req: Req): (Int, String) = {
+    val b = req.body
+    createIndex("substring", b) { dir =>
+      graft.store.SubstringIndex.initialize(docsFrameOf(b), dir)
     }
   }
+
+  /** The client's `batch_id` for a fenced append: an integer >= 0. A
+    * mistyped id must not read as 0 — a second delivery with another
+    * mistyped id would then be skipped as a replay, answered 200, and
+    * its docs never folded in. */
+  private def fencedBatchId(b: Fields): Long =
+    b.long("batch_id", min = 0).getOrElse(Fields.reject(
+      "batch_id is required: the append fence only dedups retries " +
+        "that re-send the SAME id (last committed high-water is " +
+        "returned by every append)"))
 
   /** Append goes through the batch fence with a REQUIRED client
     * `batch_id`, exactly the vocab-door contract and for the same
     * reason: (count, first) state sum-merges its counts, so a blind
     * retry of the same delivery must be a no-op, and only the client
     * knows two requests are the same delivery. */
-  private def handleSubstringAppend(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(substringIdxDir(name))
-    val batchId = Option(root.get("batch_id")).map(_.asLong())
-      .getOrElse(throw new IngestRejected(
-        "batch_id is required: the append fence only dedups retries " +
-          "that re-send the SAME id (last committed high-water is " +
-          "returned by every append)"))
+  private def handleSubstringAppend(req: Req): (Int, String) = {
+    val b = req.body
+    val dir = namedIndex("substring", b.ident("name"))
+    val batchId = fencedBatchId(b)
     writeLock.synchronized {
-      graft.store.SubstringIndex.maintainBatch(docsFrameOf(root),
-        substringIdxDir(name), batchId)
+      graft.store.SubstringIndex.maintainBatch(docsFrameOf(b),
+        dir, batchId)
       (200, s"""{"success":true,"batch_id":$batchId,"high_water":${
-        graft.store.VersionedState.lastBatchId(substringIdxDir(name))}}""")
+        graft.store.VersionedState.lastBatchId(dir)}}""")
     }
   }
 
-  private def handleSubstringTrim(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(substringIdxDir(name))
+  private def handleSubstringTrim(req: Req): (Int, String) = {
+    val b = req.body
+    val dir = namedIndex("substring", b.ident("name"))
     val trimmed = graft.store.SubstringIndex
-      .probeStore(spark, docsFrameOf(root), substringIdxDir(name))
+      .probeStore(spark, docsFrameOf(b), dir)
       .orderBy(col("doc_id"))
     (200, trimmed.toJSON.collect().mkString("[", ",", "]"))
   }
@@ -2173,14 +1999,10 @@ final class HttpGateway(
     * (O(delta)); pair ranking, merge learning, and version-over-
     * version tokenizer drift serve from the |vocab| state without any
     * corpus access. All reads are ≤K/top-50 rows. */
-  private def handleVocabCreate(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    createOnce(graft.store.VersionedState.exists(vocabIdxDir(name)),
-        s"index '$name'") {
-      graft.store.VocabStore.initialize(docsFrameOf(root), vocabIdxDir(name))
+  private def handleVocabCreate(req: Req): (Int, String) = {
+    val b = req.body
+    createIndex("vocab", b) { dir =>
+      graft.store.VocabStore.initialize(docsFrameOf(b), dir)
     }
   }
 
@@ -2193,46 +2015,23 @@ final class HttpGateway(
     * double-count the very delivery the fence exists to absorb. The
     * response echoes the committed high-water so a client can recover
     * its next id after losing state. */
-  private def handleVocabAppend(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(vocabIdxDir(name))
-    val batchId = Option(root.get("batch_id")).map(_.asLong())
-      .getOrElse(throw new IngestRejected(
-        "batch_id is required: the append fence only dedups retries " +
-          "that re-send the SAME id (last committed high-water is " +
-          "returned by every append)"))
+  private def handleVocabAppend(req: Req): (Int, String) = {
+    val b = req.body
+    val dir = namedIndex("vocab", b.ident("name"))
+    val batchId = fencedBatchId(b)
     writeLock.synchronized {
-      graft.store.VocabStore.maintainBatch(docsFrameOf(root),
-        vocabIdxDir(name), batchId)
+      graft.store.VocabStore.maintainBatch(docsFrameOf(b),
+        dir, batchId)
       (200, s"""{"success":true,"batch_id":$batchId,"high_water":${
-        graft.store.VersionedState.lastBatchId(vocabIdxDir(name))}}""")
+        graft.store.VersionedState.lastBatchId(dir)}}""")
     }
   }
 
-  private def handleVocabPairs(ex: HttpExchange): (Int, String) = {
-    val name = requireIdentifier(queryParams(ex).getOrElse("name",
-      throw new IngestRejected("name is required")))
-    requireIndex(vocabIdxDir(name))
-    val rows = graft.store.VocabStore.pairCounts(spark, vocabIdxDir(name))
+  private def handleVocabPairs(req: Req): (Int, String) = {
+    val dir = namedIndex("vocab", req.query.ident("name"))
+    val rows = graft.store.VocabStore.pairCounts(spark, dir)
       .orderBy(col("rank"))
     (200, rows.toJSON.collect().mkString("[", ",", "]"))
-  }
-
-  /** `k` from the query string, 400 (not a NumberFormatException 500)
-    * on garbage — the contract every body-parsed door already has. */
-  private def vocabK(params: Map[String, String]): Int = {
-    val k = params.get("k").map { s =>
-      try s.toInt
-      catch { case _: NumberFormatException =>
-        throw new IngestRejected(s"k must be an integer: '$s'")
-      }
-    }.getOrElse(8)
-    if (k < 1 || k > 64)
-      throw new IngestRejected("k must be between 1 and 64")
-    k
   }
 
   private def mergesJson(
@@ -2246,48 +2045,37 @@ final class HttpGateway(
     mapper.writeValueAsString(arr)
   }
 
-  private def handleVocabTrain(ex: HttpExchange): (Int, String) = {
-    val params = queryParams(ex)
-    val name = requireIdentifier(params.getOrElse("name",
-      throw new IngestRejected("name is required")))
-    requireIndex(vocabIdxDir(name))
+  private def handleVocabTrain(req: Req): (Int, String) = {
+    val q = req.query
+    val dir = namedIndex("vocab", q.ident("name"))
     (200, mergesJson(
-      graft.store.VocabStore.train(spark, vocabIdxDir(name), vocabK(params))))
+      graft.store.VocabStore.train(spark, dir, q.count("k", 8, 1, 64))))
   }
 
-  private def handleVocabDrift(ex: HttpExchange): (Int, String) = {
-    val params = queryParams(ex)
-    val name = requireIdentifier(params.getOrElse("name",
-      throw new IngestRejected("name is required")))
-    requireIndex(vocabIdxDir(name))
+  private def handleVocabDrift(req: Req): (Int, String) = {
+    val q = req.query
+    val dir = namedIndex("vocab", q.ident("name"))
     val rows = graft.store.VocabStore
-      .drift(spark, vocabIdxDir(name), vocabK(params))
+      .drift(spark, dir, q.count("k", 8, 1, 64))
       .orderBy(col("rank"))
     (200, rows.toJSON.collect().mkString("[", ",", "]"))
   }
 
   /** `POST /index/vocab/compact` — drop superseded versions past a
     * one-version grace (drift's predecessor survives). */
-  private def handleVocabCompact(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(vocabIdxDir(name))
+  private def handleVocabCompact(req: Req): (Int, String) = {
+    val dir = namedIndex("vocab", req.body.ident("name"))
     writeLock.synchronized {
-      graft.store.VocabStore.compact(vocabIdxDir(name), grace = 1)
+      graft.store.VocabStore.compact(dir, grace = 1)
     }
     (200, """{"success":true}""")
   }
 
-  private def handleDedupProbe(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(dedupIdxDir(name))
+  private def handleDedupProbe(req: Req): (Int, String) = {
+    val b = req.body
+    val dir = namedIndex("dedup", b.ident("name"))
     val verdicts = graft.store.DedupIndex
-      .probeStore(spark, docsFrameOf(root), dedupIdxDir(name))
+      .probeStore(spark, docsFrameOf(b), dir)
       .orderBy(col("doc_id"))
     (200, verdicts.toJSON.collect().mkString("[", ",", "]"))
   }
@@ -2300,77 +2088,59 @@ final class HttpGateway(
     * audits); `compact`/`reseed` are the maintenance verbs. Similarity
     * search as a service over the store ai1 proves equal to the
     * one-shot IVF plan. */
-  private def handleAnnCreate(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    createOnce(graft.store.VersionedState.exists(annIdxDir(name)),
-        s"index '$name'") {
-      try graft.store.AnnIndex.initialize(vectorsFrameOf(root), annIdxDir(name))
+  private def handleAnnCreate(req: Req): (Int, String) = {
+    val b = req.body
+    createIndex("ann", b) { dir =>
+      try graft.store.AnnIndex.initialize(vectorsFrameOf(b), dir)
       catch { case e: IllegalArgumentException =>
         throw new IngestRejected(e.getMessage)
       }
     }
   }
 
-  private def handleAnnAppend(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(annIdxDir(name))
+  private def handleAnnAppend(req: Req): (Int, String) = {
+    val b = req.body
+    val dir = namedIndex("ann", b.ident("name"))
     writeLock.synchronized {
-      graft.store.AnnIndex.append(spark, vectorsFrameOf(root), annIdxDir(name),
-        graft.store.VersionedState.currentVersion(annIdxDir(name)) + 1)
+      graft.store.AnnIndex.append(spark, vectorsFrameOf(b), dir,
+        graft.store.VersionedState.currentVersion(dir) + 1)
     }
     (200, """{"success":true}""")
   }
 
-  private def handleAnnQuery(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(annIdxDir(name))
-    val vec = Option(root.get("vector")).filter(_.isArray).getOrElse(
-      throw new IngestRejected("vector array is required"))
-      .elements().asScala.map(_.floatValue()).toSeq
-    val k = Option(root.get("k")).map(_.asInt()).getOrElse(10)
+  private def handleAnnQuery(req: Req): (Int, String) = {
+    val b = req.body
+    val dir = namedIndex("ann", b.ident("name"))
+    val vec = b.floats("vector").getOrElse(Fields.missing("vector array"))
+    val k = b.count("k", 10, 1, 10000)
     import spark.implicits._
     val q = Seq(vec).toDF("embedding")
-    val rows = graft.store.AnnIndex.query(spark, annIdxDir(name), q, k)
+    val rows = graft.store.AnnIndex.query(spark, dir, q, k)
     (200, rows.toJSON.collect().mkString("[", ",", "]"))
   }
 
-  private def handleAnnStats(ex: HttpExchange): (Int, String) = {
-    val name = requireIdentifier(queryParams(ex).getOrElse("name",
-      throw new IngestRejected("name is required")))
-    requireIndex(annIdxDir(name))
-    val occ = graft.store.AnnIndex.postings(spark, annIdxDir(name))
+  private def handleAnnStats(req: Req): (Int, String) = {
+    val dir = namedIndex("ann", req.query.ident("name"))
+    val occ = graft.store.AnnIndex.postings(spark, dir)
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .agg(sum(col("n")).as("postings"), count(lit(1)).as("cells"),
         max(col("n")).as("max_cell"))
       .collect()(0)
     val node = mapper.createObjectNode()
     node.put("version",
-      graft.store.VersionedState.currentVersion(annIdxDir(name)))
+      graft.store.VersionedState.currentVersion(dir))
     node.put("postings", occ.getLong(0))
     node.put("cells", occ.getLong(1))
     node.put("max_cell_share", occ.getLong(2).toDouble / occ.getLong(0))
     (200, mapper.writeValueAsString(node))
   }
 
-  private def handleAnnCompact(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(annIdxDir(name))
+  private def handleAnnCompact(req: Req): (Int, String) = {
+    val dir = namedIndex("ann", req.body.ident("name"))
     writeLock.synchronized {
       // queries don't take writeLock — deferred deletion, see the
       // text door
-      graft.store.AnnIndex.compactPostings(spark, annIdxDir(name),
+      graft.store.AnnIndex.compactPostings(spark, dir,
         deferDeletion = true)
     }
     (200, """{"success":true}""")
@@ -2380,29 +2150,25 @@ final class HttpGateway(
     * current version) — completion writes version+1, so the next drift
     * audit mints a fresh unit while two racing gateways execute one
     * retrain. */
-  private def handleAnnReseed(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(annIdxDir(name))
-    val iters = Option(root.get("iters")).map(_.asInt()).getOrElse(2)
+  private def handleAnnReseed(req: Req): (Int, String) = {
+    val b = req.body
+    val name = b.ident("name")
+    val dir = namedIndex("ann", name)
+    val iters = b.int("iters").getOrElse(2)
     val token =
-      s"v${graft.store.VersionedState.currentVersion(annIdxDir(name))}"
+      s"v${graft.store.VersionedState.currentVersion(dir)}"
     // withClaim: the winner heartbeats its claim, so a reseed that
     // legitimately outlasts staleMs is never usurped mid-flight; a
     // failed one releases (a retry must not no-op for staleMs)
     val executed = writeLock.synchronized {
       graft.store.MaintenanceFence.withClaim(fencesDir,
         s"ann-reseed-$name", token) {
-        graft.store.AnnIndex.reseed(spark, annIdxDir(name), iters)
+        graft.store.AnnIndex.reseed(spark, dir, iters)
       }.isDefined
     }
     (200, s"""{"success":true,"executed":$executed}""")
   }
 
-  private def textIdxDir(name: String) =
-    s"$warehouse/$project/__indexes/text/$name"
 
   /** `POST /index/text/create` — bootstrap a
     * [[graft.store.InvertedIndex]] (term-hash-sharded postings +
@@ -2412,50 +2178,38 @@ final class HttpGateway(
     * to the batchless scan — the ix1 oracle contract); `stats` reports
     * occupancy skew (the ix2 reading: a hot shard means raise the
     * shard count); `compact` consolidates small files. */
-  private def handleTextCreate(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    val docs = docsFrameOf(root)
+  private def handleTextCreate(req: Req): (Int, String) = {
+    val b = req.body
+    val name = b.ident("name")
+    val docs = docsFrameOf(b)
     if (docs.isEmpty)
       throw new IngestRejected("bootstrap batch must contain documents")
-    createOnce(graft.store.VersionedState.exists(textIdxDir(name)),
-        s"index '$name'") {
-      graft.store.InvertedIndex.initialize(docs, textIdxDir(name))
+    val dir = indexDir("text", name)
+    createOnce(graft.store.VersionedState.exists(dir), s"index '$name'") {
+      graft.store.InvertedIndex.initialize(docs, dir)
     }
   }
 
-  private def handleTextAppend(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(textIdxDir(name))
-    val delta = docsFrameOf(root)
+  private def handleTextAppend(req: Req): (Int, String) = {
+    val b = req.body
+    val dir = namedIndex("text", b.ident("name"))
+    val delta = docsFrameOf(b)
     if (delta.isEmpty)
       throw new IngestRejected("delta batch must contain documents")
     writeLock.synchronized {
-      graft.store.InvertedIndex.append(spark, delta, textIdxDir(name),
-        graft.store.VersionedState.currentVersion(textIdxDir(name)) + 1)
+      graft.store.InvertedIndex.append(spark, delta, dir,
+        graft.store.VersionedState.currentVersion(dir) + 1)
     }
     (200, """{"success":true}""")
   }
 
-  private def handleTextSearch(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(textIdxDir(name))
-    val terms = Option(root.get("terms")).filter(_.isArray).getOrElse(
-      throw new IngestRejected("terms array is required"))
-      .elements().asScala.map(_.asText()).toSeq.filter(_.nonEmpty)
-    if (terms.isEmpty) throw new IngestRejected("terms array is required")
-    val k = Option(root.get("k")).map(_.asInt()).getOrElse(10)
-    if (k < 1 || k > 10000)
-      throw new IngestRejected("k must be between 1 and 10000")
-    val rows = graft.store.InvertedIndex.probe(spark, textIdxDir(name), terms)
+  private def handleTextSearch(req: Req): (Int, String) = {
+    val b = req.body
+    val dir = namedIndex("text", b.ident("name"))
+    val terms = b.strings("terms").getOrElse(Nil).filter(_.nonEmpty)
+    if (terms.isEmpty) Fields.missing("terms array")
+    val k = b.count("k", 10, 1, 10000)
+    val rows = graft.store.InvertedIndex.probe(spark, dir, terms)
       .orderBy(col("score").desc, col("doc_id")).limit(k)
     (200, rows.toJSON.collect().mkString("[", ",", "]"))
   }
@@ -2463,57 +2217,44 @@ final class HttpGateway(
   /** `POST /index/text/phrase` — exact-phrase occurrence counts served
     * from the positional postings (the ix3 contract): only the phrase
     * terms' shards are read; no corpus re-tokenization. */
-  private def handleTextPhrase(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(textIdxDir(name))
-    val phrase = Option(root.get("phrase")).filter(_.isArray).getOrElse(
-      throw new IngestRejected("phrase array is required"))
-      .elements().asScala.map(_.asText()).toSeq.filter(_.nonEmpty)
-    if (phrase.isEmpty) throw new IngestRejected("phrase array is required")
+  private def handleTextPhrase(req: Req): (Int, String) = {
+    val b = req.body
+    val dir = namedIndex("text", b.ident("name"))
+    val phrase = b.strings("phrase").getOrElse(Nil).filter(_.nonEmpty)
+    if (phrase.isEmpty) Fields.missing("phrase array")
     if (phrase.size > 32)
       throw new IngestRejected("phrase is limited to 32 tokens")
-    val k = Option(root.get("k")).map(_.asInt()).getOrElse(100)
-    if (k < 1 || k > 10000)
-      throw new IngestRejected("k must be between 1 and 10000")
+    val k = b.count("k", 100, 1, 10000)
     val rows = graft.store.InvertedIndex
-      .phraseProbe(spark, textIdxDir(name), phrase)
+      .phraseProbe(spark, dir, phrase)
       .orderBy(col("n_occurrences").desc, col("doc_id"))
       .limit(k)
     (200, rows.toJSON.collect().mkString("[", ",", "]"))
   }
 
-  private def handleTextStats(ex: HttpExchange): (Int, String) = {
-    val name = requireIdentifier(queryParams(ex).getOrElse("name",
-      throw new IngestRejected("name is required")))
-    requireIndex(textIdxDir(name))
-    val occ = graft.store.InvertedIndex.postings(spark, textIdxDir(name))
+  private def handleTextStats(req: Req): (Int, String) = {
+    val dir = namedIndex("text", req.query.ident("name"))
+    val occ = graft.store.InvertedIndex.postings(spark, dir)
       .groupBy(col("shard")).agg(count(lit(1)).as("n"))
       .agg(sum(col("n")).as("postings"), count(lit(1)).as("shards"),
         max(col("n")).as("max_shard"))
       .collect()(0)
     val node = mapper.createObjectNode()
     node.put("version",
-      graft.store.VersionedState.currentVersion(textIdxDir(name)))
+      graft.store.VersionedState.currentVersion(dir))
     node.put("postings", occ.getLong(0))
     node.put("shards", occ.getLong(1))
     node.put("max_shard_share", occ.getLong(2).toDouble / occ.getLong(0))
     (200, mapper.writeValueAsString(node))
   }
 
-  private def handleTextCompact(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    requireIndex(textIdxDir(name))
+  private def handleTextCompact(req: Req): (Int, String) = {
+    val dir = namedIndex("text", req.body.ident("name"))
     writeLock.synchronized {
       // searches don't take writeLock, so deletion of the superseded
       // dirs is DEFERRED to the next compaction: an in-flight probe
       // that resolved the pre-flip dir set still finds every file
-      graft.store.InvertedIndex.compactPostings(spark, textIdxDir(name),
+      graft.store.InvertedIndex.compactPostings(spark, dir,
         deferDeletion = true)
     }
     (200, """{"success":true}""")
@@ -2525,13 +2266,10 @@ final class HttpGateway(
     * corpus (inline `docs` or a parquet `source` path; the
     * oracle-proven bpe2 loop). The response is the merge list itself —
     * k rows, bounded regardless of corpus size. */
-  private def handleTokenizerTrain(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val k = Option(root.get("k")).map(_.asInt()).getOrElse(8)
-    if (k < 1 || k > 64)
-      throw new IngestRejected("k must be between 1 and 64")
-    val docs = docsFrameOf(root)
+  private def handleTokenizerTrain(req: Req): (Int, String) = {
+    val b = req.body
+    val k = b.count("k", 8, 1, 64)
+    val docs = docsFrameOf(b)
     (200, mergesJson(graft.analytics.TokenizerQueries.bpeTrain(docs, k)))
   }
 
@@ -2539,13 +2277,10 @@ final class HttpGateway(
     * the posted corpus (the oracle-proven ch1 shape), served ordered by
     * (doc_id, chunk_idx) and row-capped: a parquet `source` can be
     * cluster-sized, so the door never collects unboundedly. */
-  private def handleTokenizerChunks(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val limit = Option(root.get("limit")).map(_.asInt()).getOrElse(1000)
-    if (limit < 1 || limit > 10000)
-      throw new IngestRejected("limit must be between 1 and 10000")
-    val rows = graft.analytics.TokenizerQueries.ch1From(docsFrameOf(root))
+  private def handleTokenizerChunks(req: Req): (Int, String) = {
+    val b = req.body
+    val limit = b.count("limit", 1000, 1, 10000)
+    val rows = graft.analytics.TokenizerQueries.ch1From(docsFrameOf(b))
       .orderBy(col("doc_id"), col("chunk_idx")).limit(limit)
     (200, rows.toJSON.collect().mkString("[", ",", "]"))
   }
@@ -2553,10 +2288,8 @@ final class HttpGateway(
   /** `POST /tokenizer/drift` — the bpe4 stability audit over a posted
     * corpus (id-half vs full): the keep-the-vocabulary decision,
     * ≤K rows at any corpus size. */
-  private def handleTokenizerDrift(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val out = graft.analytics.TokenizerQueries.bpe4From(docsFrameOf(root))
+  private def handleTokenizerDrift(req: Req): (Int, String) = {
+    val out = graft.analytics.TokenizerQueries.bpe4From(docsFrameOf(req.body))
     (200, out.orderBy(col("rank")).toJSON.collect().mkString("[", ",", "]"))
   }
 
@@ -2565,10 +2298,8 @@ final class HttpGateway(
     * statistics, O(1) driver solve (clf2). The door defines
     * `n_chars = length(text)` — posted docs carry no separate char
     * count, and the feature must mean the same thing for every caller. */
-  private def handleProbeTrain(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val docs = docsFrameOf(root)
+  private def handleProbeTrain(req: Req): (Int, String) = {
+    val docs = docsFrameOf(req.body)
       .withColumn("n_chars", length(col("text")).cast("long"))
     val (b0, w1, w2, w3) =
       try TrainingSet.trainQualityProbe(docs)
@@ -2586,14 +2317,11 @@ final class HttpGateway(
     * surviving quality → dedup → decontamination → split. The output
     * is ≤7 rows regardless of corpus size — the door only triggers
     * the cluster job. */
-  private def handleCorpusFunnel(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val benchNode = Option(root.get("benchmark")).filter(_.isObject)
-      .getOrElse(throw new IngestRejected(
-        "benchmark object (docs array or source path) is required"))
-    val out = TrainingSet.curationFunnel(
-      docsFrameOf(root), docsFrameOf(benchNode))
+  private def handleCorpusFunnel(req: Req): (Int, String) = {
+    val b = req.body
+    val bench = b.obj("benchmark").getOrElse(
+      Fields.missing("benchmark object (docs array or source path)"))
+    val out = TrainingSet.curationFunnel(docsFrameOf(b), docsFrameOf(bench))
     (200, out.orderBy(col("stage")).toJSON.collect().mkString("[", ",", "]"))
   }
 
@@ -2618,23 +2346,23 @@ final class HttpGateway(
     def view = new graft.store.MaterializedView(group, values, distincts, quantiles)
   }
 
-  private def readMvDef(name: String): Option[MvDef] =
-    graft.store.VersionedState.readMarker(mvDefsDir, name).map { s =>
-      val root = mapper.readTree(s)
-      def arr(f: String): Seq[String] =
-        Option(root.get(f)).filter(_.isArray)
-          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-      MvDef(name, root.get("collection").asText(),
-        arr("group"), arr("values"), arr("distinct"), arr("quantiles"))
-    }
-
-  private def storedMvDefs(): Seq[MvDef] = {
-    val dir = new org.apache.hadoop.fs.Path(mvDefsDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toIndexedSeq.map(_.getPath.getName)
-      .filterNot(_.endsWith(".tmp")).sorted.flatMap(readMvDef)
+  /** A view's column lists, read from a create body or a stored marker. */
+  private def mvDef(name: String, collection: String, f: Fields): MvDef = {
+    def arr(k: String) = f.strings(k).getOrElse(Nil)
+    MvDef(name, collection, arr("group"), arr("values"), arr("distinct"),
+      arr("quantiles"))
   }
+
+  private def storedMvDef(name: String, json: String): MvDef = {
+    val f = new Fields(mapper.readTree(json))
+    mvDef(name, f.node.get("collection").asText(), f)
+  }
+
+  private def readMvDef(name: String): Option[MvDef] =
+    graft.store.VersionedState.readMarker(mvDefsDir, name).map(storedMvDef(name, _))
+
+  private def storedMvDefs(): Seq[MvDef] =
+    markers(mvDefsDir).map { case (n, json) => storedMvDef(n, json) }
 
   /** A delta batch may predate later schema evolution — align it to the
     * view's declared columns, null-filling absences at the registry's
@@ -2701,18 +2429,11 @@ final class HttpGateway(
     * Creation materializes the view over everything already stored
     * (the reference's create-then-populate), after which every collect
     * folds its delta in. */
-  private def handleMvCreate(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
-    val collection = textField(root, "collection").getOrElse(
-      throw new IngestRejected("collection is required"))
-    def arr(f: String): Seq[String] =
-      Option(root.get(f)).filter(_.isArray)
-        .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-    val d = MvDef(name, collection, arr("group"), arr("values"),
-      arr("distinct"), arr("quantiles"))
+  private def handleMvCreate(req: Req): (Int, String) = {
+    val b = req.body
+    val name = b.ident("name")
+    val collection = b.need("collection")
+    val d = mvDef(name, collection, b)
     if (d.group.isEmpty)
       throw new IngestRejected("group columns are required")
     val schema = registry.sparkSchema(project, collection).getOrElse(
@@ -2739,9 +2460,8 @@ final class HttpGateway(
   /** `GET /materialized-view/get?name=…` — serve the finalized view
     * (avg from decimal partials, HLL estimates, KLL quantiles) straight
     * from the persisted |groups|-sized state: no history scan. */
-  private def handleMvGet(ex: HttpExchange): (Int, String) = {
-    val name = requireIdentifier(queryParams(ex).getOrElse("name",
-      throw new IngestRejected("name is required")))
+  private def handleMvGet(req: Req): (Int, String) = {
+    val name = req.query.ident("name")
     val d = readMvDef(name).getOrElse(
       return (404, """{"error":"materialized view not found"}"""))
     val rows = d.view.read(spark, mvStateDir(name))
@@ -2750,20 +2470,12 @@ final class HttpGateway(
     (200, rows.mkString("[", ",", "]"))
   }
 
-  private def handleMvList(ex: HttpExchange): (Int, String) = {
-    val rows = storedMvDefs().map { d =>
-      graft.store.VersionedState.readMarker(mvDefsDir, d.name).map(json =>
-        s"""{"name":${mapper.writeValueAsString(d.name)},${json.trim.stripPrefix("{")}""")
-        .getOrElse("")
-    }.filter(_.nonEmpty)
-    (200, rows.mkString("[", ",", "]"))
-  }
+  private def handleMvList(req: Req): (Int, String) =
+    (200, markers(mvDefsDir).map { case (n, json) => named("name", n, json) }
+      .mkString("[", ",", "]"))
 
-  private def handleMvDelete(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
+  private def handleMvDelete(req: Req): (Int, String) = {
+    val name = req.body.ident("name")
     val marker = new org.apache.hadoop.fs.Path(mvDefsDir, name)
     val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(marker)) (404, """{"error":"materialized view not found"}""")
@@ -2783,11 +2495,8 @@ final class HttpGateway(
     * [[graft.store.MaintenanceFence]] — two gateways racing the same
     * refresh execute it once (the loser answers `"executed": false`);
     * new data advances the head and mints a fresh claimable unit. */
-  private def handleMvRefresh(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val name = requireIdentifier(textField(root, "name")
-      .getOrElse(throw new IngestRejected("name is required")))
+  private def handleMvRefresh(req: Req): (Int, String) = {
+    val name = req.body.ident("name")
     val d = readMvDef(name).getOrElse(
       return (404, """{"error":"materialized view not found"}"""))
     val token =
@@ -2813,17 +2522,11 @@ final class HttpGateway(
 
   /** Minted key pairs of ANY project's key dir (uncached — used for
     * cross-project authorization, e.g. deleting a sibling project). */
-  private def keyPairsOf(keysDirOf: String): Seq[(String, String)] = {
-    val dir = new org.apache.hadoop.fs.Path(keysDirOf)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toIndexedSeq.map(_.getPath.getName)
-      .filterNot(_.endsWith(".tmp")).sorted
-      .flatMap(n => graft.store.VersionedState.readMarker(keysDirOf, n).map { s =>
-        val root = mapper.readTree(s)
-        (root.get("master_key").asText(), root.get("write_key").asText())
-      })
-  }
+  private def keyPairsOf(keysDirOf: String): Seq[(String, String)] =
+    markers(keysDirOf).map { case (_, json) =>
+      val pair = mapper.readTree(json)
+      (pair.get("master_key").asText(), pair.get("write_key").asText())
+    }
 
   private def apiKeyPairs(): Seq[(String, String)] = keysCache.getOrElse {
     val pairs = keyPairsOf(keysDir)
@@ -2844,8 +2547,7 @@ final class HttpGateway(
     * `{master_key, write_key}` pair (ProjectHttpService.java:151-156;
     * the two-key `ProjectApiKeys` of this reference version). Minting
     * the FIRST pair arms enforcement on every keyed door. */
-  private def handleCreateKeys(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
+  private def handleCreateKeys(req: Req): (Int, String) = {
     val master = randomKey()
     val write = randomKey()
     val node = mapper.createObjectNode()
@@ -2863,53 +2565,38 @@ final class HttpGateway(
     * named project; a pair with no keys checks nothing and is vacuously
     * true — exactly the reference's per-key `Optional.ifPresent` flow
     * (ProjectHttpService.java:158-176). */
-  private def handleCheckKeys(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val proj = Option(root.get("project")).map(_.asText()).getOrElse(
-      throw new IngestRejected("project is required"))
-    val keys = Option(root.get("keys")).filter(_.isArray).getOrElse(
-      throw new IngestRejected("keys array is required"))
+  private def handleCheckKeys(req: Req): (Int, String) = {
+    val b = req.body
+    val proj = b.needScalar("project")
+    val keys = b.array("keys").getOrElse(Fields.missing("keys array"))
     val pairs = apiKeyPairs()
     def live(k: String, role: KeyRole): Boolean =
       proj.equalsIgnoreCase(project) && (role match {
         case MasterRole => pairs.exists(_._1 == k)
         case WriteRole => pairs.exists(_._2 == k)
       })
-    val out = keys.elements().asScala.map { k =>
-      val master = Option(k.get("master_key")).filterNot(_.isNull).map(_.asText())
-      val write = Option(k.get("write_key")).filterNot(_.isNull).map(_.asText())
-      master.forall(live(_, MasterRole)) && write.forall(live(_, WriteRole))
-    }.toSeq
+    val out = keys.map { k =>
+      k.scalar("master_key").forall(live(_, MasterRole)) &&
+        k.scalar("write_key").forall(live(_, WriteRole))
+    }
     (200, out.mkString("[", ",", "]"))
   }
 
   /** `POST /project/revoke-api-keys` — body `{"project":…,
     * "master_key":…}` deletes that pair (ProjectHttpService.java:191-196).
     * Revoking the last pair returns the gateway to open dev mode. */
-  private def handleRevokeKeys(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val master = Option(root.get("master_key")).map(_.asText()).getOrElse(
-      throw new IngestRejected("master_key is required"))
+  private def handleRevokeKeys(req: Req): (Int, String) = {
+    val master = req.body.needScalar("master_key")
     if (!master.matches("[a-z0-9]+"))
       throw new IngestRejected("invalid master_key")
-    val p = new org.apache.hadoop.fs.Path(keysDir, master)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) (404, """{"error":"api key not found"}""")
-    else {
-      fs.delete(p, false)
-      keysCache = None
-      (200, """{"success":true}""")
-    }
+    if (!dropMarker(keysDir, master)) (404, """{"error":"api key not found"}""")
+    else { keysCache = None; (200, """{"success":true}""") }
   }
 
   // ---------------- project lifecycle ----------------
 
-  private def projectNameOf(root: com.fasterxml.jackson.databind.JsonNode,
-      field: String): Option[String] =
-    Option(root).flatMap(r => Option(r.get(field))).filterNot(_.isNull)
-      .map(_.asText()).filter(_.nonEmpty)
+  private def projectNameOf(b: Fields, field: String): Option[String] =
+    b.scalar(field).filter(_.nonEmpty)
 
   /** `POST /project/create` — create a project namespace
     * (ProjectHttpService.java:51-71): lock-key gate (FORBIDDEN on
@@ -2919,15 +2606,12 @@ final class HttpGateway(
     * api-key pair — persisted under the NEW project's key dir, so a
     * gateway serving that directory enforces them from its first
     * request. */
-  private def handleProjectCreate(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
-    val root = scala.util.Try(mapper.readTree(
-      new String(ex.getRequestBody.readAllBytes(), UTF_8))).getOrElse(null)
-    val presented = projectNameOf(root, "lock_key")
+  private def handleProjectCreate(req: Req): (Int, String) = {
+    val b = req.bodyIfValid
+    val presented = projectNameOf(b, "lock_key")
     if (!lockKey.forall(k => presented.contains(k)))
       return (403, """{"error":"Lock key is invalid"}""")
-    val name = projectNameOf(root, "name").getOrElse(
-      throw new IngestRejected("name is required"))
+    val name = projectNameOf(b, "name").getOrElse(Fields.missing("name"))
     if (!name.matches("^[0-9A-Za-z_]+$"))
       return (400, """{"error":"Project id is not valid. It must be """ +
         """alphanumeric and should not include empty space."}""")
@@ -2963,18 +2647,15 @@ final class HttpGateway(
     * gateway was constructed with `allowProjectDeletion` (the
     * `allow-project-deletion` config). Body `{"name":…}` defaults to
     * the gateway's own project, the reference's `context.project`. */
-  private def handleProjectDelete(ex: HttpExchange): (Int, String) = {
-    requirePost(ex)
+  private def handleProjectDelete(req: Req): (Int, String) = {
     if (!allowProjectDeletion)
       return (501, """{"error":"Project deletion is disabled, you can """ +
         """enable it with `allow-project-deletion` config."}""")
-    // collect presented keys BEFORE consuming the body (keyCandidates
-    // resets the stream); the serving project's authed() gate already
-    // passed, but a SIBLING project is authorized by ITS OWN keys
-    val candidates = keyCandidates(ex)
-    val root = scala.util.Try(mapper.readTree(
-      new String(ex.getRequestBody.readAllBytes(), UTF_8))).getOrElse(null)
-    val name = projectNameOf(root, "name").getOrElse(project)
+    // the serving project's key gate already passed, but a SIBLING
+    // project is authorized by ITS OWN keys
+    val candidates = keyCandidates(req)
+    val b = req.bodyIfValid
+    val name = projectNameOf(b, "name").getOrElse(project)
     if (!name.matches("^[0-9A-Za-z_]+$"))
       return (400, """{"error":"Project id is not valid. It must be """ +
         """alphanumeric and should not include empty space."}""")
@@ -2991,7 +2672,7 @@ final class HttpGateway(
       val allowed =
         if (target.nonEmpty) candidates.exists(k => target.exists(_._1 == k))
         else lockKey.forall(k =>
-          candidates.contains(k) || projectNameOf(root, "lock_key").contains(k))
+          candidates.contains(k) || projectNameOf(b, "lock_key").contains(k))
       if (!allowed)
         return (403, """{"error":"api key is invalid for the target project"}""")
     }
@@ -3014,14 +2695,9 @@ final class HttpGateway(
     * (ProjectHttpService.java:92-101): registry namespaces unioned with
     * the warehouse's project directories (a dir populated before any
     * explicit create still lists) and the serving project itself. */
-  private def handleProjectList(ex: HttpExchange): (Int, String) = {
-    val bodyRoot =
-      if (ex.getRequestMethod == "POST")
-        scala.util.Try(mapper.readTree(
-          new String(ex.getRequestBody.readAllBytes(), UTF_8))).getOrElse(null)
-      else null
-    val presented = queryParams(ex).get("lock_key")
-      .orElse(projectNameOf(bodyRoot, "lock_key"))
+  private def handleProjectList(req: Req): (Int, String) = {
+    val presented = req.params.get("lock_key")
+      .orElse(projectNameOf(req.bodyIfValid, "lock_key"))
     if (!lockKey.forall(k => presented.contains(k)))
       return (403, """{"error":"Lock key is invalid"}""")
     val dirs = Option(new java.io.File(warehouse).listFiles()).toSeq.flatten
@@ -3031,61 +2707,39 @@ final class HttpGateway(
     (200, mapper.writeValueAsString(arr))
   }
 
-  private sealed trait KeyRole
-  private case object MasterRole extends KeyRole
-  private case object WriteRole extends KeyRole
-
   /** All key material a request presents: `api_key`/`master_key`/
     * `write_key` as query params (plus the pixel's `api.api_key`) or
-    * headers, and — for JSON bodies — the envelope's `api` node or a
-    * top-level `api_key`/`master_key` property. Reading the body
-    * buffers it back onto the exchange so the handler's own read still
-    * sees it. */
-  private def keyCandidates(ex: HttpExchange): Seq[String] = {
-    val names = Seq("api_key", "master_key", "write_key", "api.api_key")
-    val qp = queryParams(ex)
-    val fromQuery = names.flatMap(qp.get)
-    val fromHeaders = names.flatMap(n => Option(ex.getRequestHeaders.getFirst(n)))
-    val fromBody =
-      if (ex.getRequestMethod != "POST") Nil
-      else {
-        val bytes = ex.getRequestBody.readAllBytes()
-        ex.setStreams(new java.io.ByteArrayInputStream(bytes), null)
-        scala.util.Try(mapper.readTree(new String(bytes, UTF_8))).toOption
-          .filter(r => r != null && r.isObject).toSeq.flatMap { r =>
-            val direct = Seq("api_key", "master_key", "write_key")
-              .flatMap(n => Option(r.get(n)).filterNot(_.isNull).map(_.asText()))
-            val api = Option(r.get("api")).filter(_.isObject).toSeq.flatMap(a =>
-              Seq("api_key", "master_key", "write_key")
-                .flatMap(n => Option(a.get(n)).filterNot(_.isNull).map(_.asText())))
-            direct ++ api
-          }
-      }
-    (fromQuery ++ fromHeaders ++ fromBody).filter(_.nonEmpty).distinct
+    * headers, and — for JSON POST bodies — the envelope's `api` node or
+    * a top-level `api_key`/`master_key` property. The body is the
+    * request's one buffered copy, parsed once for the key check and
+    * the handler both. */
+  private def keyCandidates(req: Req): Seq[String] = {
+    val names = Seq("api_key", "master_key", "write_key")
+    val outside = (names :+ "api.api_key").flatMap(n =>
+      req.params.get(n) ++ Option(req.ex.getRequestHeaders.getFirst(n)))
+    val b = req.bodyIfValid
+    val fromBody = names.flatMap(b.scalar) ++
+      b.obj("api").toSeq.flatMap(a => names.flatMap(a.scalar))
+    (outside ++ fromBody).filter(_.nonEmpty).distinct
   }
 
   /** True when the request may pass a door of `role`: open gateway (no
     * pairs minted), or a presented key whose role suffices — master
     * passes everything, write passes write doors. */
-  private def authorized(role: KeyRole, ex: HttpExchange): Boolean = {
+  private def authorized(role: KeyRole, req: Req): Boolean = {
     val pairs = apiKeyPairs()
-    pairs.isEmpty || keyCandidates(ex).exists { k =>
+    pairs.isEmpty || keyCandidates(req).exists { k =>
       pairs.exists(_._1 == k) ||
         (role == WriteRole && pairs.exists(_._2 == k))
     }
   }
-
-  private def authed(role: KeyRole)(f: HttpExchange => (Int, String))(
-      ex: HttpExchange): (Int, String) =
-    if (!authorized(role, ex)) (403, """{"error":"api key is invalid"}""")
-    else f(ex)
 
   // ---------------- admin + health ----------------
 
   /** `GET /admin/configurations` — the gateway's operational descriptor
     * (AdminHttpService.java:39-47 serves module configs; here the
     * engine's knobs that matter to a client). */
-  private def handleAdminConfig(ex: HttpExchange): (Int, String) = {
+  private def handleAdminConfig(req: Req): (Int, String) = {
     val node = mapper.createObjectNode()
     node.put("project", project)
     node.put("warehouse", warehouse)
@@ -3098,7 +2752,7 @@ final class HttpGateway(
 
   /** `GET /admin/types` — the field type registry
     * (AdminHttpService.java:78-86). */
-  private def handleAdminTypes(ex: HttpExchange): (Int, String) = {
+  private def handleAdminTypes(req: Req): (Int, String) = {
     val node = mapper.createObjectNode()
     graft.core.FieldType.all.foreach { t =>
       node.put(t.name, t.spark.catalogString)
@@ -3109,7 +2763,7 @@ final class HttpGateway(
   /** `GET /admin/event_mappers` — descriptors of the enrichment stages
     * every collected batch runs through (AdminHttpService.java:49-76
     * lists registered `EventMapper`s), plus the stored custom mappers. */
-  private def handleAdminMappers(ex: HttpExchange): (Int, String) = {
+  private def handleAdminMappers(req: Req): (Int, String) = {
     val builtIn = Seq(
       "timestamp_skew" -> "clamp client clock skew against server time (M1)",
       "user_agent" -> "parse user agent, reject spiders (M2)",
@@ -3131,22 +2785,22 @@ final class HttpGateway(
     * installation-lock check (AdminHttpService.java:89-91): true iff
     * the presented key matches the configured one (no lock configured
     * accepts anything). */
-  private def handleLockKey(ex: HttpExchange): (Int, String) = {
-    val presented = queryParams(ex).get("lock_key")
+  private def handleLockKey(req: Req): (Int, String) = {
+    val presented = req.params.get("lock_key")
     (200, lockKey.forall(k => presented.contains(k)).toString)
   }
 
   /** `GET /` — liveness (RakamHealthCheckModule). Registered at the
     * root context, so it also serves every unmatched path its 404. */
-  private def handleHealth(ex: HttpExchange): (Int, String) =
-    if (ex.getRequestURI.getPath == "/")
+  private def handleHealth(req: Req): (Int, String) =
+    if (req.ex.getRequestURI.getPath == "/")
       (200, s"""{"status":"ok","project":${mapper.writeValueAsString(project)}}""")
     else (404, """{"error":"not found"}""")
 
   /** `POST /project/exception` — the reference's deliberate-failure
     * door (ProjectHttpService.java:104-107 throws NPE): exercises the
     * 500 path so clients can verify error handling. */
-  private def handleException(ex: HttpExchange): (Int, String) =
+  private def handleException(req: Req): (Int, String) =
     throw new NullPointerException("project/exception test door")
 
   // ---------------- plumbing ----------------
@@ -3335,32 +2989,17 @@ final class HttpGateway(
     * "start"?:…, "end"?:…}` (start/end epoch millis or ISO-8601).
     * Returns the newest 100 entries for the prefix, created DESC, the
     * reference's contract (JSCodeJDBCLoggerService.java:53-88: strict
-    * `created > start AND created < end`, LIMIT 100, master key). */
-  private def handleJsGetLogs(ex: HttpExchange): (Int, String) =
-    serveJsLogs(ex, "prefix")
-
-  /** `POST /custom-event-mapper/get_logs` — the same store addressed by
-    * mapper `name` (the reference addresses by row id with prefix
-    * "custom-event-mapper.<id>", CustomEventMapperHttpService.java:
-    * 195-200; names are this engine's mapper identity). */
-  private def handleMapperGetLogs(ex: HttpExchange): (Int, String) =
-    serveJsLogs(ex, "name")
-
-  private def serveJsLogs(ex: HttpExchange, prefixField: String): (Int, String) = {
-    requirePost(ex)
-    val root = requestJson(ex)
-    val prefix = textField(root, prefixField)
-      .getOrElse(throw new IngestRejected(s"$prefixField is required"))
-    def instant(field: String): Option[Long] =
-      Option(root.get(field)).filter(!_.isNull).map { n =>
-        if (n.isNumber) n.asLong()
-        else try java.time.Instant.parse(n.asText()).toEpochMilli
-        catch { case _: java.time.format.DateTimeParseException =>
-          throw new IngestRejected(s"$field must be epoch millis or ISO-8601")
-        }
-      }
-    val start = instant("start")
-    val end = instant("end")
+    * `created > start AND created < end`, LIMIT 100, master key).
+    * `POST /custom-event-mapper/get_logs` serves the same store
+    * addressed by mapper `name` (the reference addresses by row id
+    * with prefix "custom-event-mapper.<id>",
+    * CustomEventMapperHttpService.java:195-200; names are this
+    * engine's mapper identity). */
+  private def serveJsLogs(prefixField: String)(req: Req): (Int, String) = {
+    val b = req.body
+    val prefix = b.need(prefixField)
+    val start = b.instant("start")
+    val end = b.instant("end")
     val dir = new org.apache.hadoop.fs.Path(jsLogsDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     import scala.jdk.CollectionConverters._
@@ -3394,42 +3033,6 @@ final class HttpGateway(
     (200, out.mkString("[", ",", "]"))
   }
 
-  private def requirePost(ex: HttpExchange): Unit =
-    if (ex.getRequestMethod != "POST")
-      throw new IngestRejected("POST required")
-
-  /** Parses the REQUEST body as JSON: malformed client input is the
-    * client's 400 (the reference's RakamHttpRequestHandler contract),
-    * never a raw Jackson 500 — while Jackson failures on SERVER-side
-    * state (stored hook/mapper/MV definitions) deliberately stay 500s,
-    * because there a parse error means server fault, not client
-    * fault. */
-  private def requestJson(ex: HttpExchange): com.fasterxml.jackson.databind.JsonNode = {
-    val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-    try mapper.readTree(body)
-    catch {
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        throw new IngestRejected(s"invalid JSON: ${e.getOriginalMessage}")
-    }
-  }
-
-  /** The NullNode.asText() trap guard for request fields: a JSON null
-    * or non-string node must read as ABSENT, not as the literal string
-    * "null" (which would, e.g., create a collection named "null"). */
-  private def textField(root: com.fasterxml.jackson.databind.JsonNode,
-      name: String): Option[String] =
-    Option(root).flatMap(r => Option(r.get(name)))
-      .filter(_.isTextual).map(_.asText())
-
-  private def queryParams(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getQuery).getOrElse("").split('&')
-      .filter(_.contains("="))
-      .map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        java.net.URLDecoder.decode(k, UTF_8) ->
-          java.net.URLDecoder.decode(v, UTF_8)
-      }.toMap
-
   /** The reference's CORS surface (OptionMethodHttpService.java:20-28
     * answers every OPTIONS preflight; browser SDK collects depend on
     * it): preflights short-circuit with the allow headers, and every
@@ -3448,12 +3051,22 @@ final class HttpGateway(
     }
   }
 
-  private def route(f: HttpExchange => (Int, String)):
-      com.sun.net.httpserver.HttpHandler = { ex =>
+  /** What a handler returns once it has written its own response (the
+    * pixel's image): dispatch then writes nothing more. */
+  private val Answered: (Int, String) = (0, "")
+
+  /** Serves one door: CORS preflight, then the key role, then the
+    * method rule, then the handler. Rejections map to their statuses;
+    * anything else is a logged 500. */
+  private def dispatch(d: Door): com.sun.net.httpserver.HttpHandler = { ex =>
     if (!corsPreflight(ex)) {
+      val req = new Req(ex, mapper)
       val (code, body) =
-        try f(ex)
-        catch {
+        try {
+          if (!d.role.forall(authorized(_, req))) (403, """{"error":"api key is invalid"}""")
+          else if (d.postOnly && !req.isPost) Fields.reject("POST required")
+          else d.handler(req)
+        } catch {
           case e: HttpGateway.ForbiddenRejected =>
             (403, s"""{"error":${mapper.writeValueAsString(e.getMessage)}}""")
           case e: BatchSources.PayloadTooLarge =>
@@ -3464,26 +3077,37 @@ final class HttpGateway(
             logServerError(ex, e)
             (500, s"""{"error":${mapper.writeValueAsString(String.valueOf(e))}}""")
         }
-      val bytes = body.getBytes(UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(code, bytes.length.toLong)
-      val out = ex.getResponseBody
-      try out.write(bytes) finally out.close()
-    }
-  }
-
-  /** A handler that writes its own response (the pixel door's gif). */
-  private def rawRoute(f: HttpExchange => Unit):
-      com.sun.net.httpserver.HttpHandler = { ex =>
-    if (!corsPreflight(ex)) {
-      try f(ex)
-      catch {
-        case NonFatal(e) =>
-          logServerError(ex, e)
-          ex.close()
+      if ((code, body) != Answered) {
+        val bytes = body.getBytes(UTF_8)
+        ex.getResponseHeaders.set("Content-Type", "application/json")
+        ex.sendResponseHeaders(code, bytes.length.toLong)
+        val out = ex.getResponseBody
+        try out.write(bytes) finally out.close()
       }
     }
   }
+
+  /** Every marker file stored under `dir` (one per hook, mapper, view
+    * or key pair) as (name, content), by name. */
+  private def markers(dir: String): Seq[(String, String)] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toIndexedSeq.map(_.getPath.getName)
+      .filterNot(_.endsWith(".tmp")).sorted
+      .flatMap(n => graft.store.VersionedState.readMarker(dir, n).map(n -> _))
+  }
+
+  /** Deletes the marker `name` under `dir`; false when there is none. */
+  private def dropMarker(dir: String, name: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir, name)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(p) && { fs.delete(p, false); true }
+  }
+
+  /** A stored marker's JSON object with its name added as `field`. */
+  private def named(field: String, name: String, json: String): String =
+    s"""{"$field":${mapper.writeValueAsString(name)},${json.trim.stripPrefix("{")}"""
 
   /** Every unhandled failure leaves a trace: method, path and the
     * exception with its stack, at ERROR. */
@@ -3494,6 +3118,14 @@ final class HttpGateway(
 
 object HttpGateway {
   private val log = org.apache.logging.log4j.LogManager.getLogger(classOf[HttpGateway])
+
+  private[api] sealed trait KeyRole
+  private[api] case object MasterRole extends KeyRole
+  private[api] case object WriteRole extends KeyRole
+
+  /** One door of the door table ([[HttpGateway.doors]]). */
+  private[api] final case class Door(path: String, postOnly: Boolean,
+      role: Option[KeyRole], handler: Req => (Int, String))
 
   /** Request-level rejection mapped to 403 — the reference's FORBIDDEN
     * (spiders, UserAgentEventMapper.java:87-90). */

@@ -159,7 +159,10 @@ object AnnIndex extends PostingsStore {
     }
     val newGen = gen + 1
     rebase(path, deferDeletion = false) { v =>
-      cents.write.mode("errorifexists").parquet(centroidsDirOf(path, newGen))
+      // overwrite: nothing of generation `newGen` is live until `_GEN`
+      // and the pointer flip, and a reseed that crashed before its flip
+      // must be retryable
+      cents.write.mode("overwrite").parquet(centroidsDirOf(path, newGen))
       val reread = spark.read.parquet(centroidsDirOf(path, newGen))
       writePostingsDir(assign(posts, reread), path, v)
       VersionedState.writeMarker(path, "_GEN", s"$newGen:$v")

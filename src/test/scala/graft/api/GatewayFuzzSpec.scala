@@ -22,44 +22,16 @@ class GatewayFuzzSpec extends SparkSpec {
         .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
 
-  private val doors = Seq(
-    "/event/collect", "/event/batch", "/event/bulk", "/event/bulk/remote",
-    "/event/copy", "/event/hook/collect", "/event/hook/test",
-    "/event/hook/activate", "/event/hook/delete",
-    "/custom-event-mapper/create", "/custom-event-mapper/update",
-    "/custom-event-mapper/delete", "/custom-event-mapper/test",
-    "/javascript-logger/get_logs", "/custom-event-mapper/get_logs",
-    "/user/batch", "/user/batch_operations", "/user/set_properties",
-    "/user/set_properties_once", "/user/increment_property",
-    "/user/unset_properties", "/user/get", "/user/delete",
-    "/analysis/funnel", "/analysis/retention", "/analysis/paths",
-    "/analysis/attribution", "/analysis/statistics",
-    "/materialized-view/create", "/materialized-view/get",
-    "/materialized-view/refresh", "/materialized-view/delete",
-    "/query/execute", "/subscription/create", "/subscription/poll",
-    "/subscription/delete", "/project/create", "/project/delete",
-    "/project/schema/add", "/project/schema/add/custom",
-    // /project/exception is excluded: it EXISTS to throw (the
-    // reference's exception-test door) — the one door whose 500 is
-    // its contract. /project/create-api-keys runs LAST (see below):
-    // minting keys ARMS role enforcement, and fuzzing it mid-sweep
-    // would leave every later authed door answering 403 at the auth
-    // gate, never reaching its handler.
-    "/project/check-api-keys", "/project/revoke-api-keys",
-    "/index/dedup/create", "/index/dedup/append", "/index/dedup/probe",
-    "/index/substring/create", "/index/substring/append",
-    "/index/substring/trim",
-    "/index/ann/create", "/index/ann/append", "/index/ann/query",
-    "/index/ann/reseed", "/index/ann/compact", "/index/ann/stats",
-    "/index/text/create", "/index/text/append", "/index/text/search",
-    "/index/text/phrase", "/index/text/compact", "/index/text/stats",
-    "/index/vocab/create", "/index/vocab/append", "/index/vocab/pairs",
-    "/index/vocab/train", "/index/vocab/drift", "/index/vocab/compact",
-    "/tokenizer/train", "/tokenizer/chunks", "/tokenizer/drift",
-    "/corpus/funnel", "/corpus/probe/train",
-    "/admin/compact", "/admin/vacuum", "/admin/versions",
-    "/admin/pin", "/admin/diff",
-    "/analysis/segmentation", "/admin/lock_key")
+  /** Every door in the gateway's door table but two.
+    * `/project/exception` EXISTS to throw (the reference's
+    * exception-test door) — the one door whose 500 is its contract.
+    * `/project/create-api-keys` runs LAST (see below): minting keys
+    * ARMS role enforcement, and fuzzing it mid-sweep would leave every
+    * later authed door answering 403 at the auth gate, never reaching
+    * its handler. */
+  private def doors(gw: HttpGateway): Seq[String] =
+    gw.doors.map(_.path)
+      .filterNot(Set("/project/exception", "/project/create-api-keys"))
 
   private val bodies = Seq(
     "",
@@ -78,7 +50,20 @@ class GatewayFuzzSpec extends SparkSpec {
     """{"collection":"c","properties":{"_time":99999999999999999999,"d":"2026-01-10"}}""",
     """{"collection":"c","properties":{"_time":-1e30,"d":-1e30}}""",
     """{"events":[{"collection":"c","properties":{"d":"2026-01-10"}},""" +
-      """{"collection":"c","properties":{"_time":-1e30,"d":99999999999}}]}""")
+      """{"collection":"c","properties":{"_time":-1e30,"d":99999999999}}]}""",
+    // mistyped fields, each with what its door needs to reach it: a
+    // JSON null must read as absent and a non-integer never as a
+    // number (the create doors make index `fz` for the appends after)
+    """{"identifier":null,"code":"function module(p, b, h) { return null; }"}""",
+    """{"name":null,"docs":[{"doc_id":1,"text":"a b a b"}]}""",
+    """{"name":"fz","batch_id":"a","docs":[{"doc_id":1,"text":"a b a b"}]}""",
+    """{"name":"fz","batch_id":"b","docs":[{"doc_id":2,"text":"c d c d"}]}""",
+    """{"name":"fz","k":"a","vector":[1.0,2.0],"terms":["a"],"phrase":["a"],""" +
+      """"docs":[{"doc_id":1,"text":"a b"}]}""",
+    """{"id":"u1","time":"a","property":"p","properties":{"p":"1"}}""",
+    """[{"id":null,"set_properties":{"p":"1"}}]""",
+    """{"collection":"c","grace_ms":"10m"}""",
+    """{"query":"SELECT 1","limit":-1}""")
 
   test("every door answers hostile bodies with a client status, never a 5xx") {
     val registry = SchemaRegistry.inMemory()
@@ -86,7 +71,7 @@ class GatewayFuzzSpec extends SparkSpec {
     val gw = new HttpGateway(spark, registry, warehouse, "demo")
     val port = gw.start()
     try {
-      doors.foreach { door =>
+      doors(gw).foreach { door =>
         bodies.zipWithIndex.foreach { case (body, i) =>
           val r = post(port, door, body)
           // 501 is a DELIBERATE contract (project deletion disabled —

@@ -2604,4 +2604,109 @@ class HttpGatewaySpec extends SparkSpec {
       assert(n.contains("\"n\":5"), n)
     } finally gw.stop()
   }
+
+  test("each typed request read answers a mistyped field with a 400 and " +
+    "its message: JSON null is absent, a non-integer is never a number") {
+    withGateway { (_, port) =>
+      def rejects(r: HttpResponse[String], message: String): Unit =
+        assert(r.statusCode() == 400 && r.body().contains(message),
+          s"${r.statusCode()} ${r.body()}")
+      // required text and required scalar: null never reads as "null"
+      rejects(post(port, "/user/set_properties",
+        """{"id": null, "properties": {"p": "1"}}"""), "id is required")
+      rejects(post(port, "/event/hook/activate",
+        """{"identifier": null, "code": "function module() { return null; }"}"""),
+        "identifier is required")
+      rejects(post(port, "/materialized-view/delete", """{"name": "a/b"}"""),
+        "identifier must be alphanumeric")
+      // integers, with and without a floor
+      rejects(post(port, "/user/increment_property",
+        """{"id": "u", "property": "p", "time": "abc"}"""),
+        "time must be an integer, got 'abc'")
+      rejects(post(port, "/admin/vacuum", """{"collection": "c", "grace_ms": -1}"""),
+        "grace_ms must be >= 0")
+      // row counts: clamped at the top, or bounded at both ends
+      rejects(post(port, "/query/execute", """{"query": "SELECT 1", "limit": -1}"""),
+        "limit must be >= 1")
+      rejects(post(port, "/query/execute", """{"query": "SELECT 1", "limit": "x"}"""),
+        "limit must be an integer, got 'x'")
+      rejects(post(port, "/tokenizer/train", """{"k": 65, "docs": []}"""),
+        "k must be between 1 and 64")
+      // string arrays and string maps
+      rejects(post(port, "/user/unset_properties", """{"id": "u", "properties": "p"}"""),
+        "properties array is required")
+      rejects(post(port, "/user/set_properties", """{"id": "u", "properties": ["p"]}"""),
+        "properties object is required")
+      // the query string reads through the same accessors
+      rejects(get(port, "/user/get?id=u&as_of=x"), "as_of must be an integer, got 'x'")
+      rejects(get(port, "/analysis/funnel?collection=c&steps=a&version=1.5"),
+        "version must be an integer, got '1.5'")
+      // a malformed body, and the method rule
+      rejects(post(port, "/user/delete", "{"), "invalid JSON")
+      rejects(get(port, "/user/delete"), "POST required")
+      // a limit above the ceiling is capped, not refused
+      val capped = post(port, "/query/execute", """{"query": "SELECT 1 AS one", "limit": 5000}""")
+      assert(capped.statusCode() == 200 && capped.body() == """[{"one":1}]""", capped.body())
+    }
+  }
+
+  test("a fenced append refuses a batch_id that is not an integer >= 0") {
+    withGateway { (_, port) =>
+      val docs = """"docs": [{"doc_id": 1, "text": "banana band bands"}]"""
+      for (kind <- Seq("vocab", "substring")) {
+        assert(post(port, s"/index/$kind/create", s"""{"name": "f", $docs}""")
+          .statusCode() == 200)
+        // read as 0, the first mistyped id would be folded in and the
+        // second skipped as its replay, each answered 200
+        val a = post(port, s"/index/$kind/append",
+          """{"name": "f", "batch_id": "a", "docs": [{"doc_id": 2, "text": "qqq qqq"}]}""")
+        val b = post(port, s"/index/$kind/append",
+          """{"name": "f", "batch_id": "b", "docs": [{"doc_id": 3, "text": "rrr rrr"}]}""")
+        assert(a.statusCode() == 400 && a.body().contains("batch_id must be an integer"),
+          s"$kind: ${a.body()}")
+        assert(b.statusCode() == 400, s"$kind: ${b.body()}")
+        val neg = post(port, s"/index/$kind/append",
+          """{"name": "f", "batch_id": -1, "docs": [{"doc_id": 4, "text": "sss sss"}]}""")
+        assert(neg.statusCode() == 400 && neg.body().contains("batch_id must be >= 0"),
+          s"$kind: ${neg.body()}")
+        val ok = post(port, s"/index/$kind/append",
+          """{"name": "f", "batch_id": 0, "docs": [{"doc_id": 5, "text": "ttt ttt"}]}""")
+        assert(ok.statusCode() == 200 && ok.body().contains(""""high_water":0"""),
+          s"$kind: ${ok.body()}")
+      }
+    }
+  }
+
+  test("/admin/vacuum with a mistyped grace_ms is a 400 that deletes nothing") {
+    val registry = SchemaRegistry.inMemory()
+    val warehouse = graft.TempDirs.scratch("graft-http").toString
+    val gw = new HttpGateway(spark, registry, warehouse, "demo")
+    val port = gw.start()
+    def files(): Set[String] = {
+      val root = java.nio.file.Paths.get(
+        graft.store.EventStore.tablePath(warehouse, "demo", "pv"))
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      finally s.close()
+    }
+    try {
+      for (i <- 1 to 2)
+        assert(post(port, "/event/collect",
+          s"""{"collection": "pv", "properties": {"_user": "u$i", "_time": "2026-01-1$i 10:00:00.000"}}""")
+          .statusCode() == 200)
+      assert(post(port, "/admin/compact", """{"collection": "pv", "month": "2026-01"}""")
+        .statusCode() == 200)
+      // the two superseded files stay on disk for pinned readers
+      val before = files()
+      assert(before.size == 3, before)
+      // read as 0, "abc" would reap the just-superseded files at once
+      val bad = post(port, "/admin/vacuum", """{"collection": "pv", "grace_ms": "abc"}""")
+      assert(bad.statusCode() == 400 && bad.body().contains("grace_ms must be an integer"),
+        bad.body())
+      assert(files() == before)
+      val reap = post(port, "/admin/vacuum", """{"collection": "pv", "grace_ms": 0}""")
+      assert(reap.statusCode() == 200 && reap.body().contains(""""deleted_files":2"""),
+        reap.body())
+    } finally gw.stop()
+  }
 }

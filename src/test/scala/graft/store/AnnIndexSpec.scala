@@ -161,6 +161,30 @@ class AnnIndexSpec extends SparkSpec {
       "crash-stranded markers broke the serving index")
   }
 
+  test("a reseed that crashed before its flip can be retried") {
+    val dir = freshDir()
+    AnnIndex.initialize(emb, dir)
+    // the crashed attempt left generation 2's centroids and its `_GEN`
+    // marker, but never flipped the pointer to its version
+    spark.read.parquet(s"$dir/centroids").write.parquet(s"$dir/centroids_g2")
+    VersionedState.writeMarker(dir, "_GEN", "2:99")
+    val before = topk(dir)
+    assert(before.size == 10, "the unflipped generation broke serving")
+
+    AnnIndex.reseed(spark, dir)
+    assert(VersionedState.currentVersion(dir) == 2L)
+    assert(VersionedState.readMarker(dir, "_GEN").contains("2:2"))
+    val g1 = spark.read.parquet(s"$dir/centroids")
+      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    val g2 = spark.read.parquet(s"$dir/centroids_g2")
+      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    assert(g1.keySet == g2.keySet)
+    assert(g1.keySet.exists(c => g1(c) != g2(c)),
+      "the retry kept the crashed attempt's stray centroids")
+    assert(AnnIndex.postings(spark, dir).count() == emb.count())
+    assert(topk(dir).size == 10)
+  }
+
   test("maintain wired through a real stream appends each micro-batch") {
     val dir = freshDir()
     val inDir = graft.TempDirs.scratch("graft-ann-in").toString
