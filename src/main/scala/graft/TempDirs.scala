@@ -18,12 +18,8 @@ object TempDirs {
     scala.collection.mutable.HashMap.empty[String, (Path, Option[Path])]
 
   private def deleteTree(root: Path): Unit =
-    try {
-      if (Files.exists(root)) {
-        Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { Files.deleteIfExists(p); () })
-      }
-    } catch { case _: Exception => () } // best-effort
+    try FileTree.delete(root.toFile)
+    catch { case _: Exception => () } // best-effort
 
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
     created.forEach(deleteTree)

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.{QueryDef, Tables}
+import graft.api.Analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,15 +54,10 @@ object CoreQueries {
     * aggregation is negligible even at 100 TB; countDistinct adds an
     * Expand but cardinality stays bounded by (days × types × users).
     */
-  def a4Segmentation(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir, "events")
-      .groupBy(date_trunc("day", $"ts").as("day"), $"event_type")
-      .agg(
-        count(lit(1)).as("n_events"),
-        countDistinct($"user_id").as("n_users"),
-        dsum($"value").as("sum_value"))
-  }
+  def a4Segmentation(spark: SparkSession, dir: String): DataFrame =
+    Analytics.segmentation(Tables(spark, dir, "events"),
+      "user_id", "ts", "day", Seq("event_type"), Some("value"))
+      .withColumnRenamed("bucket", "day")
 
   val a4Sql: String =
     s"""SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, event_type,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** The parameterized analytics surface — the oracle-proven query shapes
   * of `graft.analytics` generalized over any events DataFrame (caller
   * names the user/time/type columns, steps, grains). These are what an
-  * application calls. The registry's a6/a7/w1/w2 entries call them
+  * application calls. The registry's a4/a6/a7/w1/w2 entries call them
   * directly and the rest share the `*From` cores they delegate to, so
   * the DuckDB oracle hash-verifies the builders applications get. Every
   * builder keeps the registry's scale posture: windows over (user, ts),
@@ -15,11 +15,15 @@ import org.apache.spark.sql.functions._
   */
 object Analytics {
 
-  /** Segmentation: time-bucketed counts/sums per dimension. */
-  def segmentation(events: DataFrame, tsCol: String, grain: String,
-      dims: Seq[String], valueCol: Option[String] = None): DataFrame = {
+  /** Segmentation: per time bucket and dimension values, the event
+    * count, the exact distinct-user count and, with `valueCol`, the
+    * decimal-exact sum (the registry's a4 is this call). */
+  def segmentation(events: DataFrame, userCol: String, tsCol: String,
+      grain: String, dims: Seq[String],
+      valueCol: Option[String] = None): DataFrame = {
     val byCols = date_trunc(grain, col(tsCol)).as("bucket") +: dims.map(col)
-    val aggs = count(lit(1)).as("n_events") +:
+    val aggs = Seq(count(lit(1)).as("n_events"),
+      countDistinct(col(userCol)).as("n_users")) ++
       valueCol.toSeq.map(v => graft.analytics.dsum(col(v)).as(s"sum_$v"))
     events.groupBy(byCols: _*).agg(aggs.head, aggs.tail: _*)
   }

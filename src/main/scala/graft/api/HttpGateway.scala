@@ -147,8 +147,9 @@ final class HttpGateway(
     geoRangesV6: Option[org.apache.spark.sql.DataFrame] = None,
     // hosts the referrer mapper classifies as internal traffic
     internalHosts: Seq[String] = Seq.empty,
-    // collections the batch door ignores, lowercased — the reference's
-    // ProjectConfig.excludeEvents (EventCollectionHttpService.java:573)
+    // collections the batch door ignores, matched by normalized name —
+    // the reference's ProjectConfig.excludeEvents
+    // (EventCollectionHttpService.java:573)
     excludedCollections: Set[String] = Set.empty,
     // injected clock for the timestamp mapper (deterministic tests)
     now: () => Long = () => System.currentTimeMillis()) {
@@ -232,11 +233,11 @@ final class HttpGateway(
     var rolledForward = false
     if (tmp.isDirectory) {
       if (!main.exists()) { rolledForward = tmp.renameTo(main) }
-      else if (pastGrace(tmp)) EventStore.rmrfDir(tmp)
+      else if (pastGrace(tmp)) graft.FileTree.delete(tmp)
     }
     if (aside.isDirectory) {
       if (!main.exists()) { aside.renameTo(main): Unit }
-      else if (rolledForward || pastGrace(aside)) EventStore.rmrfDir(aside)
+      else if (rolledForward || pastGrace(aside)) graft.FileTree.delete(aside)
     }
   }
 
@@ -427,19 +428,8 @@ final class HttpGateway(
     * events are stored, shape-failed ones come back as a 409 with
     * their indexes; excluded collections are ignored, not failed. */
   private def handleBatch(req: Req): (Int, String) = {
-    val env = BatchSources.parseEnvelope(req.text)
-    val checked = env.events.zipWithIndex.map { case (e, i) =>
-      val node = mapper.readTree(e)
-      val ok = node.isObject &&
-        Option(node.get("collection")).exists(_.isTextual) &&
-        Option(node.get("properties")).exists(_.isObject)
-      (e, node, i, ok)
-    }
-    val failed = checked.collect { case (_, _, i, false) => i }
-    val good = checked.collect {
-      case (e, node, _, true) if !excludedCollections.contains(
-        node.get("collection").asText().toLowerCase(java.util.Locale.ROOT)) => e
-    }
+    val (good, failed) = BatchSources.checkEvents(
+      BatchSources.parseEnvelope(req.text).events, excludedCollections)
     val n =
       if (good.isEmpty) 0L
       else ingestAndStore(resolveSentinels(good, req.ex), cfCountry = cfCountry(req.ex))
@@ -1175,6 +1165,8 @@ final class HttpGateway(
     val stored = storedMaybeAt(q.version, collection)
     if (!stored.columns.contains(dimension))
       throw new IngestRejected(s"unknown dimension '$dimension'")
+    // not Analytics.segmentation: this door has no time bucket, and its
+    // `users`/`events` response fields are API
     val seg = stored.groupBy(col(dimension))
       .agg(countDistinct(col("_user")).as("users"),
         count(lit(1)).as("events"))
@@ -2676,16 +2668,12 @@ final class HttpGateway(
       if (!allowed)
         return (403, """{"error":"api key is invalid for the target project"}""")
     }
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrf)
-      f.delete(): Unit
-    }
     // the one mutation that destroys a whole tree serializes with every
     // writeLock-guarded writer (ingest, compaction, index maintenance) —
-    // an unsynchronized rmrf raced parquet writers recreating the dirs
+    // an unsynchronized delete raced parquet writers recreating the dirs
     writeLock.synchronized {
       registry.deleteProject(proj)
-      rmrf(dir)
+      graft.FileTree.delete(dir)
     }
     if (proj == project) keysCache = None // own keys dropped with the dir
     (200, """{"success":true}""")

@@ -1,7 +1,7 @@
 package graft.enrich.js
 
 import graft.core.FieldType
-import graft.enrich.{EventMapper, EventProxy}
+import graft.enrich.EventMapper
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -89,6 +89,21 @@ object JsCodeCompiler {
         "util" -> util) ++ extraGlobals,
       maxSteps, now)
   }
+}
+
+/** One row's fields under the reference's `EventProxy` contract
+  * (CustomEventMapperHttpService.java:363-384): `get`/`set`, `setOnce`
+  * writes only a field that is absent or null, `drop` removes the event
+  * from the batch. */
+private[js] final class EventProxy(initial: Map[String, Any]) {
+  private val fields = mutable.Map(initial.toSeq: _*)
+  var dropped = false
+
+  def get(name: String): Any = fields.get(name).orNull
+  def set(name: String, value: Any): Unit = fields(name) = value
+  def setOnce(name: String, value: Any): Unit =
+    if (get(name) == null) fields(name) = value
+  def drop(): Unit = dropped = true
 }
 
 /** Wraps the row-level [[EventProxy]] as a script host object. */
@@ -295,7 +310,7 @@ final case class JsCustomMapper(
       // script) is reused across chunks.
       it.grouped(chunkRows).flatMap { chunk =>
         val proxies = chunk.map { row =>
-          new EventProxy(coll,
+          new EventProxy(
             inNames.zipWithIndex.map { case (n, i) => n -> row.get(i) }.toMap)
         }
         val rowIt = proxies.iterator

@@ -1,8 +1,7 @@
 package graft.ingest
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.ObjectNode
-import graft.core.SchemaRegistry
+import graft.core.{Names, SchemaRegistry}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
@@ -218,51 +217,30 @@ object BatchSources {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  final case class BatchResult(
-      result: JsonIngest.IngestResult,
-      /** Indexes of events that failed validation — the 409 partial-
-        * failure contract; empty = all stored. */
-      failedIndexes: Seq[Int])
-
-  /** /event/batch: envelope in, events through the standard pipeline,
-    * per-event failures reported by index. An event fails its index when
-    * it is not an object with a string `collection` and an object
-    * `properties` — the shape JsonEventDeserializer rejects outright. */
-  def batchIngest(spark: SparkSession, registry: SchemaRegistry,
-      project: String, body: String,
-      excludedCollections: Set[String] = Set.empty): BatchResult = {
-    val env = parseEnvelope(body)
-    val checked = env.events.zipWithIndex.map { case (e, i) =>
+  /** The `/event/batch` per-event check, the 409 partial-failure
+    * contract. An event fails its index unless it is an object with a
+    * string `collection` and an object `properties`, the shape
+    * JsonEventDeserializer accepts; an absent `properties` fails too,
+    * as the reference throws "properties is null"
+    * (JsonEventDeserializer.java:315,340). An event of an excluded
+    * collection is dropped, not failed (P2 at the batch door); both
+    * names are compared as ingest stores them
+    * ([[Names.normalizeCollection]]). Returns the events to ingest, in
+    * order, and the failed indexes. */
+  def checkEvents(events: Seq[String], excludedCollections: Set[String])
+      : (Seq[String], Seq[Int]) = {
+    val excluded = excludedCollections.flatMap(Names.normalizeCollection(_).toOption)
+    val kept = Vector.newBuilder[String]
+    val failed = Vector.newBuilder[Int]
+    events.zipWithIndex.foreach { case (e, i) =>
       val node = mapper.readTree(e)
-      // `properties` must be PRESENT and an object — the reference
-      // throws "properties is null" on absence
-      // (JsonEventDeserializer.java:315,340)
-      val ok = node.isObject &&
-        Option(node.get("collection")).exists(_.isTextual) &&
-        Option(node.get("properties")).exists(_.isObject)
-      (e, node, i, ok)
+      val collection = Option(node.get("collection")).filter(_.isTextual)
+      if (!node.isObject || collection.isEmpty ||
+          !Option(node.get("properties")).exists(_.isObject)) failed += i
+      else if (!Names.normalizeCollection(collection.get.asText()).exists(excluded))
+        kept += e
     }
-    val failed = checked.collect { case (_, _, i, false) => i }
-    // excluded collections are ignored, not failed (P2 at the batch door)
-    val good = checked.collect {
-      case (e, node, _, true) if !excludedCollections.contains(
-        node.get("collection").asText().toLowerCase) => withApi(e, env)
-    }
-    val res = JsonIngest.ingest(spark, registry, project,
-      spark.sparkContext.parallelize(good, math.max(1, good.size / 5000 + 1)))
-    BatchResult(res, failed)
-  }
-
-  /** Stamp the envelope's api context onto each event line so the
-    * dead-letter identity (event_id via api.uuid) flows through. */
-  private def withApi(eventJson: String, env: Envelope): String = {
-    val node = mapper.readTree(eventJson).asInstanceOf[ObjectNode]
-    if (node.get("api") == null) {
-      val api = node.putObject("api")
-      env.apiKey.foreach(api.put("api_key", _))
-      env.uploadTime.foreach(api.put("upload_time", _))
-    }
-    mapper.writeValueAsString(node)
+    (kept.result(), failed.result())
   }
 
   // ---------------- S6: remote bulk ----------------

@@ -505,71 +505,6 @@ object JsonIngest {
     IngestResult(byCollection, dead, rejected)
   }
 
-  // ---- single-pass unified fan-out ----
-
-  /** Physical column name in the unified batch DataFrame: the plain field
-    * name when every collection in the batch agrees on its type, else
-    * name-mangled with the type so conflicting collections don't share a
-    * physical column (the reference never shares columns — one table per
-    * collection — so this only arises in the unified layout). */
-  private[graft] def unifiedColumnName(name: String, tpe: String,
-      conflicted: Set[String]): String =
-    if (conflicted(name)) s"${name}__${tpe.toLowerCase.replaceAll("[^a-z0-9]", "_")}"
-    else name
-
-  /** One-pass fan-out (the judge's O(1)-jobs-per-batch shape): instead of
-    * C filter-scans of the parsed batch, all collections are written in a
-    * SINGLE DataFrame over the union of their schemas, partitioned by
-    * `_collection` — Spark's partitioned write routes each row to its
-    * collection directory in one job. Reads select a collection's
-    * registered columns back out (partition pruning keeps the scan to
-    * that collection's files). Returns (unified DF incl. `_collection`,
-    * dead letters, rejected fields); caller writes both then calls
-    * `unpersist()` on the result.
-    */
-  def ingestUnified(spark: SparkSession, registry: SchemaRegistry,
-      project: String, rawJson: RDD[String]): (DataFrame, IngestResult) = {
-    val res = ingest(spark, registry, project, rawJson)
-    val parsed = res.cached.get.asInstanceOf[RDD[(String, Row, Vector[DeadLetter])]]
-    val colSchemas: Seq[(String, Seq[(String, String)])] =
-      res.byCollection.keys.toSeq.sorted.map { c =>
-        c -> registry.schema(project, c).get.map(f => (f.name, f.tpe.name))
-      }
-    val conflicted: Set[String] = colSchemas.flatMap(_._2).distinct
-      .groupBy(_._1).collect { case (n, ts) if ts.map(_._2).distinct.size > 1 => n }.toSet
-    // global physical columns, in first-seen order
-    val global: Vector[(String, FieldType)] = {
-      val b = scala.collection.mutable.LinkedHashMap.empty[String, FieldType]
-      colSchemas.foreach { case (_, fs) =>
-        fs.foreach { case (n, t) =>
-          b.getOrElseUpdate(unifiedColumnName(n, t, conflicted), FieldType.fromName(t))
-        }
-      }
-      b.toVector
-    }
-    val globalIdx = global.map(_._1).zipWithIndex.toMap
-    // collection -> positions of its fields in the global row
-    val placement: Map[String, Array[Int]] = colSchemas.map { case (c, fs) =>
-      c -> fs.map { case (n, t) => globalIdx(unifiedColumnName(n, t, conflicted)) }.toArray
-    }.toMap
-    val placementB = spark.sparkContext.broadcast(placement)
-    val nGlobal = global.size
-    val unifiedRows = parsed.mapPartitions { it =>
-      val pl = placementB.value
-      it.map { case (c, row, _) =>
-        val arr = new Array[Any](nGlobal + 1)
-        arr(0) = c
-        val pos = pl(c)
-        var i = 0
-        while (i < pos.length) { arr(pos(i) + 1) = row.get(i); i += 1 }
-        Row.fromSeq(arr.toSeq)
-      }
-    }
-    val st = StructType(StructField("_collection", StringType) +:
-      global.map { case (n, t) => StructField(n, t.spark, nullable = true) })
-    (spark.createDataFrame(unifiedRows, st), res)
-  }
-
   /** A3 ingest metrics: per-collection stored/dead-lettered counts for a
     * batch — the reference's per-project CloudWatch counters
     * (S3BulkEventStore.java:145-150, WebhookEventMapper.java:168+). One

@@ -1,6 +1,6 @@
 package graft.profiles
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -19,13 +19,17 @@ import org.apache.spark.sql.functions._
   *  - batch       (U6): just rows in the log
   *  - property "id" renamed "_id" (U8)
   *
-  * Ops are folded in (ts, seq) order per user. Two execution paths:
-  *  - [[ProfileMerge.aggregator]] — a typed Aggregator whose buffer is
-  *    an order-insensitive op list merged and sorted at finish; simple
-  *    and exact, buffer ∝ ops-per-user.
-  *  - [[ProfileMerge.mergeSorted]] — repartition by user + sort within
-  *    partitions + streaming fold: O(1) memory per user, the 100 TB
-  *    path. Both are property-tested equal to the naive sequential fold.
+  * Ops are folded in (ts, seq) order per user by [[ProfileMerge.fold]],
+  * the one statement of the op semantics. The one distributed merge,
+  * [[ProfileMerge.merge]], groups the log by user with a typed
+  * Aggregator whose buffer is the user's op list (order-insensitive, so
+  * partial aggregation is exact) and runs `fold` at finish; it is
+  * property-tested equal to `fold`. Its memory bound is per user: the
+  * buffer is that user's whole op list, so one user's history must fit
+  * in one task's memory. [[ProfileMerge.compactLog]] folds a log prefix
+  * into a snapshot, which bounds the list by ops since that watermark;
+  * no door runs it yet, so on a gateway the list grows with account
+  * age.
   */
 final case class ProfileOp(
     project: String, id: String, ts: Long, seq: Long,
@@ -45,9 +49,8 @@ object ProfileOps {
 
 object ProfileMerge {
 
-  /** Reference-exact sequential fold of one user's ops (the naive
-    * executor used as the property-test oracle and the per-user kernel
-    * of both distributed paths). */
+  /** Reference-exact sequential fold of one user's ops: the per-user
+    * kernel of [[merge]], [[compactLog]] and the property tests. */
   def fold(ops: Seq[ProfileOp]): Map[String, String] = {
     val sorted = ops.sortBy(o => (o.ts, o.seq))
     val state = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -96,7 +99,7 @@ object ProfileMerge {
       def outputEncoder: Encoder[Map[String, String]] = outEncoder
     }
 
-  /** Aggregator path: profiles as (project, id, properties-map). */
+  /** Profiles as (project, id, properties-map). */
   def merge(ops: Dataset[ProfileOp]): DataFrame = {
     val spark = ops.sparkSession
     import spark.implicits._
@@ -118,52 +121,6 @@ object ProfileMerge {
     import ops.sparkSession.implicits._
     merge(ops.filter(o =>
       o.ts < asOfTs || (o.ts == asOfTs && o.seq <= asOfSeq)))
-  }
-
-  /** Scale path: one shuffle partitioned by (project, id), sorted by
-    * (ts, seq) within partitions, then a constant-memory streaming fold
-    * per user via iterator grouping — no per-user buffering. */
-  def mergeSorted(ops: Dataset[ProfileOp]): DataFrame = {
-    val spark = ops.sparkSession
-    import spark.implicits._
-    ops.repartition(col("project"), col("id"))
-      .sortWithinPartitions(col("project"), col("id"), col("ts"), col("seq"))
-      .mapPartitions { (it: Iterator[ProfileOp]) =>
-        new Iterator[(String, String, Map[String, String])] {
-          private val in = it.buffered
-          def hasNext: Boolean = in.hasNext
-          def next(): (String, String, Map[String, String]) = {
-            val head = in.head
-            val key = (head.project, head.id)
-            val state = scala.collection.mutable.LinkedHashMap.empty[String, String]
-            // ops arrive (ts, seq)-sorted: apply directly, O(1) memory
-            while (in.hasNext &&
-                (in.head.project, in.head.id) == key) {
-              applyOp(state, in.next())
-            }
-            (key._1, key._2, state.toMap)
-          }
-        }
-      }
-      .toDF("project", "id", "properties")
-  }
-
-  private def applyOp(state: scala.collection.mutable.LinkedHashMap[String, String],
-      op: ProfileOp): Unit = {
-    val props = ProfileOps.normalizeProps(op.props)
-    op.kind match {
-      case ProfileOps.Create | ProfileOps.Set =>
-        props.foreach { case (k, v) => state(k) = v }
-      case ProfileOps.SetOnce =>
-        props.foreach { case (k, v) => if (state.get(k).orNull == null) state(k) = v }
-      case ProfileOps.Increment =>
-        props.foreach { case (k, v) =>
-          val cur = state.get(k).flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(0.0)
-          state(k) = fmt(cur + scala.util.Try(v.toDouble).getOrElse(0.0))
-        }
-      case ProfileOps.Unset => props.keys.foreach(k => state(k) = null)
-      case other => throw new IllegalArgumentException(s"unknown op kind $other")
-    }
   }
 
   /** J3: point lookup against a merged profile table. */

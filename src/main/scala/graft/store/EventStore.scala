@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.FileTree
 import graft.core.SchemaRegistry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -81,7 +82,7 @@ object EventStore {
       val files = publishDir(staging, tableDir)
       // an all-empty batch publishes no files — don't burn a version
       if (files.nonEmpty) TableManifest.commit(table, files)
-    } finally rmrf(staging)
+    } finally FileTree.delete(staging)
   }
 
   /** Move a completed staging dir's part files into the table,
@@ -300,52 +301,6 @@ object EventStore {
         df.select(cols: _*)
     }
 
-  /** Single-job batch fan-out: a unified batch (from
-    * JsonIngest.ingestUnified, `_collection` + union-of-schemas columns)
-    * written once, partitioned by (collection, month) — one Spark job
-    * regardless of how many collections the batch carries. At 100 TB this
-    * is the difference between C full scans of the batch and one. */
-  def writeUnified(unified: DataFrame, warehouse: String, project: String): Unit = {
-    val withMonth =
-      if (unified.columns.contains("_time"))
-        unified.withColumn("_month",
-          coalesce(date_format(col("_time"), "yyyy-MM"), lit("unknown")))
-      else unified.withColumn("_month", lit("unknown"))
-    stagedAppend(withMonth.drop(sourceOnlyFields: _*),
-      s"$warehouse/$project/events", Seq("_collection", "_month"))
-  }
-
-  /** Read one collection out of the unified layout: partition pruning on
-    * `_collection` keeps the scan to that collection's files; the select
-    * restores the collection's registered columns (un-mangling unified
-    * conflict columns, null-filling post-evolution additions). */
-  def readUnified(spark: SparkSession, registry: SchemaRegistry,
-      warehouse: String, project: String, collection: String): DataFrame = {
-    val df = scanTable(spark, s"$warehouse/$project/events",
-        emptyCols = Seq("_collection", "_month"))
-      .filter(col("_collection") === collection)
-    registry.schema(project, collection) match {
-      case None => df
-      case Some(fields) =>
-        val present = df.columns.toSet
-        val cols = fields.map { f =>
-          // the same formula writeUnified's data was produced with — reuse
-          // it so the mangling scheme cannot drift between writer and reader
-          val mangled = graft.ingest.JsonIngest.unifiedColumnName(
-            f.name, f.tpe.name, conflicted = Set(f.name))
-          // a field can exist under both names when only some batches had a
-          // cross-collection type conflict — coalesce the candidates
-          val candidates = Seq(f.name, mangled).filter(present.contains)
-            .map(c => col(c).cast(f.tpe.spark))
-          val src = if (candidates.isEmpty) lit(null).cast(f.tpe.spark)
-            else if (candidates.size == 1) candidates.head
-            else coalesce(candidates: _*)
-          src.as(f.name)
-        } :+ col("_month")
-        df.select(cols: _*)
-    }
-  }
-
   /** Dead-letter append (S14): `$invalid_schema` table per project. */
   def writeDeadLetter(dead: DataFrame, warehouse: String, project: String): Unit =
     stagedAppend(dead, s"$warehouse/$project/invalid_schema", Seq.empty)
@@ -418,7 +373,7 @@ object EventStore {
             .parquet(tmp.getAbsolutePath)
           val moved = publishDir(tmp, dir)
           TableManifest.commit(table, moved, legacy, note = Some("compact")): Unit
-        } finally rmrf(tmp)
+        } finally FileTree.delete(tmp)
         true
       }
     }
@@ -483,7 +438,7 @@ object EventStore {
             val moved = publishDir(tmp, dir)
             TableManifest.commit(table, moved, scope,
               note = Some("erasure")): Unit
-          } finally rmrf(tmp)
+          } finally FileTree.delete(tmp)
           scope.foreach { rel =>
             val f = new java.io.File(dir, rel)
             require(f.delete() || !f.exists(), s"could not delete $f")
@@ -517,7 +472,7 @@ object EventStore {
     Option(parent.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith(prefix) &&
         f.lastModified() < cutoff)
-      .foreach(rmrf)
+      .foreach(FileTree.delete)
   }
 
   /** Small-files compaction — the maintenance job an append-only
@@ -654,7 +609,7 @@ object EventStore {
       // local-fs checksum shadow, if any
       new java.io.File(dir, s".${f.getName}.crc").delete(): Unit
     }
-    rmrf(tmp)
+    FileTree.delete(tmp)
   }
 
   /** Atomic same-filesystem rename that also stamps the target's mtime
@@ -671,15 +626,6 @@ object EventStore {
     java.nio.file.Files.move(src.toPath, target.toPath)
     target.setLastModified(System.currentTimeMillis()): Unit
   }
-
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmrf)
-    f.delete(): Unit
-  }
-
-  /** Recursive delete for callers outside the store (the gateway's
-    * legacy ops-log migration). */
-  private[graft] def rmrfDir(f: java.io.File): Unit = rmrf(f)
 
   /** Right-to-be-forgotten: physically remove one user's events from a
     * collection. Partitions are surveyed first and only those actually

@@ -267,13 +267,7 @@ object ManifestTail {
   }
 
   /** Remove the spool entirely (subscription deleted). */
-  def drop(spool: File): Unit = {
-    def rmrf(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmrf)
-      f.delete(): Unit
-    }
-    rmrf(spool)
-  }
+  def drop(spool: File): Unit = graft.FileTree.delete(spool)
 
   /** Erasure support: physically remove the given table-relative paths
     * from EVERY spool under the table — a hard link would otherwise keep

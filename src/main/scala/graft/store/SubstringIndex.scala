@@ -202,11 +202,7 @@ object SubstringIndex extends MergedState {
           // a concurrent replay published first — its content is
           // byte-equivalent, ours is surplus
           case _: java.nio.file.FileAlreadyExistsException =>
-            def rm(f: java.io.File): Unit = {
-              if (f.isDirectory) f.listFiles().foreach(rm)
-              f.delete(): Unit
-            }
-            rm(staging)
+            graft.FileTree.delete(staging)
         }
       }
     }

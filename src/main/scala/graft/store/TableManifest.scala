@@ -246,12 +246,7 @@ private[graft] object TableManifest {
     Option(new File(table).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith(".staging-") &&
         f.lastModified() < cutoff)
-      .foreach(rmrf)
+      .foreach(graft.FileTree.delete)
     deleted
-  }
-
-  private def rmrf(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmrf)
-    f.delete(): Unit
   }
 }

@@ -152,19 +152,7 @@ object VocabStore extends MergedState {
       val rows = ranked.collect() // |pair-vocab|-bounded, not data-sized
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.toSeq.asJava, ranked.schema)
-    } finally deleteRecursively(tmp)
-  }
-
-  private def deleteRecursively(dir: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(dir)) {
-      val walk = Files.walk(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p): Unit)
-      } finally walk.close()
-    }
+    } finally graft.FileTree.delete(tmp.toFile)
   }
 
   val vs1Sql: String = TokenizerQueries.bpe1Sql

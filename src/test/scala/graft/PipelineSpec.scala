@@ -66,45 +66,6 @@ class PipelineSpec extends SparkSpec {
     assert(row.getAs[java.sql.Timestamp]("_time") != null)
   }
 
-  test("unified fan-out: one write job for N collections, pruned typed reads") {
-    val registry = SchemaRegistry.inMemory()
-    val warehouse = graft.TempDirs.scratch("graft-wh3").toString
-    val raw = spark.sparkContext.parallelize(Seq(
-      """{"collection": "pageview", "properties": {"_user": "u1", "page": "/a", "v": 1.5}}""",
-      """{"collection": "click", "properties": {"_user": "u2", "target": "btn", "v": "red"}}""",
-      """{"collection": "click", "properties": {"_user": "u3", "target": "link"}}"""))
-    val (unified, res) = JsonIngest.ingestUnified(spark, registry, "demo", raw)
-    // cross-collection type conflict on `v` (DOUBLE in pageview, STRING in
-    // click) → mangled physical columns, both present
-    assert(unified.columns.contains("v__double") && unified.columns.contains("v__string"))
-
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    EventStore.writeUnified(unified, warehouse, "demo")
-    // listener events are posted asynchronously; give the bus a beat
-    Thread.sleep(500)
-    spark.sparkContext.removeSparkListener(listener)
-    res.unpersist()
-    // O(1) jobs regardless of collection count (was O(C) filter-scans)
-    assert(jobs <= 2, s"expected a single write job (+driver listing), got $jobs")
-
-    val pv = EventStore.readUnified(spark, registry, warehouse, "demo", "pageview")
-    assert(pv.count() == 1)
-    assert(pv.select("v").collect().head.getDouble(0) == 1.5)
-    val ck = EventStore.readUnified(spark, registry, warehouse, "demo", "click")
-      .orderBy(col("_user"))
-    assert(ck.count() == 2)
-    assert(ck.select("v").collect().map(r => Option(r.getString(0))).toSeq ==
-      Seq(Some("red"), None))
-    // partition pruning on _collection
-    val plan = pv.queryExecution.executedPlan.toString
-    assert(plan.contains("_collection"), "collection filter should reach the scan")
-  }
-
   test("multimodal: media schema, deterministic features, frame sampling") {
     val docs = Tables(spark, sf(), "documents").limit(50)
     val media = Multimodal.asMedia(docs)

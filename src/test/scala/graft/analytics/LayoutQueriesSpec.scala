@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Layout/profiling operators: the Z-order write must actually deliver
@@ -44,6 +45,63 @@ class LayoutQueriesSpec extends SparkSpec {
       .groupBy($"f").agg((max($"user_id") - min($"user_id")).as("span"))
       .agg(avg($"span")).head().getDouble(0)
     assert(spans < full / 2.0, s"files not user-clustered: avg span $spans of $full")
+  }
+
+  test("zorderWrite: a user×time box overlaps every arrival-order file " +
+    "but at most half of the z-ordered files; rows are preserved exactly") {
+    import spark.implicits._
+    val numFiles = 16
+    val base = graft.TempDirs.scratch("zorder-box").toString
+    // arrival order: the append layout, clustered by time
+    events.repartitionByRange(numFiles, $"ts").sortWithinPartitions($"ts")
+      .write.parquet(s"$base/arrival")
+    LayoutQueries.zorderWrite(events, numFiles).write.parquet(s"$base/zorder")
+
+    // clustering is a permutation, not a transformation
+    val zorder = spark.read.parquet(s"$base/zorder")
+    assert(zorder.collect().map(_.toSeq).toSet ==
+      events.collect().map(_.toSeq).toSet)
+    assert(zorder.count() == events.count())
+
+    // the busiest user over the month less a day at each end: every
+    // time-sorted file still holds some of the band and of the user
+    val user = events.groupBy($"user_id").count()
+      .orderBy(desc("count"), $"user_id").head().getLong(0)
+    val band = events.agg(min($"ts") + expr("INTERVAL 1 DAY"),
+      max($"ts") - expr("INTERVAL 1 DAY")).head()
+    val (lo, hi) = (band.get(0), band.get(1))
+    // per-file min/max: the footer stats a pushed filter consults
+    def overlapping(path: String): Long =
+      spark.read.parquet(path)
+        .groupBy(input_file_name())
+        .agg(min($"user_id").as("umin"), max($"user_id").as("umax"),
+          min($"ts").as("tmin"), max($"ts").as("tmax"))
+        .filter($"umin" <= user && $"umax" >= user &&
+          $"tmin" <= lit(hi) && $"tmax" >= lit(lo))
+        .count()
+    val arrivalHit = overlapping(s"$base/arrival")
+    val zHit = overlapping(s"$base/zorder")
+    assert(arrivalHit == numFiles.toLong,
+      s"expected the arrival layout to overlap everywhere, got $arrivalHit")
+    assert(zHit * 2 <= arrivalHit,
+      s"z-order should halve the candidate files at worst: $zHit vs $arrivalHit")
+    // and the box's rows are intact through the layout
+    def inBox(df: DataFrame) =
+      df.filter($"user_id" === user && $"ts".between(lit(lo), lit(hi))).count()
+    assert(inBox(zorder) == inBox(events) && inBox(events) > 0)
+  }
+
+  test("zorderWrite: a constant clustering column divides by nothing " +
+    "and keeps every row") {
+    import spark.implicits._
+    val oneUser = spark.range(0, 1000).select($"id", lit(7L).as("user_id"),
+      timestamp_seconds($"id" * 60).as("ts"))
+    val oneCell = oneUser.withColumn("ts", timestamp_seconds(lit(0L)))
+    for (df <- Seq(oneUser, oneCell)) {
+      val ids = LayoutQueries.zorderWrite(df, numFiles = 4)
+        .select($"id").as[Long].collect().sorted.toSeq
+      assert(ids == (0L until 1000L))
+    }
   }
 
   test("prof1: exact pass Expands count buffers only — every HLL aggregate " +

@@ -17,9 +17,9 @@ class AnalyticsSpec extends SparkSpec {
 
   private lazy val events = Tables(spark, sf(), "events")
 
-  // The registry's a6/a7/w1/w2 entries ARE these facade calls, so the
-  // pins below are the DuckDB oracle's own results at sf0.001 (the a6,
-  // a7, w2 and w1 SQL run over the same parquet).
+  // The registry's a4/a6/a7/w1/w2 entries ARE these facade calls, so
+  // the pins below are the DuckDB oracle's own results at sf0.001 (the
+  // a4, a6, a7, w2 and w1 SQL run over the same parquet).
 
   test("funnel(view,click,purchase) == oracle-proven a6") {
     val api = Analytics.funnel(events, "user_id", "ts", "event_type",
@@ -92,15 +92,20 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("segmentation(day × event_type) == oracle-proven a4, sum included") {
-    val api = Analytics.segmentation(events, "ts", "day",
+    val api = Analytics.segmentation(events, "user_id", "ts", "day",
       Seq("event_type"), valueCol = Some("value"))
-      .withColumnRenamed("bucket", "day")
-    val reg = CoreQueries.a4Segmentation(spark, sf())
-    assert(api.count() == reg.count())
-    // the facade doesn't compute n_users; every shared column —
-    // including the decimal-funneled sum — must coincide exactly
-    assert(rows(api.select("day", "event_type", "n_events", "sum_value")) ==
-      rows(reg.select("day", "event_type", "n_events", "sum_value")))
+    assert(api.columns.toSeq ==
+      Seq("bucket", "event_type", "n_events", "n_users", "sum_value"))
+    // a4 is this call with the bucket named `day`
+    assert(CoreQueries.a4Segmentation(spark, sf()).columns.toSeq ==
+      Seq("day", "event_type", "n_events", "n_users", "sum_value"))
+    assert(rows(api.agg(count(lit(1)), sum("n_events"), sum("n_users"))) ==
+      Seq("150|1000|792"))
+    val firstDay = api.filter(col("bucket") === lit("2024-01-01").cast("timestamp"))
+      .drop("bucket")
+    assert(rows(firstDay) == Seq(
+      "click|4|3|390.72", "error|11|9|718.31", "purchase|4|3|56.95",
+      "signup|9|6|475.5", "view|5|5|258.88"))
   }
 
   test("topKPerGroup == oracle-proven w1 shape") {

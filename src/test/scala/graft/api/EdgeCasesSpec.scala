@@ -28,7 +28,7 @@ class EdgeCasesSpec extends SparkSpec {
     assert(Analytics.retention(emptyEvents, "user_id", "ts").isEmpty)
     assert(Analytics.sessionize(emptyEvents, "user_id", "ts",
       gap = "30 minutes", tieBreak = Some("event_id")).isEmpty)
-    assert(Analytics.segmentation(emptyEvents, "ts", "day",
+    assert(Analytics.segmentation(emptyEvents, "user_id", "ts", "day",
       Seq("event_type")).isEmpty)
     assert(Analytics.topKPerGroup(emptyEvents, "user_id", 3,
       col("ts").desc).isEmpty)

@@ -981,12 +981,7 @@ class HttpGatewaySpec extends SparkSpec {
     } finally gw2.stop()
     val ops = new java.io.File(s"$warehouse/demo/__user_ops")
     val manifests = new java.io.File(ops, "_manifests")
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rmrf)
-      f.delete(): Unit
-    }
-    rmrf(manifests)
+    graft.FileTree.delete(manifests)
     val tmp = new java.io.File(s"$warehouse/demo/__user_ops.rewriting")
     val aside = new java.io.File(s"$warehouse/demo/__user_ops.erased")
     assert(ops.renameTo(tmp), "fixture: could not stage the crash window")
@@ -1508,10 +1503,12 @@ class HttpGatewaySpec extends SparkSpec {
         """{"query": "SELECT count(*) AS n FROM order"}""")
       assert(q.body().contains("\"n\":1"), q.body())
       // excluded collections are ignored, not failed: 200 with only the
-      // non-excluded event stored
+      // non-excluded event stored. A padded name is the same collection
+      // to ingest (trimmed, lowercased), so it is excluded too.
       val r2 = post(port, "/event/batch",
         """{"api": {"api_key": "k"}, "events": [
           |{"collection": "heartbeat", "properties": {"_user": "hb"}},
+          |{"collection": " heartbeat ", "properties": {"_user": "hb2"}},
           |{"collection": "order", "properties": {"_user": "u3", "_time": "2026-01-15 11:00:00.000", "amount": 2}}
           |]}""".stripMargin)
       assert(r2.statusCode() == 200 && r2.body() == """{"stored":1}""", r2.body())

@@ -84,8 +84,7 @@ class BatchSourcesSpec extends SparkSpec {
   }
 
   test("batch ingest: partial-failure indexes + exclusion (409 contract)") {
-    val registry = SchemaRegistry.inMemory()
-    val body =
+    val events = parseEnvelope(
       """{"api": {"api_key": "k", "upload_time": 9},
         | "events": [
         |   {"collection": "good", "properties": {"a": 1}},
@@ -93,16 +92,16 @@ class BatchSourcesSpec extends SparkSpec {
         |   {"collection": "excluded_one", "properties": {"b": 2}},
         |   "not-an-object",
         |   {"collection": "no_properties"},
-        |   {"collection": "good", "properties": {"a": 2}}
-        | ]}""".stripMargin
-    val out = batchIngest(spark, registry, "p", body,
-      excludedCollections = Set("excluded_one"))
+        |   {"collection": "good", "properties": {"a": 2}},
+        |   {"collection": " Excluded_One ", "properties": {"b": 3}}
+        | ]}""".stripMargin).events
+    val (kept, failed) = checkEvents(events, Set("excluded_one"))
     // missing properties fails its index too — the reference throws
     // "properties is null" (JsonEventDeserializer.java:340)
-    assert(out.failedIndexes == Seq(1, 3, 4))
-    assert(out.result.byCollection("good").count() == 2)
-    assert(!out.result.byCollection.contains("excluded_one"))
-    out.result.unpersist()
+    assert(failed == Seq(1, 3, 4))
+    // excluded events are dropped, not failed, however ingest would
+    // spell their name; the kept lines pass through unchanged
+    assert(kept == Seq(events(0), events(5)))
   }
 
   test("remote bulk guards: one url only, no compression (S6)") {

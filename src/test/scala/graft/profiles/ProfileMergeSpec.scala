@@ -76,15 +76,12 @@ class ProfileMergeSpec extends SparkSpec {
       id -> ProfileMerge.fold(os)
     }
 
-    val ds = spark.createDataset(ops)
-    for (result <- Seq(ProfileMerge.merge(ds), ProfileMerge.mergeSorted(ds))) {
-      val got = result.collect().map { r =>
-        r.getAs[String]("id") -> r.getAs[Map[String, String]]("properties")
-      }.toMap
-      assert(got.keySet == expected.keySet)
-      expected.foreach { case (id, props) =>
-        assert(got(id) == props, s"user $id")
-      }
+    val got = ProfileMerge.merge(spark.createDataset(ops)).collect().map { r =>
+      r.getAs[String]("id") -> r.getAs[Map[String, String]]("properties")
+    }.toMap
+    assert(got.keySet == expected.keySet)
+    expected.foreach { case (id, props) =>
+      assert(got(id) == props, s"user $id")
     }
   }
 

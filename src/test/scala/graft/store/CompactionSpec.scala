@@ -355,13 +355,7 @@ class CompactionSpec extends SparkSpec {
       val left = EventStore.read(spark, registry, warehouse, "demo", "tap")
         .select("_user").distinct().collect().map(_.getString(0)).toSet
       assert(left == Set("u2"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(warehouse))
-    }
+    } finally graft.FileTree.delete(new java.io.File(warehouse))
   }
 
   test("vacuum vs pinned reader: a reader holding version N survives a " +

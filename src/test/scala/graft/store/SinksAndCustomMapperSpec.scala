@@ -2,52 +2,11 @@ package graft.store
 
 import graft.SparkSpec
 import graft.core.{FieldType, SchemaRegistry}
-import graft.enrich.{CustomMapper, WebhookTransform}
-import graft.ingest.{AvroIngest, JsonIngest}
+import graft.ingest.AvroIngest
 import org.apache.spark.sql.functions._
 
 class SinksAndCustomMapperSpec extends SparkSpec {
   import spark.implicits._
-
-  test("M7: custom mapper get/set/setOnce/drop contract") {
-    val df = Seq(
-      ("pageview", "u1", 10.0, null.asInstanceOf[String]),
-      ("pageview", "bot", 1.0, "preset"))
-      .toDF("collection", "_user", "value", "note")
-    val m = CustomMapper("score", Seq("score" -> FieldType.DOUBLE, "note" -> FieldType.STRING),
-      Map("factor" -> "2"), (e, params) => {
-        if (e.get("_user") == "bot") e.drop()
-        else {
-          e.set("score", e.get("value").asInstanceOf[Double] * params("factor").toDouble)
-          e.setOnce("note", "computed") // must not clobber the preset row
-        }
-      })
-    val out = m.apply(df).collect()
-    assert(out.length == 1) // bot dropped
-    assert(out.head.getAs[Double]("score") == 20.0)
-    assert(out.head.getAs[String]("note") == "computed")
-
-    // setOnce respects existing values: run without the drop
-    val keep = CustomMapper("keep", Seq("note" -> FieldType.STRING), Map.empty,
-      (e, _) => e.setOnce("note", "computed"))
-    val rows = keep.apply(df).collect()
-    assert(rows.map(_.getAs[String]("note")).toSet == Set("computed", "preset"))
-  }
-
-  test("S7: webhook transform fans one body into n events") {
-    val bodies = spark.sparkContext.parallelize(Seq(
-      """{"items": [{"v": 1}, {"v": 2}]}"""))
-    val lines = WebhookTransform(bodies, { body =>
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val items = m.readTree(body).get("items")
-      (0 until items.size()).map { i =>
-        s"""{"collection": "hook", "properties": {"v": ${items.get(i).get("v")}}}"""
-      }
-    })
-    val r = SchemaRegistry.inMemory()
-    val res = JsonIngest.ingest(spark, r, "p", lines)
-    assert(res.byCollection("hook").count() == 2)
-  }
 
   test("S9: kafka shape — topic per project_collection, magic fields dropped") {
     val df = Seq(("u1", "1.2.3.4", 5.0)).toDF("_user", "_ip", "value")
