@@ -495,7 +495,7 @@ final class HttpGateway(
           }
         val n = writeLock.synchronized {
           enrichAndStore(Seq(normalized -> df), runMappers = true,
-            cfCountry = cfCountry(req.ex), small = false)
+            cfCountry = cfCountry(req.ex))
         }
         (200, s"""{"stored":$n}""")
       } finally graft.TempDirs.release(dir)
@@ -594,9 +594,9 @@ final class HttpGateway(
 
   /** A request of at most this many raw event lines is small: it
     * ingests and enriches as a local relation on the driver
-    * ([[ingestLines]]), and the rule-table mappers keep their per-row
-    * shape. Above it, ingest runs as Spark jobs and the rule tables
-    * switch to their dictionary shape. */
+    * ([[ingestLines]]). Above it, ingest runs as Spark jobs over one
+    * partition. The size picks only the ingest leaf: the mappers and
+    * the write are the same for both. */
   private val SmallRequestLines = 64
 
   /** The built-in enrichment stage every mapped ingest runs — the
@@ -608,7 +608,7 @@ final class HttpGateway(
     * output, the custom-mapper discipline); the source-only trigger
     * fields themselves are dropped later by EventStore.write. */
   private def applyBuiltins(coll: String, df: DataFrame,
-      cfCountry: Option[String], small: Boolean): DataFrame = {
+      cfCountry: Option[String]): DataFrame = {
     val geo = geoRanges.map(r4 =>
       graft.enrich.GeoIpMapper(r4, geoRangesV6)).toSeq
     val mappers: Seq[graft.enrich.EventMapper] =
@@ -632,19 +632,7 @@ final class HttpGateway(
           d.drop(produced.map(_._1).filter(d.columns.contains): _*)
         case _ => d
       }
-      // the rule-table mappers run their dictionary shape (chain per
-      // DISTINCT UA/host, broadcast join back — property-pinned
-      // bit-equal to per-row) for BULK-sized batches only: an uncapped
-      // /event/bulk body then pays the rule tables per distinct value,
-      // while the hot single-event collect door keeps its one narrow
-      // codegen'd projection instead of two extra exchanges per mapper
-      val out0 = m match {
-        case graft.enrich.UserAgentMapper if !small =>
-          graft.enrich.UserAgentMapper.dictionary(input)
-        case r: graft.enrich.ReferrerMapper if !small =>
-          r.dictionary(input)
-        case _ => m.apply(input)
-      }
+      val out0 = m.apply(input)
       // the reference's Cloudflare fallback
       // (MaxmindGeoIPEventMapper.java:190-196): events the geo walk
       // resolves nothing for — no `_ip` at all, or no range hit —
@@ -1702,14 +1690,12 @@ final class HttpGateway(
     * discipline. Each mapper gets a log accumulator appended to
     * `sinks`; the caller drains them into the JS log store AFTER its
     * actions run (the entries only exist once the job executes). */
-  private def applyMappers(coll: String, df: DataFrame,
-      sinks: scala.collection.mutable.Buffer[
-        (String, org.apache.spark.util.CollectionAccumulator[(String, String)])],
-      small: Boolean): DataFrame = {
+  private def applyMappers(coll: String, df: DataFrame, sinks: scala.collection.mutable.Buffer[
+      (String, org.apache.spark.util.CollectionAccumulator[(String, String)])]): DataFrame = {
     val active = storedMappers().filter(m => m.active && m.collection.forall(_ == coll))
-    // a script sees each partition as one batch: a small request's
-    // local relation is one partition, as the distributed leaf's is
-    val input = if (small && active.nonEmpty) df.coalesce(1) else df
+    // a script sees each partition as one batch, and a request is one
+    // batch: one partition, as the JSON leaves already are
+    val input = if (active.nonEmpty) df.coalesce(1) else df
     active.foldLeft(input) { (d, m) =>
       val (_, rejected) = registry.getOrCreate(project, coll,
         m.produced.map { case (n, t) => registry.Field(n, t) })
@@ -2832,8 +2818,7 @@ final class HttpGateway(
       cfCountry: Option[String] = None): Long = writeLock.synchronized {
     val res = ingestLines(registry, lines)
     try {
-      val n = enrichAndStore(res.byCollection.toSeq, runMappers, cfCountry,
-        small = lines.length <= SmallRequestLines)
+      val n = enrichAndStore(res.byCollection.toSeq, runMappers, cfCountry)
       // a local relation answers isEmpty with no job; one partition (as
       // the distributed leaf has) keeps the write to one file
       if (!res.deadLetter.isEmpty)
@@ -2862,12 +2847,10 @@ final class HttpGateway(
     * already computed: its rows become the frame, with no job, and the
     * gate folds its spider column on the driver. Any
     * other frame (a JS mapper, a geo join, a bulk body, a large
-    * request) is PERSISTED and gated by one job. `small` marks a small
-    * request's frames: the rule tables keep their per-row shape, and
-    * whatever runs as a job over them runs in one partition. */
+    * request) is PERSISTED and gated by one job. A request is written
+    * as one partition, so it stores one file per month. */
   private def enrichAndStore(byCollection: Seq[(String, DataFrame)],
-      runMappers: Boolean, cfCountry: Option[String],
-      small: Boolean): Long = {
+      runMappers: Boolean, cfCountry: Option[String]): Long = {
     var n = 0L
     val logSinks = scala.collection.mutable.Buffer.empty[
       (String, org.apache.spark.util.CollectionAccumulator[(String, String)])]
@@ -2883,7 +2866,7 @@ final class HttpGateway(
       val prepared = byCollection.map { case (coll, df0) =>
         val enriched =
           if (runMappers)
-            applyMappers(coll, applyBuiltins(coll, df0, cfCountry, small), logSinks, small)
+            applyMappers(coll, applyBuiltins(coll, df0, cfCountry), logSinks)
           else df0
         val folded = GraftColumnBridge.localRelation(enriched)
         val df = folded match {
@@ -2919,9 +2902,10 @@ final class HttpGateway(
       prepared.foreach { case (coll, df, rows) =>
         n += rows
         // a local relation of k rows scans in up to
-        // leafNodeDefaultParallelism tasks; one task keeps a small
-        // request to one file per partition directory
-        EventStore.write(if (small) df.coalesce(1) else df, warehouse, project, coll)
+        // leafNodeDefaultParallelism tasks, and a CSV/Avro body in one
+        // per file split; one task keeps a request to one file per
+        // partition directory
+        EventStore.write(df.coalesce(1), warehouse, project, coll)
         // continuous maintenance: the stored batch is also the delta
         // for every materialized view on this collection
         maintainMvs(coll, df)

@@ -1,7 +1,7 @@
 package graft.enrich
 
 import graft.core.FieldType
-import graft.functions.{FirstMatch, ReferenceLiteral}
+import graft.functions.{FirstMatch, ReferenceLiteral, RuleCapture}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -100,12 +100,14 @@ final case class TimestampMapper(nowMillis: Long) extends EventMapper {
   * Each table is one [[graft.functions.FirstMatch]] kernel returning
   * the first matching rule's index (-1: none), with its patterns
   * compiled once per JVM, as the reference's ua-parser object compiles
-  * its database once at start-up. Everything a rule carries — family,
-  * version pattern or literal, device prefix — decodes from constant
-  * arrays indexed by that int, so the plan holds three small
-  * expressions, not hundreds of `rlike` branches that every analysis,
-  * optimization and code generation pass would walk per request.
-  * Codegen'd, no join, no UDF. */
+  * its database once at start-up. A rule's family, literal version and
+  * device prefix decode from constant arrays indexed by that int, and
+  * its version or model capture is one [[graft.functions.RuleCapture]]
+  * over the matching table of capture patterns, so the plan holds a
+  * few small expressions, not hundreds of `rlike` branches that every
+  * analysis, optimization and code generation pass would walk per
+  * request. Both kernels memoize their answer per input, so a repeated
+  * UA costs a few hash lookups. Codegen'd, no join, no UDF. */
 case object UserAgentMapper extends EventMapper {
   val name = "user-agent"
   override def dependentFields = Map("_user_agent" -> Seq(
@@ -131,22 +133,15 @@ case object UserAgentMapper extends EventMapper {
       "__ua_o" -> FirstMatch(ua, UaRules.osTable),
       "__ua_d" -> FirstMatch(ua, UaRules.deviceTable)))
     val (b, o, d) = (col("__ua_b"), col("__ua_o"), col("__ua_d"))
-    // a looked-up pattern is compiled again only when it differs from
-    // the previous row's; the dictionary shape runs this once per
-    // distinct UA
-    def extract(pattern: Column) = call_function("regexp_extract", ua, pattern, lit(1))
-
     val family = Mappers.decode(b, UaRules.browsers.map(_.family), "Other")
-    // versionless rules (and a miss) carry "" for the pattern;
-    // regexp_extract returns "" on a no-match, and both decode to NULL
-    val bPattern = Mappers.decode(b, UaRules.browsers.map(_.version), "")
-    val version = when(bPattern =!= "", nullif(extract(bPattern), lit("")))
+    // a capture is NULL for a miss and for a rule with no version
+    // pattern, "" when the pattern does not capture: both decode to NULL
+    val version = nullif(RuleCapture(ua, b, UaRules.browserVersionTable), lit(""))
 
     val os = Mappers.decode(o, UaRules.oses.map(_.family), "Other")
     val osLiteral = Mappers.decode(o, UaRules.oses.map(_.literal), "")
-    val osPattern = Mappers.decode(o, UaRules.oses.map(_.versionRe), "")
     val osVersion = when(osLiteral =!= "", osLiteral)
-      .when(osPattern =!= "", nullif(extract(osPattern), lit("")))
+      .otherwise(nullif(RuleCapture(ua, o, UaRules.osVersionTable), lit("")))
 
     // device table hit (NULL = miss): [[UaRules.devices]] — branded
     // hardware with the model captured by the SAME regex that detects
@@ -155,12 +150,11 @@ case object UserAgentMapper extends EventMapper {
     val tableDevice = when(dFamily =!= "", dFamily)
       .when(d >= 0, concat(
         Mappers.decode(d, UaRules.devices.map(_.prefix), ""),
-        extract(Mappers.decode(d, UaRules.devices.map(_.detect), ""))))
+        RuleCapture(ua, d, UaRules.deviceTable)))
     // devices: Spider first (needs the browser family), then the
     // device table hit, then the uap-core generic-Android tails;
     // desktops deliberately report "Other"
-    val androidModel =
-      nullif(regexp_extract(ua, UaRules.AndroidModelRe, 1), lit(""))
+    val androidModel = nullif(RuleCapture(ua, lit(0), UaRules.androidModelTable), lit(""))
     val device =
       when(family === "Spider", "Spider")
         .when(tableDevice =!= "", tableDevice)
@@ -175,27 +169,6 @@ case object UserAgentMapper extends EventMapper {
       "_os" -> os,
       "_os_version" -> osVersion,
       "_device_family" -> device), dropped = scratch)
-  }
-
-  /** The 100 TB shape of this mapper: run the rule tables once per
-    * DISTINCT user-agent and broadcast-join the dictionary back, so the
-    * regex work is O(|distinct UA|) — ~10^5 at web scale — instead of
-    * O(|events|) ~10^12 (the m2 oracle query measures exactly this
-    * shape). Null-safe equality keeps the null-UA row matching its
-    * dictionary entry, so results are bit-identical to [[apply]] (a
-    * property spec pins it); the rule kernels evaluate only under the
-    * dictionary aggregate, never on the fact side. */
-  def dictionary(df: DataFrame): DataFrame = {
-    if (!df.columns.contains("_user_agent")) return df
-    // [[apply]] overwrites pre-existing enrichment columns in place
-    // (withColumn); the join-based shape must drop them first or the
-    // output carries duplicate names (ingest's dependent expansion
-    // pre-creates them as nulls)
-    val produced = dependentFields("_user_agent").map(_._1)
-    val base = df.drop(produced.filter(df.columns.contains): _*)
-    val dict = apply(base.select(col("_user_agent")).distinct())
-    base.join(broadcast(dict), base("_user_agent") <=> dict("_user_agent"), "left")
-      .drop(dict("_user_agent"))
   }
 }
 
@@ -215,24 +188,25 @@ final case class ReferrerMapper(internalHosts: Seq[String] = Seq.empty) extends 
     "_referrer_domain" -> FieldType.STRING,
     "_referrer_path" -> FieldType.STRING))
 
-  private val scratch = Seq("__ref_host", "__ref_path", "__ref_hit", "__dict_host")
+  private val scratch = Seq("__ref_host", "__ref_path", "__ref_hit")
 
-  /** Stage host/path in their own projection so each URL is parsed
-    * once per row: the host feeds the rule kernel, the medium and the
-    * domain, and CollapseProject leaves a non-cheap expression that is
-    * read more than once staged. */
-  private def stage(df: DataFrame): DataFrame = Mappers.project(df, Seq(
-    "__ref_host" ->
-      lower(nullif(try_parse_url(col("_referrer"), lit("HOST")), lit(""))),
-    "__ref_path" -> nullif(try_parse_url(col("_referrer"), lit("PATH")), lit(""))))
-
-  private def hit(host: Column): Column = FirstMatch(host, UaRules.refererTable)
-
-  /** The per-row tail over a frame carrying `__ref_host`/`__ref_path`/
-    * `__ref_hit`: medium precedence, term-param extraction, and the
-    * internal-traffic suppression, as one projection that also drops
-    * the scratch columns. */
-  private def finish(withHit: DataFrame): DataFrame = {
+  def apply(df: DataFrame): DataFrame = {
+    if (!df.columns.contains("_referrer")) return df
+    scratch.foreach { c =>
+      require(!df.columns.contains(c), s"scratch column $c already present")
+    }
+    // host/path are staged in their own projection, and the rule index
+    // in the next, so each URL is parsed once per row: the host feeds
+    // the kernel, the medium and the domain, and CollapseProject leaves
+    // a non-cheap expression that is read more than once staged
+    val staged = Mappers.project(df, Seq(
+      "__ref_host" ->
+        lower(nullif(try_parse_url(col("_referrer"), lit("HOST")), lit(""))),
+      "__ref_path" -> nullif(try_parse_url(col("_referrer"), lit("PATH")), lit(""))))
+    val withHit = Mappers.project(staged, Seq(
+      "__ref_hit" -> FirstMatch(col("__ref_host"), UaRules.refererTable)))
+    // medium precedence, term-param extraction and the internal-traffic
+    // suppression, as one projection that also drops the scratch columns
     val host = col("__ref_host")
     val source = Mappers.decode(col("__ref_hit"), UaRules.referers.map(_.source), null)
     val tableMedium = Mappers.decode(col("__ref_hit"), UaRules.referers.map(_.medium), null)
@@ -252,38 +226,7 @@ final case class ReferrerMapper(internalHosts: Seq[String] = Seq.empty) extends 
       "_referrer_path" -> when(medium =!= "internal", col("__ref_path"))),
       dropped = scratch)
   }
-
-  private def guard(df: DataFrame): Unit =
-    scratch.foreach { c =>
-      require(!df.columns.contains(c), s"scratch column $c already present")
-    }
-
-  def apply(df: DataFrame): DataFrame = {
-    if (!df.columns.contains("_referrer")) return df
-    guard(df)
-    val st = stage(df)
-    finish(Mappers.project(st, Seq("__ref_hit" -> hit(col("__ref_host")))))
-  }
-
-  /** The 100 TB shape: referrer URLs are high-cardinality (query
-    * strings), but the rule table only reads the HOST — so the kernel
-    * runs once per DISTINCT host (~10^5 at web scale) and the rule
-    * index broadcast-joins back, while term/path extraction (a couple
-    * of try_parse_url calls) stays per-row. A null-safe join keeps the
-    * null-host (malformed URL) row identical to [[apply]];
-    * property-pinned bit-equal. */
-  def dictionary(df: DataFrame): DataFrame = {
-    if (!df.columns.contains("_referrer")) return df
-    guard(df)
-    // overwrite pre-existing enrichment columns, like [[apply]] does
-    val produced = dependentFields("_referrer").map(_._1)
-    val st = stage(df.drop(produced.filter(df.columns.contains): _*))
-    val dict = st.select(col("__ref_host").as("__dict_host")).distinct()
-      .select(col("__dict_host"), hit(col("__dict_host")).as("__ref_hit"))
-    finish(st.join(broadcast(dict), col("__ref_host") <=> col("__dict_host"), "left"))
-  }
 }
-
 
 /** M4/J1/J2: GeoIP enrichment as broadcast range joins, both address
   * families — the reference resolves any `java.net.InetAddress`

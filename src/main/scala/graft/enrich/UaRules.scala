@@ -17,7 +17,9 @@ import graft.functions.RuleTable
   * reference's parser objects compile their databases once at start-up
   * — and evaluated by one [[graft.functions.FirstMatch]] kernel
   * expression that yields the winning rule's index. The mappers decode
-  * everything else a rule carries from constant arrays indexed by it.
+  * everything else a rule carries from constant arrays indexed by it,
+  * and capture versions and models with the `*VersionTable`s and the
+  * device table through [[graft.functions.RuleCapture]].
   *
   * Version semantics follow the reference mapper: MAJOR version only
   * (`parsed.userAgent.major` / `parsed.os.major`), and desktop devices
@@ -868,6 +870,12 @@ object UaRules {
   val osTable: RuleTable = RuleTable("oses", oses.map(_.detect))
   val deviceTable: RuleTable = RuleTable("devices", devices.map(_.detect))
   val refererTable: RuleTable = RuleTable("referers", referers.map(_.hostRe))
+
+  /** The version capture patterns, indexed as their detect tables ("" =
+    * none); a device's model is captured by its detect pattern. */
+  val browserVersionTable: RuleTable = RuleTable("browser-versions", browsers.map(_.version))
+  val osVersionTable: RuleTable = RuleTable("os-versions", oses.map(_.versionRe))
+  val androidModelTable: RuleTable = RuleTable("android-model", Seq(AndroidModelRe))
 
   /** Search-term query parameters, tried in order (q: most engines,
     * p: yahoo, text: yandex, wd/word: baidu, query: naver/daum/seznam,

@@ -88,11 +88,21 @@ object JsonIngest {
     DateTimeFormatter.ofPattern("yyyy-M-d H:m:s"),
     DateTimeFormatter.ofPattern("yyyy-M-d H:m"))
 
+  /** Every accepted date and timestamp shape starts with its year: a
+    * digit, or the sign of a year outside 0000–9999. Any other string
+    * is text, answered without the parse attempts, each of which fails
+    * by exception (a user agent or URL paid 9 of them). */
+  private def mayStartWithYear(s: String): Boolean = s.nonEmpty && {
+    val c = s.charAt(0)
+    (c >= '0' && c <= '9') || c == '+' || c == '-'
+  }
+
   private[ingest] def parseDate(s: String): Option[LocalDate] =
-    if (s.length == 10) Try(LocalDate.parse(s)).toOption else None
+    if (s.length == 10 && mayStartWithYear(s)) Try(LocalDate.parse(s)).toOption else None
 
   private[ingest] def parseTimestamp(s: String): Option[Instant] = {
     if (s.length <= 12) return None // length guard (DateTimeUtils.java:72-74)
+    if (!mayStartWithYear(s)) return None
     Try(Instant.parse(s)).toOption
       .orElse(tsFormats.view.flatMap(f =>
         Try(LocalDateTime.parse(s.replace('T', ' ').replaceFirst(" ", " "), f))

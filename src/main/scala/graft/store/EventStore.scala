@@ -305,15 +305,11 @@ object EventStore {
   def writeDeadLetter(dead: DataFrame, warehouse: String, project: String): Unit =
     stagedAppend(dead, s"$warehouse/$project/invalid_schema", Seq.empty)
 
-  /** Manifest-committed append to an unpartitioned auxiliary table (the
-    * profile ops log): the same staged-move + [[TableManifest]] commit
-    * the event tables get — batch atomicity, snapshot-isolated readers,
-    * pins/time travel, vacuum — with no partition columns. */
-  def appendUnpartitioned(df: DataFrame, table: String): Unit =
-    stagedAppend(df, table, Seq.empty)
-
-  /** As [[appendUnpartitioned]], with directory partitions — the
-    * bucketed ops-log layout (`_bucket=k/`). */
+  /** Manifest-committed append to an auxiliary table with directory
+    * partitions — the bucketed ops-log layout (`_bucket=k/`): the same
+    * staged-move + [[TableManifest]] commit the event tables get —
+    * batch atomicity, snapshot-isolated readers, pins/time travel,
+    * vacuum. */
   private[graft] def appendPartitioned(df: DataFrame, table: String,
       partitionCols: Seq[String]): Unit =
     stagedAppend(df, table, partitionCols)

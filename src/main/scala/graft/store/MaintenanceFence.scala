@@ -98,17 +98,10 @@ object MaintenanceFence {
     finally { stop.countDown(); beat.join(1000) }
   }
 
-  /** Atomic create-with-content, the same CAS primitive as
-    * [[TableManifest]]: a hard link from a written temp file fails if
-    * the target exists; no reader sees a partial claim. */
-  private def tryCreate(m: File): Boolean = {
-    val tmp = File.createTempFile(".claim-", ".tmp", m.getParentFile)
-    try {
-      Files.write(tmp.toPath,
-        (java.lang.management.ManagementFactory.getRuntimeMXBean.getName +
-          " " + System.currentTimeMillis()).getBytes("UTF-8"))
-      try { Files.createLink(m.toPath, tmp.toPath); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } finally { tmp.delete(): Unit }
-  }
+  /** A claim file names its holder and when it was taken; creating it
+    * is [[graft.FileTree.createExclusive]], the manifest's CAS. */
+  private def tryCreate(m: File): Boolean =
+    graft.FileTree.createExclusive(m,
+      (java.lang.management.ManagementFactory.getRuntimeMXBean.getName +
+        " " + System.currentTimeMillis()).getBytes("UTF-8"))
 }

@@ -176,18 +176,10 @@ private[graft] object TableManifest {
     -1L // unreachable
   }
 
-  /** Atomic create-with-content: write a tmp file, hard-link it to the
-    * target (fails if the target exists — the CAS), delete the tmp. No
-    * reader can observe a half-written file. */
-  private def casCreate(target: File, lines: Seq[String]): Boolean = {
-    val tmp = File.createTempFile(".cas-", ".tmp", target.getParentFile)
-    try {
-      Files.write(tmp.toPath, lines.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      try { Files.createLink(target.toPath, tmp.toPath); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } finally { tmp.delete(): Unit }
-  }
+  /** [[graft.FileTree.createExclusive]] of the lines: the commit CAS. */
+  private def casCreate(target: File, lines: Seq[String]): Boolean =
+    graft.FileTree.createExclusive(target,
+      lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Absolute paths of the pinned snapshot, or None when the table has
     * no manifest yet (pre-manifest layout: caller directory-lists). */

@@ -55,13 +55,18 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** The call site of every Spark job `body` starts ("parquet at
-    * EventStore.scala:79"), in start order. */
+    * EventStore.scala:79"), in start order, followed by the job's tags
+    * other than the session's in parentheses when it has any (a
+    * broadcast exchange's job: "(broadcast exchange (runId …))"). */
   def jobsDuring(body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.add(e.stageInfos.map(_.name).lastOption.getOrElse("?")); ()
+        val site = e.stageInfos.map(_.name).lastOption.getOrElse("?")
+        val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Seq.empty[String])(_.split(",").toSeq).filterNot(_.startsWith("spark-session-"))
+        jobs.add(site + (if (tags.isEmpty) "" else tags.mkString(" (", ", ", ")"))); ()
       }
     }
     val sc = spark.sparkContext

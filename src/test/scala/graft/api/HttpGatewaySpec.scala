@@ -658,7 +658,10 @@ class HttpGatewaySpec extends SparkSpec {
       assert(small.size == 1 && small.head.contains("EventStore"), small)
       val large = jobsDuring(assert(post(port, "/event/batch", batch(65)).body() ==
         """{"stored":65}"""))
-      assert(large.exists(_.contains("JsonIngest")), large)
+      // schema fold, spider gate, write, dead-letter check: the rule
+      // tables run per row, with no broadcast join
+      assert(large.size == 4 && large.exists(_.contains("JsonIngest")) &&
+        !large.exists(_.contains("broadcast exchange")), large)
       val q = post(port, "/query/execute",
         """{"query": "SELECT count(*) AS n, count(_user_agent_family) AS ua FROM pv"}""")
       assert(q.body().contains("\"n\":131") && q.body().contains("\"ua\":131"), q.body())

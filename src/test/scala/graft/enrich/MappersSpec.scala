@@ -274,72 +274,54 @@ class MappersSpec extends SparkSpec {
     }
   }
 
-  test("M2: dictionary shape == per-row apply, chain stays off the fact side") {
-    import spark.implicits._
-    // duplicates, a null UA, and rule-table hits across every family
-    // class — dictionary() must be bit-identical to apply() including
-    // the null row (null-safe join key), while the rule kernels run
-    // only under the |distinct-UA| dictionary aggregate
+  test("M2: apply over repeated UAs, a null UA and a pre-created placeholder") {
+    // duplicates (the rule kernels answer a repeat from their memo), a
+    // null UA, and rule-table hits across every family class: each row
+    // parses as its UA does among the distinct samples
     val uas = graft.analytics.MapperQueries.uaSamples
     val rows = (0 until 300).map { i =>
       (i.toLong, if (i % 29 == 0) null else uas(i % uas.size))
     }
     val df = rows.toDF("event_id", "_user_agent")
-    val applied = UserAgentMapper(df)
-    val perRow = applied.orderBy($"event_id").collect().map(_.toSeq).toSeq
-    assert(perRow.nonEmpty)
-    val viaDict = UserAgentMapper.dictionary(df)
-      .select(applied.columns.map(org.apache.spark.sql.functions.col)
-        .toIndexedSeq: _*)
-      .orderBy($"event_id").collect().map(_.toSeq).toSeq
-    assert(viaDict === perRow)
-    // ingest's dependent expansion pre-creates enrichment columns as
-    // nulls — the dictionary join must overwrite, not duplicate, them
-    val withPlaceholder = df.withColumn("_user_agent_family",
-      org.apache.spark.sql.functions.lit(null).cast("string"))
-    assert(UserAgentMapper.dictionary(withPlaceholder)
-      .columns.count(_ == "_user_agent_family") == 1)
-    assertRuleWorkOffFactSide(UserAgentMapper.dictionary(df))
-  }
-
-  /** The rule kernels run in the plan, but neither they nor an `rlike`
-    * chain run on its fact side. */
-  private def assertRuleWorkOffFactSide(out: org.apache.spark.sql.DataFrame): Unit = {
-    assert(out.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists(
-      _.isInstanceOf[graft.functions.FirstMatch]))), "no rule kernel in the plan")
-    val plan = out.queryExecution.executedPlan.toString
-    Seq("first_match", "RLIKE").foreach { k =>
-      assert(!streamedSide(plan).contains(k), streamedSide(plan))
+    val produced = UserAgentMapper.dependentFields("_user_agent").map(_._1)
+    def parsed(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy($"event_id").select(produced.map(col): _*).collect().map(_.toSeq).toSeq
+    val out = parsed(UserAgentMapper(df))
+    val alone = uas.zip(parsed(UserAgentMapper(uas.zipWithIndex
+      .map { case (ua, i) => (i.toLong, ua) }.toDF("event_id", "_user_agent")))).toMap
+    rows.zip(out).foreach {
+      case ((_, null), r) => assert(r == Seq("Other", null, "Other", null, "Other"), r)
+      case ((_, ua), r) => assert(r == alone(ua), ua)
     }
+    // ingest's dependent expansion pre-creates enrichment columns as
+    // nulls: apply overwrites them in place, never duplicates them
+    val withPlaceholder = df.withColumn("_user_agent_family", lit(null).cast("string"))
+    val replaced = UserAgentMapper(withPlaceholder)
+    assert(replaced.columns.count(_ == "_user_agent_family") == 1)
+    assert(parsed(replaced) == out)
   }
 
-  /** The streamed (fact) side of the dictionary join: in the tree
-    * printout it sits between the join node and the BroadcastExchange —
-    * it must carry no regex work. Fails loudly if the plan shape ever
-    * stops matching (AQE reuse, renamed nodes) instead of slicing at
-    * -1. */
-  private def streamedSide(plan: String): String = {
-    val join = plan.indexOf("BroadcastHashJoin")
-    val exch = plan.indexOf("BroadcastExchange")
-    assert(join >= 0 && exch > join,
-      s"expected BroadcastHashJoin then BroadcastExchange in:\n$plan")
-    plan.substring(join, exch)
-  }
-
-  test("M3: dictionary shape == per-row apply; chain keyed on distinct hosts") {
-    import spark.implicits._
+  test("M3: apply over repeated URLs, a null URL and a pre-created placeholder") {
     val urls = graft.analytics.MapperQueries.refSamples
     val m = ReferrerMapper(Seq("my.example.com"))
     val rows = (0 until 240).map { i =>
       (i.toLong, if (i % 31 == 0) null else urls(i % urls.size))
     }
     val df = rows.toDF("event_id", "_referrer")
-    val perRow = m(df).orderBy($"event_id").collect().map(_.toSeq).toSeq
-    val viaDict = m.dictionary(df)
-      .select(m(df).columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-      .orderBy($"event_id").collect().map(_.toSeq).toSeq
-    assert(viaDict === perRow)
-    assertRuleWorkOffFactSide(m.dictionary(df))
+    val produced = m.dependentFields("_referrer").map(_._1)
+    def parsed(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy($"event_id").select(produced.map(col): _*).collect().map(_.toSeq).toSeq
+    val out = parsed(m(df))
+    val alone = urls.zip(parsed(m(urls.zipWithIndex
+      .map { case (u, i) => (i.toLong, u) }.toDF("event_id", "_referrer")))).toMap
+    rows.zip(out).foreach {
+      case ((_, null), r) => assert(r.forall(_ == null), r)
+      case ((_, url), r) => assert(r == alone(url), url)
+    }
+    val withPlaceholder = df.withColumn("_referrer_source", lit(null).cast("string"))
+    val replaced = m(withPlaceholder)
+    assert(replaced.columns.count(_ == "_referrer_source") == 1)
+    assert(parsed(replaced) == out)
   }
 
   test("M3: referrer parse — widened source families and term params") {

@@ -6,8 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 /** Measures the broadcast payload of [[Ip2LocationCsv.rangeDim]] at
   * vendor-file scale, replacing j2b's asserted "~10M rows broadcast
   * comfortably" sentence with a number — the same discipline as
-  * RangeDimSizeSpec (Maxmind, 827 MB measured) and
-  * UaDictionarySizeSpec (233 MB measured).
+  * RangeDimSizeSpec (Maxmind, 827 MB measured).
   *
   * Scale anchor: IP2Location's city-class files (DB11) run ~10M ranges
   * for IPv4, and unlike the Maxmind MMDB (whose pointer encoding

@@ -158,4 +158,46 @@ class JsonIngestSpec extends SparkSpec {
       Map("x" -> "DOUBLE", "y" -> "STRING", "w" -> "DOUBLE"))
     assert(r.schema("demo", "b").get.map(_.name) == Seq("z"))
   }
+
+  test("date/timestamp inference: the leading-year guard answers as the " +
+    "unguarded parse does") {
+    import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
+    import java.time.format.DateTimeFormatter
+    import scala.util.Try
+    // the bodies before the guard, verbatim
+    val formats = Seq(
+      DateTimeFormatter.ISO_LOCAL_DATE_TIME,
+      DateTimeFormatter.ofPattern("yyyy-M-d H:m:s.SSS"),
+      DateTimeFormatter.ofPattern("yyyy-M-d H:m:s"),
+      DateTimeFormatter.ofPattern("yyyy-M-d H:m"))
+    def unguardedDate(s: String): Option[LocalDate] =
+      if (s.length == 10) Try(LocalDate.parse(s)).toOption else None
+    def unguardedTimestamp(s: String): Option[Instant] =
+      if (s.length <= 12) None
+      else Try(Instant.parse(s)).toOption
+        .orElse(formats.view.flatMap(f =>
+          Try(LocalDateTime.parse(s.replace('T', ' ').replaceFirst(" ", " "), f))
+            .orElse(Try(LocalDateTime.parse(s, f))).toOption)
+          .headOption.map(_.toInstant(ZoneOffset.UTC)))
+    val shapes = Seq(
+      "2026-01-15", "2026-1-5", "2026-01-15T10:30:00", "2026-01-15T10:30:00.123",
+      "2026-01-15T10:30:00Z", "2026-01-15T10:30:00.123456Z",
+      "2026-1-5 1:2:3.456", "2026-01-15 10:30:00.000", "2026-1-5 1:2:3",
+      "2026-01-15 10:30:00", "2026-1-5 1:2", "2026-01-15 10:30",
+      "+12026-01-15T10:30:00", "+12026-01-15T10:30:00Z", "-0001-01-01T00:00:00Z",
+      "+2026-01-15", "-2026-01-15", "+10000-01-01 00:00", "-12-01-01", "+1-01-01T00:00",
+      "12345678901234", "2026-13-45 99:99:99", "2026-02-30", "0000-01-01", "1999-12-31")
+    val padded = shapes.flatMap(s => Seq(" " + s, "\t" + s, s + " ", "T" + s, "x" + s))
+    val corpus = shapes ++ padded ++ graft.analytics.MapperQueries.uaSamples ++
+      graft.analytics.MapperQueries.refSamples ++
+      Seq("", "a", "summer", "2026", "Mozilla/5.0", "https://a.b/2026-01-15T10:30:00")
+    corpus.foreach { s =>
+      assert(JsonIngest.parseDate(s) == unguardedDate(s), s"date: '$s'")
+      assert(JsonIngest.parseTimestamp(s) == unguardedTimestamp(s), s"timestamp: '$s'")
+    }
+    // the corpus reaches both answers of both functions
+    assert(shapes.count(JsonIngest.parseDate(_).isDefined) >= 3)
+    assert(shapes.count(JsonIngest.parseTimestamp(_).isDefined) >= 10)
+    assert(corpus.count(JsonIngest.parseTimestamp(_).isEmpty) > 100)
+  }
 }

@@ -51,7 +51,7 @@ class OpsBucketSpec extends SparkSpec {
     val table = graft.TempDirs.scratch("graft-opsmigrate").toString
     val ids = (0 until 30).map(i => s"user$i")
     // the pre-r17.5 layout: root-level files, manifest-committed
-    EventStore.appendUnpartitioned(ops(ids), table)
+    EventStore.appendPartitioned(ops(ids), table, Seq.empty)
     val legacyRels = TableManifest.latest(table).get._2
     assert(legacyRels.nonEmpty && legacyRels.forall(!_.contains("/")))
 
