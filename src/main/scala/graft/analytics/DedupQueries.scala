@@ -29,16 +29,6 @@ object DedupQueries {
   def sqlHash60(e: String): String =
     s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
 
-  /** The PRODUCTION shingle hash: codegen'd xxhash64, no hex string
-    * round-trip — several times cheaper per shingle than md5 at corpus
-    * scale, but engine-specific, so the oracle-checked queries stay on
-    * [[hash60]]. Folded into the MinHash field (nonneg mod p) it is a
-    * drop-in: ShingleHashSpec proves the whole LSH pipeline's
-    * GUARANTEE (exact duplicates are always candidates; clusters of
-    * copies stay clusters) holds under either hash. */
-  def shingleHashProd(c: Column): Column =
-    pmod(xxhash64(c), lit(P31))
-
   /** D1 exact dedup: group identical texts, keep the smallest doc_id as
     * canonical. One shuffle on a 60-bit-ish key (md5 hex), map-side
     * partial aggregation keeps the shuffle at |distinct texts|. */
@@ -121,33 +111,6 @@ object DedupQueries {
     sigs
       .select($"doc_id", explode(array(bandCols: _*)).as("bk"))
       .select($"doc_id", $"bk.band".as("band"), $"bk.key".as("key"))
-  }
-
-  /** Row-wise banded LSH keys as ONE array expression over the text
-    * column — the STREAMING formulation: the batch path's signature is
-    * a groupBy over exploded shingles, but a streaming aggregate cannot
-    * precede a stateful operator in the same query, so here the
-    * min-hash folds happen inside array transforms on each row. Same
-    * shingling, hash family, and constants as [[bandedKeysUncapped]]
-    * (shared literals — they cannot drift); StreamingNearDupSpec pins
-    * result equality against the batch d2 path. Docs shorter than a
-    * shingle yield an empty array, matching the batch filter. */
-  private[graft] def bandStructs(text: Column): Column = {
-    val toks = split(text, " ")
-    val shingles = transform(sequence(lit(0), size(toks) - 3), i =>
-      concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2),
-        element_at(toks, i + 3)))
-    val hs = transform(shingles, s => hash60(s) % lit(P31))
-    val sigs = (0 until numHashes).map { j =>
-      array_min(transform(hs, h => (lit(hashA(j)) * h + lit(hashB(j))) % lit(P31)))
-    }
-    val bandArr = array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("_", sigs(2 * b), sigs(2 * b + 1)).as("key"))
-    }: _*)
-    when(size(toks) >= 3, bandArr)
-      .otherwise(array().cast(
-        "array<struct<band:int,key:string>>"))
   }
 
   /** Banded LSH keys with the bucket-size cap applied:

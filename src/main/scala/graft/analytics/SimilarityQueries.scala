@@ -32,13 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityQueries {
 
-  /** dot(a, b) with double accumulator, left-to-right — the HOF
-    * formulation, kept as the executable specification the native
-    * kernel is property-tested against (VectorFoldSpec). */
-  private[analytics] def dotExpr(a: String, b: String): String =
-    s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-       |  CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin
-
   /** The PRODUCTION dot product: [[graft.functions.VectorDot]], one
     * codegen'd plan node (tight cast-multiply-accumulate loop inside
     * whole-stage codegen) instead of the interpreted `aggregate(

@@ -439,7 +439,7 @@ object TextQueries {
     *
     *   - **candidates** come from per-partition lossy-counting heads
     *     (Manku & Motwani VLDB'02; the bounded-summary family of
-    *     [[graft.streaming.HeavyHitters]]'s SpaceSaving): each input
+    *     SpaceSaving): each input
     *     partition counts into a capacity-bounded map and emits its top
     *     [[ServedHeads]] grams — a map-side pass with NO
     *     vocabulary-sized shuffle anywhere (a gram with meaningful

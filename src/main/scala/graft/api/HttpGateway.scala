@@ -88,6 +88,9 @@ import graft.api.HttpGateway.{Door, KeyRole, MasterRole, WriteRole}
   *    probe-pruned reads plus the occupancy stats that trigger
   *    re-seeding. Deltas ride inline JSON (service-sized) or a parquet
   *    `source` path (bulk; the door only triggers the cluster job).
+  *    The substring, vocab, ann and text append doors share one
+  *    contract: a required client `batch_id` through the batch fence,
+  *    and the committed high-water in every response.
   *  - **tokenizer services**: `/tokenizer/train` (k BPE merges learned
   *    over an inline or parquet corpus — the response is the k-row
   *    merge list, bounded at any corpus size) and `/tokenizer/chunks`
@@ -720,8 +723,9 @@ final class HttpGateway(
   /** URL-addressed bulk import (S6): body
     * `{"collection": …, "urls": […], "type": "JSON|CSV|AVRO"}` routed
     * through [[BatchSources.remoteBulk]] to the matching reader, then
-    * stored. The reference's guards (one url, no compression) come
-    * from the engine. */
+    * stored; dead letters go to `$invalid_schema` as at every ingest
+    * door, and the reader's cache is released. The reference's guards
+    * (one url, no compression) come from the engine. */
   private def handleBulkRemote(req: Req): (Int, String) = {
     val b = req.body
     val collection = b.need("collection")
@@ -730,10 +734,15 @@ final class HttpGateway(
     val remote = BatchSources.BulkEventRemote(collection, urls, tpe,
       b.scalar("compression"))
     val n = writeLock.synchronized {
-      val df = BatchSources.remoteBulk(spark, registry, project, remote)
-      val rows = df.count()
-      EventStore.write(df, warehouse, project, collection)
-      rows
+      val res = BatchSources.remoteBulk(spark, registry, project, remote)
+      try {
+        val df = res.byCollection(collection)
+        val rows = df.count()
+        EventStore.write(df, warehouse, project, collection)
+        if (!res.deadLetter.isEmpty)
+          EventStore.writeDeadLetter(res.deadLetter.coalesce(1), warehouse, project)
+        rows
+      } finally res.unpersist()
     }
     (200, s"""{"stored":$n}""")
   }
@@ -1945,6 +1954,18 @@ final class HttpGateway(
         "that re-send the SAME id (last committed high-water is " +
         "returned by every append)"))
 
+  /** One fenced append: the delta folds in through the store's batch
+    * fence (a replayed `batchId` is a no-op), and the response echoes
+    * the committed high-water so a client can recover its next id
+    * after losing state. */
+  private def fencedAppend(store: graft.store.MaintainedStore, dir: String,
+      batchId: Long)(delta: => DataFrame): (Int, String) =
+    writeLock.synchronized {
+      store.maintainBatch(delta, dir, batchId)
+      (200, s"""{"success":true,"batch_id":$batchId,"high_water":${
+        graft.store.VersionedState.lastBatchId(dir)}}""")
+    }
+
   /** Append goes through the batch fence with a REQUIRED client
     * `batch_id`, exactly the vocab-door contract and for the same
     * reason: (count, first) state sum-merges its counts, so a blind
@@ -1953,13 +1974,7 @@ final class HttpGateway(
   private def handleSubstringAppend(req: Req): (Int, String) = {
     val b = req.body
     val dir = namedIndex("substring", b.ident("name"))
-    val batchId = fencedBatchId(b)
-    writeLock.synchronized {
-      graft.store.SubstringIndex.maintainBatch(docsFrameOf(b),
-        dir, batchId)
-      (200, s"""{"success":true,"batch_id":$batchId,"high_water":${
-        graft.store.VersionedState.lastBatchId(dir)}}""")
-    }
+    fencedAppend(graft.store.SubstringIndex, dir, fencedBatchId(b))(docsFrameOf(b))
   }
 
   private def handleSubstringTrim(req: Req): (Int, String) = {
@@ -1990,19 +2005,11 @@ final class HttpGateway(
     * timeout, proxy retry — must be a no-op. The client MUST supply a
     * stable `batch_id` (400 otherwise): a server-defaulted
     * high-water+1 would hand a blind retry a fresh fence and
-    * double-count the very delivery the fence exists to absorb. The
-    * response echoes the committed high-water so a client can recover
-    * its next id after losing state. */
+    * double-count the very delivery the fence exists to absorb. */
   private def handleVocabAppend(req: Req): (Int, String) = {
     val b = req.body
     val dir = namedIndex("vocab", b.ident("name"))
-    val batchId = fencedBatchId(b)
-    writeLock.synchronized {
-      graft.store.VocabStore.maintainBatch(docsFrameOf(b),
-        dir, batchId)
-      (200, s"""{"success":true,"batch_id":$batchId,"high_water":${
-        graft.store.VersionedState.lastBatchId(dir)}}""")
-    }
+    fencedAppend(graft.store.VocabStore, dir, fencedBatchId(b))(docsFrameOf(b))
   }
 
   private def handleVocabPairs(req: Req): (Int, String) = {
@@ -2076,14 +2083,13 @@ final class HttpGateway(
     }
   }
 
+  /** Append goes through the batch fence with a REQUIRED client
+    * `batch_id`, the vocab-door contract: a blind retry of the same
+    * delivery must not add its postings twice. */
   private def handleAnnAppend(req: Req): (Int, String) = {
     val b = req.body
     val dir = namedIndex("ann", b.ident("name"))
-    writeLock.synchronized {
-      graft.store.AnnIndex.append(spark, vectorsFrameOf(b), dir,
-        graft.store.VersionedState.currentVersion(dir) + 1)
-    }
-    (200, """{"success":true}""")
+    fencedAppend(graft.store.AnnIndex, dir, fencedBatchId(b))(vectorsFrameOf(b))
   }
 
   private def handleAnnQuery(req: Req): (Int, String) = {
@@ -2168,17 +2174,18 @@ final class HttpGateway(
     }
   }
 
+  /** Append goes through the batch fence with a REQUIRED client
+    * `batch_id`, the vocab-door contract: a re-appended doc would
+    * double-count in BM25 df/tf, so a blind retry of the same delivery
+    * must be a no-op. */
   private def handleTextAppend(req: Req): (Int, String) = {
     val b = req.body
     val dir = namedIndex("text", b.ident("name"))
+    val batchId = fencedBatchId(b)
     val delta = docsFrameOf(b)
     if (delta.isEmpty)
       throw new IngestRejected("delta batch must contain documents")
-    writeLock.synchronized {
-      graft.store.InvertedIndex.append(spark, delta, dir,
-        graft.store.VersionedState.currentVersion(dir) + 1)
-    }
-    (200, """{"success":true}""")
+    fencedAppend(graft.store.InvertedIndex, dir, batchId)(delta)
   }
 
   private def handleTextSearch(req: Req): (Int, String) = {

@@ -1,19 +1,19 @@
 package graft.api
 
 import graft.analytics.RetrievalQueries
-import graft.store.InvertedIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The lexical-retrieval surface generalized over any document
   * DataFrame — what an application calls to keyword-probe a corpus
-  * (contamination triage, targeted corpus search, hybrid dedup
-  * candidate generation). Each builder is the oracle-proven registry
-  * shape (r1/r2/ix1) with the corpus/columns/query as parameters;
-  * RetrievalQueriesSpec pins the instantiations to their verified twins.
-  * Scale posture matches the registry queries (SCALE.md): the term
-  * filter sits under the shuffle, corpus stats broadcast, serving is
-  * TakeOrderedAndProject, and fusion joins bounded candidate pools.
+  * (contamination triage, targeted corpus search). Each builder is the
+  * oracle-proven registry shape (r1/r4) with the corpus/columns/query
+  * as parameters; RetrievalQueriesSpec pins the instantiations to their
+  * verified twins. Scale posture matches the registry queries
+  * (SCALE.md): the term filter sits under the shuffle, corpus stats
+  * broadcast, serving is TakeOrderedAndProject. The persisted index
+  * is served by the text-index doors over
+  * [[graft.store.InvertedIndex]].
   */
 object Retrieval {
 
@@ -27,47 +27,6 @@ object Retrieval {
     val scored = RetrievalQueries.bm25Scores(std(docs, idCol, textCol), terms)
     scored.orderBy(col("score").desc, col("doc_id")).limit(k)
   }
-
-  /** Reciprocal-rank fusion of the BM25 and tf-idf-cosine candidate
-    * pools (top-`pool` each) — (doc_id, bm25_rank, vsm_rank, rrf). */
-  def hybridTopK(docs: DataFrame, terms: Seq[String], k: Int = 10,
-      pool: Int = 100, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    RetrievalQueries.rrfHybridFrom(std(docs, idCol, textCol), terms, pool, k)
-
-  /** Build (or bootstrap) a persisted inverted index at `path`. */
-  def buildIndex(docs: DataFrame, path: String,
-      idCol: String = "doc_id", textCol: String = "text"): Unit =
-    InvertedIndex.initialize(std(docs, idCol, textCol), path)
-
-  /** Fold a new document batch into the index at `path` (postings are
-    * append-only; version fence rejects replays). */
-  def appendIndex(spark: SparkSession, delta: DataFrame, path: String,
-      idCol: String = "doc_id", textCol: String = "text"): Boolean =
-    InvertedIndex.append(spark, std(delta, idCol, textCol), path,
-      graft.store.VersionedState.currentVersion(path) + 1)
-
-  /** BM25-score `terms` against the persisted index — shard-pruned
-    * postings scan, bit-identical to [[bm25TopK]] over the same
-    * corpus. */
-  def probeIndex(spark: SparkSession, path: String, terms: Seq[String],
-      k: Int = 10): DataFrame =
-    InvertedIndex.probe(spark, path, terms)
-      .orderBy(col("score").desc, col("doc_id")).limit(k)
-
-  /** Exact-phrase occurrence counts per document — the phrase-level
-    * contamination probe (codegen'd kernel, scan-side only). Returns
-    * only the docs containing the phrase: (doc_id, n_occurrences). */
-  def phraseCount(docs: DataFrame, phrase: Seq[String],
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    RetrievalQueries.r3From(std(docs, idCol, textCol), phrase)
-
-  /** [[phraseCount]] served from the persisted index's positional
-    * postings — only the phrase terms' shards are read; identical
-    * counts to the scan by the ix3 oracle contract. */
-  def phraseProbeIndex(spark: SparkSession, path: String,
-      phrase: Seq[String]): DataFrame =
-    InvertedIndex.phraseProbe(spark, path, phrase)
 
   /** Retrieval-quality self-evaluation (oracle-proven r4 shape): MRR,
     * recall@10, nDCG@10 of BM25 ranking each document's own leading

@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.analytics.DedupQueries
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The training-set construction surface generalized over any corpus
@@ -24,21 +24,11 @@ object TrainingSet {
       .groupBy(md5(col("text")).as("text_md5"))
       .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("canonical_id"))
 
-  /** MinHash-LSH near-duplicate candidate pairs (banded, bucket-capped). */
-  def nearDupCandidates(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    DedupQueries.d2From(std(docs, idCol, textCol))
-
   /** Near-duplicate clusters: connected components over the candidate
     * graph, labelled by canonical minimum id. */
   def dedupClusters(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
     DedupQueries.d5From(std(docs, idCol, textCol))
-
-  /** n-gram-Jaccard-verified candidate pairs (score per pair). */
-  def verifiedNearDups(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    DedupQueries.d4From(std(docs, idCol, textCol))
 
   /** Duplicated-substring span coverage per document (the suffix-array
     * dedup approximation — oracle-proven d11 shape): fraction of each
@@ -193,16 +183,6 @@ object TrainingSet {
     graft.analytics.CorpusQueries
       .classifierScoreFrom(docs, bias, weights, threshold)
 
-  /** Fill-in-the-middle (FIM) training examples over any corpus (the
-    * oracle-proven sq4 shape): two hash-derived token cuts split each
-    * document into (prefix, middle, suffix) — reproducible under
-    * retries, scan-side only, zero shuffles. Empty segments are legal
-    * FIM (cuts at the edges degenerate to prefix/suffix-LM forms). */
-  def fimExamples(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    graft.analytics.SequenceQueries.sq4From(
-      docs.select(col(idCol).as("doc_id"), col(textCol).as("text")))
-
   /** TRAIN the linear quality probe on any corpus: one aggregation
     * pass over the t_quality_clf feature set (stop ratio, mean token
     * length, ln tokens; label = the t_quality keep rule) collects the
@@ -218,15 +198,6 @@ object TrainingSet {
     graft.analytics.CorpusQueries.linearProbeWeights(
       graft.analytics.CorpusQueries.probeStatsFrom(std).collect()(0))
   }
-
-  /** DSIR importance scores (Xie et al. 2023): per-document log
-    * importance weight under target-vs-raw add-one-smoothed unigram
-    * LMs. Rows matching `targetPred` train the target LM and are not
-    * scored; the caller ranks/filters by `log_w` (high = most
-    * target-like). One wide shuffle (term frequencies); the vocab
-    * totals broadcast. */
-  def dsirScores(docs: DataFrame, targetPred: Column): DataFrame =
-    graft.analytics.TrainingSetQueries.dsirScoresFrom(docs, targetPred)
 
   /** Exact-count stratified draw: exactly `n` rows per stratum, picked
     * by salted-hash order — the balanced-eval-set need [[sample]]'s
@@ -262,12 +233,4 @@ object TrainingSet {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     graft.analytics.TrainingSetQueries.curationFunnelFrom(
       std(docs, idCol, textCol), std(benchmark, idCol, textCol))
-
-  /** Materialize the corpus as fixed-length packed training shards
-    * (oracle-proven pk3 content): bucket-partitioned parquet of
-    * (seq_id, n_tokens, seq_text), every sequence exactly SeqLen
-    * tokens except each bucket's tail. Returns rows written. */
-  def writeShards(docs: DataFrame, path: String, idCol: String = "doc_id",
-      textCol: String = "text"): Long =
-    graft.analytics.CorpusQueries.packedShards(std(docs, idCol, textCol), path)
 }

@@ -210,11 +210,9 @@ final class MaxmindDb private (buf: Array[Byte],
   /** Enumerate the IPv4 search tree as disjoint, sorted ranges —
     * (ip_lo, ip_hi, decoded data). The trie IS this range list;
     * enumeration is O(|networks|) and each distinct data record
-    * decodes once, shared across every network that references it. */
-  def networks(): Seq[(Long, Long, Any)] = networksIterator().toVector
-
-  /** Streaming form of [[networks]] — nothing materialized beyond the
-    * DFS stack and the shared decode memo. */
+    * decodes once, shared across every network that references it.
+    * Nothing is materialized beyond the DFS stack and the shared
+    * decode memo. */
   def networksIterator(): Iterator[(Long, Long, Any)] = {
     val root = if (metadata.ipVersion == 6) v4Root else 0
     leafIterator(root, 32).map(l => (l.loLo, l.hiLo, l.data))
@@ -246,10 +244,6 @@ final class MaxmindDb private (buf: Array[Byte],
     leafIterator(0, 128, skipV4Aliases = !includeV4Embedded)
       .map(l => (bytes(l.loHi, l.loLo), bytes(l.hiHi, l.hiLo), l.data))
   }
-
-  def networks6(includeV4Embedded: Boolean = false)
-      : Seq[(Array[Byte], Array[Byte], Any)] =
-    networks6Iterator(includeV4Embedded).toVector
 
   /** The broadcast range dim for [[graft.enrich.GeoIpMapper]]:
     * `(ip_lo, ip_hi)` plus the flattened MaxMind attribute set — the
@@ -371,23 +365,6 @@ object MaxmindDb {
       "_isp" -> str(traits.getOrElse("isp", m.getOrElse("isp", null))),
       "_connection_type" -> str(traits.getOrElse("connection_type",
         m.getOrElse("connection_type", null))))
-  }
-
-  private[geo] def ipv4ToLong(ip: String): Option[Long] = {
-    val parts = ip.split("\\.", -1)
-    if (parts.length != 4) return None
-    var acc = 0L
-    var i = 0
-    while (i < 4) {
-      val p = parts(i)
-      if (p.isEmpty || p.length > 3 || !p.forall(c => c >= '0' && c <= '9'))
-        return None
-      val v = p.toInt
-      if (v > 255) return None
-      acc = (acc << 8) | v
-      i += 1
-    }
-    Some(acc)
   }
 
   def readFile(path: String): MaxmindDb =

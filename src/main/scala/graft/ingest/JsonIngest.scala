@@ -515,25 +515,6 @@ object JsonIngest {
     IngestResult(byCollection, dead, rejected)
   }
 
-  /** A3 ingest metrics: per-collection stored/dead-lettered counts for a
-    * batch — the reference's per-project CloudWatch counters
-    * (S3BulkEventStore.java:145-150, WebhookEventMapper.java:168+). One
-    * job over the cached batch; emit to any metrics sink. */
-  def metrics(spark: SparkSession, res: IngestResult): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val stored = res.byCollection.toSeq.map { case (c, df) =>
-      df.select(lit(c).as("collection")).groupBy("collection")
-        .agg(count(lit(1)).as("n_stored"))
-    }.reduceOption(_ unionByName _).getOrElse(
-      spark.emptyDataFrame.select(lit("").as("collection"), lit(0L).as("n_stored")).limit(0))
-    val dead = res.deadLetter.groupBy(col("collection"))
-      .agg(count(lit(1)).as("n_dead"))
-    stored.join(dead, Seq("collection"), "full_outer")
-      .select(col("collection"),
-        coalesce(col("n_stored"), lit(0L)).as("n_stored"),
-        coalesce(col("n_dead"), lit(0L)).as("n_dead"))
-  }
-
   /** `_user` is STRING/LONG only (arrays/maps rejected,
     * JsonEventDeserializer.java:390-397). */
   private def userType(n: JsonNode): FieldType =

@@ -58,23 +58,6 @@ object Multimodal {
     def decode(payloads: Seq[Array[Byte]]): Seq[Array[Float]]
   }
 
-  /** STUB batch decoder: same per-payload features as [[featureVector]]
-    * computed JVM-side — deterministic, so the column-expression path
-    * and the batched path are property-comparable. Swap this object for
-    * an FFI/ONNX-backed implementation; nothing downstream changes. */
-  final class HashBatchDecoder(dim: Int) extends BatchDecoder {
-    def decode(payloads: Seq[Array[Byte]]): Seq[Array[Float]] =
-      payloads.map { bytes =>
-        val s = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-        Array.tabulate(dim) { i =>
-          val hex = java.security.MessageDigest.getInstance("MD5")
-            .digest(s"$i|$s".getBytes("UTF-8"))
-            .take(8).map("%02x".format(_)).mkString.take(15)
-          (java.lang.Long.parseLong(hex, 16) / 1.152921504606847e18).toFloat
-        }
-      }
-  }
-
   /** Batched feature extraction over partitions: each task drains its
     * partition in fixed-size batches through the decoder — bounded
     * memory per task (batchSize × payload), one decoder instance per

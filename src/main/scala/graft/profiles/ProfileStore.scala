@@ -2,7 +2,6 @@ package graft.profiles
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
 
 /** User-profile mutation operators (SURVEY.md §2.5, U1-U8) — the
   * reference's one mutable table (`_users`,
@@ -26,9 +25,7 @@ import org.apache.spark.sql.functions._
   * partial aggregation is exact) and runs `fold` at finish; it is
   * property-tested equal to `fold`. Its memory bound is per user: the
   * buffer is that user's whole op list, so one user's history must fit
-  * in one task's memory. [[ProfileMerge.compactLog]] folds a log prefix
-  * into a snapshot, which bounds the list by ops since that watermark;
-  * no door runs it yet, so on a gateway the list grows with account
+  * in one task's memory, and on a gateway the list grows with account
   * age.
   */
 final case class ProfileOp(
@@ -50,7 +47,7 @@ object ProfileOps {
 object ProfileMerge {
 
   /** Reference-exact sequential fold of one user's ops: the per-user
-    * kernel of [[merge]], [[compactLog]] and the property tests. */
+    * kernel of [[merge]] and the property tests. */
   def fold(ops: Seq[ProfileOp]): Map[String, String] = {
     val sorted = ops.sortBy(o => (o.ts, o.seq))
     val state = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -91,12 +88,12 @@ object ProfileMerge {
     * order. */
   val aggregator: Aggregator[ProfileOp, List[ProfileOp], Map[String, String]] =
     new Aggregator[ProfileOp, List[ProfileOp], Map[String, String]] {
-      def zero: List[ProfileOp] = Nil
-      def reduce(b: List[ProfileOp], a: ProfileOp): List[ProfileOp] = a :: b
-      def merge(x: List[ProfileOp], y: List[ProfileOp]): List[ProfileOp] = x ::: y
-      def finish(b: List[ProfileOp]): Map[String, String] = fold(b)
-      def bufferEncoder: Encoder[List[ProfileOp]] = bufEncoder
-      def outputEncoder: Encoder[Map[String, String]] = outEncoder
+      override def zero: List[ProfileOp] = Nil
+      override def reduce(b: List[ProfileOp], a: ProfileOp): List[ProfileOp] = a :: b
+      override def merge(x: List[ProfileOp], y: List[ProfileOp]): List[ProfileOp] = x ::: y
+      override def finish(b: List[ProfileOp]): Map[String, String] = fold(b)
+      override def bufferEncoder: Encoder[List[ProfileOp]] = bufEncoder
+      override def outputEncoder: Encoder[Map[String, String]] = outEncoder
     }
 
   /** Profiles as (project, id, properties-map). */
@@ -121,40 +118,5 @@ object ProfileMerge {
     import ops.sparkSession.implicits._
     merge(ops.filter(o =>
       o.ts < asOfTs || (o.ts == asOfTs && o.seq <= asOfSeq)))
-  }
-
-  /** J3: point lookup against a merged profile table. */
-  def getUser(profiles: DataFrame, project: String, id: String): DataFrame =
-    profiles.filter(col("project") === project && col("id") === id)
-
-  /** Op-log compaction: every op at or before `watermark` folds into an
-    * equivalent per-user SNAPSHOT — a `set` of the live values plus an
-    * `unset` tombstone for nulled keys, both stamped at the watermark —
-    * unioned with the untouched tail. The tombstone matters: a later
-    * `set_once` must still see an unset key as settable, exactly as it
-    * would against the full log. Invariant (property-tested):
-    * merge(compact(log, w)) == merge(log) for every split point. At
-    * 100 TB this is the profile store's lifecycle: the log stays
-    * bounded by ops-since-last-compaction, not account age. */
-  def compactLog(ops: Dataset[ProfileOp], watermark: Long): Dataset[ProfileOp] = {
-    import ops.sparkSession.implicits._
-    val snapshot = ops.filter(_.ts <= watermark)
-      .groupByKey(o => (o.project, o.id))
-      .flatMapGroups { (key: (String, String), it: Iterator[ProfileOp]) =>
-        val (project, id) = key
-        val state = fold(it.toSeq)
-        val live = state.filter(_._2 != null)
-        val dead = state.collect { case (k, null) => k -> "" }
-        val setOp =
-          if (live.nonEmpty)
-            Seq(ProfileOp(project, id, watermark, 0L, ProfileOps.Set, live))
-          else Nil
-        val unsetOp =
-          if (dead.nonEmpty)
-            Seq(ProfileOp(project, id, watermark, 1L, ProfileOps.Unset, dead))
-          else Nil
-        setOp ++ unsetOp
-      }
-    snapshot.union(ops.filter(_.ts > watermark))
   }
 }

@@ -34,9 +34,8 @@ import graft.analytics.DedupQueries
   * idempotent); the batch fence additionally makes it FREE — a replay
   * skips the |keys|-sized state read/merge/write, and the version count
   * stays one per data batch instead of one per delivery. [[maintain]]
-  * is the persisted complement of [[graft.streaming.StreamingNearDup]]
-  * (whose state lives inside one query's checkpoint): this state
-  * survives restarts and is shared with batch probes.
+  * keeps the index current from a stream; the state survives restarts
+  * and is shared with batch probes.
   */
 object DedupIndex extends MergedState {
 

@@ -103,7 +103,7 @@ class PipelineSpec extends SparkSpec {
       .toMap
     val viaExpr = asMap(Multimodal.extractFeatures(media, dim = 4)
       .select(col("doc_id"), col("embedding")))
-    val dec = new Multimodal.HashBatchDecoder(4)
+    val dec = new PipelineSpec.HashBatchDecoder(4)
     // batch boundaries must not change results — a ragged final batch
     // (size 7) and a full-width one (64) agree with the expression path
     for (bs <- Seq(7, 64)) {
@@ -111,5 +111,25 @@ class PipelineSpec extends SparkSpec {
         .select(col("doc_id"), col("embedding")))
       assert(viaBatch == viaExpr, s"batchSize=$bs diverged")
     }
+  }
+}
+
+object PipelineSpec {
+
+  /** A batch decoder with the same per-payload features as
+    * `Multimodal.featureVector`, computed JVM-side: deterministic, so
+    * the column-expression path and the batched path compare equal.
+    * An FFI- or ONNX-backed decoder plugs into the same seam. */
+  final class HashBatchDecoder(dim: Int) extends Multimodal.BatchDecoder {
+    def decode(payloads: Seq[Array[Byte]]): Seq[Array[Float]] =
+      payloads.map { bytes =>
+        val s = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+        Array.tabulate(dim) { i =>
+          val hex = java.security.MessageDigest.getInstance("MD5")
+            .digest(s"$i|$s".getBytes("UTF-8"))
+            .take(8).map("%02x".format(_)).mkString.take(15)
+          (java.lang.Long.parseLong(hex, 16) / 1.152921504606847e18).toFloat
+        }
+      }
   }
 }

@@ -250,6 +250,39 @@ class HttpGatewaySpec extends SparkSpec {
     }
   }
 
+  test("remote bulk JSON stores its dead letters in invalid_schema and " +
+    "releases its ingest cache") {
+    val registry = SchemaRegistry.inMemory()
+    val warehouse = graft.TempDirs.scratch("graft-http").toString
+    val gw = new HttpGateway(spark, registry, warehouse, "demo")
+    val port = gw.start()
+    try {
+      // `amount` is DOUBLE from the first import…
+      def remote(events: String): HttpResponse[String] = {
+        val f = java.nio.file.Files.createTempFile("graft-http-bulk", ".json")
+        java.nio.file.Files.writeString(f,
+          s"""{"api": {"api_key": "k"}, "events": [$events]}""")
+        post(port, "/event/bulk/remote",
+          s"""{"collection": "orders", "urls": ["${f.toUri}"], "type": "JSON"}""")
+      }
+      assert(remote("""{"collection": "orders", "properties": {"_user": "u1", "_time": "2026-01-15 08:00:00.000", "amount": 10.5}}""")
+        .body() == """{"stored":1}""")
+      val before = spark.sparkContext.getPersistentRDDs.size
+      // …so a non-numeric amount cannot coerce: the event stores with
+      // amount=null and the field is dead-lettered
+      val res = remote(
+        """{"collection": "orders", "properties": {"_user": "u2", "_time": "2026-01-15 09:00:00.000", "amount": 2.0}},
+          |{"collection": "orders", "properties": {"_user": "u3", "_time": "2026-01-15 10:00:00.000", "amount": "junk"}}""".stripMargin)
+      assert(res.statusCode() == 200 && res.body() == """{"stored":2}""", res.body())
+      val dead = spark.read.parquet(s"$warehouse/demo/invalid_schema").collect()
+      assert(dead.length == 1)
+      assert(dead(0).getAs[String]("property") == "amount")
+      assert(dead(0).getAs[String]("_user") == "u3")
+      assert(spark.sparkContext.getPersistentRDDs.size == before,
+        s"cached RDDs left behind: ${spark.sparkContext.getPersistentRDDs}")
+    } finally gw.stop()
+  }
+
   test("query door runs SQL over the stored collections through the " +
     "full engine; analysis errors are 400s") {
     withGateway { (_, port) =>
@@ -2214,7 +2247,7 @@ class HttpGatewaySpec extends SparkSpec {
 
       // an appended vector with the same direction becomes findable
       assert(post(port, "/index/ann/append",
-        s"""{"name": "emb", "vectors": [${vec(100, 0.3)}]}""").statusCode() == 200)
+        s"""{"name": "emb", "batch_id": 0, "vectors": [${vec(100, 0.3)}]}""").statusCode() == 200)
       assert(post(port, "/index/ann/query",
         """{"name": "emb", "vector": [0.3, 0.7, 0.25, 0.75], "k": 3}""")
         .body().contains(""""vec_id":100"""))
@@ -2257,7 +2290,7 @@ class HttpGatewaySpec extends SparkSpec {
 
       // an appended doc joins the ranking without rebuilding
       assert(post(port, "/index/text/append",
-        s"""{"name": "lex", "docs": [${doc(10, "spark spark tuning notes")}]}""")
+        s"""{"name": "lex", "batch_id": 0, "docs": [${doc(10, "spark spark tuning notes")}]}""")
         .statusCode() == 200)
       val q2 = post(port, "/index/text/search",
         """{"name": "lex", "terms": ["spark"], "k": 5}""")
@@ -2307,7 +2340,54 @@ class HttpGatewaySpec extends SparkSpec {
       assert(post(port, "/index/text/create",
         """{"name": "fresh", "docs": []}""").statusCode() == 400)
       assert(post(port, "/index/text/append",
-        """{"name": "lex", "docs": []}""").statusCode() == 400)
+        """{"name": "lex", "batch_id": 1, "docs": []}""").statusCode() == 400)
+    }
+  }
+
+  test("text and ann append doors are fenced: the same delivery sent " +
+    "twice leaves postings and BM25 scores unchanged; no batch_id is a 400") {
+    withGateway { (_, port) =>
+      def doc(id: Long, text: String) =
+        s"""{"doc_id": $id, "text": "$text"}"""
+      assert(post(port, "/index/text/create",
+        s"""{"name": "lex", "docs": [${doc(1, "spark shuffles the hash join")},
+           |${doc(2, "a window frame over events")}]}""".stripMargin)
+        .statusCode() == 200)
+      val delivery =
+        s"""{"name": "lex", "batch_id": 3, "docs": [${doc(10, "spark spark tuning notes")}]}"""
+      val first = post(port, "/index/text/append", delivery)
+      assert(first.statusCode() == 200, first.body())
+      val search = """{"name": "lex", "terms": ["spark"], "k": 5}"""
+      val scores = post(port, "/index/text/search", search).body()
+      val stats = get(port, "/index/text/stats?name=lex").body()
+      // a blind retry: fenced, so df/tf and the version do not move
+      val retry = post(port, "/index/text/append", delivery)
+      assert(retry.statusCode() == 200, retry.body())
+      assert(post(port, "/index/text/search", search).body() == scores)
+      assert(get(port, "/index/text/stats?name=lex").body() == stats)
+      assert(Seq(first, retry).forall(_.body().contains(""""high_water":3""")),
+        retry.body())
+      val noId = post(port, "/index/text/append",
+        s"""{"name": "lex", "docs": [${doc(11, "spark again")}]}""")
+      assert(noId.statusCode() == 400, noId.body())
+      assert(post(port, "/index/text/search", search).body() == scores)
+
+      def vec(id: Long, x: Double) =
+        s"""{"vec_id": $id, "embedding": [${x}, ${1 - x}, 0.25, 0.75]}"""
+      val boot = (0L until 20L).map(i => vec(i, (i % 10) / 10.0)).mkString(",")
+      assert(post(port, "/index/ann/create",
+        s"""{"name": "emb", "vectors": [$boot]}""").statusCode() == 200)
+      val vectors = s"""{"name": "emb", "batch_id": 0, "vectors": [${vec(100, 0.3)}]}"""
+      assert(post(port, "/index/ann/append", vectors).statusCode() == 200)
+      val annStats = get(port, "/index/ann/stats?name=emb").body()
+      assert(annStats.contains(""""postings":21"""), annStats)
+      val annRetry = post(port, "/index/ann/append", vectors)
+      assert(annRetry.statusCode() == 200, annRetry.body())
+      assert(get(port, "/index/ann/stats?name=emb").body() == annStats)
+      assert(annRetry.body().contains(""""high_water":0"""), annRetry.body())
+      assert(post(port, "/index/ann/append",
+        s"""{"name": "emb", "vectors": [${vec(101, 0.4)}]}""").statusCode() == 400)
+      assert(get(port, "/index/ann/stats?name=emb").body() == annStats)
     }
   }
 

@@ -65,7 +65,7 @@ class MaxmindDbSpec extends SparkSpec {
         s"rs=$rs ipv=$ipv")
       assert(db.lookup("2.0.0.1") === None, s"rs=$rs ipv=$ipv")
       // enumeration is identical across widths/embeddings
-      val nets = db.networks().map { case (lo, hi, _) => (lo, hi) }
+      val nets = db.networksIterator().toVector.map { case (lo, hi, _) => (lo, hi) }
       assert(nets === Seq(
         (16777216L, 16777471L), (16777472L, 16777727L),
         (16777728L, 16778239L)), s"rs=$rs ipv=$ipv")
@@ -84,7 +84,7 @@ class MaxmindDbSpec extends SparkSpec {
 
   test("networks() enumeration == per-IP lookup at every boundary") {
     val db = MaxmindDb.read(MmdbFixture.write(cityEntries))
-    val nets = db.networks()
+    val nets = db.networksIterator().toVector
     nets.foreach { case (lo, hi, data) =>
       def ip(n: Long) =
         s"${(n >> 24) & 255}.${(n >> 16) & 255}.${(n >> 8) & 255}.${n & 255}"
@@ -197,7 +197,7 @@ class MaxmindDbSpec extends SparkSpec {
 
   test("networks6 enumeration == per-IP lookup at every v6 boundary") {
     val db = MaxmindDb.read(MmdbFixture.write(dualStackEntries, ipVersion = 6))
-    val nets = db.networks6()
+    val nets = db.networks6Iterator().toVector
     assert(nets.nonEmpty)
     nets.foreach { case (lo, hi, data) =>
       assert(db.lookup(fmt16(lo)) === Some(data), fmt16(lo))
@@ -212,8 +212,8 @@ class MaxmindDbSpec extends SparkSpec {
     // the default excludes the ::/96 v4 embedding (those probes take
     // the v4 dim); includeV4Embedded restores it
     assert(!nets.exists { case (lo, _, _) => lo.take(12).forall(_ == 0) })
-    val full = db.networks6(includeV4Embedded = true)
-    assert(full.size === nets.size + db.networks().size)
+    val full = db.networks6Iterator(includeV4Embedded = true).toVector
+    assert(full.size === nets.size + db.networksIterator().toVector.size)
   }
 
   test("the ::ffff:0:0/96 v4-mapped alias prunes like ::/96; redirects win") {
@@ -227,9 +227,9 @@ class MaxmindDbSpec extends SparkSpec {
       "::ffff:1.0.0.0/120" -> Map("country" -> Map("iso_code" -> "ZZ")),
       "2001:db8::/32" -> Map("country" -> Map("iso_code" -> "JP")))
     val db = MaxmindDb.read(MmdbFixture.write(entries, ipVersion = 6))
-    val nets = db.networks6()
+    val nets = db.networks6Iterator().toVector
     assert(nets.size === 1) // only the genuine v6 network
-    assert(db.networks6(includeV4Embedded = true).size === 3)
+    assert(db.networks6Iterator(includeV4Embedded = true).toVector.size === 3)
     def cc(ip: String) = db.lookup(ip)
       .map(_.asInstanceOf[Map[String, Any]]("country")
         .asInstanceOf[Map[String, Any]]("iso_code")).orNull
@@ -240,13 +240,13 @@ class MaxmindDbSpec extends SparkSpec {
 
   test("shared data records decode once and are identity-shared") {
     val db = MaxmindDb.read(MmdbFixture.write(dualStackEntries, ipVersion = 6))
-    val all = db.networks6(includeV4Embedded = true).map(_._3) ++
-      db.networks().map(_._3)
+    val all = db.networks6Iterator(includeV4Embedded = true).toVector.map(_._3) ++
+      db.networksIterator().toVector.map(_._3)
     // AU (v4) and SF (v6) share their traits record via pointer dedup;
     // more to the point, the SAME network looked up twice or enumerated
     // after a lookup must be the SAME object (the decode memo)
     val au1 = db.lookup("1.0.0.7").get
-    val au2 = db.networks().find(_._1 === 16777216L).get._3
+    val au2 = db.networksIterator().toVector.find(_._1 === 16777216L).get._3
     assert(au1.asInstanceOf[AnyRef] eq au2.asInstanceOf[AnyRef])
     // distinct records ≤ entries, never per-network copies
     val ids = new java.util.IdentityHashMap[AnyRef, Unit]()
@@ -332,7 +332,7 @@ class MaxmindDbSpec extends SparkSpec {
       val rs = Seq(24, 28, 32)(round % 3)
       val db = MaxmindDb.read(
         MmdbFixture.write(entries, recordSize = rs, ipVersion = 6))
-      val nets = db.networks6()
+      val nets = db.networks6Iterator().toVector
       assert(nets.size === entries.size, s"round $round")
       nets.foreach { case (lo, hi, data) =>
         assert(db.lookup(fmt16(lo)) === Some(data))

@@ -90,6 +90,25 @@ object MmdbFixture {
   private final case class Node(var left: Any = null, var right: Any = null)
   // child slots hold: null (no data), Node, or Integer data offset
 
+  /** A dotted quad as its 32-bit value; None unless four decimal
+    * octets in 0..255. */
+  private def ipv4ToLong(ip: String): Option[Long] = {
+    val parts = ip.split("\\.", -1)
+    if (parts.length != 4) return None
+    var acc = 0L
+    var i = 0
+    while (i < 4) {
+      val p = parts(i)
+      if (p.isEmpty || p.length > 3 || !p.forall(c => c >= '0' && c <= '9'))
+        return None
+      val v = p.toInt
+      if (v > 255) return None
+      acc = (acc << 8) | v
+      i += 1
+    }
+    Some(acc)
+  }
+
   /** Build a valid MMDB byte array. `entries` are (cidr, record) with
     * dotted-quad IPv4 CIDRs or (when `ipVersion` is 6) IPv6 CIDRs;
     * `recordSize` ∈ {24, 28, 32}; `ipVersion` 4 stores the tree over
@@ -119,7 +138,7 @@ object MmdbFixture {
           require(b != null, s"bad v6 literal $ip")
           b
         } else {
-          val ipNum = MaxmindDb.ipv4ToLong(ip).getOrElse(sys.error(s"bad ip $ip"))
+          val ipNum = ipv4ToLong(ip).getOrElse(sys.error(s"bad ip $ip"))
           val b = new Array[Byte](totalBits / 8)
           var i = 0
           while (i < 4) {

@@ -123,9 +123,11 @@ class BatchSourcesSpec extends SparkSpec {
         |  {"collection": "orders", "properties": {"amount": 10.5, "_user": "u1"}},
         |  {"collection": "orders", "properties": {"amount": 2.0, "_user": "u2"}}
         |]}""".stripMargin)
-    val df = remoteBulk(spark, registry, "p",
+    val res = remoteBulk(spark, registry, "p",
       BulkEventRemote("orders", Seq(f.toUri.toString), CopyType.JSON))
+    val df = res.byCollection("orders")
     assert(df.count() == 2)
     assert(df.columns.toSet == Set("amount", "_user"))
+    res.unpersist()
   }
 }

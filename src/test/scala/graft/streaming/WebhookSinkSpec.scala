@@ -97,8 +97,11 @@ class WebhookSinkSpec extends SparkSpec {
       """{"collection": "c1", "properties": {"n": 2.0}}""",
       """{"collection": "c1", "properties": {"n": "junk"}}""",
       """{"collection": "c2", "properties": {"s": "x"}}""")))
-    val m = JsonIngest.metrics(spark, res).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // per collection: rows stored, and field values dead-lettered
+    val dead = res.deadLetter.groupBy("collection").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val m = res.byCollection.map { case (c, df) =>
+      c -> (df.count(), dead.getOrElse(c, 0L)) }
     assert(m("c1") == (2L, 1L)) // 2 rows stored, 1 dead-lettered value
     assert(m("c2") == (1L, 0L))
     res.unpersist()
