@@ -72,7 +72,7 @@ object SourceQueries {
     val registry = SchemaRegistry.inMemory()
     val ingested = BatchSources.remoteBulk(spark, registry, "s6",
       BatchSources.BulkEventRemote("nation", Seq(part.toURI.toString),
-        BatchSources.CopyType.CSV)).byCollection("nation")
+        BatchSources.CopyType.CSV))().byCollection("nation")
     ingested
       .select($"n_nationkey".cast("long").as("n_nationkey"),
         $"n_name", $"n_regionkey".cast("long").as("n_regionkey"))

@@ -413,8 +413,8 @@ final class HttpGateway(
   // ---------------- routes ----------------
 
   private def handleCollect(req: Req): (Int, String) = {
-    val n = ingestAndStore(resolveSentinels(Seq(req.text), req.ex),
-      cfCountry = cfCountry(req.ex))
+    val n = store(JsonIngest.ingest(spark, registry, project,
+      resolveSentinels(Seq(req.text), req.ex)), cfCountry = cfCountry(req.ex))
     if (n == 0) (400, """{"error":"event was not stored (see dead letter)"}""")
     else (200, "1")
   }
@@ -435,7 +435,8 @@ final class HttpGateway(
       BatchSources.parseEnvelope(req.text).events, excludedCollections)
     val n =
       if (good.isEmpty) 0L
-      else ingestAndStore(resolveSentinels(good, req.ex), cfCountry = cfCountry(req.ex))
+      else store(JsonIngest.ingest(spark, registry, project,
+        resolveSentinels(good, req.ex)), cfCountry = cfCountry(req.ex))
     if (failed.nonEmpty) (409, failed.mkString("[", ",", "]"))
     else (200, s"""{"stored":$n}""")
   }
@@ -461,10 +462,10 @@ final class HttpGateway(
       // PER-REQUEST scratch, not scratchFor: the handler pool is
       // 8-wide and scratchFor keeps only two generations per key, so a
       // third concurrent same-kind bulk would evict the first
-      // request's body file before its lazy Spark read (which runs
-      // later, inside writeLock) ever executes. A private dir has no
-      // eviction race; it is released eagerly once enrichAndStore has
-      // run every action over it.
+      // request's body file before its read (which runs later, inside
+      // writeLock) ever executes. A private dir has no eviction race;
+      // it is released eagerly once the store step has run every
+      // action over it.
       val dir = graft.TempDirs.scratch(s"gateway-bulk-$kind")
       try {
         val f = dir.resolve(s"body.$kind")
@@ -484,7 +485,7 @@ final class HttpGateway(
           }
         }
         java.nio.file.Files.write(f, bytes)
-        val df =
+        val n = store(JsonIngest.typedResult(normalized,
           try {
             if (kind == "csv")
               graft.ingest.CsvIngest.ingest(spark, registry, project, normalized,
@@ -495,17 +496,13 @@ final class HttpGateway(
           } catch {
             case e: IllegalArgumentException =>
               throw new IngestRejected(String.valueOf(e.getMessage))
-          }
-        val n = writeLock.synchronized {
-          enrichAndStore(Seq(normalized -> df), runMappers = true,
-            cfCountry = cfCountry(req.ex))
-        }
+          }), cfCountry = cfCountry(req.ex))
         (200, s"""{"stored":$n}""")
       } finally graft.TempDirs.release(dir)
     } else {
       val env = BatchSources.parseEnvelope(req.text, enforceBodyCap = false)
-      val n = ingestAndStore(resolveSentinels(env.events, req.ex),
-        cfCountry = cfCountry(req.ex))
+      val n = store(JsonIngest.ingest(spark, registry, project,
+        resolveSentinels(env.events, req.ex)), cfCountry = cfCountry(req.ex))
       (200, s"""{"stored":$n}""")
     }
   }
@@ -595,13 +592,6 @@ final class HttpGateway(
     out
   }
 
-  /** A request of at most this many raw event lines is small: it
-    * ingests and enriches as a local relation on the driver
-    * ([[ingestLines]]). Above it, ingest runs as Spark jobs over one
-    * partition. The size picks only the ingest leaf: the mappers and
-    * the write are the same for both. */
-  private val SmallRequestLines = 64
-
   /** The built-in enrichment stage every mapped ingest runs — the
     * reference registers these module mappers on the collect path
     * (EventCollectionHttpService.java:123-151): M1 timestamp skew, M5
@@ -677,7 +667,8 @@ final class HttpGateway(
     * path must not re-run enrichment). */
   private def handleCopy(req: Req): (Int, String) = {
     val env = BatchSources.parseEnvelope(req.text, enforceBodyCap = false)
-    val n = ingestAndStore(env.events, runMappers = false)
+    val n = store(JsonIngest.ingest(spark, registry, project, env.events),
+      runMappers = false)
     (200, s"""{"stored":$n}""")
   }
 
@@ -703,7 +694,8 @@ final class HttpGateway(
         case None =>
           ex.getResponseHeaders.set("server-error", "collection query parameter is required")
         case Some(line) =>
-          if (ingestAndStore(Seq(line), cfCountry = cfCountry(ex)) == 0)
+          if (store(JsonIngest.ingest(spark, registry, project, Seq(line)),
+              cfCountry = cfCountry(ex)) == 0)
             ex.getResponseHeaders.set("server-error", "event was not stored")
       }
     } catch {
@@ -722,28 +714,23 @@ final class HttpGateway(
 
   /** URL-addressed bulk import (S6): body
     * `{"collection": …, "urls": […], "type": "JSON|CSV|AVRO"}` routed
-    * through [[BatchSources.remoteBulk]] to the matching reader, then
-    * stored; dead letters go to `$invalid_schema` as at every ingest
-    * door, and the reader's cache is released. The reference's guards
-    * (one url, no compression) come from the engine. */
+    * through [[BatchSources.remoteBulk]] to the matching reader. A JSON
+    * list is fetched and parsed before the write lock, so a slow remote
+    * stalls no other door; its events go to their own collections, as
+    * `/event/bulk` stores them, and `collection` names only a CSV/Avro
+    * body's target. The rows then take the [[store]] step with no
+    * mapper stage: dead letters go to `$invalid_schema`, every view on
+    * a collection folds the rows in, and the reader's cache is
+    * released. The reference's guards (one url, no compression) come
+    * from the engine. */
   private def handleBulkRemote(req: Req): (Int, String) = {
     val b = req.body
     val collection = b.need("collection")
     val urls = b.strings("urls").getOrElse(Fields.missing("urls array"))
     val tpe = BatchSources.CopyType.of(b.scalar("type").getOrElse(""))
-    val remote = BatchSources.BulkEventRemote(collection, urls, tpe,
-      b.scalar("compression"))
-    val n = writeLock.synchronized {
-      val res = BatchSources.remoteBulk(spark, registry, project, remote)
-      try {
-        val df = res.byCollection(collection)
-        val rows = df.count()
-        EventStore.write(df, warehouse, project, collection)
-        if (!res.deadLetter.isEmpty)
-          EventStore.writeDeadLetter(res.deadLetter.coalesce(1), warehouse, project)
-        rows
-      } finally res.unpersist()
-    }
+    val ingest = BatchSources.remoteBulk(spark, registry, project,
+      BatchSources.BulkEventRemote(collection, urls, tpe, b.scalar("compression")))
+    val n = store(ingest(), runMappers = false)
     (200, s"""{"stored":$n}""")
   }
 
@@ -1622,7 +1609,9 @@ final class HttpGateway(
     // the reference's webhook path stores DIRECTLY — no mapper stage
     // (WebHookHttpService.java:232 calls eventStore.store without
     // mapEvent); the hook's own JS transform is its enrichment
-    val n = if (lines.isEmpty) 0L else ingestAndStore(lines, runMappers = false)
+    val n =
+      if (lines.isEmpty) 0L
+      else store(JsonIngest.ingest(spark, registry, project, lines), runMappers = false)
     (200, if (n > 0) "1" else "0")
   }
 
@@ -1801,20 +1790,18 @@ final class HttpGateway(
       .map { case (f, t) => f -> graft.core.FieldType.fromName(t) }
     val events = b.array("events").getOrElse(Fields.missing("events array"))
       .map(_.node.toString)
-    val res = ingestLines(SchemaRegistry.inMemory(), events)
-    try {
-      val out = res.byCollection.toSeq.sortBy(_._1).flatMap { case (coll, df) =>
-        val applied =
-          // the script sees the request as one batch, whichever leaf
-          try graft.enrich.js.JsCustomMapper("test", coll, produced, ps, script)(df.coalesce(1))
-          catch {
-            case e: graft.enrich.js.MiniJs.JsException =>
-              throw new IngestRejected(s"invalid script: ${e.getMessage}")
-          }
-        applied.toJSON.collect()
-      }
-      (200, out.mkString("[", ",", "]"))
-    } finally res.unpersist()
+    val res = JsonIngest.ingest(spark, SchemaRegistry.inMemory(), project, events)
+    val out = res.byCollection.toSeq.sortBy(_._1).flatMap { case (coll, df) =>
+      val applied =
+        // the script sees the request as one batch
+        try graft.enrich.js.JsCustomMapper("test", coll, produced, ps, script)(df.coalesce(1))
+        catch {
+          case e: graft.enrich.js.MiniJs.JsException =>
+            throw new IngestRejected(s"invalid script: ${e.getMessage}")
+        }
+      applied.toJSON.collect()
+    }
+    (200, out.mkString("[", ",", "]"))
   }
 
   // -------- index services (the incremental stores over HTTP) --------
@@ -2807,58 +2794,37 @@ final class HttpGateway(
     if (geoRanges.isEmpty) None
     else Option(ex.getRequestHeaders.getFirst("HTTP_CF_IPCOUNTRY")).filter(_.nonEmpty)
 
-  /** JSON ingest of a request's lines, leaf picked by size: a small
-    * request runs ingest's functions on the driver and yields local
-    * relations; a larger one runs them as Spark jobs over one
-    * partition. */
-  private def ingestLines(reg: SchemaRegistry,
-      lines: Seq[String]): JsonIngest.IngestResult =
-    if (lines.length <= SmallRequestLines) JsonIngest.ingest(spark, reg, project, lines)
-    else JsonIngest.ingest(spark, reg, project, spark.sparkContext.parallelize(lines, 1))
-
-  /** Ingest raw event lines through the standard two-pass path and
-    * append each collection to the store; dead letters go to the
-    * `$invalid_schema` table exactly as in the batch pipeline. Returns
-    * rows stored. */
-  private def ingestAndStore(lines: Seq[String],
-      runMappers: Boolean = true,
-      cfCountry: Option[String] = None): Long = writeLock.synchronized {
-    val res = ingestLines(registry, lines)
-    try {
-      val n = enrichAndStore(res.byCollection.toSeq, runMappers, cfCountry)
-      // a local relation answers isEmpty with no job; one partition (as
-      // the distributed leaf has) keeps the write to one file
-      if (!res.deadLetter.isEmpty)
-        EventStore.writeDeadLetter(res.deadLetter.coalesce(1), warehouse, project)
-      n
-    } finally res.unpersist()
-  }
-
-  /** The shared enrich → gate → store pipeline behind every ingest door
-    * (JSON lines via [[ingestAndStore]]; the CSV/Avro bulk bodies feed
-    * typed frames in directly). Phase 1: the built-in module mappers,
-    * then stored custom mappers (the reference's mapper stage, SURVEY
-    * §4 step 3); a mapper that drops a row keeps it out of the store
-    * AND the stored count; `/event/copy` opts out (mapEvents=false).
-    * The spider gate runs on every collection BEFORE anything is
-    * written, so a rejected request never stores a partial batch — the
-    * reference throws FORBIDDEN from the mapper stage, before storage
+  /** The one store step behind every event door. Under [[writeLock]],
+    * in order: the ingest (by name, so a door's parse and registry
+    * evolution run inside the lock); phase 1 enrichment, the built-in
+    * module mappers, then stored custom mappers (the reference's mapper
+    * stage, SURVEY §4 step 3; `/event/copy`, hooks and remote bulk opt
+    * out with `runMappers = false`); the spider gate; one write per
+    * collection; the fold into every view on it; the dead-letter write
+    * to `$invalid_schema`; and the ingest's `unpersist`. Returns rows
+    * stored; a mapper that drops a row keeps it out of the store AND
+    * the count.
+    *
+    * The gate runs on every collection BEFORE anything is written, so a
+    * rejected request never stores a partial batch — the reference
+    * throws FORBIDDEN from the mapper stage, before storage
     * (UserAgentEventMapper.java:87-90). The gate and the stored-row
     * count are one fold over the spider column.
     *
     * Each enriched frame is materialized once: the gate, the write and
     * every MV delta would otherwise re-execute the whole mapper chain
     * per action — and re-fire the log accumulator, duplicating logger
-    * entries. A frame that optimizes to a `LocalRelation` (a small
-    * request whose mapper chain Catalyst evaluated on the driver) is
-    * already computed: its rows become the frame, with no job, and the
-    * gate folds its spider column on the driver. Any
-    * other frame (a JS mapper, a geo join, a bulk body, a large
-    * request) is PERSISTED and gated by one job. A request is written
-    * as one partition, so it stores one file per month. */
-  private def enrichAndStore(byCollection: Seq[(String, DataFrame)],
-      runMappers: Boolean, cfCountry: Option[String]): Long = {
-    var n = 0L
+    * entries. A frame that optimizes to a `LocalRelation` (a JSON body,
+    * whose mapper chain Catalyst evaluated on the driver) is already
+    * computed: its rows become the frame, with no job, and the gate
+    * folds its spider column on the driver. Any other mapped frame (a
+    * JS mapper, a geo join, a CSV/Avro body) is PERSISTED and gated by
+    * one job. A request is written as one partition, so it stores one
+    * file per month. */
+  private def store(ingest: => JsonIngest.IngestResult,
+      runMappers: Boolean = true,
+      cfCountry: Option[String] = None): Long = writeLock.synchronized {
+    val res = ingest
     val logSinks = scala.collection.mutable.Buffer.empty[
       (String, org.apache.spark.util.CollectionAccumulator[(String, String)])]
     // Persisted frames are tracked as they are CREATED, not after the
@@ -2870,7 +2836,7 @@ final class HttpGateway(
     // bound in a long-lived gateway JVM.
     val cached = scala.collection.mutable.Buffer.empty[DataFrame]
     try {
-      val prepared = byCollection.map { case (coll, df0) =>
+      val prepared = res.byCollection.toSeq.map { case (coll, df0) =>
         val enriched =
           if (runMappers)
             applyMappers(coll, applyBuiltins(coll, df0, cfCountry), logSinks)
@@ -2906,20 +2872,26 @@ final class HttpGateway(
             "Spiders are not allowed in Rakam Analytics.")
         (coll, df, perPartition.map(_._1).sum)
       }
-      prepared.foreach { case (coll, df, rows) =>
-        n += rows
+      prepared.foreach { case (coll, df, _) =>
         // a local relation of k rows scans in up to
-        // leafNodeDefaultParallelism tasks, and a CSV/Avro body in one
-        // per file split; one task keeps a request to one file per
-        // partition directory
+        // leafNodeDefaultParallelism tasks, a CSV/Avro body in one per
+        // file split and a remote list in one per 5,000 events; one
+        // task keeps a request to one file per partition directory
         EventStore.write(df.coalesce(1), warehouse, project, coll)
         // continuous maintenance: the stored batch is also the delta
         // for every materialized view on this collection
         maintainMvs(coll, df)
       }
       appendJsLogs(logSinks.toSeq)
-      n
-    } finally cached.foreach(_.unpersist())
+      // a local relation answers isEmpty with no job; one partition
+      // keeps the write to one file
+      if (!res.deadLetter.isEmpty)
+        EventStore.writeDeadLetter(res.deadLetter.coalesce(1), warehouse, project)
+      prepared.map(_._3).sum
+    } finally {
+      cached.foreach(_.unpersist())
+      res.unpersist()
+    }
   }
 
   // -------- /javascript-logger: script logger.* output, persisted --------

@@ -3,7 +3,7 @@ package graft.ingest
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.core.{Names, SchemaRegistry}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -267,36 +267,30 @@ object BatchSources {
     * bulk path has NO body cap (that's the point of /bulk) and skips
     * the checksum (the transport layer owns integrity for bulk).
     *
-    * The result holds `req.collection`'s frame and the batch's dead
-    * letters (none for CSV/Avro, whose readers coerce or fail). The
-    * caller stores both, then calls `unpersist`: the JSON leaf caches
-    * its intermediates. */
+    * The guards, and for JSON the fetch and the envelope parse, run
+    * here; the returned function runs the ingest, so a caller can
+    * fetch before it takes a lock. Its result holds every collection
+    * of a JSON list with the list's dead letters, or `req.collection`'s
+    * CSV/Avro frame with none. The caller stores it, then calls
+    * `unpersist`: the JSON leaf caches its intermediates. */
   def remoteBulk(spark: SparkSession, registry: SchemaRegistry,
-      project: String, req: BulkEventRemote): JsonIngest.IngestResult = {
+      project: String, req: BulkEventRemote): () => JsonIngest.IngestResult = {
     if (req.urls.size != 1)
       throw new IngestRejected("Only one url is supported")
     if (req.compression.isDefined)
       throw new IngestRejected("Compression is not supported yet")
     val url = req.urls.head
-    def typed(df: DataFrame) = JsonIngest.IngestResult(Map(req.collection -> df),
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        JsonIngest.deadLetterSchema), Nil)
     req.tpe match {
-      case CopyType.CSV => typed(CsvIngest.ingest(spark, registry, project, req.collection, url))
-      case CopyType.AVRO => typed(AvroIngest.ingest(spark, registry, project, req.collection, url))
+      case CopyType.CSV => () => JsonIngest.typedResult(req.collection,
+        CsvIngest.ingest(spark, registry, project, req.collection, url))
+      case CopyType.AVRO => () => JsonIngest.typedResult(req.collection,
+        AvroIngest.ingest(spark, registry, project, req.collection, url))
       case CopyType.JSON =>
         // EventList shape fetched whole (the reference reads the URL into
         // one EventList); events run the standard distributed pipeline
-        val body = readUrl(url)
-        val env = parseEnvelope(body, enforceBodyCap = false)
-        val res = JsonIngest.ingest(spark, registry, project,
-          spark.sparkContext.parallelize(env.events, math.max(1, env.events.size / 5000 + 1)))
-        res.byCollection.get(req.collection) match {
-          case Some(df) => res.copy(byCollection = Map(req.collection -> df))
-          case None =>
-            res.unpersist()
-            throw new IngestRejected(s"no events for collection '${req.collection}'")
-        }
+        val events = parseEnvelope(readUrl(url), enforceBodyCap = false).events
+        () => JsonIngest.ingest(spark, registry, project,
+          spark.sparkContext.parallelize(events, events.size / 5000 + 1))
     }
   }
 

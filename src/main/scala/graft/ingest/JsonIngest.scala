@@ -38,11 +38,14 @@ import scala.util.Try
   * leaf, `ingest(…, RDD[String])`, runs them inside `mapPartitions`.
   * The local leaf, `ingest(…, Seq[String])`, runs them once on the
   * driver and hands every collection (and the dead letters) out as a
-  * `LocalRelation`; the HTTP gateway takes it for small requests, whose
-  * row work is far below the fixed cost of a Spark job. Catalyst then
-  * evaluates a projection over such a frame on the driver, at
-  * optimization time (`ConvertToLocalRelation`), so the mapper chain
-  * over a small request runs no job at all.
+  * `LocalRelation`; the HTTP gateway takes it for every JSON body it
+  * holds, which is already a driver-side `Seq[String]`: running the same
+  * functions in one Spark task would only add a job's fixed cost.
+  * Catalyst then evaluates a projection over such a frame on the
+  * driver, at optimization time (`ConvertToLocalRelation`), so the
+  * mapper chain over a request body runs no job at all. A list fetched
+  * by remote bulk takes the distributed leaf, over one partition per
+  * 5,000 events.
   */
 object JsonIngest {
 
@@ -77,6 +80,12 @@ object JsonIngest {
       cachedRaw.foreach(_.unpersist(blocking = false))
     }
   }
+
+  /** A typed frame (CSV, Avro) as the ingest result of one collection:
+    * those readers coerce or fail, so there are no dead letters. */
+  private[graft] def typedResult(collection: String, df: DataFrame): IngestResult =
+    IngestResult(Map(collection -> df), df.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[Row](), deadLetterSchema), Nil)
 
   private val MaxStringLen = 100 // collection.max-string-length (ProjectConfig.java:17)
 
@@ -494,7 +503,7 @@ object JsonIngest {
   /** The local leaf: the same per-partition functions run once on the
     * driver, over the lines as one partition, and every frame is a
     * `LocalRelation`. Catalyst folds a projection over it on the driver
-    * (`ConvertToLocalRelation`), so a small request's mapper chain runs
+    * (`ConvertToLocalRelation`), so a request body's mapper chain runs
     * no Spark job. With one partition the schema fold sees the lines in
     * the order the distributed leaf does over `parallelize(lines, 1)`,
     * so the registry's column order is the same. */

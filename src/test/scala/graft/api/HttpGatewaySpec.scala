@@ -283,6 +283,78 @@ class HttpGatewaySpec extends SparkSpec {
     } finally gw.stop()
   }
 
+  private def remoteList(events: String*): String = {
+    val f = java.nio.file.Files.createTempFile("graft-http-bulk", ".json")
+    java.nio.file.Files.writeString(f,
+      events.mkString("""{"api": {"api_key": "k"}, "events": [""", ",", "]}"))
+    s"""{"collection": "orders", "urls": ["${f.toUri}"], "type": "JSON"}"""
+  }
+
+  private def order(user: String, hour: Int) =
+    s"""{"collection": "orders", "properties": {"_user": "$user", "_time": "2026-01-15 1$hour:00:00.000", "amount": 2.0}}"""
+
+  test("remote bulk JSON stores every collection of the fetched list") {
+    withGateway { (_, port) =>
+      val res = post(port, "/event/bulk/remote", remoteList(order("u1", 0), order("u2", 1),
+        """{"collection": "refunds", "properties": {"_user": "u1", "_time": "2026-01-15 12:00:00.000", "amount": 2.0}}"""))
+      assert(res.statusCode() == 200 && res.body() == """{"stored":3}""", res.body())
+      val q = post(port, "/query/execute",
+        """{"query": "SELECT count(*) AS n FROM refunds"}""")
+      assert(q.body() == """[{"n":1}]""", q.body())
+    }
+  }
+
+  test("remote bulk folds its rows into the collection's materialized views") {
+    withGateway { (_, port) =>
+      assert(post(port, "/event/collect", order("u1", 0)).statusCode() == 200)
+      assert(post(port, "/materialized-view/create",
+        """{"name": "by_user", "collection": "orders", "group": ["_user"]}""")
+        .statusCode() == 200)
+      assert(post(port, "/event/bulk/remote", remoteList(order("u2", 1), order("u3", 2)))
+        .body() == """{"stored":2}""")
+      val v = get(port, "/materialized-view/get?name=by_user")
+      assert(Seq("u1", "u2", "u3").forall(u => v.body().contains(s""""_user":"$u"""")),
+        v.body())
+    }
+  }
+
+  test("remote bulk fetches its URL outside the write lock: a slow remote " +
+    "stalls no collect") {
+    withGateway { (_, port) =>
+      import java.util.concurrent.{CountDownLatch, TimeUnit}
+      assert(post(port, "/event/collect", order("u0", 0)).statusCode() == 200)
+      val asked = new CountDownLatch(1)
+      val collected = new CountDownLatch(1)
+      val remote = com.sun.net.httpserver.HttpServer.create(
+        new java.net.InetSocketAddress("localhost", 0), 0)
+      remote.createContext("/list.json", ex => {
+        asked.countDown()
+        collected.await(10, TimeUnit.SECONDS)
+        val body = s"""{"events": [${order("u1", 1)}]}""".getBytes("UTF-8")
+        ex.sendResponseHeaders(200, body.length.toLong)
+        ex.getResponseBody.write(body)
+        ex.close()
+      })
+      remote.start()
+      try {
+        val url = s"http://localhost:${remote.getAddress.getPort}/list.json"
+        val bulk = client.sendAsync(
+          HttpRequest.newBuilder(URI.create(s"http://localhost:$port/event/bulk/remote"))
+            .POST(HttpRequest.BodyPublishers.ofString(
+              s"""{"collection": "orders", "urls": ["$url"], "type": "JSON"}""")).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(asked.await(10, TimeUnit.SECONDS))
+        val t0 = System.nanoTime()
+        val c = post(port, "/event/collect", order("u2", 2))
+        val ms = (System.nanoTime() - t0) / 1000000
+        collected.countDown()
+        assert(c.statusCode() == 200 && ms < 2000, s"collect took $ms ms: ${c.body()}")
+        val b = bulk.get(30, TimeUnit.SECONDS)
+        assert(b.statusCode() == 200 && b.body() == """{"stored":1}""", b.body())
+      } finally remote.stop(0)
+    }
+  }
+
   test("query door runs SQL over the stored collections through the " +
     "full engine; analysis errors are 400s") {
     withGateway { (_, port) =>
@@ -680,24 +752,21 @@ class HttpGatewaySpec extends SparkSpec {
     }
   }
 
-  test("a request of 64 lines takes the local leaf; 65 lines take the " +
-    "distributed one") {
+  test("every JSON body takes the local leaf: a 65-line batch and a " +
+    "1,000-event bulk each run 1 Spark job, the store write") {
     withGateway { (_, port) =>
-      def batch(n: Int) = (1 to n).map(i => uaEvent("pv", s"u$i"))
+      def events(n: Int) = (1 to n).map(i => uaEvent("pv", s"u$i"))
         .mkString("""{"events": [""", ",", "]}")
-      assert(post(port, "/event/batch", batch(2)).statusCode() == 200)
-      val small = jobsDuring(assert(post(port, "/event/batch", batch(64)).body() ==
-        """{"stored":64}"""))
-      assert(small.size == 1 && small.head.contains("EventStore"), small)
-      val large = jobsDuring(assert(post(port, "/event/batch", batch(65)).body() ==
+      assert(post(port, "/event/batch", events(2)).statusCode() == 200)
+      val batch = jobsDuring(assert(post(port, "/event/batch", events(65)).body() ==
         """{"stored":65}"""))
-      // schema fold, spider gate, write, dead-letter check: the rule
-      // tables run per row, with no broadcast join
-      assert(large.size == 4 && large.exists(_.contains("JsonIngest")) &&
-        !large.exists(_.contains("broadcast exchange")), large)
+      assert(batch.size == 1 && batch.head.contains("EventStore"), batch)
+      val bulk = jobsDuring(assert(post(port, "/event/bulk", events(1000)).body() ==
+        """{"stored":1000}"""))
+      assert(bulk.size == 1 && bulk.head.contains("EventStore"), bulk)
       val q = post(port, "/query/execute",
         """{"query": "SELECT count(*) AS n, count(_user_agent_family) AS ua FROM pv"}""")
-      assert(q.body().contains("\"n\":131") && q.body().contains("\"ua\":131"), q.body())
+      assert(q.body().contains("\"n\":1067") && q.body().contains("\"ua\":1067"), q.body())
     }
   }
 

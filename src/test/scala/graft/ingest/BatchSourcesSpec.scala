@@ -124,7 +124,7 @@ class BatchSourcesSpec extends SparkSpec {
         |  {"collection": "orders", "properties": {"amount": 2.0, "_user": "u2"}}
         |]}""".stripMargin)
     val res = remoteBulk(spark, registry, "p",
-      BulkEventRemote("orders", Seq(f.toUri.toString), CopyType.JSON))
+      BulkEventRemote("orders", Seq(f.toUri.toString), CopyType.JSON))()
     val df = res.byCollection("orders")
     assert(df.count() == 2)
     assert(df.columns.toSet == Set("amount", "_user"))
